@@ -1929,19 +1929,18 @@ def q_cms_counts(spark, sf):
     cells. DuckDB replays build + min-of-cells estimate bitwise —
     including the sketch's characteristic over-counts."""
     from flint_spark.pipeline import sketches
-    from flint_spark.pipeline._cache import begin_op, keep
+    from flint_spark.pipeline._cache import hold, persist
     from flint_spark.pipeline.text import _token_stream
 
     docs = _t(spark, sf, "documents")
     # the token stream feeds the sketch build (collected inside
     # cms_estimate) AND the probe aggregation — persist it once
-    begin_op()
-    tok = keep(_token_stream(docs, "text", "doc_id"))
+    tok = persist(_token_stream(docs, "text", "doc_id"))
     cms = sketches.cms_build(tok, "w", width=256, depth=3)
     probes = (tok.groupBy("w").agg(F.count(F.lit(1)).alias("true_cnt"))
               .filter(F.col("true_cnt") >= 20))
     out = sketches.cms_estimate(probes, cms, "w", width=256, depth=3)
-    return out.select("w", "true_cnt", "est_count")
+    return hold(out.select("w", "true_cnt", "est_count"), tok)
 
 
 def _sql_cms_counts() -> str:
@@ -4416,15 +4415,14 @@ def q_kmv_distinct(spark, sf):
     merge rule (k smallest of the union = k smallest of merged
     samples) and the theta intersection estimator exactly."""
     from flint_spark.pipeline import sketches as SK
-    from flint_spark.pipeline._cache import begin_op, keep
+    from flint_spark.pipeline._cache import hold, persist
 
     ev = _events(spark, sf)
     # the sketch table is consumed THREE times below (per-type rows +
     # both sides of the union/intersect estimates); without a persist
     # the whole distinct+window+agg subtree re-executes per consumer
     # (10 Sorts in the r11 before-plan where 4 suffice)
-    begin_op()
-    sk = keep(SK.kmv_sketch(ev, "user_id", k=64, key=["event_type"]))
+    sk = persist(SK.kmv_sketch(ev, "user_id", k=64, key=["event_type"]))
     per_type = sk.select(F.col("event_type").alias("tag"), "m",
                          R("est_distinct", 6).alias("est"))
     a = sk.filter(F.col("event_type") == "click").drop("event_type")
@@ -4436,7 +4434,7 @@ def q_kmv_distinct(spark, sf):
          .select(F.lit("intersect:click+view").alias("tag"),
                  F.col("common").alias("m"),
                  R("est_distinct", 6).alias("est")))
-    return per_type.unionByName(u).unionByName(i)
+    return hold(per_type.unionByName(u).unionByName(i), sk)
 
 
 def _sql_kmv_distinct() -> str:

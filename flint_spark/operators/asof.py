@@ -33,6 +33,7 @@ un-keyed tables at scale should pre-bucket by a coarse time range (see
 
 from __future__ import annotations
 
+import threading
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -127,6 +128,31 @@ _ASOF_BROADCAST_LEFT_RATIO = 8
 _HOT_KEY_CACHE: dict = {}
 _HOT_KEY_CACHE_MAX = 64
 
+_MEMO_LOCK = threading.Lock()
+_MISS = object()
+
+
+def probe_memo(cache: dict, cap: int, ck, compute):
+    """Per-frame probe memo shared by the as-of and window probes:
+    a hit is refreshed to most-recent, a miss runs ``compute()``
+    (outside the lock — it launches a Spark job) and evicts ONE stale
+    entry at capacity. A ``None`` key skips the memo. Safe with
+    concurrent callers: two misses on one key both compute, and the
+    second store simply overwrites the first."""
+    if ck is None:
+        return compute()
+    with _MEMO_LOCK:
+        val = cache.pop(ck, _MISS)
+        if val is not _MISS:
+            cache[ck] = val
+            return val
+    val = compute()
+    with _MEMO_LOCK:
+        if ck not in cache and len(cache) >= cap:
+            cache.pop(next(iter(cache)))
+        cache[ck] = val
+    return val
+
 
 def _hot_key_fraction(df: DataFrame, key: Sequence[str]) -> float:
     """Largest single key's share of rows — one count aggregation over
@@ -143,18 +169,14 @@ def _hot_key_fraction(df: DataFrame, key: Sequence[str]) -> float:
         ck = (df.semanticHash(), _estimated_bytes(df), tuple(key))
     except Exception:  # noqa: BLE001 — hashing is a cache key only
         ck = None
-    if ck is not None and ck in _HOT_KEY_CACHE:
-        frac = _HOT_KEY_CACHE[ck] = _HOT_KEY_CACHE.pop(ck)  # refresh LRU
-        return frac
-    row = (df.groupBy(*key).count()
-           .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
-           .first())
-    frac = (row["mx"] / row["n"]) if row and row["n"] else 0.0
-    if ck is not None:
-        if len(_HOT_KEY_CACHE) >= _HOT_KEY_CACHE_MAX:
-            _HOT_KEY_CACHE.pop(next(iter(_HOT_KEY_CACHE)))
-        _HOT_KEY_CACHE[ck] = frac
-    return frac
+
+    def probe():
+        row = (df.groupBy(*key).count()
+               .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
+               .first())
+        return (row["mx"] / row["n"]) if row and row["n"] else 0.0
+
+    return probe_memo(_HOT_KEY_CACHE, _HOT_KEY_CACHE_MAX, ck, probe)
 
 
 def _broadcast_route_ok(left: DataFrame, right: DataFrame,

@@ -353,9 +353,8 @@ def volume_bars(df: DataFrame, threshold: float, price_col: str,
                       *key, F.col("__bar").alias("bar_seq"),
                       "open", "high", "low", "close", "n",
                       "volume", "vwap"))
-    # the keyless engine frame is a local here — carry its layout pin
-    # onto the returned frame or the persisted order unpersists before
-    # the caller evaluates (r8 review finding)
-    from .prefix import propagate_pin
+    # the keyless engine frame is a local here: hold its layout on the
+    # returned frame
+    from ..pipeline._cache import hold
 
-    return propagate_pin(base, out)
+    return hold(out, base)

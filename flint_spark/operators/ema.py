@@ -18,7 +18,7 @@ O(n) complexity contract as the reference's streaming implementation.
 Scale note: one shuffle on the key; each key group must fit in one
 Arrow batch stream (pandas grouped-map). Keyless series do NOT fall
 into a single group: they run a distributed two-phase prefix scan
-(range-partition by time, per-partition affine-scan partials, driver
+(value-derived time buckets, per-bucket affine-scan partials, driver
 composes P carries, broadcast-join applies the carry-in per row) —
 the reference's distributed prefix-aggregation pattern
 (``rdd/function/summarize/Summarizations.scala:51-122``) expressed as
@@ -36,7 +36,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..pipeline import _cache
 from ..timeseries import TIME_COLUMN, parse_duration_ns, time_ns_expr
+
+release_scan_caches = _cache.release_caches
 
 _BLOCK_MAX_EXP = 200.0  # e^200 ~ 7e86: safe headroom inside float64
 
@@ -253,28 +256,6 @@ def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
     return with_ns.groupBy().applyInPandas(compute, schema)
 
 
-# The distributed scan persists its mapInPandas subtree because both the
-# partials collect and the caller's eventual action consume it. The caller's
-# first action is invisible here, so the cache is released at the NEXT
-# keyless-distributed call (or explicitly via release_scan_caches()) —
-# bounding retention to one cached DataFrame instead of one per call.
-_SCAN_CACHE: list = []
-
-
-def _release_prior_scan_cache() -> None:
-    while _SCAN_CACHE:
-        try:
-            _SCAN_CACHE.pop().unpersist()
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
-
-
-def release_scan_caches() -> None:
-    """Unpersist the scan subtree cached by the most recent keyless
-    distributed :func:`ewma` / :func:`exponential_smoothing` call."""
-    _release_prior_scan_cache()
-
-
 def _keyless_distributed(df: DataFrame, column: str, out_name: str,
                          coeff_fn, divide: bool,
                          num_partitions: int | None = None) -> DataFrame:
@@ -285,37 +266,48 @@ def _keyless_distributed(df: DataFrame, column: str, out_name: str,
     where L is the chunk's scan from zero state and T its cumulative
     -ln(decay). Phases (reference ``Summarizations.scala:51-122`` pattern):
 
-      1. range-partition by time, sort within partitions (ONE shuffle of
-         the data; persisted);
-      2. tiny aggregate collects per-partition boundary rows (prev_t,
+      1. bucket rows by time value (``prefix.time_buckets``: approx-quantile
+         bounds + an in-JVM binary search), hash-partition on the bucket
+         and sort within partitions (ONE shuffle of the data, persisted
+         until the scan is materialized);
+      2. tiny aggregate collects per-bucket boundary rows (prev_t,
          prev_x feed the boundary decay step / interpolation);
       3. one ``mapInPandas`` pass computes per-row (L, T) streaming
-         batch-by-batch — never holds a partition in memory;
+         batch-by-batch, restarting at every bucket — never holds a
+         partition in memory;
       4. the P (L_end, T_end) partials compose on the driver into a
-         per-partition carry-in E_in (P scalars);
+         per-bucket carry-in E_in (P scalars);
       5. a broadcast join + JVM expression applies
          ``L + E_in * exp(-T)`` per row (and the aux series for 'core').
 
     exp(-T) underflowing to 0.0 for rows far from the carry origin is the
     mathematically correct decay, not an error.
 
-    Duplicate timestamps are ordered by (time, value) — the engine-wide
-    max-struct tie rule — so every extraction below (boundary prev_x,
-    partition-end partials) is a deterministic function of the data, not
-    of physical layout. Equal keys never straddle range partitions, so a
-    tie group is always wholly inside one partition.
+    Rows scan in the TOTAL order (time, value, remaining orderable
+    columns) — the engine-wide max-struct tie rule — and the bucket is a
+    function of the time value, so every extraction below (boundary
+    prev_x, bucket-end partials, the carry-ins keyed on ``__pid``) is a
+    deterministic function of the data. A recompute of the persisted
+    scan, after an eviction or under a re-planned layout, reproduces it
+    row for row. Equal timestamps never straddle buckets.
     """
+    from .prefix import time_buckets
+
     spark = df.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     in_cols = list(df.columns)
     xcol = F.col(column).cast("double")
-    _release_prior_scan_cache()
-    sdf = (df.withColumn("__tns", time_ns_expr(df))
-             .repartitionByRange(P, F.col("__tns"))
-             .sortWithinPartitions(F.col("__tns"), xcol)
-             .withColumn("__pid", F.spark_partition_id())
-             .persist())
-    # per-partition boundary rows (small: P rows collected). last_x must
+    tns = time_ns_expr(df)
+    pid, n_buckets = time_buckets(df, tns, P)
+    extra = [c for c, t in df.dtypes if c != column and "map<" not in t]
+    # the sorted layout feeds both the boundary aggregate and the scan:
+    # persisted for this call only, released once the persisted scan
+    # below is materialized (the scan's plan recomputes it if evicted)
+    sdf = (df.withColumn("__tns", tns).withColumn("__pid", pid)
+           .repartition(4 * n_buckets, "__pid")
+           .sortWithinPartitions("__pid", "__tns", xcol, *extra)
+           .persist())
+    # per-bucket boundary rows (small: P rows collected). last_x must
     # be the row processed LAST under the (time, value) sort -> max-struct.
     binfo = (sdf.groupBy("__pid")
              .agg(F.max("__tns").alias("last_t"),
@@ -336,44 +328,45 @@ def _keyless_distributed(df: DataFrame, column: str, out_name: str,
         T.StructField("__T", T.DoubleType())])
 
     def scan_partition(batches):
-        state = None  # (prev_t, prev_x, L_carry, La_carry, T_offset, rid)
+        # state: (prev_t, prev_x, L_carry, La_carry, T_offset, rid)
+        pid = state = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            if state is None:
-                pv = bc.value.get(int(pdf["__pid"].iloc[0]))
-                prev_t, prev_x = pv if pv is not None else (None, None)
-                l_carry = la_carry = t_off = 0.0
-                rid0 = 0
-            else:
+            pids = pdf["__pid"].to_numpy()
+            t_all = pdf["__tns"].to_numpy(dtype=np.int64)
+            x_all = pdf[column].to_numpy(dtype=np.float64)
+            out = {n: np.empty(len(pdf)) for n in ("__L", "__La", "__T")}
+            out["__rid"] = np.empty(len(pdf), dtype=np.int64)
+            cuts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1), len(pdf)]
+            for s0, s1 in zip(cuts, cuts[1:]):
+                if pids[s0] != pid:  # a new bucket scans from its carry origin
+                    pid = int(pids[s0])
+                    pv = bc.value.get(pid) or (None, None)
+                    state = (*pv, 0.0, 0.0, 0.0, 0)
                 prev_t, prev_x, l_carry, la_carry, t_off, rid0 = state
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            steps, c, aux_c = coeff_fn(t, x, prev_t, prev_x)
-            cum_t = np.cumsum(steps)
-            w = np.exp(-cum_t)  # underflow -> 0.0 is correct decay
-            lvals = _affine_scan(steps, c) + l_carry * w
-            lavals = _affine_scan(steps, aux_c) + la_carry * w
-            tvals = t_off + cum_t
-            pdf = pdf.copy()
-            pdf["__rid"] = np.arange(rid0, rid0 + len(pdf), dtype=np.int64)
-            pdf["__L"] = lvals
-            pdf["__La"] = lavals
-            pdf["__T"] = tvals
-            state = (int(t[-1]), float(x[-1]), float(lvals[-1]),
-                     float(lavals[-1]), float(tvals[-1]), rid0 + len(pdf))
-            yield pdf
+                t, x = t_all[s0:s1], x_all[s0:s1]
+                steps, c, aux_c = coeff_fn(t, x, prev_t, prev_x)
+                cum_t = np.cumsum(steps)
+                w = np.exp(-cum_t)  # underflow -> 0.0 is correct decay
+                lv = out["__L"][s0:s1] = _affine_scan(steps, c) + l_carry * w
+                lav = out["__La"][s0:s1] = (_affine_scan(steps, aux_c)
+                                            + la_carry * w)
+                tv = out["__T"][s0:s1] = t_off + cum_t
+                out["__rid"][s0:s1] = np.arange(rid0, rid0 + s1 - s0)
+                state = (int(t[-1]), float(x[-1]), float(lv[-1]),
+                         float(lav[-1]), float(tv[-1]), rid0 + s1 - s0)
+            yield pdf.assign(**out)
 
-    scanned = sdf.mapInPandas(scan_partition, schema).persist()
-    _SCAN_CACHE.append(scanned)
-    # partition-end partials keyed on the explicit scan row index (__rid):
+    scanned = _cache.persist(sdf.mapInPandas(scan_partition, schema))
+    # bucket-end partials keyed on the explicit scan row index (__rid):
     # duplicate (time, value) rows at the boundary cannot misresolve.
     partials = (scanned.groupBy("__pid")
                 .agg(F.max_by("__L", "__rid").alias("l_end"),
                      F.max_by("__La", "__rid").alias("la_end"),
                      F.max("__T").alias("t_end"))
                 .collect())
-    sdf.unpersist()  # scanned is materialized by the collect above
+    sdf.unpersist()
     e_rows, ep, ea = [], 0.0, 0.0
     for r in sorted(partials, key=lambda r: r["__pid"]):
         e_rows.append((int(r["__pid"]), float(ep), float(ea)))
@@ -389,7 +382,8 @@ def _keyless_distributed(df: DataFrame, column: str, out_name: str,
         out = primary / (F.col("__La") + F.coalesce(F.col("__ea"), F.lit(0.0)) * w)
     else:
         out = primary
-    return joined.withColumn(out_name, out).select(in_cols + [out_name])
+    return _cache.hold(
+        joined.withColumn(out_name, out).select(in_cols + [out_name]), scanned)
 
 
 # keyless inputs at most this big (Catalyst plan-stats estimate) run as a

@@ -15,8 +15,8 @@ generalized over MERGEABLE STATE rather than one hard-coded recurrence
 1. bucket rows into time-quantile partitions: approx-quantile
    boundaries (one sampling pass) + an in-JVM binary-search ``__pid``
    expression, then ONE hash exchange on ``__pid`` + sort within
-   partitions, persisted so every later job sees an identical
-   physical order. ``__pid`` being VALUE-derived (not
+   partitions, persisted (``pipeline._cache``) so later jobs read it
+   instead of re-executing it. ``__pid`` being VALUE-derived (not
    ``spark_partition_id`` over a range exchange) is load-bearing:
    HashPartitioning(__pid) is exactly the ClusteredDistribution every
    later window/aggregate requires, so they all reuse this one
@@ -50,162 +50,39 @@ concatenation, earlier partitions first).
 
 from __future__ import annotations
 
-import threading
-import weakref
 from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pipeline import _cache
 from ..timeseries import time_ns_expr
 
-__all__ = ["keyless_cumulative", "release_prefix_caches",
-           "set_layout_registry_size", "LAYOUT_STATS"]
+__all__ = ["keyless_cumulative", "time_buckets"]
 
 #: (name, builder(df, over) -> Column, merge_kind)
 CumItem = tuple[str, Callable[[DataFrame, Callable[[Column], Column]], Column], str]
 
 _KINDS = ("sum", "min", "max", "product", "last", "concat")
 
-# Persisted-layout lifetime (ADVICE r7, rebuilt in r8): correctness
-# does NOT depend on the persist — the layout sorts on a TOTAL order
-# (time, tie_break, every orderable data column), so a recompute
-# reproduces the same multiset of (row, __mid) assignments and the
-# window/partials subtrees can never diverge on tied rows; identical
-# full rows are interchangeable by definition. The persist exists to
-# EXECUTE the layout once instead of once per consuming subtree, and
-# two mechanisms keep it warm: (1) each returned frame carries a
-# refcounted pin releasing the layout when the last result is
-# garbage-collected; (2) a small strong-ref LRU registry retains
-# recent layouts even when callers immediately derive new frames
-# (``result.select(...)`` drops Python attributes, so pins alone die
-# too early — the r8 review's volume_bars finding generalized). A
-# lock guards both (the module is callable from multiple threads).
-_PIN_LOCK = threading.Lock()
-_LIVE_PINS: "weakref.WeakSet" = weakref.WeakSet()
 
-#: strong refs to the most recent layouts — eviction merely costs a
-#: recompute (see determinism note above), never correctness
-_KEEP_MAX = 4
-_KEEP: list = []
+def time_buckets(df: DataFrame, tns: Column, p: int) -> tuple[Column, int]:
+    """``__pid`` as a VALUE-derived time bucket over a ``__tns`` column:
+    approx-quantile boundaries of ``tns`` over ``df`` (one sampling
+    pass), then an in-JVM binary search. Equal timestamps share a
+    bucket, and a re-planned run puts every row in the same bucket.
+    Returns (pid column, bucket count)."""
+    from .asof import upper_bound_expr
 
-#: observability (r8 verdict item 6): a pipeline interleaving more
-#: than _KEEP_MAX keyless engine frames silently recomputes evicted
-#: layouts — wasted work, never corruption. These counters make that
-#: visible so the knob below can be sized instead of guessed at.
-LAYOUT_STATS = {"built": 0, "reused": 0, "evicted": 0}
-
-
-def set_layout_registry_size(n: int) -> int:
-    """Resize the strong-ref layout registry (default 4). Returns the
-    previous size. Larger = more persisted layouts retained across an
-    interleaved pipeline (memory for speed); eviction only ever costs
-    a deterministic recompute. Excess layouts unpersist immediately."""
-    global _KEEP_MAX
-    if n < 0:
-        raise ValueError("registry size must be >= 0")
-    with _PIN_LOCK:
-        prev, _KEEP_MAX = _KEEP_MAX, int(n)
-        while len(_KEEP) > _KEEP_MAX:
-            LAYOUT_STATS["evicted"] += 1
-            try:
-                _KEEP.pop(0).unpersist()
-            except Exception:  # noqa: BLE001 — session may be stopped
-                pass
-    return prev
-
-
-def _keep_layout(sdf: DataFrame) -> None:
-    with _PIN_LOCK:
-        LAYOUT_STATS["built"] += 1
-        _KEEP.append(sdf)
-        while len(_KEEP) > _KEEP_MAX:
-            LAYOUT_STATS["evicted"] += 1
-            old = _KEEP.pop(0)
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — session may be stopped
-                pass
-
-# Per-layout plan salt: Spark's CacheManager keys entries on the
-# ANALYZED plan's canonical form, so two engine calls over an
-# EQUIVALENT input would share ONE cache entry — and releasing either
-# frame's pin unpersists the shared entry out from under the other,
-# silently reopening the recompute hazard. A trivially-true filter on
-# a unique literal makes every layout's analyzed plan distinct (its
-# own entry) while the optimizer constant-folds the filter away before
-# execution — zero runtime cost.
-import itertools
-
-_LAYOUT_SEQ = itertools.count()
-
-
-class _LayoutPin:
-    """Refcount for one persisted engine layout."""
-
-    def __init__(self, sdf: DataFrame):
-        self.sdf = sdf
-        self.count = 0
-
-    def release(self) -> None:
-        sdf, self.sdf = self.sdf, None
-        if sdf is not None:
-            try:
-                sdf.unpersist()
-            except Exception:  # noqa: BLE001 — session may be stopped
-                pass
-
-
-def _unpin(pin: _LayoutPin) -> None:
-    with _PIN_LOCK:
-        pin.count -= 1
-        if pin.count <= 0:
-            if pin.sdf is not None and any(pin.sdf is k for k in _KEEP):
-                pin.sdf = None  # the LRU registry owns retention now
-            else:
-                pin.release()
-
-
-def _attach_pin(result: DataFrame, pin: _LayoutPin) -> DataFrame:
-    with _PIN_LOCK:
-        if pin.sdf is None:   # already force-released: nothing to hold
-            return result
-        pin.count += 1
-        _LIVE_PINS.add(pin)
-    # the strong attribute ref lets keep_layout chains propagate the
-    # pin to second-pass results; the finalizer drops the refcount when
-    # this result frame is garbage-collected
-    result._flint_prefix_pin = pin
-    weakref.finalize(result, _unpin, pin)
-    return result
-
-
-def propagate_pin(src: DataFrame, dst: DataFrame) -> DataFrame:
-    """Carry ``src``'s layout pin onto ``dst`` — for operators that
-    POST-PROCESS an engine frame (e.g. ``volume_bars``' bar
-    aggregation) and return a derived DataFrame. Without this the
-    engine frame is a function local whose pin dies at return, and the
-    persisted layout unpersists before the caller ever evaluates the
-    result — reopening the tied-row recompute hazard the pins exist to
-    close. No-op when ``src`` carries no pin."""
-    pin = getattr(src, "_flint_prefix_pin", None)
-    return _attach_pin(dst, pin) if pin is not None else dst
-
-
-def release_prefix_caches() -> None:
-    """Force-unpersist EVERY live engine layout now (test/reset hook).
-    Frames evaluated afterwards recompute the layout — identical
-    results (the layout sorts on a total order), just slower; normal
-    code should simply drop its references and let the refcounts and
-    the LRU registry manage retention."""
-    with _PIN_LOCK:
-        for pin in list(_LIVE_PINS):
-            pin.release()
-        while _KEEP:
-            try:
-                _KEEP.pop().unpersist()
-            except Exception:  # noqa: BLE001 — session may be stopped
-                pass
+    err = 1.0 / max(p * 8, 64)
+    # p <= 1: no boundaries — approxQuantile rejects an empty
+    # probability list (an NPE under shuffle.partitions=1)
+    bounds = [] if p <= 1 else sorted(set(
+        df.select(tns.alias("__tns"))
+        .approxQuantile("__tns", [i / p for i in range(1, p)], err)))
+    pid = (upper_bound_expr(F.lit(bounds), F.col("__tns"))
+           .cast("int") if bounds else F.lit(0))
+    return pid, len(bounds) + 1
 
 
 def _carry_agg(kind: str, c: Column) -> Column:
@@ -281,10 +158,7 @@ def keyless_cumulative(
     can reuse the SAME shuffle: a frame that still carries ``__pid``
     skips repartitioning entirely — its second pass costs one more
     tiny partials job, zero data exchanges. The persisted layout is
-    retained by result-frame refcounts plus a small LRU registry
-    (interleaved engine calls never evict each other's pending
-    layouts, ADVICE r7); retention is purely a perf matter — see the
-    determinism note above.
+    retained under ``pipeline._cache``'s policy.
     """
     for _, _, kind in items:
         if kind not in _KINDS:
@@ -294,35 +168,17 @@ def keyless_cumulative(
     layout_cols = ["__tns", "__pid", "__mid"]
     if reuse:
         sdf = df
-        with _PIN_LOCK:
-            LAYOUT_STATS["reused"] += 1
-        pin = getattr(df, "_flint_prefix_pin", None)
+        with _cache._LOCK:
+            _cache.STATS["reused"] += 1
     else:
-        spark = df.sparkSession
         p = num_partitions or int(
-            spark.conf.get("spark.sql.shuffle.partitions"))
-        # __pid is a VALUE-derived time bucket (quantile boundaries +
-        # in-JVM binary search), not spark_partition_id() over a range
-        # exchange: RangePartitioning(__tns) does not satisfy the
-        # window's ClusteredDistribution(__pid), so the old layout paid
-        # a SECOND full hash exchange Catalyst inserted silently
-        # (ADVICE r7 — the "1 range shuffle" budget was wrong). A
-        # hash repartition on an expression-derived __pid is the
-        # window's exact required distribution: ONE data exchange,
-        # verified by the plan_counts pins. Equal timestamps share a
-        # bucket by construction (the boundary predicate is a function
-        # of the time value), preserving the tie-merge contract.
-        from .asof import upper_bound_expr
-
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        # a hash repartition on the expression-derived __pid is exactly
+        # the ClusteredDistribution(__pid) every window/aggregate below
+        # requires: ONE data exchange, verified by the plan_counts pins
+        # (a range exchange on __tns satisfied none of them, ADVICE r7).
         tns = time_ns_expr(df)
-        err = 1.0 / max(p * 8, 64)
-        # p <= 1: no boundaries — approxQuantile rejects an empty
-        # probability list (r8 review: NPE under shuffle.partitions=1)
-        bounds = [] if p <= 1 else sorted(set(
-            df.select(tns.alias("__tns"))
-            .approxQuantile("__tns", [i / p for i in range(1, p)], err)))
-        pid = (upper_bound_expr(F.lit(bounds), F.col("__tns"))
-               .cast("int") if bounds else F.lit(0))
+        pid, n_buckets = time_buckets(df, tns, p)
         # 4x partitions per distinct pid: hashing ~P pid values into P
         # partitions pigeonholes ~1/e of tasks empty and piles 2-4
         # buckets on others; the wider exchange keeps max-load ~1 and
@@ -335,9 +191,8 @@ def keyless_cumulative(
         #    key are identical rows, so any recompute reproduces the
         #    same (row, __mid) multiset — the window and partials
         #    subtrees can never diverge on ties even with the cache
-        #    cold, and layout eviction is purely a perf event. The
-        #    engine-wide max-struct philosophy (sort by time THEN
-        #    values), applied to the layout itself.
+        #    cold. The engine-wide max-struct philosophy (sort by time
+        #    THEN values), applied to the layout itself.
         # 2. CACHE SUBSTITUTION: the window and partials subtrees form
         #    a self-join over this layout; Spark's self-join
         #    deduplication clones one branch, and a nondeterministic
@@ -356,16 +211,12 @@ def keyless_cumulative(
         order_cols = ["__tns", *tie_break, *extra]
         w_mid = (Window.partitionBy("__pid")
                  .orderBy(*[F.col(c) for c in order_cols]))
-        salt = next(_LAYOUT_SEQ)
-        sdf = (df.where(F.lit(salt).isNotNull())  # plan salt, folds away
-                 .withColumn("__tns", tns)
-                 .withColumn("__pid", pid)
-                 .repartition(4 * (len(bounds) + 1), "__pid")
-                 .sortWithinPartitions(*[F.col(c) for c in order_cols])
-                 .withColumn("__mid", F.row_number().over(w_mid))
-                 .persist())
-        _keep_layout(sdf)
-        pin = _LayoutPin(sdf)
+        sdf = _cache.persist(
+            df.withColumn("__tns", tns)
+            .withColumn("__pid", pid)
+            .repartition(4 * n_buckets, "__pid")
+            .sortWithinPartitions(*[F.col(c) for c in order_cols])
+            .withColumn("__mid", F.row_number().over(w_mid)))
 
     w_in = (Window.partitionBy("__pid")
             .orderBy("__tns", *[F.col(c) for c in tie_break], "__mid")
@@ -392,4 +243,4 @@ def keyless_cumulative(
     outs = render(state)
     keep = data_cols + (layout_cols if keep_layout else [])
     result = joined.select(*keep, *[c.alias(n) for n, c in outs.items()])
-    return _attach_pin(result, pin) if pin is not None else result
+    return _cache.hold(result, sdf)

@@ -64,22 +64,20 @@ def _probe_span(df: DataFrame, tns) -> tuple[int, int] | None:
     memoized on the plan's semantic hash plus its size estimate (the
     size component keeps a re-read of a path whose files CHANGED from
     reusing a stale span — ADVICE r7)."""
+    from .asof import probe_memo
+
     try:
         from .ema import _estimated_bytes
         ck = (df.semanticHash(), _estimated_bytes(df))
     except Exception:  # noqa: BLE001 — hashing is a cache key only
         ck = None
-    if ck is not None and ck in _SPAN_CACHE:
-        span = _SPAN_CACHE[ck] = _SPAN_CACHE.pop(ck)  # refresh LRU
-        return span
-    row = df.select(F.min(tns).alias("lo"), F.max(tns).alias("hi")).first()
-    span = None if row is None or row["lo"] is None \
-        else (int(row["lo"]), int(row["hi"]))
-    if ck is not None:
-        if len(_SPAN_CACHE) >= _SPAN_CACHE_MAX:
-            _SPAN_CACHE.pop(next(iter(_SPAN_CACHE)))
-        _SPAN_CACHE[ck] = span
-    return span
+
+    def probe():
+        row = df.select(F.min(tns).alias("lo"), F.max(tns).alias("hi")).first()
+        return None if row is None or row["lo"] is None \
+            else (int(row["lo"]), int(row["hi"]))
+
+    return probe_memo(_SPAN_CACHE, _SPAN_CACHE_MAX, ck, probe)
 
 
 def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ._cache import begin_op, keep
+from ._cache import hold, persist
 from .hashing import P, h28, h32, minhash_params, qid
 
 
@@ -185,9 +185,8 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     # the signature table feeds the band join AND both sides of the
     # estimate join — persist it or Spark recomputes the whole
     # shingle->hash->32-min aggregation subtree four times.
-    begin_op()
-    sig = keep(minhash_signatures(docs, text_col, id_col, k, num_hashes, seed,
-                                  max_df))
+    sig = persist(minhash_signatures(docs, text_col, id_col, k, num_hashes,
+                                     seed, max_df))
     mh_cols = [f"mh_{j}" for j in range(num_hashes)]
     # band structs / scoring rendered as parsed expressions (r11
     # construction fix): the per-element Column form cost ~400 py4j
@@ -219,12 +218,12 @@ def minhash_lsh_pairs(docs: DataFrame, text_col: str = "text",
     matches = F.expr("(0 + " + " + ".join(
         f"CASE WHEN a_{c} = b_{c} THEN 1 ELSE 0 END" for c in mh_cols)
         + ")")
-    return (
+    return hold(
         pairs.join(sig_a, "id_a").join(sig_b, "id_b")
         .select("id_a", "id_b",
                 (matches.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
+        .filter(F.col("est_jaccard") >= threshold),
+        sig)
 
 
 def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -270,8 +269,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     Candidates via 8-bit band equi-join (a pair within hamming<=3 of a
     32-bit hash must agree on at least one of the four bytes)."""
     # both sides of the band self-join read the simhash aggregation
-    begin_op()
-    sh = keep(simhash(docs, text_col, id_col, nbits))
+    sh = persist(simhash(docs, text_col, id_col, nbits))
     nbands = nbits // 8
     banded = sh.select(
         id_col, "simhash",
@@ -284,7 +282,7 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     ).select(id_col, "simhash", "bb.band", "bb.chunk")
     banded = _cap_buckets(banded, ["band", "chunk"], max_bucket)
     a, b = banded.alias("a"), banded.alias("b")
-    return (
+    return hold(
         a.join(b, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.chunk") == F.col("b.chunk"))
                & (F.col(f"a.{qid(id_col)}") < F.col(f"b.{qid(id_col)}")))
@@ -296,8 +294,8 @@ def simhash_pairs(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
         # distinct is identical — and shrinks the dedup exchange to the
         # qualifying pairs instead of every band-collision candidate.
         .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+        .distinct(),
+        sh)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
@@ -311,19 +309,18 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     # persist both stages or the explode+distinct (and the rare-join)
     # recompute once per consumer (plan audit showed the join subtree
     # repeated 3x when only the raw table was cached).
-    begin_op()
-    sh0 = keep(shingles(docs, text_col, id_col, k))
+    sh0 = persist(shingles(docs, text_col, id_col, k))
     # drop stop shingles by broadcast ANTI-join against the small
     # above-threshold set; an equi-join against the rare (= almost all)
     # shingles would shuffle the whole corpus stream instead
     stop = (sh0.groupBy("shingle").agg(F.count("*").alias("df"))
             .filter(F.col("df") > max_df).select("shingle"))
-    sh = keep(sh0.join(F.broadcast(stop), "shingle", "left_anti"))
+    sh = persist(sh0.join(F.broadcast(stop), "shingle", "left_anti"))
     # sizes feeds BOTH scoring joins — unpersisted, the per-doc
     # aggregation over the cached shingle table executes once per
     # broadcast build (r12, guide §2.4; interleaved A/B ~16% on the
     # containment twin)
-    sizes = keep(sh.groupBy(id_col).agg(F.count("*").alias("nsh")))
+    sizes = persist(sh.groupBy(id_col).agg(F.count("*").alias("nsh")))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
     inter = (
@@ -331,15 +328,15 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b").agg(F.count("*").alias("inter"))
     )
-    return (
+    return hold(
         inter
         .join(sizes.select(F.col(id_col).alias("id_a"), F.col("nsh").alias("nsh_a")), "id_a")
         .join(sizes.select(F.col(id_col).alias("id_b"), F.col("nsh").alias("nsh_b")), "id_b")
         .select("id_a", "id_b",
                 (F.col("inter").cast("double")
                  / (F.col("nsh_a") + F.col("nsh_b") - F.col("inter"))).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+        .filter(F.col("jaccard") >= threshold),
+        sh0, sh, sizes)
 
 
 def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
@@ -375,14 +372,13 @@ def winnow_pairs(docs: DataFrame, text_col: str = "text",
     fingerprints: (id_a, id_b, shared). Equi-join on the winnowed set
     (~2/(window+1) of all shingles), the standard plagiarism/near-dup
     candidate generator."""
-    begin_op()
-    fps = keep(winnow_fingerprints(docs, text_col, id_col, k, window))
+    fps = persist(winnow_fingerprints(docs, text_col, id_col, k, window))
     a = fps.select(F.col(id_col).alias("id_a"), "fp")
     b = fps.select(F.col(id_col).alias("id_b"), "fp")
-    return (a.join(b, "fp")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b").agg(F.count("*").alias("shared"))
-            .filter(F.col("shared") >= min_shared))
+    return hold(a.join(b, "fp")
+                .filter(F.col("id_a") < F.col("id_b"))
+                .groupBy("id_a", "id_b").agg(F.count("*").alias("shared"))
+                .filter(F.col("shared") >= min_shared), fps)
 
 
 def repeated_ngrams(docs: DataFrame, text_col: str = "text",
@@ -421,10 +417,9 @@ def flag_repeated_spans(docs: DataFrame, text_col: str = "text",
     as ``remove_repeated_lines``); raise ``min_df`` if it is not.
 
     The shingle stream feeds BOTH the dictionary aggregation and the
-    hits probe, so it is persisted once (``keep``) — without it the
+    hits probe, so it is persisted once (``persist``) — without it the
     corpus scan + explode re-runs per consumer."""
-    begin_op()
-    sh = keep(shingles(docs, text_col, id_col, k=n, distinct=True))
+    sh = persist(shingles(docs, text_col, id_col, k=n, distinct=True))
     rep = F.broadcast(sh.groupBy("shingle").agg(F.count("*").alias("df"))
                       .filter(F.col("df") >= min_df).select("shingle"))
     hits = (sh.join(rep, "shingle")
@@ -437,14 +432,14 @@ def flag_repeated_spans(docs: DataFrame, text_col: str = "text",
                   F.when(F.size(F.col("__w")) >= n,
                          F.size(F.array_distinct(grams)))
                   .otherwise(F.lit(0)).alias("n_ngrams")))
-    return (totals.join(F.broadcast(hits), id_col, "left")
-            .select(
-                F.col(id_col), "n_ngrams",
-                F.coalesce(F.col("n_repeated"), F.lit(0)).alias("n_repeated"),
-                F.when(F.col("n_ngrams") > 0,
-                       F.coalesce(F.col("n_repeated"), F.lit(0)).cast("double")
-                       / F.col("n_ngrams").cast("double"))
-                .otherwise(F.lit(0.0)).alias("repeated_frac")))
+    return hold(totals.join(F.broadcast(hits), id_col, "left")
+                .select(
+                    F.col(id_col), "n_ngrams",
+                    F.coalesce(F.col("n_repeated"), F.lit(0)).alias("n_repeated"),
+                    F.when(F.col("n_ngrams") > 0,
+                           F.coalesce(F.col("n_repeated"), F.lit(0)).cast("double")
+                           / F.col("n_ngrams").cast("double"))
+                    .otherwise(F.lit(0.0)).alias("repeated_frac")), sh)
 
 
 def remove_repeated_spans(docs: DataFrame, text_col: str = "text",
@@ -480,10 +475,9 @@ def remove_repeated_spans(docs: DataFrame, text_col: str = "text",
     same budget as ``remove_repeated_lines``. The broadcast assumes the
     above-threshold dictionary is boilerplate-bounded; raise ``min_df``
     if it is not."""
-    begin_op()
     src = _spread(docs).withColumn(
         text_col, F.coalesce(F.col(text_col), F.lit("")))
-    base = keep(src.select(F.col(id_col), _words(text_col).alias("__w")))
+    base = persist(src.select(F.col(id_col), _words(text_col).alias("__w")))
     grams = base.filter(F.size("__w") >= n).select(
         F.col(id_col),
         F.posexplode(_shingle_arr(n)).alias("__j", "shingle"))
@@ -504,18 +498,18 @@ def remove_repeated_spans(docs: DataFrame, text_col: str = "text",
                     .alias("__sw"),
                     F.count("*").alias("n_words_kept")))
     totals = base.select(F.col(id_col), F.size("__w").alias("__n_total"))
-    return (totals.join(rebuilt, id_col, "left")
-            .select(
-                F.col(id_col),
-                F.concat_ws(" ", F.transform(
-                    F.coalesce(F.col("__sw"), F.array().cast(
-                        "array<struct<__i:int,__word:string>>")),
-                    lambda s: s["__word"])).alias(text_col),
-                F.coalesce(F.col("n_words_kept"), F.lit(0))
-                .alias("n_words_kept"),
-                (F.col("__n_total")
-                 - F.coalesce(F.col("n_words_kept"), F.lit(0)))
-                .alias("n_words_removed")))
+    return hold(totals.join(rebuilt, id_col, "left")
+                .select(
+                    F.col(id_col),
+                    F.concat_ws(" ", F.transform(
+                        F.coalesce(F.col("__sw"), F.array().cast(
+                            "array<struct<__i:int,__word:string>>")),
+                        lambda s: s["__word"])).alias(text_col),
+                    F.coalesce(F.col("n_words_kept"), F.lit(0))
+                    .alias("n_words_kept"),
+                    (F.col("__n_total")
+                     - F.coalesce(F.col("n_words_kept"), F.lit(0)))
+                    .alias("n_words_removed")), base)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -630,15 +624,14 @@ def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
     persisted two-stage cache policy); only the final scoring
     projection differs, so the 100 TB posture is identical — never
     all-pairs, skew-capped by ``max_df``."""
-    begin_op()
-    sh0 = keep(shingles(docs, text_col, id_col, k))
+    sh0 = persist(shingles(docs, text_col, id_col, k))
     stop = (sh0.groupBy("shingle").agg(F.count("*").alias("df"))
             .filter(F.col("df") > max_df).select("shingle"))
-    sh = keep(sh0.join(F.broadcast(stop), "shingle", "left_anti"))
+    sh = persist(sh0.join(F.broadcast(stop), "shingle", "left_anti"))
     # sizes feeds BOTH scoring joins — persisted so the per-doc
     # aggregation over the cached shingle table runs once (r12,
     # guide §2.4; interleaved A/B 2.28 -> 1.92 s at sf0.1)
-    sizes = keep(sh.groupBy(id_col).agg(F.count("*").alias("nsh")))
+    sizes = persist(sh.groupBy(id_col).agg(F.count("*").alias("nsh")))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
     inter = (
@@ -648,7 +641,7 @@ def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
     )
     ca = F.col("inter").cast("double") / F.col("nsh_a")
     cb = F.col("inter").cast("double") / F.col("nsh_b")
-    return (
+    return hold(
         inter
         .join(sizes.select(F.col(id_col).alias("id_a"),
                            F.col("nsh").alias("nsh_a")), "id_a")
@@ -657,5 +650,5 @@ def ngram_containment_pairs(docs: DataFrame, text_col: str = "text",
         .select("id_a", "id_b", ca.alias("containment_a"),
                 cb.alias("containment_b"))
         .filter((F.col("containment_a") >= threshold)
-                | (F.col("containment_b") >= threshold))
-    )
+                | (F.col("containment_b") >= threshold)),
+        sh0, sh, sizes)

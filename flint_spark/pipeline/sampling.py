@@ -24,6 +24,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._cache import hold, persist
 from .hashing import h28, h28_sql
 
 #: hash buckets for split arithmetic; 28-bit hash → uniform enough
@@ -172,9 +173,9 @@ def _keyless_cum_before(df: DataFrame, tokens_col: str,
     global window. ``on`` becomes the engine's time axis, so it must be
     an integral column (doc ids are); token counts merge as exact LONG
     sums, so the route is bitwise-identical to the single-window plan.
-    Returns the input columns plus ``__cum_before`` (long), carrying
-    the engine layout's pin (``prefix.propagate_pin``)."""
-    from ..operators.prefix import keyless_cumulative, propagate_pin
+    Returns the input columns plus ``__cum_before`` (long), holding
+    the engine layout (``_cache.hold``)."""
+    from ..operators.prefix import keyless_cumulative
 
     dtypes = dict(df.dtypes)
     if dtypes.get(on) not in _PACK_INTEGRAL:
@@ -207,7 +208,7 @@ def _keyless_cum_before(df: DataFrame, tokens_col: str,
         res = res.drop("time")
     if stash:
         res = res.withColumnRenamed("_pack_stash_time", "time")
-    return propagate_pin(out, res)
+    return hold(res, out)
 
 
 def _cum_before(df: DataFrame, tokens_col: str, on: str,
@@ -271,7 +272,6 @@ def pack_documents(df: DataFrame, budget: int, tokens_col: str,
     values fail loudly (``F.size`` of a NULL split is -1 under legacy
     sizeOfNull — see :func:`_tok_long`). Before r8 the sharded path
     float-summed raw values (NULL rows got NULL bins)."""
-    from ..operators.prefix import propagate_pin
     from ..timeseries import floor_div
 
     if budget <= 0:
@@ -280,7 +280,7 @@ def pack_documents(df: DataFrame, budget: int, tokens_col: str,
     out = (cum.withColumn("bin_id", floor_div(F.col("__cum_before"),
                                               int(budget)))
            .drop("__cum_before"))
-    return propagate_pin(cum, out)
+    return hold(out, cum)
 
 
 def pack_sequences(df: DataFrame, seq_len: int, tokens_col: str,
@@ -309,7 +309,6 @@ def pack_sequences(df: DataFrame, seq_len: int, tokens_col: str,
     embarrassingly parallel."""
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")
-    from ..operators.prefix import propagate_pin
     from ..timeseries import floor_div
 
     cum = _cum_before(df, tokens_col, on, shard_col, distributed)
@@ -327,7 +326,7 @@ def pack_sequences(df: DataFrame, seq_len: int, tokens_col: str,
                        F.when(n > 0, seg_end - F.col("doc_off"))
                        .otherwise(F.lit(0).cast("long")))
            .drop("__cum_before"))
-    return propagate_pin(cum, res)
+    return hold(res, cum)
 
 
 def repeat_dataset(df: DataFrame, factor: float, on: str = "doc_id",
@@ -600,9 +599,8 @@ def dsir_select(raw: DataFrame, target: DataFrame, k: int,
         scored = scored.withColumn("__key", F.col("logw"))
     # cache the scored table: the md5+literal-lookup fold over every
     # document is the dominant cost, and it is needed twice — for the
-    # kth-threshold pass below and for the returned DataFrame (left
-    # persisted; evictable, and the caller may unpersist after use)
-    scored = scored.persist()
+    # kth-threshold pass below and for the returned DataFrame
+    scored = persist(scored)
     # distributed top-k: TakeOrderedAndProject finds the kth (key, id)
     # pair (1-row collect), then selection is a map-only flag — no
     # global sort, no single-task window, order-of-k driver state
@@ -615,7 +613,7 @@ def dsir_select(raw: DataFrame, target: DataFrame, k: int,
               ((F.col("__key") == kk) & (F.col(id_col) <= ki))
     else:
         sel = F.lit(False)
-    return scored.withColumn("selected", sel).drop("__key")
+    return hold(scored.withColumn("selected", sel).drop("__key"), scored)
 
 
 def pack_bins(df: DataFrame, budget: int, tokens_col: str,

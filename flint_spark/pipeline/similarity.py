@@ -20,6 +20,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._cache import hold, persist
 from .hashing import hyperplanes, qid
 
 
@@ -340,24 +341,22 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
     full cross product (the embedding face of MinHash-LSH dedup)."""
     _check_dim(emb, vec_col, dim)
     planes = hyperplanes(n_planes, dim, seed)
-    from ._cache import begin_op, keep
-    begin_op()
     # normalize once per row (projected norm column — see
     # semantic_dedup_pairs) so each candidate pair is one dot product
-    base = keep(emb.select(F.col(id_col), _dvec(F.col(vec_col)).alias("v"))
-                .withColumn("bucket", bucket_expr("v", planes))
-                .withColumn("__nrm", _norm(F.col("v")))
-                .select(F.col(id_col), "bucket",
-                        F.transform(F.col("v"),
-                                    lambda x: x / F.col("__nrm")).alias("vn")))
+    base = persist(emb.select(F.col(id_col), _dvec(F.col(vec_col)).alias("v"))
+                   .withColumn("bucket", bucket_expr("v", planes))
+                   .withColumn("__nrm", _norm(F.col("v")))
+                   .select(F.col(id_col), "bucket",
+                           F.transform(F.col("v"),
+                                       lambda x: x / F.col("__nrm")).alias("vn")))
     a = base.select(F.col(id_col).alias("id_a"), F.col("vn").alias("vna"),
                     "bucket")
     b = base.select(F.col(id_col).alias("id_b"), F.col("vn").alias("vnb"),
                     "bucket")
     cos = _dot(F.col("vna"), F.col("vnb")).alias("cosine")
-    return (a.join(b, ["bucket"]).filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", cos)
-            .filter(F.col("cosine") >= threshold))
+    return hold(a.join(b, ["bucket"]).filter(F.col("id_a") < F.col("id_b"))
+                .select("id_a", "id_b", cos)
+                .filter(F.col("cosine") >= threshold), base)
 
 
 def _check_dim(emb: DataFrame, vec_col: str, dim: int) -> None:
@@ -1008,15 +1007,12 @@ def pq_topk(emb: DataFrame, codebooks: Sequence[Sequence[Sequence[float]]],
     estimate of true distance (quantization error), which is the PQ
     trade — rank fidelity vs the exact scan is property-tested, not
     assumed. Returns (probe_id, vec_id, adc, rank)."""
-    from ._cache import begin_op, keep
-
     m = len(codebooks)
-    begin_op()
     # the codes table is the stored artifact at scale; in-session it is
     # cached so the per-probe ADC projections scan codes, never the
     # raw vectors (CollapseProject would otherwise inline one encode
     # per probe reference)
-    codes = keep(pq_encode(emb, codebooks, id_col, vec_col))
+    codes = persist(pq_encode(emb, codebooks, id_col, vec_col))
     probe_rows = (emb.filter(F.col(id_col).isin(list(probe_ids)))
                   .select(F.col(id_col).alias("pid"),
                           _dvec(F.col(vec_col)).alias("pv")).collect())
@@ -1053,8 +1049,8 @@ def pq_topk(emb: DataFrame, codebooks: Sequence[Sequence[Sequence[float]]],
             .filter(F.col(id_col) != F.col("p.probe_id"))
             .select("p.probe_id", F.col(id_col), F.col("p.adc")))
     w = Window.partitionBy("probe_id").orderBy("adc", F.col(id_col))
-    return (flat.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return hold(flat.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k), codes)
 
 
 # ----------------------------------------------------------------------
@@ -1119,20 +1115,17 @@ def ivfpq_topk(emb: DataFrame, centroids, codebooks,
     data-scale exchanges, and search never touches raw vectors beyond
     the one encode pass. Scores round half-up BEFORE ranking for
     cross-engine order. Returns (probe_id, vec_id, adc, rank)."""
-    from ._cache import begin_op, keep
-
-    begin_op()
     res = _ivfpq_residuals(emb, centroids, id_col, vec_col)
     # cell id rides the encode projection — no re-join, no second
     # scan of the assign/residual subtree; the cached codes table is
     # the stored artifact (search scans codes, never raw vectors)
-    codes = keep(pq_encode(res, codebooks, id_col, "residual",
-                           keep=["centroid_id"]))
+    codes = persist(pq_encode(res, codebooks, id_col, "residual",
+                              keep=["centroid_id"]))
     probe_rows = (emb.filter(F.col(id_col).isin(list(probe_ids)))
                   .select(F.col(id_col).alias("pid"),
                           _dvec(F.col(vec_col)).alias("pv")).collect())
-    return _ivfpq_search(codes, probe_rows, centroids, codebooks, k,
-                         nprobe, id_col, round_decimals)
+    return hold(_ivfpq_search(codes, probe_rows, centroids, codebooks, k,
+                              nprobe, id_col, round_decimals), codes)
 
 
 def ivfpq_save_codes(emb: DataFrame, centroids, codebooks, path: str,

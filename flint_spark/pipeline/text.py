@@ -19,6 +19,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._cache import hold, persist
 from .hashing import P, h28
 
 #: tiny per-language stopword sets for the heuristic language scorer.
@@ -237,17 +238,17 @@ def unigram_logprob(docs: DataFrame, text_col: str = "text",
     counts, vocab, consts = _capped_vocab(tok, vocab_size)
     if vocab_size is None:
         nll = -F.log(F.col("cnt").cast("double") / F.col("total"))
-        return (tok.join(counts, "w")
+        return hold(tok.join(counts, "w")
+                    .crossJoin(F.broadcast(consts))
+                    .groupBy(id_col)
+                    .agg(F.avg(nll).alias("nll"),
+                         F.count("*").alias("n_tokens")), counts)
+    nll = -F.log(_p_uni("cnt") / F.col("total"))
+    return hold(tok.join(F.broadcast(vocab), "w", "left")
                 .crossJoin(F.broadcast(consts))
                 .groupBy(id_col)
                 .agg(F.avg(nll).alias("nll"),
-                     F.count("*").alias("n_tokens")))
-    nll = -F.log(_p_uni("cnt") / F.col("total"))
-    return (tok.join(F.broadcast(vocab), "w", "left")
-            .crossJoin(F.broadcast(consts))
-            .groupBy(id_col)
-            .agg(F.avg(nll).alias("nll"),
-                 F.count("*").alias("n_tokens")))
+                     F.count("*").alias("n_tokens")), counts)
 
 
 def _capped_vocab(tok: DataFrame, vocab_size: int | None):
@@ -260,10 +261,7 @@ def _capped_vocab(tok: DataFrame, vocab_size: int | None):
     policy): the vocab cut, total and vmass each launch their own
     broadcast-build job, and unpersisted they would each rescan the
     corpus (r12, guide §2.4)."""
-    from ._cache import begin_op, keep
-
-    begin_op()
-    counts = keep(tok.groupBy("w").agg(F.count("*").alias("cnt")))
+    counts = persist(tok.groupBy("w").agg(F.count("*").alias("cnt")))
     total = counts.agg(F.sum("cnt").alias("total"))
     if vocab_size is None:
         return counts, None, total
@@ -946,15 +944,12 @@ def token_distribution_shift(ref_docs: DataFrame, new_docs: DataFrame,
     bucket union and the mass aggregate share it. Everything
     downstream is K-row-bounded and the K+1-row output never
     materializes an unbounded vocab."""
-    from ._cache import begin_op, keep
-
-    begin_op()
     tagged = (_token_stream(ref_docs, text_col, id_col)
               .select("w", F.lit(0).alias("__side"))
               .unionByName(_token_stream(new_docs, text_col, id_col)
                            .select("w", F.lit(1).alias("__side"))))
-    counts = keep(tagged.groupBy("__side", "w")
-                  .agg(F.count(F.lit(1)).alias("cnt")))
+    counts = persist(tagged.groupBy("__side", "w")
+                     .agg(F.count(F.lit(1)).alias("cnt")))
     rc = counts.filter(F.col("__side") == 0).select("w", "cnt")
     nc = counts.filter(F.col("__side") == 1).select("w", "cnt")
     # the literal token "__OOV__" is excluded from the modeled vocab
@@ -963,10 +958,10 @@ def token_distribution_shift(ref_docs: DataFrame, new_docs: DataFrame,
     vocab = (rc.filter(F.col("w") != "__OOV__")
              .orderBy(F.desc("cnt"), "w").limit(vocab_size)
              .select("w", F.col("cnt").alias("rcnt")))
-    invocab = keep(vocab.join(nc, "w", "left")
-                   .select("w", "rcnt",
-                           F.coalesce(F.col("cnt"), F.lit(0))
-                           .alias("ncnt")))
+    invocab = persist(vocab.join(nc, "w", "left")
+                      .select("w", "rcnt",
+                              F.coalesce(F.col("cnt"), F.lit(0))
+                              .alias("ncnt")))
     # bounded driver-free constants: totals, in-vocab masses, bucket
     # count — every frame here is <= K rows or 1 row. coalesce: an
     # EMPTY side must smooth to a proper distribution
@@ -990,12 +985,13 @@ def token_distribution_shift(ref_docs: DataFrame, new_docs: DataFrame,
              / (F.col("rtot") + F.col("kk") + F.lit(1)))
     p_new = ((F.col("ncnt") + F.lit(1)).cast("double")
              / (F.col("ntot") + F.col("kk") + F.lit(1)))
-    return (buckets.crossJoin(F.broadcast(consts))
-            .select("w",
-                    p_ref.alias("p_ref"), p_new.alias("p_new"),
-                    (p_ref * F.log(p_ref / p_new)).alias("kl_term"),
-                    (p_new * F.log(p_new / p_ref)).alias("rev_kl_term"),
-                    (F.abs(p_ref - p_new) / F.lit(2.0)).alias("tv_term")))
+    return hold(buckets.crossJoin(F.broadcast(consts))
+                .select("w",
+                        p_ref.alias("p_ref"), p_new.alias("p_new"),
+                        (p_ref * F.log(p_ref / p_new)).alias("kl_term"),
+                        (p_new * F.log(p_new / p_ref)).alias("rev_kl_term"),
+                        (F.abs(p_ref - p_new) / F.lit(2.0)).alias("tv_term")),
+                counts, invocab)
 
 
 def token_shift_reference(ref_docs: DataFrame, text_col: str = "text",
@@ -1007,11 +1003,8 @@ def token_shift_reference(ref_docs: DataFrame, text_col: str = "text",
     that :func:`token_shift_finalize` (and the streaming monitor)
     joins against. One corpus scan (persisted counts, as in
     :func:`token_distribution_shift`)."""
-    from ._cache import begin_op, keep
-
-    begin_op()
     tok = _token_stream(ref_docs, text_col, id_col)
-    rc = keep(tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
+    rc = persist(tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
     vocab = (rc.filter(F.col("w") != "__OOV__")
              .orderBy(F.desc("cnt"), "w").limit(vocab_size)
              .select("w", F.col("cnt").alias("rcnt")))
@@ -1021,8 +1014,8 @@ def token_shift_reference(ref_docs: DataFrame, text_col: str = "text",
                   F.count(F.lit(1)).alias("kk"))))
     oov = consts.select(F.lit("__OOV__").alias("w"),
                         (F.col("rtot") - F.col("rmass")).alias("rcnt"))
-    return (vocab.unionByName(oov)
-            .crossJoin(F.broadcast(consts.select("rtot", "kk"))))
+    return hold(vocab.unionByName(oov)
+                .crossJoin(F.broadcast(consts.select("rtot", "kk"))), rc)
 
 
 def token_shift_finalize(ref: DataFrame,
@@ -1217,8 +1210,6 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     and every cut/total/mass is a K-row job over the cached table.
     TWO corpus-scale exchanges total (model union, per-doc
     aggregation), broadcast sides bounded by the caps."""
-    from ._cache import begin_op, keep
-
     if not 0.0 < lam < 1.0:
         raise ValueError(f"lam={lam} outside (0, 1)")
     w = F.filter(_words(text_col), lambda x: x != "")
@@ -1237,18 +1228,17 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     uni_rows = (_spread_docs(docs)
                 .select(F.explode(w).alias("w1"),
                         F.lit(None).cast("string").alias("w2")))
-    begin_op()
-    counts_all = keep(uni_rows.unionByName(pairs.select("w1", "w2"))
-                      .groupBy("w1", "w2")
-                      .agg(F.count(F.lit(1)).alias("cnt")))
+    counts_all = persist(uni_rows.unionByName(pairs.select("w1", "w2"))
+                         .groupBy("w1", "w2")
+                         .agg(F.count(F.lit(1)).alias("cnt")))
     ucounts = (counts_all.filter(F.col("w2").isNull())
                .select(F.col("w1").alias("w"), "cnt"))
     total = ucounts.agg(F.sum("cnt").alias("total"))
     if vocab_size is not None:
         # the K-row vocab cut feeds THREE consumers (u1/u2 broadcasts,
         # vmass) — persist it so the TakeOrdered runs once
-        uvocab = keep(ucounts.orderBy(F.desc("cnt"), "w")
-                      .limit(vocab_size))
+        uvocab = persist(ucounts.orderBy(F.desc("cnt"), "w")
+                         .limit(vocab_size))
         consts = total.crossJoin(
             uvocab.agg(F.sum("cnt").alias("vmass")))
     else:
@@ -1280,12 +1270,12 @@ def bigram_logprob(docs: DataFrame, text_col: str = "text",
     u1 = uvocab.select(F.col("w").alias("w1"), F.col("cnt")).alias("u1")
     u2 = uvocab.select(F.col("w").alias("w2"), F.col("cnt")).alias("u2")
     capped_u = vocab_size is not None
-    return (pairs
-            .join(bounded(bvocab, bigram_size is not None),
-                  ["w1", "w2"], "left")
-            .join(bounded(u1, capped_u), "w1", "left")
-            .join(bounded(u2, capped_u), "w2", "left")
-            .crossJoin(F.broadcast(consts))
-            .groupBy(id_col)
-            .agg(F.avg(nll).alias("nll"),
-                 F.count("*").alias("n_pairs")))
+    return hold(pairs
+                .join(bounded(bvocab, bigram_size is not None),
+                      ["w1", "w2"], "left")
+                .join(bounded(u1, capped_u), "w1", "left")
+                .join(bounded(u2, capped_u), "w2", "left")
+                .crossJoin(F.broadcast(consts))
+                .groupBy(id_col)
+                .agg(F.avg(nll).alias("nll"),
+                     F.count("*").alias("n_pairs")), counts_all, uvocab)

@@ -1183,6 +1183,36 @@ def test_keyless_ema_duplicate_timestamps_layout_invariant(spark):
             assert err < 1e-12, (interp, err)
 
 
+def test_keyless_ema_result_survives_cache_loss_and_replanning(spark):
+    """A keyless distributed ewma's result is a function of the data
+    alone: a second call, or an explicit release of every cached
+    subtree, may cost a recompute of the first call's scan but must not
+    change its values. The frames are larger than Spark's range-exchange
+    sample per partition, so a recompute that re-sampled partition
+    bounds would mis-align the carry-ins with the rows."""
+    from flint_spark.operators.ema import ewma
+    from flint_spark.pipeline._cache import release_caches
+
+    def mk(mult):
+        return spark.range(200_000, numPartitions=3).select(
+            (F.col("id") * 1_000_000_000).alias("time"),
+            ((F.col("id") * mult) % 101).cast("double").alias("v"))
+
+    def values(frame):
+        rows = (frame.where(F.col("time") % 3_000_000_000 == 0)
+                .select("time", "v_ewma").collect())
+        return np.array([r.v_ewma for r in sorted(rows)])
+
+    kw = dict(alpha=0.05, duration_per_period="1m", convention="core")
+    df1 = mk(7)
+    first = ewma(df1, "v", distributed=True, **kw)
+    ewma(mk(13), "v", distributed=True, **kw).count()
+    exp = values(ewma(df1, "v", distributed=False, **kw))
+    assert np.abs(values(first) - exp).max() < 1e-9
+    release_caches()
+    assert np.abs(values(first) - exp).max() < 1e-9
+
+
 def test_keyless_ema_auto_routes_small_input_to_single_group(spark, sf_dir):
     """Tiny parquet inputs (known plan stats) skip the 5-job distributed
     scan; unknown-stats inputs (ExistingRDD) must choose distributed."""
@@ -2216,8 +2246,8 @@ def test_pack_sequences_route_identity_and_invariants(spark):
     agree bitwise (LONG sums), and the packing invariants hold: every
     document's segments cover exactly its tokens in order, and every
     sequence except the stream's last holds exactly seq_len tokens."""
-    from flint_spark.operators.prefix import release_prefix_caches
     from flint_spark.pipeline import sampling
+    from flint_spark.pipeline._cache import release_caches
     from flint_spark.plans.audit import plan_counts
 
     df = spark.range(2000).select(
@@ -2230,7 +2260,7 @@ def test_pack_sequences_route_identity_and_invariants(spark):
     assert pc["shuffles"] <= 2 and pc["python"] == 0, pc
     got = sorted((r.doc_id, r.seq_id, r.doc_off, r.seq_off, r.seg_tokens)
                  for r in dist.collect())
-    release_prefix_caches()
+    release_caches()
     ref = sorted((r.doc_id, r.seq_id, r.doc_off, r.seq_off, r.seg_tokens)
                  for r in sampling.pack_sequences(
                      df, L, "n_tokens", distributed=False).collect())
@@ -5516,27 +5546,27 @@ def test_prefix_layout_pins_survive_interleaved_calls(spark):
     render = lambda st: {"cum": st["s"]}  # noqa: E731
 
     f1 = keyless_cumulative(mk(500, 1), items, render)
-    pin1 = f1._flint_prefix_pin
-    assert pin1.sdf is not None and pin1.sdf.is_cached
+    (pin1,) = f1._flint_pins
+    assert pin1.df is not None and pin1.df.is_cached
     f2 = keyless_cumulative(mk(500, 2), items, render)
     # the old single-slot cache would have unpersisted pin1 here
-    assert pin1.sdf is not None and pin1.sdf.is_cached
+    assert pin1.df is not None and pin1.df.is_cached
     a = f1.toPandas()
     b = f2.toPandas()
     assert len(a) == len(b) == 500
-    cached1 = pin1.sdf
+    cached1 = pin1.df
     del f1
     gc.collect()
     # pin released; the LRU registry now owns retention (derived
     # frames like result.select() drop Python attributes, so the
     # cache must outlive the exact returned object)
-    assert pin1.sdf is None and cached1.is_cached
-    pin2 = f2._flint_prefix_pin
+    assert pin1.df is None and cached1.is_cached
+    (pin2,) = f2._flint_pins
     del f2
     gc.collect()
-    assert pin2.sdf is None
-    from flint_spark.operators.prefix import release_prefix_caches
-    release_prefix_caches()
+    assert pin2.df is None
+    from flint_spark.pipeline._cache import release_caches
+    release_caches()
     assert not cached1.is_cached  # explicit hook force-releases
 
 
@@ -5552,13 +5582,13 @@ def test_prefix_layout_pin_propagates_through_keep_layout(spark):
         [(i * 1000, float((i * 7) % 23)) for i in range(800)],
         "time long, v double")
     out = cusum(df, "v", mu=5.0, sigma=3.0, distributed=True)
-    pin = out._flint_prefix_pin
+    (pin,) = out._flint_pins
     gc.collect()
-    assert pin.sdf is not None and pin.sdf.is_cached
+    assert pin.df is not None and pin.df.is_cached
     assert out.count() == 800  # evaluates with the layout still pinned
     del out
     gc.collect()
-    assert pin.sdf is None
+    assert pin.df is None
 
 
 def test_hot_key_probe_lru_eviction(spark):
@@ -5585,6 +5615,26 @@ def test_hot_key_probe_lru_eviction(spark):
     assert first in asof._HOT_KEY_CACHE  # refreshed entry survived
 
 
+def test_probe_memo_concurrent_hits_and_evictions():
+    """The hot-key and span probe memo is shared by concurrent as-of and
+    window calls: interleaved hits, misses and evictions on a few keys
+    from many threads never raise (the unlocked check-then-pop raced
+    to a KeyError) and never exceed the capacity."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from flint_spark.operators.asof import probe_memo
+
+    cache: dict = {}
+
+    def work(i):
+        for j in range(5000):
+            assert probe_memo(cache, 8, (i + j) % 12, lambda: j) is not None
+
+    with ThreadPoolExecutor(8) as pool:
+        list(pool.map(work, range(8)))
+    assert len(cache) <= 8
+
+
 def test_keyless_engine_exchange_budget(spark):
     """ADVICE r7: the prefix engine's exchange budget is now PINNED,
     not just claimed. One data exchange (the value-derived __pid hash
@@ -5608,16 +5658,15 @@ def test_keyless_engine_exchange_budget(spark):
 
 def test_prefix_layout_registry_eviction_is_recompute_not_corruption(spark):
     """r8 verdict item 6: interleaving MORE keyless engine frames than
-    the strong-ref registry holds (default 4) evicts the oldest
-    persisted layouts — by design a deterministic RECOMPUTE, never
-    corruption (the layout sorts on a total order). Pin exactly that:
-    5 interleaved frames, evaluate round-robin twice, every result
-    bitwise-stable and correct; the new LAYOUT_STATS counter makes the
-    eviction visible and set_layout_registry_size(5) removes it."""
-    from flint_spark.operators import prefix
-    from flint_spark.operators.prefix import (
-        LAYOUT_STATS, keyless_cumulative, release_prefix_caches,
-        set_layout_registry_size)
+    the strong-ref LRU holds (``_cache.LRU_SIZE``) evicts the oldest
+    persisted layouts, pinned or not — by design a deterministic
+    RECOMPUTE, never corruption (the layout sorts on a total order).
+    Pin exactly that: LRU_SIZE + 1 interleaved live frames, evaluate
+    round-robin twice, every result bitwise-stable and correct; the
+    STATS counter makes the eviction visible, and LRU_SIZE interleaved
+    frames evict nothing."""
+    from flint_spark.operators.prefix import keyless_cumulative
+    from flint_spark.pipeline._cache import LRU_SIZE, STATS, release_caches
 
     def make(mult):
         df = spark.range(2_000).select(
@@ -5632,27 +5681,117 @@ def test_prefix_layout_registry_eviction_is_recompute_not_corruption(spark):
     def expect(mult):
         return float(sum((i * mult) % 97 for i in range(2_000)))
 
-    release_prefix_caches()
-    before = dict(LAYOUT_STATS)
-    frames = [make(m) for m in (3, 5, 7, 11, 13)]  # 5 > _KEEP_MAX=4
-    assert LAYOUT_STATS["built"] - before["built"] == 5
-    assert LAYOUT_STATS["evicted"] - before["evicted"] >= 1
+    mults = (3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37)[:LRU_SIZE + 1]
+    release_caches()
+    before = dict(STATS)
+    frames = [make(m) for m in mults]
+    assert STATS["built"] - before["built"] == LRU_SIZE + 1
+    assert STATS["evicted"] - before["evicted"] >= 1
+    # the oldest layout went although its frame is still live
+    assert frames[0]._flint_pins[0].df is None
     # round-robin evaluation: evicted layouts recompute, results exact
     for _ in range(2):
-        for m, f in zip((3, 5, 7, 11, 13), frames):
+        for m, f in zip(mults, frames):
             assert last_cum(f) == expect(m), m
-    # a registry sized to the pipeline stops evicting
-    prev = set_layout_registry_size(5)
+    # a pipeline no larger than the LRU evicts nothing
     try:
-        release_prefix_caches()
-        base = dict(LAYOUT_STATS)
-        frames = [make(m) for m in (3, 5, 7, 11, 13)]
-        for m, f in zip((3, 5, 7, 11, 13), frames):
+        release_caches()
+        base = dict(STATS)
+        frames = [make(m) for m in mults[:LRU_SIZE]]
+        for m, f in zip(mults, frames):
             assert last_cum(f) == expect(m), m
-        assert LAYOUT_STATS["evicted"] == base["evicted"]
+        assert STATS["evicted"] == base["evicted"]
     finally:
-        set_layout_registry_size(prev)
-        release_prefix_caches()
+        release_caches()
+
+
+def _near_dup_docs(spark):
+    """60 docs plus 20 near-duplicates that differ in their last word."""
+    words = [f"w{i}" for i in range(40)]
+
+    def text(i, last=None):
+        toks = [words[(i * 7 + j * 3) % 40] for j in range(16)]
+        return " ".join(toks[:-1] + [last or toks[-1]])
+
+    return spark.createDataFrame(
+        [(i, text(i)) for i in range(60)]
+        + [(100 + i, text(i, "zz")) for i in range(20)],
+        "doc_id long, text string")
+
+
+def test_cache_module_concurrent_operators_match_sequential(spark):
+    """Operator-internal retention is safe with concurrent callers (the
+    perfbench verification and warm-up passes run every call on its
+    own thread): MinHash and SimHash pairs, a keyless distributed ewma
+    and keyless_cumulative run at once, each output equals its
+    sequential result, and nothing is evicted while no more subtrees
+    than LRU_SIZE are live."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from flint_spark.operators.ema import ewma
+    from flint_spark.operators.prefix import keyless_cumulative
+    from flint_spark.pipeline import dedup
+    from flint_spark.pipeline._cache import LRU_SIZE, STATS, release_caches
+
+    docs = _near_dup_docs(spark)
+    series = spark.range(20_000, numPartitions=3).select(
+        (F.col("id") * 1_000_000_000).alias("time"),
+        ((F.col("id") * 7) % 101).cast("double").alias("v"))
+    items = [("s", lambda d, o: o(F.sum(F.col("v"))), "sum")]
+    calls = {
+        "minhash": lambda: dedup.minhash_lsh_pairs(docs),
+        "simhash": lambda: dedup.simhash_pairs(docs),
+        "ewma": lambda: ewma(series, "v", duration_per_period="1m",
+                             convention="core", distributed=True),
+        "cumulative": lambda: keyless_cumulative(
+            series, items, lambda st: {"cum": st["s"]}),
+    }
+
+    def run(name):
+        return sorted(tuple(r) for r in calls[name]().collect())
+
+    want = {name: run(name) for name in calls}
+    assert want["minhash"] and want["simhash"]
+    release_caches()
+    before = dict(STATS)
+    with ThreadPoolExecutor(len(calls)) as pool:
+        got = dict(zip(calls, pool.map(run, calls)))
+    assert STATS["built"] - before["built"] <= LRU_SIZE
+    assert STATS["evicted"] == before["evicted"]
+    for name in ("minhash", "simhash", "cumulative"):
+        assert got[name] == want[name], name
+    # the bucket bounds are re-sampled per call: floats agree to rounding
+    np.testing.assert_allclose(np.array(got["ewma"]), np.array(want["ewma"]),
+                               rtol=1e-9)
+
+
+def test_cache_module_bounds_retention(spark):
+    """Persisted subtrees are bounded by the LRU: after more dsir_select
+    and simhash_pairs calls than LRU_SIZE, at most LRU_SIZE cached RDDs
+    remain, both while every result is still reachable (a hard cap, not
+    one slot per live result) and after the results are dropped
+    (before, dsir_select leaked one per call)."""
+    import gc
+
+    from flint_spark.pipeline import dedup, sampling
+    from flint_spark.pipeline._cache import LRU_SIZE, release_caches
+
+    docs = _near_dup_docs(spark)
+    target = docs.where(F.col("doc_id") < 30)
+    jsc = spark.sparkContext._jsc
+    release_caches()
+    gc.collect()
+    base = len(jsc.getPersistentRDDs())
+    live = []
+    for _ in range(LRU_SIZE + 1):
+        live.append(sampling.dsir_select(docs, target, k=5))
+        live.append(dedup.simhash_pairs(docs))
+        assert live[-2].count() > 0 and live[-1].count() > 0
+    assert len(jsc.getPersistentRDDs()) - base <= LRU_SIZE
+    del live
+    gc.collect()
+    assert len(jsc.getPersistentRDDs()) - base <= LRU_SIZE
+    release_caches()
 
 
 def test_wheel_artifact_handrolled_and_importable(tmp_path):
@@ -5827,13 +5966,13 @@ def test_volume_bars_keyless_keeps_layout_pin(spark):
          for i in range(600)],
         "time long, p double, vol double")
     out = volume_bars(df, 50.0, "p", "vol", distributed=True)
-    pin = out._flint_prefix_pin
+    (pin,) = out._flint_pins
     gc.collect()
-    assert pin.sdf is not None and pin.sdf.is_cached
+    assert pin.df is not None and pin.df.is_cached
     assert out.count() > 0
     del out
     gc.collect()
-    assert pin.sdf is None
+    assert pin.df is None
 
 
 def test_keyless_cumulative_single_partition_target(spark):
