@@ -2524,14 +2524,13 @@ SQL_ROLLING_OLS_MULTI = f"""
 
 
 def q_asof_backward_bucketed(spark, sf):
-    """Shuffle-eliding as-of over a co-bucketed layout
-    (operators.asof.left_join_cogroup + sources.writer.write_bucketed —
-    the storage-partitioned RangeMergeJoin, SURVEY §4 item 6): both
-    sides persisted bucketed+sorted by user_id, read back, and joined
-    by the cogrouped Arrow merge whose ClusteredDistribution is
-    satisfied by the scans' HashPartitioning — ZERO data exchanges
+    """As-of over a co-bucketed layout (operators.asof.left_join +
+    sources.writer.write_bucketed): both sides persisted
+    bucketed+sorted by user_id, read back, and joined by the
+    union-window plan (``distributed=False`` pins that route on the
+    bucketed scans). The plan keeps at most its one window exchange
     (asserted in-query, plan-audited in PLANS.md). Values must equal
-    the exchange-ful asof_backward oracle exactly."""
+    the plain-input asof_backward oracle exactly."""
     from flint_spark.operators import asof
     from flint_spark.sources.writer import write_bucketed
 
@@ -2542,11 +2541,12 @@ def q_asof_backward_bucketed(spark, sf):
         F.col("o_custkey").alias("user_id"), "o_totalprice")
     write_bucketed(ev, "gate_ab_left", ["user_id"], n_buckets=16)
     write_bucketed(right, "gate_ab_right", ["user_id"], n_buckets=16)
-    out = asof.left_join_cogroup(spark.table("gate_ab_left"),
-                                 spark.table("gate_ab_right"),
-                                 tolerance="9000d", key=["user_id"])
+    out = asof.left_join(spark.table("gate_ab_left"),
+                         spark.table("gate_ab_right"),
+                         tolerance="9000d", key=["user_id"],
+                         distributed=False)
     from .common import count_exchanges
-    assert count_exchanges(out) == 0, "bucketed as-of plan re-shuffled"
+    assert count_exchanges(out) <= 1, "bucketed as-of plan shuffled twice"
     return out.select(TIME_COLUMN, "event_id", "user_id", "value",
                       "o_totalprice")
 
@@ -2813,11 +2813,10 @@ SQL_INTERVAL_GAPS = """
 def q_asof_topk(spark, sf):
     """Last-k as-of join (operators.asof.left_join_topk): the 3 most
     recent orders in [t - 9000d, t] per user attached to every event,
-    most-recent-first; the complete-group union engine (one exchange
-    per side; left_join_topk_cogroup keeps the zero-exchange
-    co-bucketed path). Array elements project to scalar columns so
-    the value-hash compare stays array-free; the oracle computes the
-    same tail via a DESC-ordered list subquery."""
+    most-recent-first; the complete-group union engine (one hash
+    repartition of the tagged two-side union). Array elements project
+    to scalar columns so the value-hash compare stays array-free; the
+    oracle computes the same tail via a DESC-ordered list subquery."""
     from flint_spark.operators.asof import left_join_topk
 
     ev = _events(spark, sf).select(TIME_COLUMN, "event_id", "user_id")

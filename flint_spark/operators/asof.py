@@ -419,9 +419,10 @@ def left_join_broadcast(left: DataFrame, right: DataFrame,
 
     Semantics (tolerance bounds inclusive, equal-timestamp matching,
     max-struct duplicate rule, forward/strict variants) match the
-    window plan exactly; the route-identity property tests pin all
-    three engines against each other. ``engine="arrow"`` keeps the r6
-    collect-and-broadcast ``np.searchsorted`` path (shared with the
+    window plan exactly; the route-identity tests pin the union-window,
+    JVM-broadcast and Arrow engines against each other.
+    ``engine="arrow"`` keeps the r6 collect-and-broadcast
+    ``np.searchsorted`` path (shared with the
     streaming static-dim join ``streaming.ts_stream.asof_join_static``)
     — the JVM engine beat it ~3× on the bench (whole left crossed
     JVM→Arrow→Python→JVM per batch), but the Arrow path remains the
@@ -503,100 +504,6 @@ def left_join_broadcast(left: DataFrame, right: DataFrame,
     return joined.select(
         *left.columns,
         *[F.when(valid, matched[c]).alias(c) for c in rdata])
-
-
-def left_join_cogroup(left: DataFrame, right: DataFrame,
-                      tolerance: str | int = 0, key: Sequence[str] = (),
-                      direction: str = "backward",
-                      strict_lookahead: bool = False) -> DataFrame:
-    """As-of join that ELIDES ITS SHUFFLE on co-bucketed layouts — the
-    storage-partitioned answer to the reference's shuffle-free
-    ``RangeMergeJoin.scala:28-140`` (SURVEY §4 item 6).
-
-    The union-window plan (:func:`left_join`) cannot inherit a
-    bucketed layout: Catalyst's ``UnionExec`` reports
-    ``UnknownPartitioning`` no matter how its children are
-    partitioned, so the window exchange always re-shuffles. This
-    variant instead compiles to ``groupBy(key).cogroup(...)
-    .applyInPandas`` — a per-key Arrow merge join (vectorized
-    ``searchsorted``, the same matcher as
-    :func:`left_join_broadcast`) whose required child distribution IS
-    ``ClusteredDistribution(key)``: when both sides scan tables
-    bucketed by ``key`` with matching bucket counts
-    (``sources.writer.write_bucketed``), EnsureRequirements finds the
-    scans' HashPartitioning compatible and plans ZERO data exchanges;
-    on unbucketed inputs it degrades to the ordinary two-sided
-    shuffle. At 100 TB the write-once bucketed layout turns every
-    subsequent as-of against that key into a map-side job.
-
-    Semantics match ``left_join`` / ``future_left_join`` exactly
-    (tolerance bounds, equal-timestamp matching, max-struct duplicate
-    rule via the shared time-then-values sort, forward/strict
-    variants); output = left columns ++ right data columns. Keyless
-    as-of cannot co-bucket — use :func:`asof_keyless_bucketed`.
-
-    Memory profile: cogroup materializes ONE KEY'S rows per task
-    (both sides), where the window plan streams each key group
-    through WindowExec in bounded memory. The zero-exchange trade is
-    therefore right for entity-keyed layouts whose per-key history
-    fits an executor (the id-keyed quant/dimension shape bucketed
-    layouts exist for); a hot key with unbounded history should stay
-    on :func:`left_join` and pay the shuffle."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    from ..streaming.ts_stream import (_forward_tie_resolve,
-                                       _sort_time_then_values)
-
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
-    if strict_lookahead and direction != "forward":
-        raise ValueError("strict_lookahead requires direction='forward'")
-    key = list(key)
-    if not key:
-        raise ValueError("left_join_cogroup needs a join key; keyless "
-                         "as-of joins use asof_keyless_bucketed")
-    tol = parse_duration_ns(tolerance) if tolerance else 0
-    rdata = [c for c in right.columns
-             if c != TIME_COLUMN and c not in key]
-    conflicts = set(rdata) & set(left.columns)
-    if conflicts:
-        raise ValueError(f"conflicting output columns {sorted(conflicts)}")
-    l_ns = left.withColumn(_TNS, time_ns_expr(left))
-    r_ns = right.select(*key, time_ns_expr(right).alias("__rtns"), *rdata)
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [f for f in right.schema.fields if f.name in rdata])
-    in_cols = list(left.columns)
-
-    def fold(lpdf, rpdf):
-        out = lpdf[in_cols].copy()
-        t = lpdf[_TNS].to_numpy(np.int64)
-        if len(rpdf) == 0:
-            for c in rdata:
-                out[c] = np.full(len(t), None, dtype=object)
-            return out
-        rpdf = _sort_time_then_values(rpdf, "__rtns", rdata)
-        rt = rpdf["__rtns"].to_numpy(np.int64)
-        if direction == "backward":
-            pos = np.searchsorted(rt, t, side="right") - 1
-            ok = pos >= 0
-            ok &= (t - rt[np.clip(pos, 0, None)]) <= tol
-        else:
-            pos = np.searchsorted(
-                rt, t, side="right" if strict_lookahead else "left")
-            ok = pos < len(rt)
-            ok &= rt[np.clip(pos, None, max(len(rt) - 1, 0))] <= t + tol
-            pos = _forward_tie_resolve(np, rt, pos, ok)
-        for c in rdata:
-            vals = np.full(len(t), None, dtype=object)
-            if ok.any():
-                vals[ok] = rpdf[c].to_numpy()[pos[ok]]
-            out[c] = vals
-        return out
-
-    return (l_ns.groupBy(*key).cogroup(r_ns.groupBy(*key))
-            .applyInPandas(fold, out_schema))
 
 
 def nearest_join(left: DataFrame, right: DataFrame,
@@ -829,8 +736,7 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     whole join runs in ~1s (docs/BENCH_NOTES.md). Per-row window
     bounds come from two vectorized searchsorteds, the k-tail gather
     is a (n, k) index matrix — no per-row Python loop over
-    candidates. For a co-bucketed zero-exchange plan use
-    :func:`left_join_topk_cogroup`; for a small static right side use
+    candidates. For a small static right side use
     :func:`left_join_topk_broadcast`."""
     import numpy as np
     import pandas as pd
@@ -983,62 +889,6 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     return arranged.mapInPandas(run, out_schema)
 
 
-def left_join_topk_cogroup(left: DataFrame, right: DataFrame, k: int,
-                           tolerance: str | int = 0,
-                           key: Sequence[str] = ()) -> DataFrame:
-    """:func:`left_join_topk` via the cogroup Arrow merge: ZERO data
-    exchanges when both sides scan tables bucketed by ``key`` with
-    matching bucket counts (the :func:`left_join_cogroup` property —
-    the union engine cannot elide there because UnionExec reports
-    UnknownPartitioning). Pays the per-key JVM<->Arrow round-trip
-    twice, so on NON-bucketed inputs with many keys prefer the
-    default :func:`left_join_topk`; identical output (parity
-    test-pinned)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..streaming.ts_stream import (_lastk_gather, _lastk_plan,
-                                       _sort_time_then_values)
-
-    key = list(key)
-    if not key:
-        raise ValueError("left_join_topk_cogroup needs a join key")
-    tol = parse_duration_ns(tolerance) if tolerance else 0
-    rdata, out_names, out_schema = _lastk_plan(
-        left.columns, left.schema.fields, right, key, TIME_COLUMN, k)
-    l_ns = left.withColumn(_TNS, time_ns_expr(left))
-    r_ns = right.select(*key, time_ns_expr(right).alias("__rtns"), *rdata)
-    in_cols = list(left.columns)
-
-    def fold(lpdf, rpdf):
-        out = lpdf[in_cols].copy()
-        t = lpdf[_TNS].to_numpy(np.int64)
-        n = len(t)
-        if len(rpdf) == 0:
-            for c in rdata:
-                # dtype=object even when n == 0: an empty default
-                # assignment makes a float64 column, which Arrow then
-                # refuses to cast to list<...>
-                out[out_names[c]] = pd.Series([[] for _ in range(n)],
-                                              index=out.index, dtype=object)
-            out["n_matched"] = np.zeros(n, dtype=np.int32)
-            return out
-        rpdf = _sort_time_then_values(rpdf, "__rtns", rdata)
-        rt = rpdf["__rtns"].to_numpy(np.int64)
-        idx, mask = _lastk_gather(np, rt, t, tol, k)
-        for c in rdata:
-            rv = rpdf[c].to_numpy()
-            picked = rv[idx]
-            out[out_names[c]] = pd.Series(
-                [picked[i][mask[i]].tolist() for i in range(n)],
-                index=out.index, dtype=object)
-        out["n_matched"] = mask.sum(axis=1).astype(np.int32)
-        return out
-
-    return (l_ns.groupBy(*key).cogroup(r_ns.groupBy(*key))
-            .applyInPandas(fold, out_schema))
-
-
 def left_join_topk_broadcast(left: DataFrame, right: DataFrame, k: int,
                              tolerance: str | int = 0,
                              key: Sequence[str] = ()) -> DataFrame:
@@ -1047,8 +897,8 @@ def left_join_topk_broadcast(left: DataFrame, right: DataFrame, k: int,
     searchsorted gather map-side — the last-k analogue of
     :func:`left_join_broadcast`. Shared implementation with the
     streaming static-dim enrichment
-    (``streaming.ts_stream.topk_join_static``); parity with the
-    cogroup operator is test-pinned."""
+    (``streaming.ts_stream.topk_join_static``); parity with
+    :func:`left_join_topk` is test-pinned."""
     from ..streaming.ts_stream import topk_join_static
 
     return topk_join_static(left, right, k, tolerance, key)

@@ -4,8 +4,9 @@
 writes parquet partitioned by it (plus optional extra keys), so later
 ``[begin, end)`` reads prune whole directories (partition pruning on
 top of row-group pruning). ``write_bucketed`` persists a
-bucket-by-key table so subsequent keyed joins/windows co-locate
-without a shuffle (Spark bucketing needs ``saveAsTable``).
+bucket-by-key table so subsequent keyed aggregations on that key skip
+their shuffle (Spark bucketing needs ``saveAsTable``); the union-window
+as-of join still plans one exchange over bucketed scans.
 """
 
 from __future__ import annotations
@@ -79,8 +80,8 @@ def _location_owner(spark, loc: str) -> str | None:
 
 def write_bucketed(df: DataFrame, table: str, key: Sequence[str],
                    n_buckets: int = 64, mode: str = "overwrite") -> None:
-    """Bucket by join/window key: downstream operators partitioned on
-    the same key skip their shuffle (storage-partitioned layout).
+    """Bucket by key: downstream aggregations grouped on the same key
+    skip their shuffle (storage-partitioned layout).
     ``mode='overwrite'`` also clears an ORPHANED managed-table
     location (a previous session's warehouse directory whose catalog
     entry died with that session) — otherwise saveAsTable fails with

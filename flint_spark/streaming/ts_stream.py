@@ -270,13 +270,13 @@ def _null_safe_key(pd, kv):
     pandas renders missing keys as NaN/NaT whose dict identity is
     unreliable (hash(float('nan')) is id-based) — map every missing
     value to None so the broadcast-table lookup matches the way
-    Spark's window/cogroup plans group nulls together.
+    Spark's window/group plans group nulls together.
 
     Known limit: for FLOAT key columns pandas renders Spark NULL and
     Spark NaN identically (both NaN), so this path merges them into
     one group where Spark's own grouping keeps them distinct. Float
     keys holding actual NaN VALUES therefore break exact parity with
-    the window/cogroup plans — use non-float key columns (the normal
+    the window/group plans — use non-float key columns (the normal
     id/string case) when exact null-semantics parity matters."""
     return tuple(None if pd.isna(v) else v for v in kv)
 
@@ -309,10 +309,10 @@ def _lastk_plan(left_cols, left_fields, right, key, right_time_column, k):
 
 
 def _lastk_gather(np, rt, t, tol, k):
-    """(idx, mask) for the k-tail gather shared by the cogroup and
-    broadcast last-k joins: row i's candidates are rt in
-    [t_i - tol, t_i]; idx[i, j] addresses the j-th most recent, mask
-    marks real candidates (fewer than k available -> masked off)."""
+    """(idx, mask) for the k-tail gather of the broadcast last-k join:
+    row i's candidates are rt in [t_i - tol, t_i]; idx[i, j] addresses
+    the j-th most recent, mask marks real candidates (fewer than k
+    available -> masked off)."""
     lo = np.searchsorted(rt, t - tol, side="left")
     hi = np.searchsorted(rt, t, side="right")
     idx = hi[:, None] - 1 - np.arange(k)[None, :]
@@ -464,8 +464,8 @@ def topk_join_static(stream: DataFrame, right: DataFrame, k: int,
     per key as most-recent-first arrays + ``n_matched``. Same
     broadcast/searchsorted machinery as :func:`asof_join_static`
     (map-only, no shuffle of the stream, no state store; identical on
-    a batch DataFrame, which the parity test pins against the cogroup
-    operator)."""
+    a batch DataFrame, which the parity test pins against the union
+    engine)."""
     import numpy as np
     import pandas as pd
 

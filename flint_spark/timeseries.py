@@ -621,20 +621,6 @@ class TimeSeriesDataFrame:
         return self._wrap(left_join_topk(self._df, r, k, tolerance, key),
                           is_sorted=False)
 
-    def left_join_topk_bucketed(self, right: "TimeSeriesDataFrame",
-                                k: int, tolerance: str | int = 0,
-                                key: Sequence[str] = ()
-                                ) -> "TimeSeriesDataFrame":
-        """Last-k join via the cogroup merge: zero data exchanges on
-        co-bucketed scans (:func:`operators.asof
-        .left_join_topk_cogroup`); on non-bucketed inputs prefer
-        :meth:`left_join_topk`."""
-        from .operators.asof import left_join_topk_cogroup
-        r = right._df if isinstance(right, TimeSeriesDataFrame) else right
-        return self._wrap(left_join_topk_cogroup(self._df, r, k,
-                                                 tolerance, key),
-                          is_sorted=False)
-
     def left_join_topk_broadcast(self, right: "TimeSeriesDataFrame",
                                  k: int, tolerance: str | int = 0,
                                  key: Sequence[str] = ()
@@ -668,22 +654,6 @@ class TimeSeriesDataFrame:
     def ols_regression(self, y: str, xs: Sequence[str], **kwargs) -> DataFrame:
         from .operators.regression import ols_regression
         return ols_regression(self._df, y, xs, **kwargs)
-
-    def left_join_bucketed(self, other, tolerance: str | int = 0,
-                           key: Sequence[str] = (),
-                           direction: str = "backward",
-                           strict_lookahead: bool = False
-                           ) -> "TimeSeriesDataFrame":
-        """Storage-partitioned as-of (:func:`operators.asof.
-        left_join_cogroup`): zero data exchanges when both sides scan
-        tables bucketed by ``key`` with matching bucket counts."""
-        from .operators.asof import left_join_cogroup
-        right = other._df if isinstance(other, TimeSeriesDataFrame) \
-            else other
-        return self._wrap(
-            left_join_cogroup(self._df, right, tolerance, key,
-                              direction, strict_lookahead),
-            is_sorted=False)
 
     def rolling_ols(self, y: str, x: str, window,
                     **kwargs) -> "TimeSeriesDataFrame":

@@ -177,7 +177,7 @@ def linearity_suite(spark, millions: float = 5.0):
 
     linearity("point_in_interval_join", range_join, n_small, n_big)
 
-    # r5 engines: complete-group Arrow batching + cogroup as-of
+    # r5 engines: complete-group Arrow batching
     def window_udf_lin(n):
         from flint_spark.functions import summarize_windows_udf
 
@@ -206,17 +206,6 @@ def linearity_suite(spark, millions: float = 5.0):
                     duration_per_period="1s")
 
     linearity("ewma keyed scan engine", keyed_ewma_lin, n_small, n_big)
-
-    def cogroup_asof_lin(n):
-        left = keyed_panel(n)
-        right = (spark.range(n // 4)
-                 .select((F.col("id") * 4 * 10**9 + 500).alias("time"),
-                         F.pmod(F.col("id"), F.lit(2000)).alias("id"),
-                         (F.col("id") % 89).cast("double").alias("v")))
-        return asof.left_join_cogroup(left, right, tolerance="100s",
-                                      key=["id"])
-
-    linearity("left_join_cogroup", cogroup_asof_lin, n_small, n_big)
 
     # --- late-r5 operators -------------------------------------------
     def overlap_join_lin(n):

@@ -789,17 +789,16 @@ def test_ewma_native_multi_column_single_window(spark):
     assert sum(1 for n in names if n == "Sort") <= 2
 
 
-def test_asof_cogroup_bucketed_elides_exchange(spark, tmp_path):
-    """Storage-partitioned as-of (r4 judge item #4): write both sides
-    bucketed+sorted by key, and the cogrouped merge-join plan must show
-    ZERO Exchange nodes (the scans' HashPartitioning satisfies the
-    cogroup's ClusteredDistribution); the same operator on unbucketed
-    inputs shuffles both sides; results match left_join /
-    future_left_join row-for-row either way."""
+def test_asof_bucketed_scans_match_plain(spark):
+    """The union-window as-of over bucketed scans: left_join and
+    future_left_join read from write_bucketed tables equal the
+    plain-input results row for row, with matching (8/8) and
+    mismatched (8/4) bucket counts. Over matching buckets the plan has
+    at most one Exchange — the baseline an ordered-layout contract is
+    meant to take to zero."""
     import random
 
-    from flint_spark.operators.asof import (future_left_join, left_join,
-                                            left_join_cogroup)
+    from flint_spark.operators.asof import future_left_join, left_join
     from flint_spark.sources.writer import write_bucketed
     from flint_spark.plans.audit import walk_plan as _walk
 
@@ -814,41 +813,35 @@ def test_asof_cogroup_bucketed_elides_exchange(spark, tmp_path):
     def rows(df):
         return sorted((r.time, r.k, r.lv, r.rv) for r in df.collect())
 
-    exp_b = rows(left_join(left, right, tolerance="50s", key=["k"]))
-    exp_f = rows(future_left_join(left, right, tolerance="50s",
-                                  key=["k"]))
+    def joins(lf, rf):
+        # distributed=False pins the union-window route on every input
+        return (left_join(lf, rf, tolerance="50s", key=["k"],
+                          distributed=False),
+                future_left_join(lf, rf, tolerance="50s", key=["k"],
+                                 distributed=False))
+
+    exp_b, exp_f = map(rows, joins(left, right))
 
     def n_exchanges(df):
         df.collect()  # executes THIS QueryExecution -> AQE-final plan
         names = list(_walk(df._jdf.queryExecution().executedPlan()))
         return sum(1 for n in names if n == "Exchange")
 
-    # unbucketed: correct, but two shuffles (one per cogroup side)
-    plain = left_join_cogroup(left, right, tolerance="50s", key=["k"])
-    assert rows(plain) == exp_b
-    assert n_exchanges(plain) == 2
-
-    # bucketed with MATCHING specs: zero exchanges
-    write_bucketed(left, "cg_left_b", ["k"], n_buckets=8)
-    write_bucketed(right, "cg_right_b", ["k"], n_buckets=8)
-    lb, rb = spark.table("cg_left_b"), spark.table("cg_right_b")
-    buck = left_join_cogroup(lb, rb, tolerance="50s", key=["k"])
-    assert n_exchanges(buck) == 0
-    assert rows(buck) == exp_b
-    fwd = left_join_cogroup(lb, rb, tolerance="50s", key=["k"],
-                            direction="forward")
-    assert n_exchanges(fwd) == 0
-    assert rows(fwd) == exp_f
-
-    # MISMATCHED bucket counts cannot co-execute: at least one side
-    # must re-shuffle (no silent wrong answers, just a plan downgrade)
-    write_bucketed(right, "cg_right_b4", ["k"], n_buckets=4)
-    mism = left_join_cogroup(lb, spark.table("cg_right_b4"),
-                             tolerance="50s", key=["k"])
-    assert n_exchanges(mism) >= 1
-    assert rows(mism) == exp_b
-    for t in ("cg_left_b", "cg_right_b", "cg_right_b4"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        write_bucketed(left, "asof_left_b8", ["k"], n_buckets=8)
+        write_bucketed(right, "asof_right_b8", ["k"], n_buckets=8)
+        write_bucketed(right, "asof_right_b4", ["k"], n_buckets=4)
+        lb = spark.table("asof_left_b8")
+        back, fwd = joins(lb, spark.table("asof_right_b8"))
+        assert rows(back) == exp_b
+        assert rows(fwd) == exp_f
+        assert n_exchanges(back) <= 1
+        back, fwd = joins(lb, spark.table("asof_right_b4"))
+        assert rows(back) == exp_b
+        assert rows(fwd) == exp_f
+    finally:
+        for t in ("asof_left_b8", "asof_right_b8", "asof_right_b4"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_train_logreg_learns_separable_data(spark):
@@ -2810,22 +2803,6 @@ def test_left_join_broadcast_matches_window_plan(spark):
         assert rows(got) == rows(exp), ("forward", strict)
     with pytest.raises(ValueError):
         asof.left_join_broadcast(left, right, direction="sideways")
-    # the cogrouped (storage-partitioned) plan shares the matcher:
-    # same parity on the SAME data, duplicate (key, time) rights
-    # included — pins the max-struct tie rule across all three plans
-    for tol in (0, 2500, 10**6):
-        got = asof.left_join_cogroup(left, right, tolerance=tol, key=["k"])
-        exp = asof.left_join(left, right, tolerance=tol, key=["k"])
-        assert rows(got) == rows(exp), ("cogroup-backward", tol)
-    for strict in (False, True):
-        got = asof.left_join_cogroup(left, right, tolerance=5000, key=["k"],
-                                     direction="forward",
-                                     strict_lookahead=strict)
-        exp = asof.future_left_join(left, right, tolerance=5000, key=["k"],
-                                    strict_lookahead=strict)
-        assert rows(got) == rows(exp), ("cogroup-forward", strict)
-    with pytest.raises(ValueError):
-        asof.left_join_cogroup(left, right, key=[])  # keyless unsupported
 
 
 def test_review2_fixes(spark):
@@ -3178,7 +3155,7 @@ def test_left_join_topk_matches_brute_force(spark):
 
 def test_left_join_topk_broadcast_parity(spark):
     """The broadcast last-k path (streaming twin) produces exactly the
-    cogroup operator's output, including empty-match arrays for
+    union engine's output, including empty-match arrays for
     left-only keys and the zero-shuffle plan for the left side."""
     import random
 
@@ -3668,13 +3645,12 @@ def test_merge_bars_equals_direct_coarse(spark):
 
 def test_left_join_topk_shared_payload_name(spark):
     """A right data column named like a left payload column must work
-    through ALL THREE last-k engines (the union engine renames the
+    through BOTH last-k engines (the union engine renames the
     prefixed right columns inside pandas — regression: the rename
     collided with the left filler column of the same name and raised
     or corrupted the gather)."""
     from flint_spark.operators.asof import (left_join_topk,
-                                            left_join_topk_broadcast,
-                                            left_join_topk_cogroup)
+                                            left_join_topk_broadcast)
 
     L = [(10_000, "a", 1.0), (20_000, "a", 2.0), (15_000, "b", 3.0)]
     Rr = [(9_000, "a", 100.0), (9_500, "a", 101.0), (14_000, "b", 102.0)]
@@ -3686,8 +3662,7 @@ def test_left_join_topk_shared_payload_name(spark):
         (20_000, "a", 2.0): ([], 0),
         (15_000, "b", 3.0): ([102.0], 1),
     }
-    for fn in (left_join_topk, left_join_topk_cogroup,
-               left_join_topk_broadcast):
+    for fn in (left_join_topk, left_join_topk_broadcast):
         got = {(r.time, r.k, r.v): (list(r.v_lastk), r.n_matched)
                for r in fn(ldf, rdf, k=2, tolerance=2_000,
                            key=["k"]).collect()}

@@ -747,13 +747,12 @@ def test_interval_family_vs_reference(rows, adj, bucket):
 @given(left=panels(), right=panels(), tol=st.integers(0, 200),
        k=st.integers(1, 4))
 def test_left_join_topk_vs_reference(left, right, tol, k):
-    """Last-k as-of join (union-engine, cogroup and broadcast paths)
+    """Last-k as-of join (union-engine and broadcast paths)
     == per-row reference: tail of the (time, value)-sorted candidate
     run, reversed — for random frames, tolerances and k, including
     duplicate timestamps (tie rule) and ids missing on either side."""
     from flint_spark.operators.asof import (left_join_topk,
-                                            left_join_topk_broadcast,
-                                            left_join_topk_cogroup)
+                                            left_join_topk_broadcast)
 
     spark = _spark()
     right = right.rename(columns={"v": "rv"})
@@ -772,8 +771,7 @@ def test_left_join_topk_vs_reference(left, right, tol, k):
         return out
 
     exp = ref()
-    for fn in (left_join_topk, left_join_topk_cogroup,
-               left_join_topk_broadcast):
+    for fn in (left_join_topk, left_join_topk_broadcast):
         got = {(r.time, r.id, r.v): list(r.rv_lastk)
                for r in fn(ldf, rdf, k=k, tolerance=tol,
                            key=["id"]).collect()}
