@@ -250,7 +250,8 @@ def _bucketed_window_apply(df: DataFrame, window: TimeWindow,
     ``{out_name: full-segment array}``; the engine keeps only the
     target rows' values (context rows replicated from neighbouring
     buckets are evaluated but not emitted)."""
-    from .timeseries import floor_div, parse_duration_ns, time_ns_expr
+    from .operators._route import replicate_into_buckets
+    from .timeseries import parse_duration_ns
 
     key = list(key)
     lo, hi = window.range_bounds()
@@ -261,23 +262,8 @@ def _bucketed_window_apply(df: DataFrame, window: TimeWindow,
             f"bucket width {width} ns is smaller than the window span "
             f"{span} ns — a window would span more than two buckets")
     data_cols = list(df.columns)
-    tns = time_ns_expr(df)
-    # a null time would explode into a null bucket sequence and the
-    # row would SILENTLY vanish — fail loudly instead (the batch
-    # engine's time column is non-null by contract)
-    tns = F.when(tns.isNull(), F.raise_error(F.lit(
-        "summarize_windows_udf: null time value — the window engine "
-        "requires a non-null time column")).cast("long")).otherwise(tns)
-    d = df.withColumn("__tns", tns)
-    own_b = floor_div(F.col("__tns"), width)
-    serve_from = floor_div(F.col("__tns") - F.lit(int(hi)), width)
-    serve_to = floor_div(F.col("__tns") - F.lit(int(lo)), width)
-    exploded = (d.withColumn("__ob", own_b)
-                .withColumn("__b", F.explode(F.sequence(
-                    F.least(serve_from, F.col("__ob")),
-                    F.greatest(serve_to, F.col("__ob")))))
-                .withColumn("__tgt", F.col("__b") == F.col("__ob"))
-                .drop("__ob"))
+    exploded = replicate_into_buckets(df, lo, hi, width,
+                                      "summarize_windows_udf")
     out_schema = T.StructType(list(df.schema.fields) + list(new_fields))
     out_cols = [f.name for f in out_schema.fields]
     lo_i, hi_i = int(lo), int(hi)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..summarizers import Summarizer
 from ..timeseries import TIME_COLUMN, ns_to_time_expr, time_ns_expr
+from . import _route
 
 
 def summarize(df: DataFrame, summarizer: Summarizer, key: Sequence[str] = ()) -> DataFrame:
@@ -74,15 +75,13 @@ def add_summary_columns(df: DataFrame, summarizer: Summarizer,
     ``distributed=True`` forces the engine (raising for non-mergeable
     summarizers), ``False`` pins the single-window plan."""
     key = list(key)
-    if not key and distributed is not False:
-        from .ema import _KEYLESS_SINGLE_GROUP_MAX_BYTES, _estimated_bytes
+    if not key:
         if distributed is True and not summarizer.has_cum:
             raise ValueError(
                 "distributed=True needs a summarizer with mergeable "
                 "cumulative state (has_cum); this one buffers values")
-        auto = (distributed is None and summarizer.has_cum and
-                _estimated_bytes(df) > _KEYLESS_SINGLE_GROUP_MAX_BYTES)
-        if distributed is True or auto:
+        if summarizer.has_cum and _route.keyless_distributed(
+                lambda: _route.estimated_bytes(df), distributed):
             return _keyless_distributed_cumulative(df, summarizer, tie_break)
     w = (
         Window.partitionBy(*key)

@@ -33,13 +33,13 @@ un-keyed tables at scale should pre-bucket by a coarse time range (see
 
 from __future__ import annotations
 
-import threading
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..timeseries import TIME_COLUMN, floor_div, parse_duration_ns, time_ns_expr
+from . import _route
 
 _RROW = "__rrow"
 _SRC = "__src"
@@ -101,11 +101,6 @@ def _finish(unioned: DataFrame, key, left_data, right_data, left_out, right_out,
     return unioned.filter(F.col(_SRC) == 1).select(*out_cols)
 
 
-#: combined size estimate above which a keyless (or hot-key-guarded)
-#: as-of auto-routes through the time-bucketed engine instead of
-#: funnelling both tables through ONE window task
-_KEYLESS_ASOF_MAX_BYTES = 64 << 20
-
 #: right-side size estimate below which ``left_join``/``future_left_join``
 #: MAY auto-route through the broadcast engine — the dim-table as-of
 #: shape, where the union plan would shuffle the BIG side just to probe
@@ -122,62 +117,6 @@ _ASOF_BROADCAST_MAX_BYTES = 10 << 20
 #: shuffle through the pure-JVM union-window plan than to probe
 #: row-by-row against a same-sized broadcast table
 _ASOF_BROADCAST_LEFT_RATIO = 8
-
-# probe memo keyed on the plan's semantic hash: repeated joins against
-# the same frame pay the count-by-key scan once per session, not per call
-_HOT_KEY_CACHE: dict = {}
-_HOT_KEY_CACHE_MAX = 64
-
-_MEMO_LOCK = threading.Lock()
-_MISS = object()
-
-
-def probe_memo(cache: dict, cap: int, ck, compute):
-    """Per-frame probe memo shared by the as-of and window probes:
-    a hit is refreshed to most-recent, a miss runs ``compute()``
-    (outside the lock — it launches a Spark job) and evicts ONE stale
-    entry at capacity. A ``None`` key skips the memo. Safe with
-    concurrent callers: two misses on one key both compute, and the
-    second store simply overwrites the first."""
-    if ck is None:
-        return compute()
-    with _MEMO_LOCK:
-        val = cache.pop(ck, _MISS)
-        if val is not _MISS:
-            cache[ck] = val
-            return val
-    val = compute()
-    with _MEMO_LOCK:
-        if ck not in cache and len(cache) >= cap:
-            cache.pop(next(iter(cache)))
-        cache[ck] = val
-    return val
-
-
-def _hot_key_fraction(df: DataFrame, key: Sequence[str]) -> float:
-    """Largest single key's share of rows — one count aggregation over
-    the key columns (column-pruned scan; the ``key_profile`` probe),
-    memoized on the input plan's semantic hash PLUS its Catalyst size
-    estimate (the size component keeps a re-read of a path whose files
-    changed from reusing a stale skew fraction — ADVICE r7) so N joins
-    on one frame cost one probe job. Eviction is LRU one entry at a
-    time (dict preserves insertion order; hits re-insert), not a
-    wholesale clear — a workload cycling through >max frames re-probes
-    only the evicted one (r7 verdict item 5)."""
-    try:
-        from .ema import _estimated_bytes
-        ck = (df.semanticHash(), _estimated_bytes(df), tuple(key))
-    except Exception:  # noqa: BLE001 — hashing is a cache key only
-        ck = None
-
-    def probe():
-        row = (df.groupBy(*key).count()
-               .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
-               .first())
-        return (row["mx"] / row["n"]) if row and row["n"] else 0.0
-
-    return probe_memo(_HOT_KEY_CACHE, _HOT_KEY_CACHE_MAX, ck, probe)
-
 
 def _broadcast_route_ok(left: DataFrame, right: DataFrame,
                         key: Sequence[str], distributed: bool | None,
@@ -201,11 +140,10 @@ def _broadcast_route_ok(left: DataFrame, right: DataFrame,
     shared = set(left.columns) & set(right.columns)
     if shared - ({TIME_COLUMN} | set(key)):
         return False
-    from .ema import _estimated_bytes
-    r_est = _estimated_bytes(right)
+    r_est = _route.estimated_bytes(right)
     if r_est > _ASOF_BROADCAST_MAX_BYTES:
         return False
-    return _estimated_bytes(left) >= _ASOF_BROADCAST_LEFT_RATIO * r_est
+    return _route.estimated_bytes(left) >= _ASOF_BROADCAST_LEFT_RATIO * r_est
 
 
 def left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0,
@@ -240,19 +178,16 @@ def left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0,
     # distributed=False pins the single-window plan unconditionally —
     # it must also suppress the hot-key probe job, not just the route
     if key and hot_key_guard is not None and distributed is not False \
-            and _hot_key_fraction(left, key) > hot_key_guard:
+            and _route.hot_key_fraction(left, key) > hot_key_guard:
         return asof_keyless_bucketed(
             left, right, tolerance, bucket=bucket, key=key,
             left_alias=left_alias, right_alias=right_alias)
-    if not key:
-        if distributed is None:
-            from .ema import _estimated_bytes
-            distributed = (_estimated_bytes(left) + _estimated_bytes(right)
-                           ) > _KEYLESS_ASOF_MAX_BYTES
-        if distributed:
-            return asof_keyless_bucketed(
-                left, right, tolerance, bucket=bucket,
-                left_alias=left_alias, right_alias=right_alias)
+    if not key and _route.keyless_distributed(
+            lambda: (_route.estimated_bytes(left)
+                     + _route.estimated_bytes(right)), distributed):
+        return asof_keyless_bucketed(
+            left, right, tolerance, bucket=bucket,
+            left_alias=left_alias, right_alias=right_alias)
     tol = parse_duration_ns(tolerance)
     key, left_data, right_data, left_out, right_out, l, r = _prepare(
         left, right, key, left_alias, right_alias)
@@ -663,7 +598,7 @@ def merge(left: DataFrame, right: DataFrame,
 
 def asof_keyless_bucketed(left: DataFrame, right: DataFrame,
                           tolerance: str | int, bucket: str = "7d",
-                          key: Sequence[str] = (), min_buckets: int = 4,
+                          key: Sequence[str] = (),
                           **kwargs) -> DataFrame:
     """Scale path for keyless OR hot-key as-of joins: assign both sides
     to coarse time buckets, replicate right rows into the *next* bucket
@@ -677,18 +612,15 @@ def asof_keyless_bucketed(left: DataFrame, right: DataFrame,
     DEGENERACY GUARD (r6 advice): the bucket width clamps UP to the
     tolerance, so a tolerance near the data span would put every row
     in bucket 0 — one task PLUS a doubled right side, strictly worse
-    than the single-window plan it replaces. A cheap min/max probe of
-    the left's time range falls back to the plain join when fewer than
-    ``min_buckets`` buckets would result."""
+    than the single-window plan it replaces. A cheap memoized min/max
+    probe of the left's time range falls back to the plain join when
+    fewer than ``_route.MIN_BUCKETS`` buckets would result."""
     tol = parse_duration_ns(tolerance)
     bucket_ns = parse_duration_ns(bucket)
     if bucket_ns < tol:
         bucket_ns = tol
     key = list(key)
-    rng = left.select(F.min(time_ns_expr(left)).alias("lo"),
-                      F.max(time_ns_expr(left)).alias("hi")).first()
-    if rng is None or rng["lo"] is None \
-            or (rng["hi"] - rng["lo"]) // bucket_ns + 1 < min_buckets:
+    if _route.time_buckets(left, bucket_ns) is None:
         import warnings
         warnings.warn(
             "asof_keyless_bucketed: bucket width covers the whole time "

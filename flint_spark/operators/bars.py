@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..timeseries import (TIME_COLUMN, floor_div, ns_to_time_expr,
                           parse_duration_ns, time_ns_expr)
+from . import _route
 
 _BUCKET = "__bar_bucket"
 _HOLD = "__bar_hold"
@@ -117,15 +118,6 @@ def ohlc_bars(df: DataFrame, interval: str | int, price_col: str,
     return out.select(TIME_COLUMN, *key, *names)
 
 
-def _keyless_auto(df: DataFrame, distributed: bool | None) -> bool:
-    """Shared keyless route policy (the ``left_join`` shape): None =
-    route by Catalyst size estimate vs the single-task budget."""
-    if distributed is not None:
-        return distributed
-    from .ema import _KEYLESS_SINGLE_GROUP_MAX_BYTES, _estimated_bytes
-    return _estimated_bytes(df) > _KEYLESS_SINGLE_GROUP_MAX_BYTES
-
-
 def drawdown(df: DataFrame, value_col: str, key: Sequence[str] = (),
              tie_break: Sequence[str] = (),
              distributed: bool | None = None) -> DataFrame:
@@ -138,7 +130,8 @@ def drawdown(df: DataFrame, value_col: str, key: Sequence[str] = (),
     ``operators.prefix``) instead of a single-partition window;
     ``distributed`` as in ``left_join``."""
     key = list(key)
-    if not key and _keyless_auto(df, distributed):
+    if not key and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         from .prefix import keyless_cumulative
 
         def render(st):
@@ -330,7 +323,8 @@ def volume_bars(df: DataFrame, threshold: float, price_col: str,
     tns = time_ns_expr(base)
     ord_ = _order_struct(tns, tie_break, price)
     vol = F.coalesce(F.col(volume_col).cast("double"), F.lit(0.0))
-    if not key and _keyless_auto(base, distributed):
+    if not key and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(base), distributed):
         from .prefix import keyless_cumulative
 
         base = keyless_cumulative(

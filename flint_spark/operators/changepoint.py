@@ -29,15 +29,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..timeseries import time_ns_expr
+from . import _route
 
 __all__ = ["cusum"]
-
-
-def _keyless_auto(df: DataFrame, distributed: bool | None) -> bool:
-    if distributed is not None:
-        return distributed
-    from .ema import _KEYLESS_SINGLE_GROUP_MAX_BYTES, _estimated_bytes
-    return _estimated_bytes(df) > _KEYLESS_SINGLE_GROUP_MAX_BYTES
 
 
 def _cusum_keyless_distributed(df: DataFrame, column: str, k: float,
@@ -135,7 +129,8 @@ def cusum(df: DataFrame, column: str, k: float = 0.5, h: float = 5.0,
     partial+final aggregation instead of an unbounded single-task
     window.
     """
-    if not list(key) and _keyless_auto(df, distributed):
+    if not list(key) and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         return _cusum_keyless_distributed(df, column, k, h, mu, sigma,
                                           tie_break)
     keyc = [F.col(c) for c in key]

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from ..pipeline import _cache
 from ..timeseries import TIME_COLUMN, parse_duration_ns, time_ns_expr
+from . import _route
 
 release_scan_caches = _cache.release_caches
 
@@ -386,27 +387,15 @@ def _keyless_distributed(df: DataFrame, column: str, out_name: str,
         joined.withColumn(out_name, out).select(in_cols + [out_name]), scanned)
 
 
-# keyless inputs at most this big (Catalyst plan-stats estimate) run as a
-# single Arrow group — cheaper than the 5-job distributed scan. Unknown
-# stats report ~8 EB, so "can't tell" always takes the distributed path.
-_KEYLESS_SINGLE_GROUP_MAX_BYTES = 64 << 20
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats are a fast-path hint only
-        return 1 << 62
-
-
 def _apply(df: DataFrame, column: str, out_name: str, key: Sequence[str],
            coeff_fn, divide: bool, distributed: bool | None = None) -> DataFrame:
     if list(key):
         return _apply_per_key(df, column, out_name, key,
                               _scan_values(coeff_fn, divide))
-    if distributed is None:
-        distributed = _estimated_bytes(df) > _KEYLESS_SINGLE_GROUP_MAX_BYTES
-    if distributed:
+    # small inputs run as one Arrow group, cheaper than the 5-job
+    # distributed scan; unknown stats always take the distributed path
+    if _route.keyless_distributed(lambda: _route.estimated_bytes(df),
+                                  distributed):
         return _keyless_distributed(df, column, out_name, coeff_fn, divide)
     return _apply_per_key(df, column, out_name, (),
                           _scan_values(coeff_fn, divide))

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from ..clocks import UniformClock
 from ..summarizers import Summarizer
 from ..timeseries import TIME_COLUMN, floor_div, ns_to_time_expr, time_ns_expr
+from . import _route
 
 _INTERVAL = "__interval_ns"
 
@@ -74,7 +75,7 @@ def _clock_ticks_ns(clock_df: DataFrame,
     ticks; here ticks strictly outside [max tick <= data_min,
     min tick >= data_max] are dropped — the two enclosing boundary
     ticks are kept so edge intervals survive. The data min/max is one
-    aggregate over the time column only (column-pruned scan); it is only
+    memoized aggregate over the time column only (``_route.span``); it is only
     paid when the clock exceeds ``_TRIM_TICK_THRESHOLD`` ticks, so small
     clocks never trigger a data pass."""
     t = time_ns_expr(clock_df, TIME_COLUMN).alias("t")
@@ -86,9 +87,9 @@ def _clock_ticks_ns(clock_df: DataFrame,
                 > _TRIM_TICK_THRESHOLD)
     if is_large:
         ticks_df = ticks_df.persist()
-        lo, hi = data_df.select(
-            F.min(time_ns_expr(data_df)), F.max(time_ns_expr(data_df))).first()
-        if lo is not None:
+        got = _route.span(data_df)
+        if got is not None:
+            lo, hi = got
             # STRICT enclosing ticks: a data point exactly on a kept
             # boundary tick must still see its neighbor tick beyond it,
             # or its validity under the inclusion rule would change

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..summarizers import Summarizer
 from ..timeseries import time_ns_expr
 from ..windows import TimeWindow
+from . import _route
 
 
 def _range_window(df: DataFrame, window: TimeWindow, key: Sequence[str]):
@@ -41,43 +42,11 @@ def _range_window(df: DataFrame, window: TimeWindow, key: Sequence[str]):
     )
 
 
-#: keyless bucketed route needs at least this many time buckets to beat
-#: the single-window plan (fewer buckets = the replication overhead
-#: without the parallelism — the asof_keyless_bucketed degeneracy rule)
-_MIN_KEYLESS_BUCKETS = 4
-
 #: ceiling on the bucket-sized shuffle width — a task per bucket keeps
 #: every window sort/buffer small (the spill cliff is the superlinear
 #: failure mode, r7 verdict item 3), but a 100 TB table can have
 #: millions of buckets and task-launch overhead is real
 _MAX_BUCKET_PARTITIONS = 4096
-
-# (semanticHash, key-ish) -> (lo_ns, hi_ns) span probe memo — same
-# recipe as asof._HOT_KEY_CACHE: N window calls on one frame pay the
-# min/max scan once per session, evicted LRU one entry at a time
-_SPAN_CACHE: dict = {}
-_SPAN_CACHE_MAX = 64
-
-
-def _probe_span(df: DataFrame, tns) -> tuple[int, int] | None:
-    """(min, max) epoch-ns of ``df`` — a tiny column-pruned scan,
-    memoized on the plan's semantic hash plus its size estimate (the
-    size component keeps a re-read of a path whose files CHANGED from
-    reusing a stale span — ADVICE r7)."""
-    from .asof import probe_memo
-
-    try:
-        from .ema import _estimated_bytes
-        ck = (df.semanticHash(), _estimated_bytes(df))
-    except Exception:  # noqa: BLE001 — hashing is a cache key only
-        ck = None
-
-    def probe():
-        row = df.select(F.min(tns).alias("lo"), F.max(tns).alias("hi")).first()
-        return None if row is None or row["lo"] is None \
-            else (int(row["lo"]), int(row["hi"]))
-
-    return probe_memo(_SPAN_CACHE, _SPAN_CACHE_MAX, ck, probe)
 
 
 def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,
@@ -94,17 +63,14 @@ def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,
     table through ONE task. But the frame is TIME-BOUNDED, so rows can
     be hash-distributed into fixed-width time buckets (width >= the
     window span) with each row replicated into every bucket whose
-    targets it can serve (<= 2 copies + its own bucket — the
-    ``_bucketed_window_apply`` shipping rule, here feeding a plain
-    WindowExec instead of pandas): correctness holds because a target
-    t in bucket floor(t/B) needs context s in [t+lo, t+hi], and s is
-    shipped to all buckets in [floor((s-hi)/B), floor((s-lo)/B)], an
-    interval that always contains floor(t/B). One hash exchange,
+    targets it can serve (``_route.replicate_into_buckets``, the
+    shipping rule ``functions._bucketed_window_apply`` also uses, here
+    feeding a plain WindowExec instead of pandas). One hash exchange,
     every task bounded by rows-per-bucket, built-in aggregates stay in
     whole-stage codegen.
 
     Returns None when the probed time span yields fewer than
-    ``_MIN_KEYLESS_BUCKETS`` buckets — replication without parallelism
+    ``_route.MIN_BUCKETS`` buckets — replication without parallelism
     is strictly worse than the single window (the caller falls back).
 
     ``ship`` widens the context-SHIPPING bounds beyond the window
@@ -123,42 +89,20 @@ def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,
     the table grows — rows-per-task, not rows-per-table, is what must
     stay constant for linear scaling (r7 verdict: 3.66x time for 2x
     rows when 2x buckets landed on a fixed 32-partition exchange)."""
-    from ..timeseries import floor_div
-
     key = list(key)
     lo, hi = window.range_bounds()
     if ship is not None:
         lo, hi = min(int(lo), int(ship[0])), max(int(hi), int(ship[1]))
     span = max(int(hi) - int(lo), 1)
-    tns = time_ns_expr(df)
     # tiny column-pruned probe (memoized): data span -> bucket count
-    got = _probe_span(df, tns)
-    if got is None:
-        return None
-    nbuckets = (got[1] - got[0]) // span + 1
-    if nbuckets < _MIN_KEYLESS_BUCKETS:
+    nbuckets = _route.time_buckets(df, span)
+    if nbuckets is None:
         return None
     shuf = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     n_parts = int(max(shuf, min(nbuckets, _MAX_BUCKET_PARTITIONS)))
     data_cols = list(df.columns)
-    # a null time would explode into a null bucket sequence and the
-    # row would SILENTLY vanish — fail loudly instead, matching
-    # functions._bucketed_window_apply (r8 review: newly reachable
-    # from keyed input via hot_key_guard, whose contract is
-    # output-identity with the plain keyed window)
-    tns = F.when(tns.isNull(), F.raise_error(F.lit(
-        "summarize_windows: null time value — the bucketed window "
-        "engine requires a non-null time column")).cast("long")
-    ).otherwise(tns)
-    d = df.withColumn("__tns", tns)
-    own_b = floor_div(F.col("__tns"), span)
-    serve_from = floor_div(F.col("__tns") - F.lit(int(hi)), span)
-    serve_to = floor_div(F.col("__tns") - F.lit(int(lo)), span)
-    exploded = (d.withColumn("__ob", own_b)
-                .withColumn("__b", F.explode(F.sequence(
-                    F.least(serve_from, F.col("__ob")),
-                    F.greatest(serve_to, F.col("__ob")))))
-                .withColumn("__tgt", F.col("__b") == F.col("__ob"))
+    exploded = (_route.replicate_into_buckets(
+                    df, lo, hi, span, "summarize_windows")
                 # explicit width: HashPartitioning(key..., __b) already
                 # satisfies the window's ClusteredDistribution, so this
                 # is the SAME single exchange, just sized to the bucket
@@ -332,9 +276,7 @@ def summarize_windows(df: DataFrame, window: TimeWindow, summarizer,
     key = list(key)
     lo, hi = window.range_bounds()
     if key and hot_key_guard is not None and distributed is not False:
-        from .asof import _hot_key_fraction
-
-        if _hot_key_fraction(df, key) > hot_key_guard:
+        if _route.hot_key_fraction(df, key) > hot_key_guard:
             routed = _keyless_bucketed_window(
                 df, window,
                 lambda frame, ctx: _summarizer_window_pairs(
@@ -343,7 +285,8 @@ def summarize_windows(df: DataFrame, window: TimeWindow, summarizer,
                 key=key)
             if routed is not None:
                 return routed
-    if not key and _keyless_window_auto(df, distributed):
+    if not key and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         routed = _keyless_bucketed_window(
             df, window,
             lambda frame, ctx: _summarizer_window_pairs(
@@ -359,16 +302,6 @@ def summarize_windows(df: DataFrame, window: TimeWindow, summarizer,
 
     return df.withColumns(dict(_summarizer_window_pairs(
         df, summarizer, frame, lo, hi, engine)))
-
-
-def _keyless_window_auto(df: DataFrame, distributed: bool | None) -> bool:
-    """The keyless family's shared route policy (same shape as
-    ``left_join``'s ``distributed=None``): None = by Catalyst size
-    estimate against the single-task budget."""
-    if distributed is not None:
-        return distributed
-    from .ema import _KEYLESS_SINGLE_GROUP_MAX_BYTES, _estimated_bytes
-    return _estimated_bytes(df) > _KEYLESS_SINGLE_GROUP_MAX_BYTES
 
 
 def add_windows(df: DataFrame, window: TimeWindow, key: Sequence[str] = (),
@@ -389,7 +322,8 @@ def add_windows(df: DataFrame, window: TimeWindow, key: Sequence[str] = (),
             F.struct(*[F.col(c) for c in data_cols])).over(w)
         return [(name, F.sort_array(members))]
 
-    if not key and _keyless_window_auto(df, distributed):
+    if not key and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         routed = _keyless_bucketed_window(
             df, window, lambda frame, ctx: exprs(frame(lo, hi)))
         if routed is not None:
@@ -440,7 +374,8 @@ def summarize_windows_overlap(df: DataFrame, window: TimeWindow,
             df, summarizer, frame, lag_lo, lag_hi)]
         return core + lag
 
-    if not key and _keyless_window_auto(df, distributed):
+    if not key and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         # both frames inside widened shipping bounds, one bucket pass
         routed = _keyless_bucketed_window(
             df, window, pairs, ship=(ship_lo, ship_hi))
@@ -482,7 +417,8 @@ def detect_anomalies(df: DataFrame, column: str, window: str | int = "1d",
                 (f"{column}_anomaly",
                  F.coalesce(F.abs(z) > F.lit(k), F.lit(False)))]
 
-    if not key and _keyless_window_auto(df, distributed):
+    if not key and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         # keyless route: the trailing [-w, -1) frame rides the bucketed
         # engine (ship covers the exclusive bound's gap to 0)
         from ..windows import past_absolute_time

@@ -24,6 +24,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators import _route
 from ._cache import hold, persist
 from .hashing import h28, h28_sql
 
@@ -131,17 +132,6 @@ def take_per_key(df: DataFrame, key: Sequence[str], n: int,
 #: this is a scale bug, not a choice
 _PACK_UNSHARDED_MAX_BYTES = 256 << 20
 
-#: Catalyst reports ~Long.Max for RDD-backed plans with no stats
-_STATS_UNKNOWN = 1 << 60
-
-
-def _estimated_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats are a guard-rail hint only
-        return 1 << 62
-
-
 #: integral dtypes eligible as the distributed packing order axis
 #: (df.dtypes spellings — LongType reports as 'bigint')
 _PACK_INTEGRAL = ("bigint", "int", "smallint", "tinyint")
@@ -222,10 +212,11 @@ def _cum_before(df: DataFrame, tokens_col: str, on: str,
     estimate exceeds the single-task budget OR is unknown; inputs the
     engine cannot take (non-integral ``on``) fall back to the one-task
     window with a loud warning instead of breaking."""
-    if shard_col is None and distributed is not False:
+    if shard_col is None:
         eligible = dict(df.dtypes).get(on) in _PACK_INTEGRAL
-        auto = distributed if distributed is not None else \
-            _estimated_bytes(df) > _PACK_UNSHARDED_MAX_BYTES
+        auto = _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed,
+            _PACK_UNSHARDED_MAX_BYTES)
         if auto and eligible:
             return _keyless_cum_before(df, tokens_col, on)
         if auto and distributed:  # explicit ask the engine can't honor
@@ -644,8 +635,8 @@ def pack_bins(df: DataFrame, budget: int, tokens_col: str,
     if budget <= 0:
         raise ValueError("budget must be positive")
     if shard_col is None:
-        est = _estimated_bytes(df)
-        if _STATS_UNKNOWN > est > _PACK_UNSHARDED_MAX_BYTES:
+        est = _route.estimated_bytes(df)
+        if _route.STATS_UNKNOWN > est > _PACK_UNSHARDED_MAX_BYTES:
             raise ValueError(
                 f"pack_bins without shard_col is ONE sequential task "
                 f"(next-fit has no mergeable prefix state, unlike "
@@ -653,7 +644,7 @@ def pack_bins(df: DataFrame, budget: int, tokens_col: str,
                 f"Catalyst estimate ({est} bytes) exceeds "
                 f"{_PACK_UNSHARDED_MAX_BYTES}; pass shard_col (e.g. "
                 f"pmod(h28({on!r}), n_shards)) to pack per shard")
-        if est >= _STATS_UNKNOWN:
+        if est >= _route.STATS_UNKNOWN:
             import warnings
             warnings.warn(
                 "pack_bins without shard_col runs next-fit through ONE "

@@ -18,6 +18,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import _route
+from ..pipeline import _cache
 from ..summarizers import Summarizer
 from ..timeseries import TIME_COLUMN
 
@@ -210,9 +212,6 @@ def _trigger_pdf(pd, pdf_iter, sort_col="__tns"):
 #: loudly instead of OOMing the driver mid-stream
 _STATIC_RIGHT_MAX_BYTES = 256 << 20
 
-#: Catalyst reports ~Long.Max for plans with no stats
-_STATS_UNKNOWN = 1 << 60
-
 
 def _static_right_size_guard(right: DataFrame, cols) -> DataFrame:
     """Refuse an oversized static right side UP FRONT (never as a
@@ -221,19 +220,19 @@ def _static_right_size_guard(right: DataFrame, cols) -> DataFrame:
     path broadcasts its folded per-key arrays to every task — the same
     dim-table budget applies either way. Stats-less plans are PRICED
     (count + sampled row size) instead of warn-and-hoped (r6 verdict
-    item 8). Returns the projected frame."""
-    from ..operators.ema import _estimated_bytes
-
+    item 8). Returns the projected frame; a persisted one carries its
+    ``_cache`` pin, which the caller holds on its result."""
     projected = right.select(*cols)
-    est = _estimated_bytes(projected)
-    if est >= _STATS_UNKNOWN:
+    est = _route.estimated_bytes(projected)
+    if est >= _route.STATS_UNKNOWN:
         # a distributed count (nothing collected) plus a 1000-row
         # sample prices the materialization before paying it. Persist
         # FIRST so the pricing scan and the downstream fold/collect are
         # one evaluation, not two (ADVICE r9) — bounded by the same
-        # budget the guard enforces, and reused by every micro-batch
-        # that re-evaluates the static subtree.
-        projected = projected.persist()
+        # budget the guard enforces, reused by every micro-batch that
+        # re-evaluates the static subtree, and released by the shared
+        # retention policy once no result reads it.
+        projected = _cache.persist(projected)
         n = projected.count()
         if n == 0:
             est = 0
@@ -263,6 +262,33 @@ def _collect_static_right(right: DataFrame, cols) -> "pd.DataFrame":
     if projected.is_cached:  # pricing cache is spent once collected
         projected.unpersist()
     return pdf
+
+
+def _broadcast_static_tables(stream: DataFrame, right: DataFrame, key,
+                             rdata, right_time_column: str):
+    """Collect the guarded static right side and broadcast it as
+    ``{key tuple: (time-ns array, {col: values})}`` for the Arrow
+    stream-static lookups. Each table is sorted by (time, values), the
+    batch tie rule: among duplicate (key, time) rights the last row is
+    the max-struct winner."""
+    import numpy as np
+    import pandas as pd
+
+    from ..timeseries import time_ns_expr
+
+    rpdf = _collect_static_right(
+        right, [*key,
+                time_ns_expr(right, right_time_column).alias("__rtns"),
+                *rdata])
+    rpdf = _sort_time_then_values(rpdf, "__rtns", rdata)
+    groups = rpdf.groupby(key, sort=False, dropna=False) if key \
+        else [((), rpdf)]
+    tables = {}
+    for kv, grp in groups:
+        kv = _null_safe_key(pd, kv if isinstance(kv, tuple) else (kv,))
+        tables[kv] = (grp["__rtns"].to_numpy(np.int64),
+                      {c: grp[c].to_numpy() for c in rdata})
+    return stream.sparkSession.sparkContext.broadcast(tables)
 
 
 def _null_safe_key(pd, kv):
@@ -366,11 +392,11 @@ def asof_join_static(stream: DataFrame, right: DataFrame,
         # feeding IT to the fold reuses that evaluation instead of
         # recomputing the right side from scratch (ADVICE r9)
         right = _static_right_size_guard(right, right.columns)
-        return left_join_broadcast(
+        return _cache.hold(left_join_broadcast(
             stream, right, tolerance, key, direction=direction,
             strict_lookahead=strict_lookahead, engine="jvm",
             time_column=time_column,
-            right_time_column=right_time_column)
+            right_time_column=right_time_column), right)
     if engine != "arrow":
         raise ValueError("engine must be 'jvm' or 'arrow'")
     # Arrow path only below: the pure-JVM default must not pay (or
@@ -384,23 +410,8 @@ def asof_join_static(stream: DataFrame, right: DataFrame,
     tol = parse_duration_ns(tolerance) if tolerance else 0
     rdata = [c for c in right.columns if c != right_time_column and c not in key]
 
-    rpdf = _collect_static_right(
-        right, [*key,
-                time_ns_expr(right, right_time_column).alias("__rtns"),
-                *rdata])
-    # batch tie rule: duplicate (key, time) rights resolve to the
-    # max-struct row, so sort by (time, values) — last of a group wins
-    rpdf = _sort_time_then_values(rpdf, "__rtns", rdata)
-    tables: dict = {}
-    if key:
-        for kv, grp in rpdf.groupby(key, sort=False, dropna=False):
-            kv = _null_safe_key(pd, kv if isinstance(kv, tuple) else (kv,))
-            tables[kv] = (grp["__rtns"].to_numpy(np.int64),
-                          {c: grp[c].to_numpy() for c in rdata})
-    else:
-        tables[()] = (rpdf["__rtns"].to_numpy(np.int64),
-                      {c: rpdf[c].to_numpy() for c in rdata})
-    b = stream.sparkSession.sparkContext.broadcast(tables)
+    b = _broadcast_static_tables(stream, right, key, rdata,
+                                 right_time_column)
 
     with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
     out_schema = T.StructType(
@@ -477,21 +488,8 @@ def topk_join_static(stream: DataFrame, right: DataFrame, k: int,
         stream.columns, stream.schema.fields, right, key,
         right_time_column, k)
 
-    rpdf = _collect_static_right(
-        right, [*key,
-                time_ns_expr(right, right_time_column).alias("__rtns"),
-                *rdata])
-    rpdf = _sort_time_then_values(rpdf, "__rtns", rdata)
-    tables: dict = {}
-    if key:
-        for kv, grp in rpdf.groupby(key, sort=False, dropna=False):
-            kv = _null_safe_key(pd, kv if isinstance(kv, tuple) else (kv,))
-            tables[kv] = (grp["__rtns"].to_numpy(np.int64),
-                          {c: grp[c].to_numpy() for c in rdata})
-    else:
-        tables[()] = (rpdf["__rtns"].to_numpy(np.int64),
-                      {c: rpdf[c].to_numpy() for c in rdata})
-    b = stream.sparkSession.sparkContext.broadcast(tables)
+    b = _broadcast_static_tables(stream, right, key, rdata,
+                                 right_time_column)
 
     with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
     in_cols = list(stream.columns)

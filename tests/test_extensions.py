@@ -1206,20 +1206,47 @@ def test_keyless_ema_result_survives_cache_loss_and_replanning(spark):
     assert np.abs(values(first) - exp).max() < 1e-9
 
 
-def test_keyless_ema_auto_routes_small_input_to_single_group(spark, sf_dir):
-    """Tiny parquet inputs (known plan stats) skip the 5-job distributed
-    scan; unknown-stats inputs (ExistingRDD) must choose distributed."""
+@pytest.mark.parametrize("family", [
+    "ewma", "summarize_windows", "cusum", "drawdown", "left_join"])
+def test_keyless_auto_routes_by_plan_stats(spark, sf_dir, family):
+    """``distributed=None`` routes every keyless family by the one
+    single-task budget in ``operators/_route.py``: tiny parquet inputs
+    (known plan stats) keep the single-task plan (for EWMA the one
+    Arrow group, skipping the 5-job distributed scan); unknown-stats
+    inputs (ExistingRDD) must choose the distributed plan, whose
+    ``marker`` the single-task plan lacks. ``add_summary_columns`` is
+    pinned the same way by ``test_keyless_cumulative_auto_policy``."""
+    from flint_spark.operators import _route, asof, bars, changepoint
     from flint_spark.operators import ema as E
+    from flint_spark.operators import windows_ops
 
+    run, marker = {
+        "ewma": (lambda d: E.ewma(d, "value"), "__pid"),
+        "summarize_windows": (lambda d: windows_ops.summarize_windows(
+            d, W.past_absolute_time("1h"), S.sum_("value")),
+            "windowspecdefinition(__b"),
+        "cusum": (lambda d: changepoint.cusum(d, "value"), "__pid"),
+        "drawdown": (lambda d: bars.drawdown(d, "value"), "__pid"),
+        # same-size sides: no dim-table broadcast, so the budget decides
+        "left_join": (lambda d: asof.left_join(
+            d, d.withColumnRenamed("value", "rv"), "1h"),
+            "windowspecdefinition(__bucket"),
+    }[family]
     ev = (spark.read.parquet(f"{sf_dir}/events.parquet")
           .select(F.col("ts").alias("time"), "value"))
-    assert E._estimated_bytes(ev) < E._KEYLESS_SINGLE_GROUP_MAX_BYTES
-    plan = E.ewma(ev, "value")._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
+    assert _route.estimated_bytes(ev) < _route.SINGLE_TASK_BYTES
+    assert marker not in _opt_plan(run(ev))
+    if family == "ewma":
+        plan = E.ewma(ev, "value")._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInPandas" in plan
 
-    rdd_df = spark.createDataFrame([(i * 10**9, float(i)) for i in range(50)],
-                                   "time long, value double")
-    assert E._estimated_bytes(rdd_df) > E._KEYLESS_SINGLE_GROUP_MAX_BYTES
+    # hourly rows over ~6 weeks: enough time buckets for the bucketed
+    # routes not to fall back
+    rdd_df = spark.createDataFrame(spark.sparkContext.parallelize(
+        [(i * 3_600 * 10**9, float((i * 7) % 13)) for i in range(1000)]),
+        "time long, value double")
+    assert _route.estimated_bytes(rdd_df) > _route.SINGLE_TASK_BYTES
+    assert marker in _opt_plan(run(rdd_df))
 
 
 def test_asof_static_tolerance_zero_matches_batch(spark):
@@ -5485,7 +5512,7 @@ def test_keyless_bucketed_window_partition_sizing_and_span_memo(spark):
     task stay bounded by bucket contents as tables grow (r7 verdict
     item 3) — and the min/max span probe is memoized per plan, so
     repeated windows on one frame pay the probe scan once."""
-    from flint_spark.operators import windows_ops as wo
+    from flint_spark.operators import _route, windows_ops as wo
 
     df = spark.createDataFrame(
         [(i * 10**9, float(i % 7)) for i in range(4000)],
@@ -5496,11 +5523,11 @@ def test_keyless_bucketed_window_partition_sizing_and_span_memo(spark):
     nbuckets = (3999 * 10**9) // (10 * 10**9) + 1  # data span // window + 1
     assert out.rdd.getNumPartitions() == max(
         shuf, min(nbuckets, wo._MAX_BUCKET_PARTITIONS))
-    before = len(wo._SPAN_CACHE)
+    before = len(_route._PROBES)
     assert before >= 1
     wo.summarize_windows(df, W.past_absolute_time("20s"), S.sum_("v"),
                          distributed=True)
-    assert len(wo._SPAN_CACHE) == before  # second call hit the memo
+    assert len(_route._PROBES) == before  # second call hit the memo
 
 
 def test_prefix_layout_pins_survive_interleaved_calls(spark):
@@ -5567,27 +5594,28 @@ def test_prefix_layout_pin_propagates_through_keep_layout(spark):
 
 
 def test_hot_key_probe_lru_eviction(spark):
-    """r7 verdict item 5: the hot-key memo evicts ONE stale entry at
-    capacity instead of clearing wholesale — 65 distinct frames must
-    not force frame #2's re-probe (only the true LRU entry leaves)."""
-    from flint_spark.operators import asof
+    """r7 verdict item 5: the probe memo evicts ONE stale entry at
+    capacity instead of clearing wholesale — PROBE_MEMO_SIZE + 1
+    distinct frames must not force frame #2's re-probe (only the true
+    LRU entry leaves)."""
+    from flint_spark.operators import _route
 
-    asof._HOT_KEY_CACHE.clear()
+    _route._PROBES.clear()
     frames = [spark.createDataFrame([(i, j % 3, float(j))
                                      for j in range(4)],
                                     "time long, k int, v double")
-              for i in range(asof._HOT_KEY_CACHE_MAX + 1)]
+              for i in range(_route.PROBE_MEMO_SIZE + 1)]
     keys = []
     for i, f in enumerate(frames[:-1]):
-        asof._hot_key_fraction(f, ["k"])
+        _route.hot_key_fraction(f, ["k"])
         keys.append((f.semanticHash(), ))
-    assert len(asof._HOT_KEY_CACHE) == asof._HOT_KEY_CACHE_MAX
-    first = next(iter(asof._HOT_KEY_CACHE))
+    assert len(_route._PROBES) == _route.PROBE_MEMO_SIZE
+    first = next(iter(_route._PROBES))
     # touch the oldest entry -> refreshed, no longer the LRU victim
-    asof._hot_key_fraction(frames[0], ["k"])
-    asof._hot_key_fraction(frames[-1], ["k"])  # 65th: evicts ONE entry
-    assert len(asof._HOT_KEY_CACHE) == asof._HOT_KEY_CACHE_MAX
-    assert first in asof._HOT_KEY_CACHE  # refreshed entry survived
+    _route.hot_key_fraction(frames[0], ["k"])
+    _route.hot_key_fraction(frames[-1], ["k"])  # one past: evicts ONE entry
+    assert len(_route._PROBES) == _route.PROBE_MEMO_SIZE
+    assert first in _route._PROBES  # refreshed entry survived
 
 
 def test_probe_memo_concurrent_hits_and_evictions():
@@ -5597,7 +5625,7 @@ def test_probe_memo_concurrent_hits_and_evictions():
     to a KeyError) and never exceed the capacity."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from flint_spark.operators.asof import probe_memo
+    from flint_spark.operators._route import probe_memo
 
     cache: dict = {}
 
@@ -6148,3 +6176,47 @@ def test_compute_partitions_explicit_exchange(spark):
                          key=["user_id"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan
+
+
+def test_stream_static_jvm_pricing_persist_is_released(spark):
+    """asof_join_static(engine="jvm") persists a stats-less static right
+    side to price it. That persist goes through the shared retention
+    policy (``pipeline/_cache.py``) and is pinned to the result, so
+    more calls than LRU_SIZE leave at most LRU_SIZE persisted RDDs
+    instead of one per call."""
+    import gc
+
+    from flint_spark.pipeline._cache import LRU_SIZE, release_caches
+
+    left = spark.createDataFrame([(i, i % 3, float(i)) for i in range(20)],
+                                 "time long, id int, v double")
+    jsc = spark.sparkContext._jsc
+    release_caches()
+    gc.collect()
+    base = len(jsc.getPersistentRDDs())
+    for n in range(LRU_SIZE + 2):
+        right = spark.createDataFrame(spark.sparkContext.parallelize(
+            [(i, i % 3, float(i + n)) for i in range(10)]),
+            "time long, id int, rv double")
+        out = ts_stream.asof_join_static(left, right, tolerance=5,
+                                         key=["id"])
+        assert out.count() == 20
+    del out
+    gc.collect()
+    assert len(jsc.getPersistentRDDs()) - base <= LRU_SIZE
+    release_caches()
+
+
+def test_plan_stats_read_only_in_route_module():
+    """Routing reads Catalyst plan statistics in one module,
+    ``operators/_route.py``: a private size-estimate copy elsewhere
+    would let the single-task budgets drift apart again."""
+    import pathlib
+
+    import flint_spark
+
+    root = pathlib.Path(flint_spark.__file__).parent
+    readers = sorted(p.relative_to(root).as_posix()
+                     for p in root.rglob("*.py")
+                     if "sizeInBytes" in p.read_text(encoding="utf-8"))
+    assert readers == ["operators/_route.py"]
