@@ -94,7 +94,8 @@ def ewma_stream(stream: DataFrame, column: str, key: Sequence[str],
     running numerator) across triggers, so the stream converges to the
     batch ``operators.ema.ewma`` result when events arrive in order.
 
-    Within a trigger, rows are processed in event-time order; rows that
+    Within a trigger, rows are processed in (event time, value) order,
+    the batch tie rule; rows that
     arrive across triggers out of order decay from the stored state
     (the standard streaming tradeoff — use a watermark upstream to
     bound it).
@@ -102,49 +103,33 @@ def ewma_stream(stream: DataFrame, column: str, key: Sequence[str],
     import math
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.ema import _affine_scan
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
-    key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_ewma", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("last_tns", T.LongType()),
-                                 T.StructField("e", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
+    def step(pdf, st):
         # same vectorized block-renormalized scan as the batch engine
         # (operators.ema._affine_scan); the carried state enters as
         # E_{-1} decayed through the cumulative decay of the batch
-        last_tns, e = state.get if state.exists else (None, 0.0)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            n = len(x)
-            (out,) = _decayed_carry_scan(np, _affine_scan, lam,
-                                         last_tns, t, [x], [e])
-            e = float(out[-1])
-            last_tns = int(t[-1])
-            res = pd.DataFrame({c: [v] * n for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            res[f"{column}_ewma"] = out
-            frames.append(res)
-        state.update((last_tns, float(e)))
-        yield from frames
+        last_tns, e = st
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        (out,) = _decayed_carry_scan(np, _affine_scan, lam,
+                                     last_tns, t, [x], [e])
+        return ({"__tns": t, column: x, f"{column}_ewma": out},
+                (int(t[-1]), float(out[-1])))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_ewma", T.DoubleType())],
+        [T.StructField("last_tns", T.LongType()),
+         T.StructField("e", T.DoubleType())],
+        (None, 0.0), step, order=("__tns", column))
 
 
 def dedup_stream(stream: DataFrame, subset: Sequence[str],
@@ -184,9 +169,9 @@ def _decayed_carry_scan(np, affine_scan, lam, last_tns, t, arrays,
     return outs
 
 
-def _trigger_pdf(pd, pdf_iter, sort_col="__tns"):
+def _trigger_pdf(pd, pdf_iter, order):
     """Materialize a group's ENTIRE trigger into one pandas frame,
-    sorted by event time.
+    sorted once by ``order``.
 
     ``applyInPandasWithState`` hands each group's micro-batch rows as
     an ITERATOR of Arrow chunks (split at
@@ -197,13 +182,83 @@ def _trigger_pdf(pd, pdf_iter, sort_col="__tns"):
     (chunk 1 is scored/trimmed before chunk 2's possibly-earlier rows
     exist). Memory is O(group rows per trigger) — the bound the batch
     parity contract already implies, and no more than the Arrow
-    transfer itself."""
+    transfer itself.
+
+    A lone ``order`` column is a stable sort (null times last, ties in
+    arrival order). A time column followed by tie columns is the batch
+    tie rule, :func:`_sort_time_then_values` (nulls first, Spark's
+    struct order): per-row outputs on duplicate timestamps then match a
+    batch replay whatever the arrival order."""
     frames = [p for p in pdf_iter if len(p)]
     if not frames:
         return None
     pdf = frames[0] if len(frames) == 1 else \
         pd.concat(frames, ignore_index=True)
-    return pdf.sort_values(sort_col, kind="stable")
+    if len(order) > 1:
+        return _sort_time_then_values(pdf, order[0], order[1:])
+    return pdf.sort_values(order[0], kind="stable")
+
+
+def _keyed_fold(frame: DataFrame, key, fields, state_fields, init, step,
+                order=("__tns",), key_fields=None) -> DataFrame:
+    """The one ``applyInPandasWithState`` protocol behind every stateful
+    operator in this module: ``frame`` grouped by ``key``, ``append``
+    output mode, no timeout.
+
+    Per group and trigger it assembles the whole trigger sorted by
+    ``order`` (:func:`_trigger_pdf`) and calls ``step(pdf, st)`` with
+    the stored state tuple, or ``init`` for a key without state.
+    ``step`` returns ``(columns, state)``:
+
+    - ``columns`` (a mapping or frame of the non-key output columns) is
+      emitted with the key columns filled in, in output-schema order;
+      ``None`` emits nothing;
+    - ``state`` replaces the stored state; ``None`` leaves it alone, so
+      a key never persists a state it has not observed.
+
+    The output schema is the key fields (of ``frame``, or
+    ``key_fields``) followed by ``fields``; the state schema is
+    ``state_fields``. Both are frozen once a query checkpoints: a
+    restart with a different state schema fails."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    key = list(key)
+    out_schema = T.StructType(
+        (key_fields or [frame.schema[c] for c in key]) + fields)
+    names = out_schema.fieldNames()
+
+    def fold(key_vals, pdf_iter, state):
+        pdf = _trigger_pdf(pd, pdf_iter, order)
+        if pdf is None:
+            return
+        cols, st = step(pdf, state.get if state.exists else init)
+        if st is not None:
+            state.update(st)
+        if cols is not None:
+            res = pd.DataFrame(cols)
+            for c, v in zip(key, key_vals):
+                res[c] = v
+            yield res[names]
+
+    return frame.groupBy(*key).applyInPandasWithState(
+        fold, out_schema, T.StructType(state_fields), "append", "NoTimeout")
+
+
+def _with_tns(df: DataFrame, time_column: str) -> DataFrame:
+    """``df`` plus its event time as epoch-ns Long ``__tns``, the time
+    axis the folds sort and emit."""
+    from ..timeseries import time_ns_expr
+
+    return df.withColumn("__tns", time_ns_expr(df, time_column))
+
+
+def _nan_to_none(values):
+    """NaN -> None per value: Arrow keeps a float NaN as NaN, but the
+    batch twins emit SQL NULL."""
+    import math
+
+    return [None if math.isnan(v) else float(v) for v in values]
 
 
 #: driver/broadcast budget for the stream-static dim table — the
@@ -405,7 +460,7 @@ def asof_join_static(stream: DataFrame, right: DataFrame,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
     key = list(key)
     tol = parse_duration_ns(tolerance) if tolerance else 0
     rdata = [c for c in right.columns if c != right_time_column and c not in key]
@@ -413,7 +468,7 @@ def asof_join_static(stream: DataFrame, right: DataFrame,
     b = _broadcast_static_tables(stream, right, key, rdata,
                                  right_time_column)
 
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
+    with_ns = _with_tns(stream, time_column)
     out_schema = T.StructType(
         list(stream.schema.fields)
         + [f for f in right.schema.fields if f.name in rdata])
@@ -480,7 +535,7 @@ def topk_join_static(stream: DataFrame, right: DataFrame, k: int,
     import numpy as np
     import pandas as pd
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     key = list(key)
     tol = parse_duration_ns(tolerance) if tolerance else 0
@@ -491,7 +546,7 @@ def topk_join_static(stream: DataFrame, right: DataFrame, k: int,
     b = _broadcast_static_tables(stream, right, key, rdata,
                                  right_time_column)
 
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
+    with_ns = _with_tns(stream, time_column)
     in_cols = list(stream.columns)
 
     def lookup(batches):
@@ -600,6 +655,42 @@ def _typed_list(values, spark_type):
     return vals
 
 
+def _tagged_union(left: DataFrame, right: DataFrame, key, watermark: str,
+                  time_column: str):
+    """Shared input/output contract of the stream-stream as-of joins:
+    both watermarked sides as (key, ``__tns``, ``__side`` 0=left /
+    1=right, left data, right data) with each side's rows null-padding
+    the other side's data columns, unioned into one stream. Returns
+    ``(union, lcols, rcols, types, key_fields, fields)``: the data
+    columns, their Spark types, and the output fields around them (key
+    fields from ``left``, then ``__tns`` and the data columns)."""
+    from pyspark.sql import types as T
+
+    from ..timeseries import time_ns_expr
+
+    lcols = [c for c in left.columns if c not in key and c != time_column]
+    rcols = [c for c in right.columns if c not in key and c != time_column]
+    if set(lcols) & set(rcols):
+        raise ValueError(f"overlapping data columns {set(lcols) & set(rcols)}; "
+                         "rename before joining")
+    types = {**{c: left.schema[c].dataType for c in lcols},
+             **{c: right.schema[c].dataType for c in rcols}}
+
+    def tagged(df, side):
+        return (df.withWatermark(time_column, watermark)
+                .select(*key, time_ns_expr(df, time_column).alias("__tns"),
+                        F.lit(side).alias("__side"),
+                        *[c if c in df.columns else
+                          F.lit(None).cast(types[c]).alias(c)
+                          for c in lcols + rcols]))
+
+    fields = ([T.StructField("__tns", T.LongType())]
+              + [left.schema[c] for c in lcols]
+              + [right.schema[c] for c in rcols])
+    return (tagged(left, 0).unionByName(tagged(right, 1)), lcols, rcols,
+            types, [left.schema[c] for c in key], fields)
+
+
 def asof_join_stream(left: DataFrame, right: DataFrame,
                      tolerance: str | int, key: Sequence[str],
                      watermark: str = "10 minutes",
@@ -624,94 +715,58 @@ def asof_join_stream(left: DataFrame, right: DataFrame,
     be disjoint.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     key = list(key)
     tol = parse_duration_ns(tolerance)
     wm_ns = parse_duration_ns(watermark)
-    lcols = [c for c in left.columns if c not in key and c != time_column]
-    rcols = [c for c in right.columns if c not in key and c != time_column]
-    if set(lcols) & set(rcols):
-        raise ValueError(f"overlapping data columns {set(lcols) & set(rcols)}; "
-                         "rename before joining")
-    ltypes = {f.name: f.dataType for f in left.schema.fields}
-    rtypes = {f.name: f.dataType for f in right.schema.fields}
+    u, lcols, rcols, types, key_fields, fields = _tagged_union(
+        left, right, key, watermark, time_column)
 
-    lt = (left.withWatermark(time_column, watermark)
-          .select(*key, time_ns_expr(left, time_column).alias("__tns"),
-                  F.lit(0).alias("__side"), *lcols,
-                  *[F.lit(None).cast(rtypes[c]).alias(c) for c in rcols]))
-    rt = (right.withWatermark(time_column, watermark)
-          .select(*key, time_ns_expr(right, time_column).alias("__tns"),
-                  F.lit(1).alias("__side"),
-                  *[F.lit(None).cast(ltypes[c]).alias(c) for c in lcols],
-                  *rcols))
-    u = lt.unionByName(rt)
-
-    out_schema = T.StructType(
-        [left.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType())]
-        + [left.schema[c] for c in lcols]
-        + [right.schema[c] for c in rcols])
-    state_schema = T.StructType(
-        [T.StructField("rt", T.ArrayType(T.LongType()))]
-        + [T.StructField(c, T.ArrayType(rtypes[c])) for c in rcols])
-
-    def fold(key_vals, pdf_iter, state):
-        if state.exists:
-            st = state.get
-            buf_t = np.asarray(st[0] or [], dtype=np.int64)
-            buf_v = {c: list(st[i + 1] or []) for i, c in enumerate(rcols)}
-        else:
-            buf_t = np.empty(0, dtype=np.int64)
-            buf_v = {c: [] for c in rcols}
-        frames = []
-        max_t = int(buf_t[-1]) if len(buf_t) else None
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            r_new = pdf[pdf["__side"] == 1]
-            # append new right rows, keep buffer sorted by (time, values)
-            # — the batch max-struct tie rule for duplicate timestamps,
-            # independent of arrival order across triggers
-            if len(r_new):
-                buf_t, buf_v = _merge_right_buffer(np, buf_t, buf_v,
-                                                   r_new, rcols, rtypes)
-            l_rows = pdf[pdf["__side"] == 0]
-            if len(l_rows):
-                t = l_rows["__tns"].to_numpy(np.int64)
-                pos = np.searchsorted(buf_t, t, side="right") - 1
-                ok = pos >= 0
-                ok &= (t - buf_t[np.clip(pos, 0, None)]) <= tol
-                res = l_rows[key + ["__tns"] + lcols].copy() if key else \
-                    l_rows[["__tns"] + lcols].copy()
-                for i, kcol in enumerate(key):
-                    res[kcol] = key_vals[i]
-                for c in rcols:
-                    col = np.full(len(t), None, dtype=object)
-                    vals = buf_v[c]
-                    col[ok] = [vals[p] for p in pos[ok]]
-                    res[c] = col
-                frames.append(res[key + ["__tns"] + lcols + rcols])
-            bt = int(pdf["__tns"].max())
-            max_t = bt if max_t is None else max(max_t, bt)
+    def step(pdf, st):
+        buf_t = np.asarray(st[0] or [], dtype=np.int64)
+        buf_v = {c: list(st[i + 1] or []) for i, c in enumerate(rcols)}
+        res = None
+        max_t = int(pdf["__tns"].max())
+        if len(buf_t):
+            max_t = max(max_t, int(buf_t[-1]))
+        r_new = pdf[pdf["__side"] == 1]
+        # append new right rows, keep buffer sorted by (time, values)
+        # — the batch max-struct tie rule for duplicate timestamps,
+        # independent of arrival order across triggers
+        if len(r_new):
+            buf_t, buf_v = _merge_right_buffer(np, buf_t, buf_v,
+                                               r_new, rcols, types)
+        l_rows = pdf[pdf["__side"] == 0]
+        if len(l_rows):
+            t = l_rows["__tns"].to_numpy(np.int64)
+            pos = np.searchsorted(buf_t, t, side="right") - 1
+            ok = pos >= 0
+            ok &= (t - buf_t[np.clip(pos, 0, None)]) <= tol
+            res = l_rows[["__tns"] + lcols].copy()
+            for c in rcols:
+                col = np.full(len(t), None, dtype=object)
+                vals = buf_v[c]
+                col[ok] = [vals[p] for p in pos[ok]]
+                res[c] = col
         # evict right rows no future left row (bounded by watermark) can use
-        if max_t is not None and len(buf_t):
-            cutoff = max_t - tol - wm_ns
-            keep = buf_t >= cutoff
+        if len(buf_t):
+            keep = buf_t >= max_t - tol - wm_ns
             # always retain the newest row so the next batch has a floor
             if not keep.any():
                 keep[-1] = True
             buf_t = buf_t[keep]
             for c in rcols:
                 buf_v[c] = [v for v, k in zip(buf_v[c], keep) if k]
-        state.update((buf_t.tolist(), *[buf_v[c] for c in rcols]))
-        yield from frames
+        return res, (buf_t.tolist(), *[buf_v[c] for c in rcols])
 
-    return u.groupBy(*key).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", "NoTimeout")
+    return _keyed_fold(
+        u, key, fields,
+        [T.StructField("rt", T.ArrayType(T.LongType()))]
+        + [T.StructField(c, T.ArrayType(types[c])) for c in rcols],
+        ([],) * (1 + len(rcols)), step, key_fields=key_fields)
 
 
 def asof_join_stream_future(left: DataFrame, right: DataFrame,
@@ -742,85 +797,41 @@ def asof_join_stream_future(left: DataFrame, right: DataFrame,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     key = list(key)
     tol = parse_duration_ns(tolerance)
     wm_ns = parse_duration_ns(watermark)
-    lcols = [c for c in left.columns if c not in key and c != time_column]
-    rcols = [c for c in right.columns if c not in key and c != time_column]
-    if set(lcols) & set(rcols):
-        raise ValueError(f"overlapping data columns {set(lcols) & set(rcols)}; "
-                         "rename before joining")
-    ltypes = {f.name: f.dataType for f in left.schema.fields}
-    rtypes = {f.name: f.dataType for f in right.schema.fields}
-
-    lt = (left.withWatermark(time_column, watermark)
-          .select(*key, time_ns_expr(left, time_column).alias("__tns"),
-                  F.lit(0).alias("__side"), *lcols,
-                  *[F.lit(None).cast(rtypes[c]).alias(c) for c in rcols]))
-    rt = (right.withWatermark(time_column, watermark)
-          .select(*key, time_ns_expr(right, time_column).alias("__tns"),
-                  F.lit(1).alias("__side"),
-                  *[F.lit(None).cast(ltypes[c]).alias(c) for c in lcols],
-                  *rcols))
-    u = lt.unionByName(rt)
-
-    out_schema = T.StructType(
-        [left.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType())]
-        + [left.schema[c] for c in lcols]
-        + [right.schema[c] for c in rcols])
-    state_schema = T.StructType(
-        [T.StructField("max_t", T.ArrayType(T.LongType()))]
-        + [T.StructField("lt", T.ArrayType(T.LongType()))]
-        + [T.StructField(f"l_{c}", T.ArrayType(ltypes[c])) for c in lcols]
-        + [T.StructField("rt", T.ArrayType(T.LongType()))]
-        + [T.StructField(f"r_{c}", T.ArrayType(rtypes[c])) for c in rcols])
-
+    u, lcols, rcols, types, key_fields, fields = _tagged_union(
+        left, right, key, watermark, time_column)
     side = "right" if strict_lookahead else "left"
+    nl = len(lcols)
 
-    def fold(key_vals, pdf_iter, state):
-        if state.exists:
-            st = state.get
-            i = 0
-            max_t = int(st[0][0]) if st[0] else None
-            i += 1
-            pend_t = np.asarray(st[i] or [], dtype=np.int64); i += 1
-            pend_v = {}
+    def step(pdf, st):
+        max_t = int(st[0][0]) if st[0] else None
+        pend_t = np.asarray(st[1] or [], dtype=np.int64)
+        pend_v = {c: list(st[2 + i] or []) for i, c in enumerate(lcols)}
+        buf_t = np.asarray(st[2 + nl] or [], dtype=np.int64)
+        buf_v = {c: list(st[3 + nl + i] or []) for i, c in enumerate(rcols)}
+
+        r_new = pdf[pdf["__side"] == 1]
+        if len(r_new):
+            buf_t, buf_v = _merge_right_buffer(np, buf_t, buf_v,
+                                               r_new, rcols, types)
+        l_new = pdf[pdf["__side"] == 0]
+        if len(l_new):
+            all_t = np.concatenate([pend_t,
+                                    l_new["__tns"].to_numpy(np.int64)])
+            order = np.argsort(all_t, kind="stable")
             for c in lcols:
-                pend_v[c] = list(st[i] or []); i += 1
-            buf_t = np.asarray(st[i] or [], dtype=np.int64); i += 1
-            buf_v = {}
-            for c in rcols:
-                buf_v[c] = list(st[i] or []); i += 1
-        else:
-            max_t = None
-            pend_t = np.empty(0, dtype=np.int64)
-            pend_v = {c: [] for c in lcols}
-            buf_t = np.empty(0, dtype=np.int64)
-            buf_v = {c: [] for c in rcols}
+                vals = list(pend_v[c]) + _typed_list(l_new[c], types[c])
+                pend_v[c] = [vals[i] for i in order]
+            pend_t = all_t[order]
+        bt = int(pdf["__tns"].max())
+        max_t = bt if max_t is None else max(max_t, bt)
 
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            r_new = pdf[pdf["__side"] == 1]
-            if len(r_new):
-                buf_t, buf_v = _merge_right_buffer(np, buf_t, buf_v,
-                                                   r_new, rcols, rtypes)
-            l_new = pdf[pdf["__side"] == 0]
-            if len(l_new):
-                all_t = np.concatenate([pend_t,
-                                        l_new["__tns"].to_numpy(np.int64)])
-                order = np.argsort(all_t, kind="stable")
-                for c in lcols:
-                    vals = list(pend_v[c]) + _typed_list(l_new[c], ltypes[c])
-                    pend_v[c] = [vals[i] for i in order]
-                pend_t = all_t[order]
-            bt = int(pdf["__tns"].max())
-            max_t = bt if max_t is None else max(max_t, bt)
-
-        frames = []
-        if max_t is not None and len(pend_t):
+        res = None
+        if len(pend_t):
             closed = pend_t + tol + wm_ns <= max_t
             if closed.any():
                 t = pend_t[closed]
@@ -832,8 +843,6 @@ def asof_join_stream_future(left: DataFrame, right: DataFrame,
                 # (same rule as batch future_left_join)
                 pos = _forward_tie_resolve(np, buf_t, pos, ok)
                 res = pd.DataFrame({"__tns": t})
-                for i, kcol in enumerate(key):
-                    res[kcol] = key_vals[i]
                 for c in lcols:
                     vals = pend_v[c]
                     res[c] = [v for v, m in zip(vals, closed) if m]
@@ -842,13 +851,12 @@ def asof_join_stream_future(left: DataFrame, right: DataFrame,
                     vals = buf_v[c]
                     col[ok] = [vals[p] for p in pos[ok]]
                     res[c] = col
-                frames.append(res[key + ["__tns"] + lcols + rcols])
                 for c in lcols:
                     pend_v[c] = [v for v, m in zip(pend_v[c], closed) if not m]
                 pend_t = pend_t[~closed]
         # rights below every pending left AND below any possible future
         # left (>= max_t - wm) are unreachable in the forward direction
-        if max_t is not None and len(buf_t):
+        if len(buf_t):
             cutoff = max_t - wm_ns
             if len(pend_t):
                 cutoff = min(cutoff, int(pend_t[0]))
@@ -856,14 +864,17 @@ def asof_join_stream_future(left: DataFrame, right: DataFrame,
             buf_t = buf_t[keep]
             for c in rcols:
                 buf_v[c] = [v for v, k in zip(buf_v[c], keep) if k]
-        state.update((
-            [max_t if max_t is not None else 0],
-            pend_t.tolist(), *[pend_v[c] for c in lcols],
-            buf_t.tolist(), *[buf_v[c] for c in rcols]))
-        yield from frames
+        return res, ([max_t], pend_t.tolist(), *[pend_v[c] for c in lcols],
+                     buf_t.tolist(), *[buf_v[c] for c in rcols])
 
-    return u.groupBy(*key).applyInPandasWithState(
-        fold, out_schema, state_schema, "append", "NoTimeout")
+    return _keyed_fold(
+        u, key, fields,
+        [T.StructField("max_t", T.ArrayType(T.LongType())),
+         T.StructField("lt", T.ArrayType(T.LongType()))]
+        + [T.StructField(f"l_{c}", T.ArrayType(types[c])) for c in lcols]
+        + [T.StructField("rt", T.ArrayType(T.LongType()))]
+        + [T.StructField(f"r_{c}", T.ArrayType(types[c])) for c in rcols],
+        ([],) * (3 + nl + len(rcols)), step, key_fields=key_fields)
 
 
 def detect_anomalies_stream(stream: DataFrame, column: str,
@@ -886,86 +897,69 @@ def detect_anomalies_stream(stream: DataFrame, column: str,
     import math
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
-    key = list(key)
     w_ns = parse_duration_ns(window)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_zscore", T.DoubleType()),
-           T.StructField(f"{column}_anomaly", T.BooleanType())])
-    state_schema = T.StructType([
-        T.StructField("ts", T.ArrayType(T.LongType())),
-        T.StructField("vs", T.ArrayType(T.DoubleType()))])
 
-    def fold(key_vals, pdf_iter, state):
-        buf_t, buf_v = state.get if state.exists else ([], [])
-        buf_t = np.asarray(buf_t or [], dtype=np.int64)
-        buf_v = np.asarray(buf_v or [], dtype=np.float64)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t_new = pdf["__tns"].to_numpy(np.int64)
-            v_new = pdf[column].to_numpy(np.float64)
-            # baseline buffer: merged, NaN-free (nulls never contribute
-            # to avg/stddev/count in the batch frame), and re-sorted so
-            # late arrivals within the horizon land in timeline order
-            mt = np.concatenate([buf_t, t_new[~np.isnan(v_new)]])
-            mv = np.concatenate([buf_v, v_new[~np.isnan(v_new)]])
-            order = np.argsort(mt, kind="stable")
-            allt, allv = mt[order], mv[order]
-            # prefix sums over the sorted baseline: baseline of a row
-            # at time ti = entries in [ti - w, ti) -> O(log) per row
-            ps = np.concatenate([[0.0], np.cumsum(allv)])
-            ps2 = np.concatenate([[0.0], np.cumsum(allv * allv)])
-            lo = np.searchsorted(allt, t_new - w_ns, side="left")
-            hi = np.searchsorted(allt, t_new, side="left")
-            n = (hi - lo).astype(np.int64)
-            z = np.full(len(t_new), np.nan)
-            ok = n >= min_baseline
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sm = ps[hi] - ps[lo]
-                sq = ps2[hi] - ps2[lo]
-                mean = np.where(n > 0, sm / np.maximum(n, 1), np.nan)
-                var = np.where(n > 1,
-                               (sq - np.maximum(n, 1) * mean * mean)
-                               / np.maximum(n - 1, 1), np.nan)
-                sd = np.sqrt(np.maximum(var, 0.0))
-                good = ok & (sd > 0)
-                z[good] = ((v_new - mean) / sd)[good]
-            res = pd.DataFrame({c: [kv] * len(t_new)
-                                for c, kv in zip(key, key_vals)})
-            res["__tns"] = t_new
-            res[column] = v_new
-            res[f"{column}_zscore"] = [None if math.isnan(x) else x
-                                       for x in z]
-            res[f"{column}_anomaly"] = [
-                (not math.isnan(x)) and abs(x) > k for x in z]
-            frames.append(res)
-            # trim against the max time SEEN (null-valued rows advance
-            # the clock too), not the last buffer entry
-            max_seen = int(t_new[-1])
-            if len(allt):
-                max_seen = max(max_seen, int(allt[-1]))
-            keepm = allt >= max_seen - w_ns
-            buf_t, buf_v = allt[keepm], allv[keepm]
-        state.update((buf_t.tolist(), buf_v.tolist()))
-        yield from frames
+    def step(pdf, st):
+        buf_t = np.asarray(st[0] or [], dtype=np.int64)
+        buf_v = np.asarray(st[1] or [], dtype=np.float64)
+        t_new = pdf["__tns"].to_numpy(np.int64)
+        v_new = pdf[column].to_numpy(np.float64)
+        # baseline buffer: merged, NaN-free (nulls never contribute
+        # to avg/stddev/count in the batch frame), and re-sorted so
+        # late arrivals within the horizon land in timeline order
+        mt = np.concatenate([buf_t, t_new[~np.isnan(v_new)]])
+        mv = np.concatenate([buf_v, v_new[~np.isnan(v_new)]])
+        order = np.argsort(mt, kind="stable")
+        allt, allv = mt[order], mv[order]
+        # prefix sums over the sorted baseline: baseline of a row
+        # at time ti = entries in [ti - w, ti) -> O(log) per row
+        ps = np.concatenate([[0.0], np.cumsum(allv)])
+        ps2 = np.concatenate([[0.0], np.cumsum(allv * allv)])
+        lo = np.searchsorted(allt, t_new - w_ns, side="left")
+        hi = np.searchsorted(allt, t_new, side="left")
+        n = (hi - lo).astype(np.int64)
+        z = np.full(len(t_new), np.nan)
+        ok = n >= min_baseline
+        with np.errstate(invalid="ignore", divide="ignore"):
+            sm = ps[hi] - ps[lo]
+            sq = ps2[hi] - ps2[lo]
+            mean = np.where(n > 0, sm / np.maximum(n, 1), np.nan)
+            var = np.where(n > 1,
+                           (sq - np.maximum(n, 1) * mean * mean)
+                           / np.maximum(n - 1, 1), np.nan)
+            sd = np.sqrt(np.maximum(var, 0.0))
+            good = ok & (sd > 0)
+            z[good] = ((v_new - mean) / sd)[good]
+        # trim against the max time SEEN (null-valued rows advance
+        # the clock too), not the last buffer entry
+        max_seen = int(t_new[-1])
+        if len(allt):
+            max_seen = max(max_seen, int(allt[-1]))
+        keep = allt >= max_seen - w_ns
+        return ({"__tns": t_new, column: v_new,
+                 f"{column}_zscore": _nan_to_none(z),
+                 f"{column}_anomaly": [(not math.isnan(x)) and abs(x) > k
+                                       for x in z]},
+                (allt[keep].tolist(), allv[keep].tolist()))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_zscore", T.DoubleType()),
+         T.StructField(f"{column}_anomaly", T.BooleanType())],
+        [T.StructField("ts", T.ArrayType(T.LongType())),
+         T.StructField("vs", T.ArrayType(T.DoubleType()))],
+        ([], []), step)
 
 
 def exponential_smoothing_stream(stream: DataFrame, column: str,
                                  key: Sequence[str], alpha: float = 0.05,
-                                 priming_periods: float = 0.0,
+                                 priming_periods: float = 1.0,
                                  duration_per_period: str = "1d",
                                  interpolation: str = "current",
                                  convention: str = "core",
@@ -978,61 +972,44 @@ def exponential_smoothing_stream(stream: DataFrame, column: str,
     so in-order arrival reproduces the batch result exactly.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.ema import _affine_scan, _smoothing_coeffs
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
-    key = list(key)
     period_ns = float(parse_duration_ns(duration_per_period))
     coeff_fn = _smoothing_coeffs(alpha, priming_periods, period_ns,
                                  interpolation, convention)
     divide = convention == "core"
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_ema", T.DoubleType())])
-    state_schema = T.StructType([
-        T.StructField("prev_t", T.LongType()),
-        T.StructField("prev_x", T.DoubleType()),
-        T.StructField("e", T.DoubleType()),
-        T.StructField("a", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        prev_t, prev_x, e, a = state.get if state.exists \
-            else (None, None, 0.0, 0.0)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            n = len(x)
-            steps, c, aux_c = coeff_fn(t, x, prev_t, prev_x)
-            with np.errstate(under="ignore"):
-                decay = np.exp(-np.cumsum(steps))
-            evals = _affine_scan(steps, c) + e * decay
-            avals = _affine_scan(steps, aux_c) + a * decay
-            if divide:
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    out = evals / avals
-            else:
-                out = evals
-            e, a = float(evals[-1]), float(avals[-1])
-            prev_t, prev_x = int(t[-1]), float(x[-1])
-            res = pd.DataFrame({c_: [v] * n for c_, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            res[f"{column}_ema"] = out
-            frames.append(res)
-        state.update((prev_t, prev_x, float(e), float(a)))
-        yield from frames
+    def step(pdf, st):
+        prev_t, prev_x, e, a = st
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        steps, c, aux_c = coeff_fn(t, x, prev_t, prev_x)
+        with np.errstate(under="ignore"):
+            decay = np.exp(-np.cumsum(steps))
+        evals = _affine_scan(steps, c) + e * decay
+        avals = _affine_scan(steps, aux_c) + a * decay
+        if divide:
+            with np.errstate(divide="ignore", invalid="ignore"):
+                out = evals / avals
+        else:
+            out = evals
+        return ({"__tns": t, column: x, f"{column}_ema": out},
+                (int(t[-1]), float(x[-1]), float(evals[-1]),
+                 float(avals[-1])))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_ema", T.DoubleType())],
+        [T.StructField("prev_t", T.LongType()),
+         T.StructField("prev_x", T.DoubleType()),
+         T.StructField("e", T.DoubleType()),
+         T.StructField("a", T.DoubleType())],
+        (None, None, 0.0, 0.0), step, order=("__tns", column))
 
 
 def summarize_windows_stream(stream: DataFrame, window, reducer,
@@ -1057,7 +1034,7 @@ def summarize_windows_stream(stream: DataFrame, window, reducer,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
     from ..windows import TimeWindow
 
     if not isinstance(window, TimeWindow):
@@ -1068,57 +1045,34 @@ def summarize_windows_stream(stream: DataFrame, window, reducer,
     w_ns = -lo
     wm_ns = parse_duration_ns(watermark)
     key = list(key)
-    with_ns = (stream.withWatermark(time_column, watermark)
-               .withColumn("__tns", time_ns_expr(stream, time_column)))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(value_col, stream.schema[value_col].dataType),
-           T.StructField(out_name,
-                         out_type if isinstance(out_type, T.DataType)
-                         else T._parse_datatype_string(out_type))])
-    state_schema = T.StructType([
-        T.StructField("bt", T.ArrayType(T.LongType())),
-        T.StructField("bv", T.ArrayType(T.DoubleType()))])
 
-    def fold(key_vals, pdf_iter, state):
-        if state.exists:
-            st = state.get
-            buf_t = np.asarray(st[0] or [], dtype=np.int64)
-            buf_v = np.asarray(st[1] or [], dtype=np.float64)
-        else:
-            buf_t = np.empty(0, dtype=np.int64)
-            buf_v = np.empty(0, dtype=np.float64)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t = pdf["__tns"].to_numpy(np.int64)
-            x = pdf[value_col].to_numpy(np.float64)
-            all_t = np.concatenate([buf_t, t])
-            all_v = np.concatenate([buf_v, x])
-            order = np.argsort(all_t, kind="stable")
-            buf_t, buf_v = all_t[order], all_v[order]
-            los = np.searchsorted(buf_t, t - w_ns, side="left")
-            his = np.searchsorted(buf_t, t, side="right")
-            vals = [reducer(pd.Series(buf_v[lo_:hi_]))
-                    for lo_, hi_ in zip(los, his)]
-            res = pd.DataFrame({c: [v] * len(t)
-                                for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[value_col] = x
-            res[out_name] = vals
-            frames.append(res)
-        if len(buf_t):
-            cutoff = int(buf_t[-1]) - w_ns - wm_ns
-            keep = buf_t >= cutoff
-            buf_t, buf_v = buf_t[keep], buf_v[keep]
-        state.update((buf_t.tolist(), buf_v.tolist()))
-        yield from frames
+    def step(pdf, st):
+        t = pdf["__tns"].to_numpy(np.int64)
+        x = pdf[value_col].to_numpy(np.float64)
+        all_t = np.concatenate([np.asarray(st[0] or [], dtype=np.int64), t])
+        all_v = np.concatenate([np.asarray(st[1] or [], dtype=np.float64),
+                                x])
+        order = np.argsort(all_t, kind="stable")
+        buf_t, buf_v = all_t[order], all_v[order]
+        los = np.searchsorted(buf_t, t - w_ns, side="left")
+        his = np.searchsorted(buf_t, t, side="right")
+        vals = [reducer(pd.Series(buf_v[lo_:hi_]))
+                for lo_, hi_ in zip(los, his)]
+        keep = buf_t >= int(buf_t[-1]) - w_ns - wm_ns
+        return ({"__tns": t, value_col: x, out_name: vals},
+                (buf_t[keep].tolist(), buf_v[keep].tolist()))
 
-    return (with_ns.select(*key, "__tns", value_col)
-            .groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream.withWatermark(time_column, watermark),
+                  time_column).select(*key, "__tns", value_col), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(value_col, stream.schema[value_col].dataType),
+         T.StructField(out_name,
+                       out_type if isinstance(out_type, T.DataType)
+                       else T._parse_datatype_string(out_type))],
+        [T.StructField("bt", T.ArrayType(T.LongType())),
+         T.StructField("bv", T.ArrayType(T.DoubleType()))],
+        ([], []), step)
 
 
 def rolling_ols_stream(stream: DataFrame, y: str, x: str,
@@ -1138,91 +1092,74 @@ def rolling_ols_stream(stream: DataFrame, y: str, x: str,
     the batch result for rows scored after they land; per-row sums are
     O(1) via prefix sums + searchsorted (the anomaly-stream recipe)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
-    key = list(key)
     w_ns = parse_duration_ns(window)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(x, T.DoubleType()),
-           T.StructField(y, T.DoubleType()),
-           T.StructField("beta", T.DoubleType()),
-           T.StructField("alpha", T.DoubleType()),
-           T.StructField("r2", T.DoubleType())])
-    state_schema = T.StructType([
-        T.StructField("ts", T.ArrayType(T.LongType())),
-        T.StructField("xs", T.ArrayType(T.DoubleType())),
-        T.StructField("ys", T.ArrayType(T.DoubleType()))])
 
-    def fold(key_vals, pdf_iter, state):
-        bt, bx, by = state.get if state.exists else ([], [], [])
-        bt = np.asarray(bt or [], dtype=np.int64)
-        bx = np.asarray(bx or [], dtype=np.float64)
-        by = np.asarray(by or [], dtype=np.float64)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t_new = pdf["__tns"].to_numpy(np.int64)
-            x_new = pdf[x].to_numpy(np.float64)
-            y_new = pdf[y].to_numpy(np.float64)
-            # complete pairs only enter the sums (batch pairwise rule)
-            comp = ~np.isnan(x_new) & ~np.isnan(y_new)
-            mt = np.concatenate([bt, t_new[comp]])
-            mx = np.concatenate([bx, x_new[comp]])
-            my = np.concatenate([by, y_new[comp]])
-            order = np.argsort(mt, kind="stable")
-            allt, allx, ally = mt[order], mx[order], my[order]
-            pre = lambda v: np.concatenate([[0.0], np.cumsum(v)])
-            psx, psy = pre(allx), pre(ally)
-            psxx, psyy = pre(allx * allx), pre(ally * ally)
-            psxy = pre(allx * ally)
-            lo = np.searchsorted(allt, t_new - w_ns, side="left")
-            hi = np.searchsorted(allt, t_new, side="right")
-            n = (hi - lo).astype(np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                sx = psx[hi] - psx[lo]
-                sy = psy[hi] - psy[lo]
-                sxx = psxx[hi] - psxx[lo]
-                syy = psyy[hi] - psyy[lo]
-                sxy = psxy[hi] - psxy[lo]
-                det = n * sxx - sx * sx
-                ok = (n >= min_samples) & (det > 0)
-                beta = np.where(ok, (n * sxy - sx * sy)
-                                / np.where(det != 0, det, 1.0), np.nan)
-                alpha = np.where(ok, (sy - beta * sx)
-                                 / np.maximum(n, 1), np.nan)
-                deny = n * syy - sy * sy
-                r2 = np.where(ok & (deny > 0),
-                              (n * sxy - sx * sy) ** 2
-                              / (np.where(det != 0, det, 1.0)
-                                 * np.where(deny != 0, deny, 1.0)),
-                              np.nan)
-            res = pd.DataFrame({c: [kv] * len(t_new)
-                                for c, kv in zip(key, key_vals)})
-            res["__tns"] = t_new
-            res[x] = x_new
-            res[y] = y_new
-            fin = lambda a: [None if np.isnan(v) else float(v) for v in a]
-            res["beta"], res["alpha"], res["r2"] = \
-                fin(beta), fin(alpha), fin(r2)
-            frames.append(res)
-            max_seen = int(t_new[-1])
-            if len(allt):
-                max_seen = max(max_seen, int(allt[-1]))
-            keep = allt >= max_seen - w_ns
-            allt, allx, ally = allt[keep], allx[keep], ally[keep]
-            bt, bx, by = allt, allx, ally
-        state.update((bt.tolist(), bx.tolist(), by.tolist()))
-        yield from frames
+    def step(pdf, st):
+        bt, bx, by = st
+        t_new = pdf["__tns"].to_numpy(np.int64)
+        x_new = pdf[x].to_numpy(np.float64)
+        y_new = pdf[y].to_numpy(np.float64)
+        # complete pairs only enter the sums (batch pairwise rule)
+        comp = ~np.isnan(x_new) & ~np.isnan(y_new)
+        mt = np.concatenate([np.asarray(bt or [], dtype=np.int64),
+                             t_new[comp]])
+        mx = np.concatenate([np.asarray(bx or [], dtype=np.float64),
+                             x_new[comp]])
+        my = np.concatenate([np.asarray(by or [], dtype=np.float64),
+                             y_new[comp]])
+        order = np.argsort(mt, kind="stable")
+        allt, allx, ally = mt[order], mx[order], my[order]
+        pre = lambda v: np.concatenate([[0.0], np.cumsum(v)])
+        psx, psy = pre(allx), pre(ally)
+        psxx, psyy = pre(allx * allx), pre(ally * ally)
+        psxy = pre(allx * ally)
+        lo = np.searchsorted(allt, t_new - w_ns, side="left")
+        hi = np.searchsorted(allt, t_new, side="right")
+        n = (hi - lo).astype(np.float64)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            sx = psx[hi] - psx[lo]
+            sy = psy[hi] - psy[lo]
+            sxx = psxx[hi] - psxx[lo]
+            syy = psyy[hi] - psyy[lo]
+            sxy = psxy[hi] - psxy[lo]
+            det = n * sxx - sx * sx
+            ok = (n >= min_samples) & (det > 0)
+            beta = np.where(ok, (n * sxy - sx * sy)
+                            / np.where(det != 0, det, 1.0), np.nan)
+            alpha = np.where(ok, (sy - beta * sx)
+                             / np.maximum(n, 1), np.nan)
+            deny = n * syy - sy * sy
+            r2 = np.where(ok & (deny > 0),
+                          (n * sxy - sx * sy) ** 2
+                          / (np.where(det != 0, det, 1.0)
+                             * np.where(deny != 0, deny, 1.0)),
+                          np.nan)
+        max_seen = int(t_new[-1])
+        if len(allt):
+            max_seen = max(max_seen, int(allt[-1]))
+        keep = allt >= max_seen - w_ns
+        return ({"__tns": t_new, x: x_new, y: y_new,
+                 "beta": _nan_to_none(beta), "alpha": _nan_to_none(alpha),
+                 "r2": _nan_to_none(r2)},
+                (allt[keep].tolist(), allx[keep].tolist(),
+                 ally[keep].tolist()))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(x, T.DoubleType()),
+         T.StructField(y, T.DoubleType()),
+         T.StructField("beta", T.DoubleType()),
+         T.StructField("alpha", T.DoubleType()),
+         T.StructField("r2", T.DoubleType())],
+        [T.StructField("ts", T.ArrayType(T.LongType())),
+         T.StructField("xs", T.ArrayType(T.DoubleType())),
+         T.StructField("ys", T.ArrayType(T.DoubleType()))],
+        ([], [], []), step)
 
 
 def rolling_ols_multi_stream(stream: DataFrame, y: str,
@@ -1243,12 +1180,10 @@ def rolling_ols_multi_stream(stream: DataFrame, y: str,
     non-default batch setting keeps batch/stream parity (r10
     ADVICE)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
-    key = list(key)
     xs = list(xs)
     k = len(xs)
     if k == 0:
@@ -1256,110 +1191,87 @@ def rolling_ols_multi_stream(stream: DataFrame, y: str,
     if min_samples is None:
         min_samples = k + 2
     w_ns = parse_duration_ns(window)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType())]
+    m = k + 2  # terms: [1, x1..xk, y]
+
+    def step(pdf, st):
+        bt = np.asarray(st[0] or [], dtype=np.int64)
+        bx = [np.asarray(st[1 + j] or [], dtype=np.float64)
+              for j in range(k)]
+        by = np.asarray(st[k + 1] or [], dtype=np.float64)
+        t_new = pdf["__tns"].to_numpy(np.int64)
+        x_new = [pdf[c].to_numpy(np.float64) for c in xs]
+        y_new = pdf[y].to_numpy(np.float64)
+        comp = ~np.isnan(y_new)
+        for xv in x_new:
+            comp &= ~np.isnan(xv)
+        mt = np.concatenate([bt, t_new[comp]])
+        mx = [np.concatenate([bx[j], x_new[j][comp]])
+              for j in range(k)]
+        my = np.concatenate([by, y_new[comp]])
+        order = np.argsort(mt, kind="stable")
+        allt = mt[order]
+        terms = [np.ones(len(allt))] \
+            + [mx[j][order] for j in range(k)] + [my[order]]
+        pre = lambda v: np.concatenate([[0.0], np.cumsum(v)])
+        ps = {}
+        for i in range(m):
+            for j in range(i, m):
+                ps[(i, j)] = pre(terms[i] * terms[j])
+        lo = np.searchsorted(allt, t_new - w_ns, side="left")
+        hi = np.searchsorted(allt, t_new, side="right")
+        N = len(t_new)
+        S = np.zeros((N, m, m))
+        for i in range(m):
+            for j in range(i, m):
+                v = ps[(i, j)][hi] - ps[(i, j)][lo]
+                S[:, i, j] = v
+                S[:, j, i] = v
+        n = S[:, 0, 0]
+        A = S[:, :k + 1, :k + 1]
+        b = S[:, :k + 1, k + 1]
+        syy = S[:, k + 1, k + 1]
+        sy = S[:, 0, k + 1]
+        with np.errstate(all="ignore"):
+            det = np.linalg.det(A)
+            # relative Hadamard-scale guard, in lockstep with the
+            # batch operator (r10: det != 0 admits cancellation
+            # noise and breaks batch/stream parity); shared helper
+            # handles diagonal-product overflow in log space
+            from ..operators.regression import _rel_det_ok
+            ok = (n >= min_samples) & np.isfinite(det) \
+                & _rel_det_ok(det, A, min_rel_det)
+            coef = np.full((N, k + 1), np.nan)
+            if ok.any():
+                coef[ok] = np.linalg.solve(A[ok], b[ok])
+            sse = syy - np.einsum("np,np->n", coef, b)
+            sst = syy - sy * sy / np.maximum(n, 1)
+            r2 = np.where(ok & (sst > 0), 1.0 - sse / sst, np.nan)
+        cols = {"__tns": t_new, **dict(zip(xs, x_new)), y: y_new,
+                "alpha": _nan_to_none(coef[:, 0]),
+                "beta": [None if not o else [float(v) for v in row[1:]]
+                         for o, row in zip(ok, coef)],
+                "r2": _nan_to_none(r2)}
+        max_seen = int(t_new[-1])
+        if len(allt):
+            max_seen = max(max_seen, int(allt[-1]))
+        keep = allt >= max_seen - w_ns
+        return cols, (allt[keep].tolist(),
+                      *[terms[1 + j][keep].tolist() for j in range(k)],
+                      terms[k + 1][keep].tolist())
+
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType())]
         + [T.StructField(c, T.DoubleType()) for c in xs]
         + [T.StructField(y, T.DoubleType()),
            T.StructField("alpha", T.DoubleType()),
            T.StructField("beta", T.ArrayType(T.DoubleType())),
-           T.StructField("r2", T.DoubleType())])
-    state_schema = T.StructType(
+           T.StructField("r2", T.DoubleType())],
         [T.StructField("ts", T.ArrayType(T.LongType()))]
         + [T.StructField(f"x{j}", T.ArrayType(T.DoubleType()))
            for j in range(k)]
-        + [T.StructField("ys", T.ArrayType(T.DoubleType()))])
-    m = k + 2  # terms: [1, x1..xk, y]
-
-    def fold(key_vals, pdf_iter, state):
-        if state.exists:
-            st = state.get
-            bt = np.asarray(st[0] or [], dtype=np.int64)
-            bx = [np.asarray(st[1 + j] or [], dtype=np.float64)
-                  for j in range(k)]
-            by = np.asarray(st[k + 1] or [], dtype=np.float64)
-        else:
-            bt = np.asarray([], dtype=np.int64)
-            bx = [np.asarray([], dtype=np.float64) for _ in range(k)]
-            by = np.asarray([], dtype=np.float64)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t_new = pdf["__tns"].to_numpy(np.int64)
-            x_new = [pdf[c].to_numpy(np.float64) for c in xs]
-            y_new = pdf[y].to_numpy(np.float64)
-            comp = ~np.isnan(y_new)
-            for xv in x_new:
-                comp &= ~np.isnan(xv)
-            mt = np.concatenate([bt, t_new[comp]])
-            mx = [np.concatenate([bx[j], x_new[j][comp]])
-                  for j in range(k)]
-            my = np.concatenate([by, y_new[comp]])
-            order = np.argsort(mt, kind="stable")
-            allt = mt[order]
-            terms = [np.ones(len(allt))] \
-                + [mx[j][order] for j in range(k)] + [my[order]]
-            pre = lambda v: np.concatenate([[0.0], np.cumsum(v)])
-            ps = {}
-            for i in range(m):
-                for j in range(i, m):
-                    ps[(i, j)] = pre(terms[i] * terms[j])
-            lo = np.searchsorted(allt, t_new - w_ns, side="left")
-            hi = np.searchsorted(allt, t_new, side="right")
-            N = len(t_new)
-            S = np.zeros((N, m, m))
-            for i in range(m):
-                for j in range(i, m):
-                    v = ps[(i, j)][hi] - ps[(i, j)][lo]
-                    S[:, i, j] = v
-                    S[:, j, i] = v
-            n = S[:, 0, 0]
-            A = S[:, :k + 1, :k + 1]
-            b = S[:, :k + 1, k + 1]
-            syy = S[:, k + 1, k + 1]
-            sy = S[:, 0, k + 1]
-            with np.errstate(all="ignore"):
-                det = np.linalg.det(A)
-                # relative Hadamard-scale guard, in lockstep with the
-                # batch operator (r10: det != 0 admits cancellation
-                # noise and breaks batch/stream parity); shared helper
-                # handles diagonal-product overflow in log space
-                from ..operators.regression import _rel_det_ok
-                ok = (n >= min_samples) & np.isfinite(det) \
-                    & _rel_det_ok(det, A, min_rel_det)
-                coef = np.full((N, k + 1), np.nan)
-                if ok.any():
-                    coef[ok] = np.linalg.solve(A[ok], b[ok])
-                sse = syy - np.einsum("np,np->n", coef, b)
-                sst = syy - sy * sy / np.maximum(n, 1)
-                r2 = np.where(ok & (sst > 0), 1.0 - sse / sst, np.nan)
-            res = pd.DataFrame({c: [kv] * N
-                                for c, kv in zip(key, key_vals)})
-            res["__tns"] = t_new
-            for j, c in enumerate(xs):
-                res[c] = x_new[j]
-            res[y] = y_new
-            fin = lambda a: [None if np.isnan(v) else float(v) for v in a]
-            res["alpha"] = fin(coef[:, 0])
-            res["beta"] = [None if not o else [float(v) for v in row[1:]]
-                           for o, row in zip(ok, coef)]
-            res["r2"] = fin(r2)
-            frames.append(res)
-            max_seen = int(t_new[-1])
-            if len(allt):
-                max_seen = max(max_seen, int(allt[-1]))
-            keep = allt >= max_seen - w_ns
-            bt = allt[keep]
-            bx = [terms[1 + j][keep] for j in range(k)]
-            by = terms[k + 1][keep]
-        state.update((bt.tolist(), *[v.tolist() for v in bx],
-                      by.tolist()))
-        yield from frames
-
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+        + [T.StructField("ys", T.ArrayType(T.DoubleType()))],
+        ([],) * (k + 2), step)
 
 
 def token_shift_stream(stream_docs: DataFrame, ref: DataFrame,
@@ -1477,7 +1389,6 @@ def funnel_stream(stream: DataFrame, steps: Sequence[str],
     ``ewma_stream`` contract: already-fixed earlier steps do not
     reopen. Step times travel as epoch-ns longs."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..timeseries import time_ns_expr
@@ -1493,52 +1404,44 @@ def funnel_stream(stream: DataFrame, steps: Sequence[str],
     tns = time_ns_expr(stream, time_column)
     ev = (stream.filter(F.col(event_col).isin(steps) & tns.isNotNull())
           .select(*key, tns.alias("__tns"), idx.alias("__i")))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField(f"step{i + 1}_tns", T.LongType())
-           for i in range(k)]
-        + [T.StructField("n_steps", T.IntegerType()),
-           T.StructField("converted", T.BooleanType())])
-    state_schema = T.StructType(
-        [T.StructField(f"s{i}", T.LongType()) for i in range(k)])
 
-    def fold(key_vals, pdf_iter, state):
-        ts = list(state.get) if state.exists else [None] * k
+    def step(pdf, st):
         # whole trigger at once: the chained-min pass is monotone and
         # never reopens earlier steps, so running it per Arrow CHUNK
         # loses step-i events that arrive in a chunk before the chunk
         # holding their step-(i-1) predecessor
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            t = pdf["__tns"].to_numpy(np.int64)
-            si = pdf["__i"].to_numpy(np.int64)
-            # chained-min pass in step order (min needs no row sort) —
-            # the same greedy assignment as the batch walk for the
-            # rows present; an unfilled step leaves every later step
-            # unfillable this trigger (checked via ts[i-1])
-            for i in range(k):
-                if ts[i] is not None:
-                    continue
-                if i == 0:
-                    cand = t[si == 0]
-                elif ts[i - 1] is None:
-                    break
-                else:
-                    cand = t[(si == i) & (t > ts[i - 1])]
-                if len(cand):
-                    ts[i] = int(cand.min())
-        state.update(tuple(ts))
-        n = sum(1 for v in ts if v is not None)
-        row = {c: [v] for c, v in zip(key, key_vals)}
+        ts = list(st)
+        t = pdf["__tns"].to_numpy(np.int64)
+        si = pdf["__i"].to_numpy(np.int64)
+        # chained-min pass in step order (min needs no row sort) —
+        # the same greedy assignment as the batch walk for the
+        # rows present; an unfilled step leaves every later step
+        # unfillable this trigger (checked via ts[i-1])
         for i in range(k):
-            row[f"step{i + 1}_tns"] = [ts[i]]
+            if ts[i] is not None:
+                continue
+            if i == 0:
+                cand = t[si == 0]
+            elif ts[i - 1] is None:
+                break
+            else:
+                cand = t[(si == i) & (t > ts[i - 1])]
+            if len(cand):
+                ts[i] = int(cand.min())
+        n = sum(1 for v in ts if v is not None)
+        row = {f"step{i + 1}_tns": [ts[i]] for i in range(k)}
         row["n_steps"] = np.array([n], dtype=np.int32)
         row["converted"] = [n == k]
-        yield pd.DataFrame(row)
+        return row, tuple(ts)
 
-    return (ev.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        ev, key,
+        [T.StructField(f"step{i + 1}_tns", T.LongType())
+         for i in range(k)]
+        + [T.StructField("n_steps", T.IntegerType()),
+           T.StructField("converted", T.BooleanType())],
+        [T.StructField(f"s{i}", T.LongType()) for i in range(k)],
+        (None,) * k, step)
 
 
 def drawdown_stream(stream: DataFrame, column: str,
@@ -1552,59 +1455,38 @@ def drawdown_stream(stream: DataFrame, column: str,
     null-skip rule. In-order replay equals the batch operator
     (the ``ewma_stream`` contract for late cross-trigger rows)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import time_ns_expr
-
-    key = list(key)
     if not key:
         raise ValueError("drawdown_stream needs a key")
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField("peak", T.DoubleType()),
-           T.StructField("drawdown", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("peak", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        peak = state.get[0] if state.exists else None
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            v = pdf[column].to_numpy(np.float64)
-            filled = np.where(np.isnan(v),
-                              -np.inf if peak is None else peak, v)
-            if peak is not None:
-                filled = np.maximum(filled, peak)
-            peaks = np.maximum.accumulate(filled)
-            if peak is None:
-                # rows before the first non-null value have no peak
-                seen = np.cumsum(~np.isnan(v)) > 0
-                peaks = np.where(seen, peaks, np.nan)
-            out = pd.DataFrame({c: [kv] * len(pdf)
-                                for c, kv in zip(key, key_vals)})
-            out["__tns"] = pdf["__tns"].to_numpy(np.int64)
-            dd = np.where((peaks > 0) & ~np.isnan(v),
-                          (peaks - v) / peaks, np.nan)
-            # NaN -> None: Arrow keeps float NaN as NaN, but the batch
-            # operator emits SQL NULL (the anomaly-stream recipe)
-            import math as _math
-            for name, arr in ((column, v), ("peak", peaks),
-                              ("drawdown", dd)):
-                out[name] = [None if _math.isnan(x) else x for x in arr]
-            frames.append(out)
-            last = peaks[-1] if len(peaks) else np.nan
-            if not np.isnan(last):
-                peak = float(last)
-        state.update((peak,))
-        yield from frames
+    def step(pdf, st):
+        (peak,) = st
+        v = pdf[column].to_numpy(np.float64)
+        filled = np.where(np.isnan(v),
+                          -np.inf if peak is None else peak, v)
+        if peak is not None:
+            filled = np.maximum(filled, peak)
+        peaks = np.maximum.accumulate(filled)
+        if peak is None:
+            # rows before the first non-null value have no peak
+            seen = np.cumsum(~np.isnan(v)) > 0
+            peaks = np.where(seen, peaks, np.nan)
+        dd = np.where((peaks > 0) & ~np.isnan(v),
+                      (peaks - v) / peaks, np.nan)
+        if not np.isnan(peaks[-1]):
+            peak = float(peaks[-1])
+        return ({"__tns": pdf["__tns"].to_numpy(np.int64),
+                 column: _nan_to_none(v), "peak": _nan_to_none(peaks),
+                 "drawdown": _nan_to_none(dd)}, (peak,))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField("peak", T.DoubleType()),
+         T.StructField("drawdown", T.DoubleType())],
+        [T.StructField("peak", T.DoubleType())], (None,), step)
 
 
 def ewm_volatility_stream(stream: DataFrame, column: str,
@@ -1623,61 +1505,39 @@ def ewm_volatility_stream(stream: DataFrame, column: str,
     import math
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.ema import _affine_scan
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
-    key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_ewm_mean", T.DoubleType()),
-           T.StructField(f"{column}_ewm_var", T.DoubleType()),
-           T.StructField(f"{column}_ewm_vol", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("last_tns", T.LongType()),
-                                 T.StructField("e", T.DoubleType()),
-                                 T.StructField("q", T.DoubleType()),
-                                 T.StructField("a", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        last_tns, e, q, a = state.get if state.exists \
-            else (None, 0.0, 0.0, 0.0)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            # (time, value) tie rule: same pin as cusum/kalman and the
-            # batch engine — per-row outputs on duplicate timestamps
-            # must match a batch replay regardless of arrival order
-            pdf = _sort_time_then_values(pdf, "__tns", [column])
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            n = len(x)
-            E, Q, A = _decayed_carry_scan(
-                np, _affine_scan, lam, last_tns, t,
-                [x, x * x, np.ones(n)], [e, q, a])
-            e, q, a = float(E[-1]), float(Q[-1]), float(A[-1])
-            last_tns = int(t[-1])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mean = E / A
-                var = np.maximum(Q / A - mean * mean, 0.0)
-            res = pd.DataFrame({c: [v] * n for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            res[f"{column}_ewm_mean"] = mean
-            res[f"{column}_ewm_var"] = var
-            res[f"{column}_ewm_vol"] = np.sqrt(var)
-            frames.append(res)
-        state.update((last_tns, float(e), float(q), float(a)))
-        yield from frames
+    def step(pdf, st):
+        last_tns, e, q, a = st
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        E, Q, A = _decayed_carry_scan(
+            np, _affine_scan, lam, last_tns, t,
+            [x, x * x, np.ones(len(x))], [e, q, a])
+        with np.errstate(invalid="ignore", divide="ignore"):
+            mean = E / A
+            var = np.maximum(Q / A - mean * mean, 0.0)
+        return ({"__tns": t, column: x, f"{column}_ewm_mean": mean,
+                 f"{column}_ewm_var": var, f"{column}_ewm_vol": np.sqrt(var)},
+                (int(t[-1]), float(E[-1]), float(Q[-1]), float(A[-1])))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_ewm_mean", T.DoubleType()),
+         T.StructField(f"{column}_ewm_var", T.DoubleType()),
+         T.StructField(f"{column}_ewm_vol", T.DoubleType())],
+        [T.StructField("last_tns", T.LongType()),
+         T.StructField("e", T.DoubleType()),
+         T.StructField("q", T.DoubleType()),
+         T.StructField("a", T.DoubleType())],
+        (None, 0.0, 0.0, 0.0), step, order=("__tns", column))
 
 
 def brown_double_smoothing_stream(stream: DataFrame, column: str,
@@ -1697,65 +1557,46 @@ def brown_double_smoothing_stream(stream: DataFrame, column: str,
     import math
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.ema import _affine_scan, _check_alpha
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     _check_alpha(alpha)
-    key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
     ab = alpha / (1.0 - alpha)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_dema_level", T.DoubleType()),
-           T.StructField(f"{column}_dema_trend", T.DoubleType()),
-           T.StructField(f"{column}_dema_fcst", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("last_tns", T.LongType()),
-                                 T.StructField("e1", T.DoubleType()),
-                                 T.StructField("a", T.DoubleType()),
-                                 T.StructField("e2", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        last_tns, e1, a, e2 = state.get if state.exists \
-            else (None, 0.0, 0.0, 0.0)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            # (time, value) tie pin — see ewm_volatility_stream
-            pdf = _sort_time_then_values(pdf, "__tns", [column])
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            n = len(x)
-            E1, A = _decayed_carry_scan(np, _affine_scan, lam, last_tns,
-                                        t, [x, np.ones(n)], [e1, a])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                s1 = E1 / A
-            (E2,) = _decayed_carry_scan(np, _affine_scan, lam, last_tns,
-                                        t, [s1], [e2])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                s2 = E2 / A
-            e1, a, e2 = float(E1[-1]), float(A[-1]), float(E2[-1])
-            last_tns = int(t[-1])
-            level = 2.0 * s1 - s2
-            trend = ab * (s1 - s2)
-            res = pd.DataFrame({c: [v] * n for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            res[f"{column}_dema_level"] = level
-            res[f"{column}_dema_trend"] = trend
-            res[f"{column}_dema_fcst"] = level + trend
-            frames.append(res)
-        state.update((last_tns, float(e1), float(a), float(e2)))
-        yield from frames
+    def step(pdf, st):
+        last_tns, e1, a, e2 = st
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        E1, A = _decayed_carry_scan(np, _affine_scan, lam, last_tns,
+                                    t, [x, np.ones(len(x))], [e1, a])
+        with np.errstate(invalid="ignore", divide="ignore"):
+            s1 = E1 / A
+        (E2,) = _decayed_carry_scan(np, _affine_scan, lam, last_tns,
+                                    t, [s1], [e2])
+        with np.errstate(invalid="ignore", divide="ignore"):
+            s2 = E2 / A
+        level = 2.0 * s1 - s2
+        trend = ab * (s1 - s2)
+        return ({"__tns": t, column: x, f"{column}_dema_level": level,
+                 f"{column}_dema_trend": trend,
+                 f"{column}_dema_fcst": level + trend},
+                (int(t[-1]), float(E1[-1]), float(A[-1]), float(E2[-1])))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_dema_level", T.DoubleType()),
+         T.StructField(f"{column}_dema_trend", T.DoubleType()),
+         T.StructField(f"{column}_dema_fcst", T.DoubleType())],
+        [T.StructField("last_tns", T.LongType()),
+         T.StructField("e1", T.DoubleType()),
+         T.StructField("a", T.DoubleType()),
+         T.StructField("e2", T.DoubleType())],
+        (None, 0.0, 0.0, 0.0), step, order=("__tns", column))
 
 
 def log_returns_stream(stream: DataFrame, price_col: str,
@@ -1768,60 +1609,37 @@ def log_returns_stream(stream: DataFrame, price_col: str,
     null / NaN prices drop BEFORE the chain exactly like the batch
     filter (they neither emit nor break the chain); each key's first
     positive tick emits no return. Duplicate timestamps chain in
-    (time, tie_break..., price) order — the batch ``_order_struct``
-    rule — so the squared returns match the batch operator; pass the
-    same ``tie_break`` columns to both. Emits (key..., __tns, price,
-    ``<col>_logret``)."""
+    (time, tie_break..., price) order, nulls first — the batch
+    ``_order_struct`` rule — so the squared returns match the batch
+    operator; pass the same ``tie_break`` columns to both. Emits
+    (key..., __tns, price, ``<col>_logret``)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import time_ns_expr
-
-    key = list(key)
-    tie_break = list(tie_break)
     p0 = F.col(price_col)
-    with_ns = (stream.filter(p0.isNotNull() & (p0 > 0)
-                             & ~F.isnan(p0.cast("double")))
-               .withColumn("__tns", time_ns_expr(stream, time_column)))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(price_col, T.DoubleType()),
-           T.StructField(f"{price_col}_logret", T.DoubleType())])
-    state_schema = T.StructType([T.StructField("last_tns", T.LongType()),
-                                 T.StructField("last_p", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        last_tns, last_p = state.get if state.exists else (None, None)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            # duplicate timestamps: chain in the batch _order_struct
-            # order (time, tie_break..., price), not arrival order
-            pdf = pdf.sort_values(["__tns", *tie_break, price_col],
-                                  kind="stable")
-            t = pdf["__tns"].to_numpy(np.int64)
-            p = pdf[price_col].to_numpy(np.float64)
-            prev = np.concatenate(
-                [[np.nan if last_p is None else last_p], p[:-1]])
-            with np.errstate(invalid="ignore", divide="ignore"):
-                r = np.log(p / prev)
-            res = pd.DataFrame({c: [v] * len(t)
-                                for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[price_col] = p
-            res[f"{price_col}_logret"] = [
-                None if np.isnan(v) else float(v) for v in r]
-            frames.append(res)
-            last_tns = int(t[-1])
-            last_p = float(p[-1])
-        state.update((last_tns, last_p))
-        yield from frames
+    def step(pdf, st):
+        last_p = st[1]
+        t = pdf["__tns"].to_numpy(np.int64)
+        p = pdf[price_col].to_numpy(np.float64)
+        prev = np.concatenate(
+            [[np.nan if last_p is None else last_p], p[:-1]])
+        with np.errstate(invalid="ignore", divide="ignore"):
+            r = np.log(p / prev)
+        return ({"__tns": t, price_col: p,
+                 f"{price_col}_logret": _nan_to_none(r)},
+                (int(t[-1]), float(p[-1])))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream.filter(p0.isNotNull() & (p0 > 0)
+                                & ~F.isnan(p0.cast("double"))),
+                  time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(price_col, T.DoubleType()),
+         T.StructField(f"{price_col}_logret", T.DoubleType())],
+        [T.StructField("last_tns", T.LongType()),
+         T.StructField("last_p", T.DoubleType())],
+        (None, None), step, order=("__tns", *tie_break, price_col))
 
 
 def realized_volatility_stream(stream: DataFrame, interval: str | int,
@@ -1886,79 +1704,56 @@ def ewm_corr_stream(stream: DataFrame, x: str, y: str,
     import math
 
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.ema import _affine_scan, _check_alpha
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     _check_alpha(alpha)
-    key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
     pfx = f"{x}_{y}"
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(x, T.DoubleType()),
-           T.StructField(y, T.DoubleType()),
-           T.StructField(f"{pfx}_ewm_cov", T.DoubleType()),
-           T.StructField(f"{pfx}_ewm_corr", T.DoubleType()),
-           T.StructField(f"{pfx}_ewm_beta", T.DoubleType())])
-    state_schema = T.StructType(
+
+    def step(pdf, st):
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        xv = pdf[x].to_numpy(dtype=np.float64)
+        yv = pdf[y].to_numpy(dtype=np.float64)
+        arrays = [xv, yv, xv * xv, yv * yv, xv * yv, np.ones(len(t))]
+        outs = _decayed_carry_scan(np, _affine_scan, lam, st[0],
+                                   t, arrays, list(st[1:]))
+        SX, SY, SXX, SYY, SXY, SW = outs
+        with np.errstate(invalid="ignore", divide="ignore"):
+            ex, ey = SX / SW, SY / SW
+            cov = SXY / SW - ex * ey
+            vx = np.maximum(SXX / SW - ex * ex, 0.0)
+            vy = np.maximum(SYY / SW - ey * ey, 0.0)
+            corr = np.clip(cov / np.sqrt(vx * vy), -1.0, 1.0)
+            beta = cov / vy
+        # relative support guard, in lockstep with batch ewm_corr
+        # (r10): variance below min_rel_var of its own second
+        # moment is E[x^2]-E[x]^2 cancellation noise; the knob is
+        # threaded from the signature so a non-default batch
+        # setting keeps batch/stream parity (r10 ADVICE)
+        vx_ok = vx > min_rel_var * (SXX / SW)
+        vy_ok = vy > min_rel_var * (SYY / SW)
+        return ({"__tns": t, x: xv, y: yv, f"{pfx}_ewm_cov": cov,
+                 f"{pfx}_ewm_corr": _nan_to_none(
+                     np.where(vx_ok & vy_ok, corr, np.nan)),
+                 f"{pfx}_ewm_beta": _nan_to_none(
+                     np.where(vy_ok, beta, np.nan))},
+                (int(t[-1]), *[float(o[-1]) for o in outs]))
+
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(x, T.DoubleType()),
+         T.StructField(y, T.DoubleType()),
+         T.StructField(f"{pfx}_ewm_cov", T.DoubleType()),
+         T.StructField(f"{pfx}_ewm_corr", T.DoubleType()),
+         T.StructField(f"{pfx}_ewm_beta", T.DoubleType())],
         [T.StructField("last_tns", T.LongType())]
         + [T.StructField(n, T.DoubleType())
-           for n in ("sx", "sy", "sxx", "syy", "sxy", "sw")])
-
-    def fold(key_vals, pdf_iter, state):
-        st = state.get if state.exists else (None,) + (0.0,) * 6
-        last_tns, carries = st[0], list(st[1:])
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            # (time, x, y) tie pin — see ewm_volatility_stream
-            pdf = _sort_time_then_values(pdf, "__tns", [x, y])
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            xv = pdf[x].to_numpy(dtype=np.float64)
-            yv = pdf[y].to_numpy(dtype=np.float64)
-            n = len(t)
-            arrays = [xv, yv, xv * xv, yv * yv, xv * yv, np.ones(n)]
-            outs = _decayed_carry_scan(np, _affine_scan, lam, last_tns,
-                                       t, arrays, carries)
-            carries = [float(o[-1]) for o in outs]
-            last_tns = int(t[-1])
-            SX, SY, SXX, SYY, SXY, SW = outs
-            with np.errstate(invalid="ignore", divide="ignore"):
-                ex, ey = SX / SW, SY / SW
-                cov = SXY / SW - ex * ey
-                vx = np.maximum(SXX / SW - ex * ex, 0.0)
-                vy = np.maximum(SYY / SW - ey * ey, 0.0)
-                corr = np.clip(cov / np.sqrt(vx * vy), -1.0, 1.0)
-                beta = cov / vy
-            res = pd.DataFrame({c: [v] * n for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[x] = xv
-            res[y] = yv
-            fin = lambda arr, okm: [
-                None if (not o) or np.isnan(v) else float(v)
-                for v, o in zip(arr, okm)]
-            # relative support guard, in lockstep with batch ewm_corr
-            # (r10): variance below min_rel_var of its own second
-            # moment is E[x^2]-E[x]^2 cancellation noise; the knob is
-            # threaded from the signature so a non-default batch
-            # setting keeps batch/stream parity (r10 ADVICE)
-            vx_ok = vx > min_rel_var * (SXX / SW)
-            vy_ok = vy > min_rel_var * (SYY / SW)
-            res[f"{pfx}_ewm_cov"] = cov
-            res[f"{pfx}_ewm_corr"] = fin(corr, vx_ok & vy_ok)
-            res[f"{pfx}_ewm_beta"] = fin(beta, vy_ok)
-            frames.append(res)
-        state.update((last_tns, *carries))
-        yield from frames
-
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+           for n in ("sx", "sy", "sxx", "syy", "sxy", "sw")],
+        (None,) + (0.0,) * 6, step, order=("__tns", x, y))
 
 
 def cusum_stream(stream: DataFrame, column: str, key: Sequence[str],
@@ -1981,61 +1776,43 @@ def cusum_stream(stream: DataFrame, column: str, key: Sequence[str],
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import time_ns_expr
-
     if not sigma > 0:
         raise ValueError(f"sigma must be > 0, got {sigma}")
-    key = list(key)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_cusum_pos", T.DoubleType()),
-           T.StructField(f"{column}_cusum_neg", T.DoubleType()),
-           T.StructField(f"{column}_alarm", T.BooleanType())])
-    state_schema = T.StructType([
-        T.StructField("c_up", T.DoubleType()),
-        T.StructField("c_dn", T.DoubleType()),
-        T.StructField("m_up", T.DoubleType()),
-        T.StructField("m_dn", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        c_up, c_dn, m_up, m_dn = state.get if state.exists \
-            else (0.0, 0.0, np.inf, np.inf)
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            pdf = _sort_time_then_values(pdf, "__tns", [column])
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            obs = ~np.isnan(x)
-            z = np.where(obs, (x - mu) / sigma, 0.0)
-            cup = c_up + np.cumsum(np.where(obs, z - k, 0.0))
-            cdn = c_dn + np.cumsum(np.where(obs, -z - k, 0.0))
-            mup = np.minimum(m_up, np.minimum.accumulate(cup))
-            mdn = np.minimum(m_dn, np.minimum.accumulate(cdn))
-            s_pos = cup - np.minimum(0.0, mup)
-            s_neg = cdn - np.minimum(0.0, mdn)
-            n = len(x)
-            c_up, c_dn = float(cup[-1]), float(cdn[-1])
-            m_up, m_dn = float(mup[-1]), float(mdn[-1])
-            res = pd.DataFrame({c: [v] * n for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            res[f"{column}_cusum_pos"] = np.where(obs, s_pos, np.nan)
-            res[f"{column}_cusum_neg"] = np.where(obs, s_neg, np.nan)
-            res[f"{column}_alarm"] = pd.Series(
-                [bool(p > h or q > h) if o else None
-                 for p, q, o in zip(s_pos, s_neg, obs)],
-                index=res.index, dtype=object)
-            frames.append(res)
-        state.update((float(c_up), float(c_dn), float(m_up), float(m_dn)))
-        yield from frames
+    def step(pdf, st):
+        c_up, c_dn, m_up, m_dn = st
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        obs = ~np.isnan(x)
+        z = np.where(obs, (x - mu) / sigma, 0.0)
+        cup = c_up + np.cumsum(np.where(obs, z - k, 0.0))
+        cdn = c_dn + np.cumsum(np.where(obs, -z - k, 0.0))
+        mup = np.minimum(m_up, np.minimum.accumulate(cup))
+        mdn = np.minimum(m_dn, np.minimum.accumulate(cdn))
+        s_pos = cup - np.minimum(0.0, mup)
+        s_neg = cdn - np.minimum(0.0, mdn)
+        return ({"__tns": t, column: x,
+                 f"{column}_cusum_pos": np.where(obs, s_pos, np.nan),
+                 f"{column}_cusum_neg": np.where(obs, s_neg, np.nan),
+                 f"{column}_alarm": pd.Series(
+                     [bool(p > h or q > h) if o else None
+                      for p, q, o in zip(s_pos, s_neg, obs)],
+                     dtype=object)},
+                (float(cup[-1]), float(cdn[-1]), float(mup[-1]),
+                 float(mdn[-1])))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_cusum_pos", T.DoubleType()),
+         T.StructField(f"{column}_cusum_neg", T.DoubleType()),
+         T.StructField(f"{column}_alarm", T.BooleanType())],
+        [T.StructField("c_up", T.DoubleType()),
+         T.StructField("c_dn", T.DoubleType()),
+         T.StructField("m_up", T.DoubleType()),
+         T.StructField("m_dn", T.DoubleType())],
+        (0.0, 0.0, np.inf, np.inf), step, order=("__tns", column))
 
 
 def kalman_stream(stream: DataFrame, column: str, key: Sequence[str],
@@ -2059,53 +1836,32 @@ def kalman_stream(stream: DataFrame, column: str, key: Sequence[str],
     bitwise-reconverge to batch after late data; the documented fold
     above is pinned in ``test_kalman_stream_late_arrival_semantics``."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.kalman import _kf_scan_factory
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     if not q >= 0 or not r > 0:
         raise ValueError(f"need q >= 0 and r > 0, got q={q} r={r}")
     p0 = float(r) if p0 is None else float(p0)
     scan = _kf_scan_factory(float(q), float(r), p0,
                             float(parse_duration_ns(period)))
-    key = list(key)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType()),
-           T.StructField(f"{column}_kf", T.DoubleType())])
-    state_schema = T.StructType([
-        T.StructField("last_t", T.LongType()),
-        T.StructField("level", T.DoubleType()),
-        T.StructField("var", T.DoubleType())])
 
-    def fold(key_vals, pdf_iter, state):
-        st = state.get if state.exists else None
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            pdf = _sort_time_then_values(pdf, "__tns", [column])
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            out, st = scan(t, x, st)
-            res = pd.DataFrame({c: [v] * len(x)
-                                for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            res[f"{column}_kf"] = out
-            frames.append(res)
-        if st is not None:
-            # never persist a spurious never-observed state for a key
-            # whose trigger delivered no rows
-            state.update(st)
-        yield from frames
+    def step(pdf, st):
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        out, st = scan(t, x, st)
+        return {"__tns": t, column: x, f"{column}_kf": out}, st
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType()),
+         T.StructField(f"{column}_kf", T.DoubleType())],
+        [T.StructField("last_t", T.LongType()),
+         T.StructField("level", T.DoubleType()),
+         T.StructField("var", T.DoubleType())],
+        None, step, order=("__tns", column))
 
 
 def holt_winters_stream(stream: DataFrame, column: str,
@@ -2119,54 +1875,34 @@ def holt_winters_stream(stream: DataFrame, column: str,
     engine runs; in-order replay is bitwise batch-identical. Null/NaN
     observations score null and leave the state untouched."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..operators.holtwinters import _hw_scan_factory, _validate
-    from ..timeseries import parse_duration_ns, time_ns_expr
+    from ..timeseries import parse_duration_ns
 
     _validate(alpha, beta, gamma, period)
     scan = _hw_scan_factory(float(alpha), float(beta), float(gamma),
                             int(period), parse_duration_ns(unit))
-    key = list(key)
-    with_ns = stream.withColumn("__tns", time_ns_expr(stream, time_column))
     names = [f"{column}_hw_level", f"{column}_hw_trend", f"{column}_hw"]
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("__tns", T.LongType()),
-           T.StructField(column, T.DoubleType())]
-        + [T.StructField(n, T.DoubleType()) for n in names])
-    state_schema = T.StructType([
-        T.StructField("init", T.BooleanType()),
-        T.StructField("level", T.DoubleType()),
-        T.StructField("trend", T.DoubleType()),
-        T.StructField("seas", T.ArrayType(T.DoubleType()))])
 
-    def fold(key_vals, pdf_iter, state):
-        st = state.get if state.exists else None
+    def step(pdf, st):
         if st is not None:
             st = (bool(st[0]), float(st[1]), float(st[2]), list(st[3]))
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            pdf = _sort_time_then_values(pdf, "__tns", [column])
-            t = pdf["__tns"].to_numpy(dtype=np.int64)
-            x = pdf[column].to_numpy(dtype=np.float64)
-            (ol, ob, of), st = scan(t, x, st)
-            res = pd.DataFrame({c: [v] * len(x)
-                                for c, v in zip(key, key_vals)})
-            res["__tns"] = t
-            res[column] = x
-            for nm, o in zip(names, (ol, ob, of)):
-                res[nm] = o
-            frames.append(res)
-        if st is not None:
-            state.update(st)
-        yield from frames
+        t = pdf["__tns"].to_numpy(dtype=np.int64)
+        x = pdf[column].to_numpy(dtype=np.float64)
+        outs, st = scan(t, x, st)
+        return {"__tns": t, column: x, **dict(zip(names, outs))}, st
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column), key,
+        [T.StructField("__tns", T.LongType()),
+         T.StructField(column, T.DoubleType())]
+        + [T.StructField(n, T.DoubleType()) for n in names],
+        [T.StructField("init", T.BooleanType()),
+         T.StructField("level", T.DoubleType()),
+         T.StructField("trend", T.DoubleType()),
+         T.StructField("seas", T.ArrayType(T.DoubleType()))],
+        None, step, order=("__tns", column))
 
 
 def kmv_stream(stream: DataFrame, col: str, key: Sequence[str],
@@ -2188,51 +1924,33 @@ def kmv_stream(stream: DataFrame, col: str, key: Sequence[str],
     silently breaking the history-independence contract for
     non-string columns."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..pipeline.hashing import kmv_hash_expr
-    from ..timeseries import time_ns_expr
 
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    key = list(key)
-    with_ns = (stream
-               .withColumn("__tns", time_ns_expr(stream, time_column))
-               .withColumn("__kh", F.when(
-                   F.col(col).isNotNull(),
-                   kmv_hash_expr(F.col(col), salt))))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("last_tns", T.LongType()),
-           T.StructField("m", T.IntegerType()),
-           T.StructField("theta", T.DoubleType()),
-           T.StructField("est_distinct", T.DoubleType())])
-    state_schema = T.StructType([
-        T.StructField("hashes", T.ArrayType(T.DoubleType()))])
 
-    def fold(key_vals, pdf_iter, state):
-        hashes = list(state.get[0]) if state.exists else []
-        frames = []
-        pdf = _trigger_pdf(pd, pdf_iter)
-        if pdf is not None:
-            new = set(pdf["__kh"].dropna().astype(float))
-            hashes = sorted(set(hashes) | new)[:k]
-            m = len(hashes)
-            theta = hashes[-1] if m >= k else 1.0
-            est = (k - 1) / theta if m >= k else float(m)
-            res = pd.DataFrame({c: [v] for c, v in zip(key, key_vals)})
-            res["last_tns"] = np.int64(pdf["__tns"].max())
-            res["m"] = np.int32(m)
-            res["theta"] = theta
-            res["est_distinct"] = est
-            frames.append(res)
-            state.update(([float(h) for h in hashes],))
-        yield from frames
+    def step(pdf, st):
+        new = set(pdf["__kh"].dropna().astype(float))
+        hashes = sorted(set(st[0]) | new)[:k]
+        m = len(hashes)
+        theta = hashes[-1] if m >= k else 1.0
+        est = (k - 1) / theta if m >= k else float(m)
+        return ({"last_tns": [np.int64(pdf["__tns"].max())],
+                 "m": [np.int32(m)], "theta": [theta],
+                 "est_distinct": [est]},
+                ([float(h) for h in hashes],))
 
-    return (with_ns.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        _with_tns(stream, time_column).withColumn("__kh", F.when(
+            F.col(col).isNotNull(), kmv_hash_expr(F.col(col), salt))), key,
+        [T.StructField("last_tns", T.LongType()),
+         T.StructField("m", T.IntegerType()),
+         T.StructField("theta", T.DoubleType()),
+         T.StructField("est_distinct", T.DoubleType())],
+        [T.StructField("hashes", T.ArrayType(T.DoubleType()))],
+        ([],), step)
 
 
 def volume_bars_stream(stream: DataFrame, threshold: float,
@@ -2256,103 +1974,84 @@ def volume_bars_stream(stream: DataFrame, threshold: float,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from ..timeseries import time_ns_expr
-
     if not float(threshold) > 0:
         raise ValueError("threshold must be positive")
-    key = list(key)
     thr = float(threshold)
     price = F.col(price_col)
-    base = (stream.filter(price.isNotNull())
-            .withColumn("__tns", time_ns_expr(stream, time_column))
+    base = (_with_tns(stream.filter(price.isNotNull()), time_column)
             .withColumn("__vol", F.coalesce(
                 F.col(volume_col).cast("double"), F.lit(0.0))))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [T.StructField("bar_seq", T.LongType()),
-           T.StructField("tns", T.LongType()),
-           T.StructField("open", T.DoubleType()),
-           T.StructField("high", T.DoubleType()),
-           T.StructField("low", T.DoubleType()),
-           T.StructField("close", T.DoubleType()),
-           T.StructField("n", T.LongType()),
-           T.StructField("volume", T.DoubleType()),
-           T.StructField("pv", T.DoubleType())])
-    # state: running volume + the open bar's partials
-    state_schema = T.StructType([
-        T.StructField("cum", T.DoubleType()),
-        T.StructField("bar", T.LongType()),
-        T.StructField("tns", T.LongType()),
-        T.StructField("open", T.DoubleType()),
-        T.StructField("high", T.DoubleType()),
-        T.StructField("low", T.DoubleType()),
-        T.StructField("close", T.DoubleType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("vol", T.DoubleType()),
-        T.StructField("pv", T.DoubleType())])
-
-    def fold(key_vals, pdf_iter, state):
-        cum = state.get[0] if state.exists else 0.0
-        open_bar = list(state.get[1:]) if state.exists else None
-        pdf = _trigger_pdf(pd, pdf_iter)
+    def step(pdf, st):
+        cum, open_bar = (0.0, None) if st is None else (st[0], list(st[1:]))
         closed = []
-        if pdf is not None and len(pdf):
-            pdf = _sort_time_then_values(
-                pdf, "__tns", [*tie_break, price_col])
-            v = pdf["__vol"].to_numpy(np.float64)
-            px = pdf[price_col].to_numpy(np.float64)
-            t = pdf["__tns"].to_numpy(np.int64)
-            pv = px * v
-            # EVERY float fold below is a SEEDED SEQUENTIAL cumsum
-            # (np.cumsum accumulates left-to-right, no pairwise
-            # splits), so prefixes and per-bar volume/pv reproduce
-            # Spark's F.sum fold bit-for-bit across any chunking —
-            # `cum + np.cumsum(v)` or `.sum()` would drift in the
-            # last ulp on long bars (r6 advice)
-            # batch shape is `F.sum(vol).over(frame) - vol`: the
-            # INCLUSIVE sequential prefix minus the current row —
-            # subtract the same way, never a rearranged exclusive fold
-            pre = np.cumsum(np.r_[cum, v])
-            before = pre[1:] - v
-            bars = np.floor(before / thr).astype(np.int64)
-            cum = float(pre[-1])
-            starts = np.flatnonzero(np.r_[True, bars[1:] != bars[:-1]])
-            bounds = np.r_[starts, len(bars)]
-            for s0, s1 in zip(bounds, bounds[1:]):
-                if open_bar is not None and int(bars[s0]) == open_bar[0]:
-                    # extend the open bar: seed the folds with its
-                    # partials (open px/tns keep)
-                    open_bar = [
-                        open_bar[0], open_bar[1], open_bar[2],
-                        max(open_bar[3], float(px[s0:s1].max())),
-                        min(open_bar[4], float(px[s0:s1].min())),
-                        float(px[s1 - 1]), open_bar[6] + int(s1 - s0),
-                        float(np.cumsum(np.r_[open_bar[7], v[s0:s1]])[-1]),
-                        float(np.cumsum(np.r_[open_bar[8], pv[s0:s1]])[-1])]
-                else:
-                    if open_bar is not None:
-                        closed.append(open_bar)  # a later bar started
-                    open_bar = [int(bars[s0]), int(t[s0]), float(px[s0]),
-                                float(px[s0:s1].max()),
-                                float(px[s0:s1].min()),
-                                float(px[s1 - 1]), int(s1 - s0),
-                                float(np.cumsum(v[s0:s1])[-1]),
-                                float(np.cumsum(pv[s0:s1])[-1])]
-        frames = []
-        if closed:
-            res = pd.DataFrame(
-                closed, columns=["bar_seq", "tns", "open", "high",
-                                 "low", "close", "n", "volume", "pv"])
-            for c, val in zip(key, key_vals):
-                res.insert(0, c, val)
-            frames.append(res[[f.name for f in out_schema.fields]])
-        if open_bar is not None:
-            state.update((cum, *open_bar))
-        yield from frames
+        v = pdf["__vol"].to_numpy(np.float64)
+        px = pdf[price_col].to_numpy(np.float64)
+        t = pdf["__tns"].to_numpy(np.int64)
+        pv = px * v
+        # EVERY float fold below is a SEEDED SEQUENTIAL cumsum
+        # (np.cumsum accumulates left-to-right, no pairwise
+        # splits), so prefixes and per-bar volume/pv reproduce
+        # Spark's F.sum fold bit-for-bit across any chunking —
+        # `cum + np.cumsum(v)` or `.sum()` would drift in the
+        # last ulp on long bars (r6 advice)
+        # batch shape is `F.sum(vol).over(frame) - vol`: the
+        # INCLUSIVE sequential prefix minus the current row —
+        # subtract the same way, never a rearranged exclusive fold
+        pre = np.cumsum(np.r_[cum, v])
+        before = pre[1:] - v
+        bars = np.floor(before / thr).astype(np.int64)
+        cum = float(pre[-1])
+        starts = np.flatnonzero(np.r_[True, bars[1:] != bars[:-1]])
+        bounds = np.r_[starts, len(bars)]
+        for s0, s1 in zip(bounds, bounds[1:]):
+            if open_bar is not None and int(bars[s0]) == open_bar[0]:
+                # extend the open bar: seed the folds with its
+                # partials (open px/tns keep)
+                open_bar = [
+                    open_bar[0], open_bar[1], open_bar[2],
+                    max(open_bar[3], float(px[s0:s1].max())),
+                    min(open_bar[4], float(px[s0:s1].min())),
+                    float(px[s1 - 1]), open_bar[6] + int(s1 - s0),
+                    float(np.cumsum(np.r_[open_bar[7], v[s0:s1]])[-1]),
+                    float(np.cumsum(np.r_[open_bar[8], pv[s0:s1]])[-1])]
+            else:
+                if open_bar is not None:
+                    closed.append(open_bar)  # a later bar started
+                open_bar = [int(bars[s0]), int(t[s0]), float(px[s0]),
+                            float(px[s0:s1].max()),
+                            float(px[s0:s1].min()),
+                            float(px[s1 - 1]), int(s1 - s0),
+                            float(np.cumsum(v[s0:s1])[-1]),
+                            float(np.cumsum(pv[s0:s1])[-1])]
+        res = pd.DataFrame(
+            closed, columns=["bar_seq", "tns", "open", "high", "low",
+                             "close", "n", "volume", "pv"]) \
+            if closed else None
+        return res, (cum, *open_bar)
 
-    out = (base.groupBy(*key)
-           .applyInPandasWithState(fold, out_schema, state_schema,
-                                   "append", "NoTimeout"))
+    out = _keyed_fold(
+        base, key,
+        [T.StructField("bar_seq", T.LongType()),
+         T.StructField("tns", T.LongType()),
+         T.StructField("open", T.DoubleType()),
+         T.StructField("high", T.DoubleType()),
+         T.StructField("low", T.DoubleType()),
+         T.StructField("close", T.DoubleType()),
+         T.StructField("n", T.LongType()),
+         T.StructField("volume", T.DoubleType()),
+         T.StructField("pv", T.DoubleType())],
+        # state: running volume + the open bar's partials
+        [T.StructField("cum", T.DoubleType()),
+         T.StructField("bar", T.LongType()),
+         T.StructField("tns", T.LongType()),
+         T.StructField("open", T.DoubleType()),
+         T.StructField("high", T.DoubleType()),
+         T.StructField("low", T.DoubleType()),
+         T.StructField("close", T.DoubleType()),
+         T.StructField("n", T.LongType()),
+         T.StructField("vol", T.DoubleType()),
+         T.StructField("pv", T.DoubleType())],
+        None, step, order=("__tns", *tie_break, price_col))
     vwap = F.when(F.col("volume") != 0, F.col("pv") / F.col("volume"))
     return out.withColumn("vwap", vwap).drop("pv")
 
@@ -2377,7 +2076,6 @@ def pack_sequences_stream(stream: DataFrame, seq_len: int,
     of a NULL split is -1 under legacy sizeOfNull, and a -1 would
     silently shift every later document's offsets."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..pipeline.sampling import _tok_long
@@ -2390,56 +2088,40 @@ def pack_sequences_stream(stream: DataFrame, seq_len: int,
             f"pack_sequences_stream reserves '__'-prefixed columns for "
             f"its scratch state (would silently overwrite {reserved}); "
             f"rename them — same contract as the batch twin")
-    key = list(key)
     L = int(seq_len)
-    base = stream.withColumn("__n", _tok_long(tokens_col))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [stream.schema[on],
-           T.StructField("seq_id", T.LongType()),
-           T.StructField("doc_off", T.LongType()),
-           T.StructField("seq_off", T.LongType()),
-           T.StructField("seg_tokens", T.LongType())])
-    state_schema = T.StructType([T.StructField("cum", T.LongType())])
 
-    def fold(key_vals, pdf_iter, state):
-        cum = state.get[0] if state.exists else 0
-        pdf = _trigger_pdf(pd, pdf_iter, sort_col=on)
-        frames = []
-        if pdf is not None and len(pdf):
-            n = pdf["__n"].to_numpy(np.int64)
-            doc = pdf[on].to_numpy()
-            # exclusive integer prefix seeded by the carried state —
-            # exact, so any chunking replays the batch cumsum bitwise
-            cb = cum + np.cumsum(np.r_[np.int64(0), n])[:-1]
-            k0 = cb // L
-            k1 = np.where(n > 0, (cb + np.maximum(n, 1) - 1) // L, k0)
-            counts = (k1 - k0 + 1).astype(np.int64)
-            total = int(counts.sum())
-            # per-document 0..counts-1 ramp -> overlapped sequence ids
-            ramp = (np.arange(total, dtype=np.int64)
-                    - np.repeat(np.cumsum(counts) - counts, counts))
-            seq = np.repeat(k0, counts) + ramp
-            cbr = np.repeat(cb, counts)
-            nr = np.repeat(n, counts)
-            doc_off = np.maximum(np.int64(0), seq * L - cbr)
-            seg_end = np.minimum(nr, (seq + 1) * L - cbr)
-            seg = np.where(nr > 0, seg_end - doc_off, np.int64(0))
-            cum = int(cb[-1] + n[-1])
-            res = pd.DataFrame({on: np.repeat(doc, counts)})
-            for c, v in zip(key, key_vals):
-                res[c] = np.repeat([v], total)
-            res["seq_id"] = seq
-            res["doc_off"] = doc_off
-            res["seq_off"] = cbr + doc_off - seq * L
-            res["seg_tokens"] = seg
-            frames.append(res[[f.name for f in out_schema.fields]])
-        state.update((int(cum),))
-        yield from frames
+    def step(pdf, st):
+        n = pdf["__n"].to_numpy(np.int64)
+        doc = pdf[on].to_numpy()
+        # exclusive integer prefix seeded by the carried state —
+        # exact, so any chunking replays the batch cumsum bitwise
+        cb = st[0] + np.cumsum(np.r_[np.int64(0), n])[:-1]
+        k0 = cb // L
+        k1 = np.where(n > 0, (cb + np.maximum(n, 1) - 1) // L, k0)
+        counts = (k1 - k0 + 1).astype(np.int64)
+        total = int(counts.sum())
+        # per-document 0..counts-1 ramp -> overlapped sequence ids
+        ramp = (np.arange(total, dtype=np.int64)
+                - np.repeat(np.cumsum(counts) - counts, counts))
+        seq = np.repeat(k0, counts) + ramp
+        cbr = np.repeat(cb, counts)
+        nr = np.repeat(n, counts)
+        doc_off = np.maximum(np.int64(0), seq * L - cbr)
+        seg_end = np.minimum(nr, (seq + 1) * L - cbr)
+        seg = np.where(nr > 0, seg_end - doc_off, np.int64(0))
+        return ({on: np.repeat(doc, counts), "seq_id": seq,
+                 "doc_off": doc_off, "seq_off": cbr + doc_off - seq * L,
+                 "seg_tokens": seg},
+                (int(cb[-1] + n[-1]),))
 
-    return (base.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        stream.withColumn("__n", _tok_long(tokens_col)), key,
+        [stream.schema[on],
+         T.StructField("seq_id", T.LongType()),
+         T.StructField("doc_off", T.LongType()),
+         T.StructField("seq_off", T.LongType()),
+         T.StructField("seg_tokens", T.LongType())],
+        [T.StructField("cum", T.LongType())], (0,), step, order=(on,))
 
 
 def pack_bins_stream(stream: DataFrame, budget: int, tokens_col: str,
@@ -2461,7 +2143,6 @@ def pack_bins_stream(stream: DataFrame, budget: int, tokens_col: str,
        ``applyInPandasWithState`` state-schema mismatch. Start such
        queries with a fresh checkpoint directory."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from ..pipeline.sampling import _next_fit, _tok_long
@@ -2474,33 +2155,19 @@ def pack_bins_stream(stream: DataFrame, budget: int, tokens_col: str,
             f"pack_bins_stream reserves '__'-prefixed columns for its "
             f"scratch state (would silently overwrite {reserved}); "
             f"rename them — same contract as the batch twin")
-    key = list(key)
     bud = int(budget)
-    base = stream.withColumn("__n", _tok_long(tokens_col))
-    out_schema = T.StructType(
-        [stream.schema[c] for c in key]
-        + [stream.schema[on],
-           T.StructField("bin_id", T.LongType())])
-    state_schema = T.StructType([T.StructField("bin", T.LongType()),
-                                 T.StructField("fill", T.LongType()),
-                                 T.StructField("used", T.LongType())])
 
-    def fold(key_vals, pdf_iter, state):
-        b, fill, used = state.get if state.exists else (0, 0, 0)
-        pdf = _trigger_pdf(pd, pdf_iter, sort_col=on)
-        frames = []
-        if pdf is not None and len(pdf):
-            # the batch recurrence body, seeded with the carried state
-            bins, b, fill, used = _next_fit(
-                np, pdf["__n"].to_numpy(np.int64), bud, b, fill, used)
-            res = pd.DataFrame({on: pdf[on].to_numpy()})
-            for c, v in zip(key, key_vals):
-                res[c] = v
-            res["bin_id"] = bins
-            frames.append(res[[f.name for f in out_schema.fields]])
-        state.update((int(b), int(fill), int(used)))
-        yield from frames
+    def step(pdf, st):
+        # the batch recurrence body, seeded with the carried state
+        bins, b, fill, used = _next_fit(
+            np, pdf["__n"].to_numpy(np.int64), bud, *st)
+        return ({on: pdf[on].to_numpy(), "bin_id": bins},
+                (int(b), int(fill), int(used)))
 
-    return (base.groupBy(*key)
-            .applyInPandasWithState(fold, out_schema, state_schema,
-                                    "append", "NoTimeout"))
+    return _keyed_fold(
+        stream.withColumn("__n", _tok_long(tokens_col)), key,
+        [stream.schema[on], T.StructField("bin_id", T.LongType())],
+        [T.StructField("bin", T.LongType()),
+         T.StructField("fill", T.LongType()),
+         T.StructField("used", T.LongType())],
+        (0, 0, 0), step, order=(on,))
