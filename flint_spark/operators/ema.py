@@ -510,12 +510,15 @@ def ewma_native(df: DataFrame, column: str, alpha: float = 0.05,
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
     tns = time_ns_expr(df)
     base = F.min(tns).over(W.partitionBy(*key))
-    frame = (W.partitionBy(*key).orderBy(tns)
+    cols = [column] if isinstance(column, str) else list(column)
+    # (time, value) tie order, as ``_apply_per_key``: rows at one
+    # timestamp fold in value order, not in arrival order
+    frame = (W.partitionBy(*key)
+             .orderBy(tns, *[F.col(c).asc_nulls_last() for c in cols])
              .rowsBetween(W.unboundedPreceding, W.currentRow))
     rel = (tns - base).cast("double") * F.lit(lam)
     rel = _span_guard(rel, tns, key, lam, "ewma_native")
     df, rel, _rn = _rel_column(df, rel)
-    cols = [column] if isinstance(column, str) else list(column)
     outs = {}
     for c in cols:
         # every column shares the same WindowSpec, so Catalyst plans ONE

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Escape hatch for the ANSI guard below: set True to run operators
 #: under ``spark.sql.ansi.enabled=true`` anyway. Only safe when your
@@ -107,6 +108,11 @@ def get_spark(app_name: str = "flint_spark", master: str | None = None) -> Spark
         # TimeType: long ns vs timestamp µs).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # workers fork from flint_spark._daemon: pyspark's daemon minus
+        # the per-task re-read of unchanged zip/jar archives. The daemon
+        # module must import whatever the driver's working directory.
+        .config("spark.python.daemon.module", "flint_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     spark = builder.getOrCreate()

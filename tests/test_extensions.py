@@ -789,6 +789,30 @@ def test_ewma_native_multi_column_single_window(spark):
     assert sum(1 for n in names if n == "Sort") <= 2
 
 
+def test_ewma_native_folds_ties_in_value_order(spark):
+    """Rows at one timestamp fold in (time, value) order, as the Arrow
+    ``ema.ewma`` folds them, whatever order they arrive in."""
+    from flint_spark.operators.ema import ewma, ewma_native
+
+    h = 3600 * 10**9
+    rows = [(0, 1.0), (0, 9.0), (h, 2.0), (h, 5.0), (h, 7.0), (2 * h, 3.0)]
+    desc = sorted(rows, key=lambda r: (r[0], -r[1]))
+    got = {}
+    for arrival, ordered in (("asc", rows), ("desc", desc)):
+        df = spark.createDataFrame([(t, 1, v) for t, v in ordered],
+                                   "time long, id int, v double").coalesce(1)
+        for fn in (ewma_native, ewma):
+            out = fn(df, "v", alpha=0.1, duration_per_period="1h",
+                     key=["id"])
+            got[fn.__name__, arrival] = sorted(
+                tuple(r) for r in out.select("time", "v", "v_ewma").collect())
+    assert got["ewma_native", "asc"] == got["ewma_native", "desc"]
+    assert got["ewma", "asc"] == got["ewma", "desc"]
+    native = [r[2] for r in got["ewma_native", "asc"]]
+    assert native == pytest.approx([r[2] for r in got["ewma", "asc"]])
+    assert native == pytest.approx([1, 10, 11, 16, 23, 23.7])
+
+
 def test_asof_bucketed_scans_match_plain(spark):
     """The union-window as-of over bucketed scans: left_join and
     future_left_join read from write_bucketed tables equal the
