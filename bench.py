@@ -57,7 +57,7 @@ PER_QUERY_BASELINE = {
     "bm25": 0.68, "funnel": 0.467, "containment": 1.957, "ewm_vol": 0.391,
     "ewm_corr": 1.192, "dema": 0.598, "realized_vol": 0.494,
     "range_vol": 0.708, "cusum": 0.642, "lead_lag": 0.771,
-    "pq_topk": 1.385, "bpe_tokens": 0.741, "dsir": 1.64, "spearman": 0.771,
+    "bpe_tokens": 0.741, "dsir": 1.64, "spearman": 0.771,
     "kalman": 0.541, "seasonal": 0.5, "robust_zscore": 0.517,
     "holt_winters": 0.454, "ivfpq": 2.266, "bigram_lm": 1.719,
     "kmv_distinct": 0.902, "rolling_quantile": 0.594,
@@ -127,12 +127,10 @@ HEADLINE = [
     "range_vol",
     # round-5 continuation: CUSUM changepoint (two chained running
     # windows, one sort), lead-lag cross-correlation (one Window node +
-    # one hash-agg), product-quantization ANN (train + encode + ADC
-    # search over codes), distributed BPE training (per-merge pair agg
-    # on the distinct-word table)
+    # one hash-agg), distributed BPE training (per-merge pair agg on
+    # the distinct-word table)
     "cusum",
     "lead_lag",
-    "pq_topk",
     "bpe_tokens",
     "dsir",
     "spearman",

@@ -17,7 +17,7 @@ from .extras_q import (_sql_bloom_dedup, _sql_dedup_clusters,  # noqa: F401
                        _sql_lang_trigram, _sql_cms_counts,
                        _sql_zorder_key, _sql_logreg_quality, _sql_bm25,
                        _sql_pagerank, _sql_lead_lag,
-                       _sql_pq_topk, _sql_bpe_tokens,
+                       _sql_bpe_tokens,
                        _sql_dsir, _sql_holt_winters, _sql_ivfpq,
                        _sql_kmv_distinct, _sql_corpus_pipeline,
                        _sql_back_adjust, _sql_correlation_cross)

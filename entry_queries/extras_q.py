@@ -3787,91 +3787,6 @@ def _sql_lead_lag() -> str:
     return " UNION ALL ".join(branches)
 
 
-def q_pq_topk(spark, sf):
-    """End-to-end product quantization (pipeline.similarity.pq_train/
-    pq_encode/pq_topk): per-subspace Lloyd codebooks (m=4, ksub=8, 2
-    iterations, md5-seeded, 1e-9-quantized) -> map-only encode (pure
-    projection, zero exchanges) -> asymmetric-distance top-k where
-    search touches only the compressed codes. Scores round half-up to
-    1e-6 BEFORE ranking so (adc, vec_id) order replays across engines.
-    The oracle unrolls the entire pipeline — training included — in
-    SQL."""
-    emb = _t(spark, sf, "embeddings")
-    books = similarity.pq_train(emb, m=4, ksub=8, iters=2, seed=7,
-                                quantize=9)
-    out = similarity.pq_topk(emb, books, [0, 1, 2, 3, 4], k=10)
-    return out.select("probe_id", "vec_id", F.col("adc"), "rank")
-
-
-def _sql_pq_topk() -> str:
-    d2 = ("list_sum(list_transform(range(1, 17), "
-          "i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))")
-
-    def lloyd_iter(n):
-        return f"""
-  a{n} AS (
-    SELECT vec_id, s, sv, code FROM (
-      SELECT b.vec_id, b.s, b.sv, c.code,
-             row_number() OVER (PARTITION BY b.vec_id, b.s
-               ORDER BY {d2.format(a='b.sv', b='c.cv')}, c.code) AS rk
-      FROM subv b JOIN c{n-1} c USING (s)) WHERE rk = 1),
-  m{n} AS (
-    SELECT s, code, i, avg(sv[i]) AS mn
-    FROM a{n} CROSS JOIN range(1, 17) t(i) GROUP BY 1, 2, 3),
-  c{n} AS (
-    -- a code with no members keeps its previous centroid, exactly
-    -- like pq_train's `if got:` branch (empty-cluster parity)
-    -- the fallback is quantized too: pq_train applies `quantize` to
-    -- ALL books each iteration, including the stale branch
-    SELECT p.s, p.code,
-           coalesce(nw.cv,
-                    list_transform(p.cv,
-                                   x -> floor(x * 1e9 + 0.5) / 1e9)) AS cv
-    FROM c{n-1} p LEFT JOIN (
-      SELECT s, code, list(floor(mn * 1e9 + 0.5) / 1e9 ORDER BY i) AS cv
-      FROM m{n} GROUP BY 1, 2) nw ON nw.s = p.s AND nw.code = p.code)"""
-
-    return f"""
-  WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-  seeds AS (
-    SELECT v, row_number() OVER (ORDER BY md5('7' || vec_id::VARCHAR),
-                                 vec_id) - 1 AS code
-    FROM base
-    QUALIFY row_number() OVER (ORDER BY md5('7' || vec_id::VARCHAR),
-                               vec_id) <= 8),
-  subv AS (
-    SELECT vec_id, s, v[s*16+1 : s*16+16] AS sv
-    FROM base CROSS JOIN range(0, 4) t(s)),
-  c0 AS (
-    SELECT s, code, v[s*16+1 : s*16+16] AS cv
-    FROM seeds CROSS JOIN range(0, 4) t(s)),
-  {lloyd_iter(1)},
-  {lloyd_iter(2)},
-  enc AS (
-    SELECT vec_id, s, code FROM (
-      SELECT b.vec_id, b.s, c.code,
-             row_number() OVER (PARTITION BY b.vec_id, b.s
-               ORDER BY {d2.format(a='b.sv', b='c.cv')}, c.code) AS rk
-      FROM subv b JOIN c2 c USING (s)) WHERE rk = 1),
-  lut AS (
-    SELECT p.vec_id AS probe_id, c.s, c.code,
-           {d2.format(a='p.sv', b='c.cv')} AS pd2
-    FROM subv p JOIN c2 c USING (s)
-    WHERE p.vec_id IN (0, 1, 2, 3, 4)),
-  scores AS (
-    SELECT l.probe_id, e.vec_id,
-           floor(sum(l.pd2) * 1e6 + 0.5) / 1e6 AS adc
-    FROM enc e JOIN lut l ON l.s = e.s AND l.code = e.code
-    WHERE e.vec_id <> l.probe_id
-    GROUP BY 1, 2)
-  SELECT probe_id, vec_id, adc, rank FROM (
-    SELECT probe_id, vec_id, adc,
-           row_number() OVER (PARTITION BY probe_id
-             ORDER BY adc, vec_id) AS rank
-    FROM scores) WHERE rank <= 10
-"""
-
-
 def q_bpe_tokens(spark, sf):
     """Distributed BPE vocabulary training (pipeline.bpe): 6 merges
     trained on the distinct-word table (pair counting = one projection

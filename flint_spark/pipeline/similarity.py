@@ -1,4 +1,4 @@
-"""Embedding similarity search: brute-force cosine top-k and LSH ANN.
+"""Embedding similarity search: exact cosine top-k and the ANN routes.
 
 - ``cosine_topk`` — the exact baseline: broadcast the (small) probe set,
   one pass over all embeddings, dot products via ``zip_with``/
@@ -8,6 +8,18 @@
   (deterministic literal hyperplanes so the DuckDB oracle matches
   bit-for-bit); probes only compare against their own bucket, cutting
   the candidate set by ~2^planes for unit-cost recall tradeoff.
+- ``ivf_ann_topk`` / ``ivf_ann_topk_trained`` — IVF: every vector is
+  assigned to its nearest centroid (member vectors named by id, or an
+  ``ivf_train`` matrix); each probe scans its ``nprobe`` nearest cells.
+- ``ivfpq_topk`` / ``ivfpq_topk_table`` — IVF cells + residual product
+  codes, in-session or over the cell-partitioned codes table.
+
+All IVF routes share one assigner projection (``_assign``), one
+driver-side probe-cell ranker (``_probe_cells``) and one probe-vector
+collect (``_collect_vectors``). ``docs/DESIGN_NOTES.md`` ("Which ANN
+route pays off") has each route's recall@k against ``cosine_topk`` and
+its time at several corpus sizes. PQ-flat search (``pq_topk``) was
+removed because other routes beat it on both at every point measured.
 
 Vectors are cast float->double before any arithmetic so both engines
 do identical double math, summed left-to-right.
@@ -15,10 +27,12 @@ do identical double math, summed left-to-right.
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ._cache import hold, persist
 from .hashing import hyperplanes, qid
@@ -67,7 +81,6 @@ def _dlit(x: float) -> str:
 
 
 def _finite(vals) -> bool:
-    import math
     return all(math.isfinite(float(x)) for x in vals)
 
 
@@ -115,14 +128,23 @@ def cosine_topk(emb: DataFrame, probe_ids: Sequence[int], k: int = 10,
     probes = (base.filter(F.col(id_col).isin(list(probe_ids)))
               .select(F.col(id_col).alias("probe_id"), F.col("v").alias("pv")))
     joined = base.crossJoin(F.broadcast(probes)).filter(F.col(id_col) != F.col("probe_id"))
+    return _cosine_topk_of(joined, id_col, k)
+
+
+def _cosine_topk_of(pairs: DataFrame, id_col: str, k: int) -> DataFrame:
+    """(probe_id, id, cosine, rank) over (probe_id, pv, id, v) pairs."""
     cos = (_dot(F.col("v"), F.col("pv"))
            / (_norm(F.col("v")) * _norm(F.col("pv")))).alias("cosine")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        joined.select("probe_id", F.col(id_col), cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(pairs.select("probe_id", F.col(id_col), cos),
+                 F.desc("cosine"), id_col, k)
+
+
+def _topk(scored: DataFrame, order: Column, id_col: str,
+          k: int) -> DataFrame:
+    """Every search's top-k window: by ``order``, then the lower id."""
+    w = Window.partitionBy("probe_id").orderBy(order, F.col(id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
 
 
 def bucket_expr(vec: Column | str, planes: list[list[float]]) -> Column:
@@ -145,6 +167,56 @@ def bucket_expr(vec: Column | str, planes: list[list[float]]) -> Column:
     return total.cast("long")
 
 
+def _pynorm(v) -> float:
+    """``_norm`` on the driver: the same ordered += from 0.0, then the
+    correctly rounded sqrt, so the double is bit-identical to Spark's."""
+    acc = 0.0
+    for x in v:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def _probe_cells(probes, cells, nprobe: int):
+    """The one probe-cell ranker: [(probe_id, pv, [label, ...])] with
+    each probe's ``nprobe`` nearest of the labelled ``cells``
+    [(label, vector)], on the driver. The cosine is ``_dot(pv, cv) /
+    (_norm(pv) * _norm(cv))`` bit for bit, ranked as Spark's
+    ``orderBy(desc(cosine), label)`` ranks it: NaN first, null last,
+    ties to the lower label. Flat IVF and IVF-PQ probe exactly these
+    cells; ranking against k constants needs no crossJoin, no window."""
+    normed = [(label, cv, _pynorm(cv)) for label, cv in cells]
+
+    def order(pv, cell):
+        label, cv, nb = cell
+        # Spark's null: a null vector or element, unequal lengths
+        # (zip_with pads with nulls) or a zero denominator
+        if pv is None or len(pv) != len(cv) or None in pv:
+            return (2, 0.0, label)
+        dot = 0.0
+        for a, b in zip(pv, cv):
+            dot += a * b
+        den = _pynorm(pv) * nb
+        if den == 0:
+            return (2, 0.0, label)
+        c = dot / den
+        return (0, 0.0, label) if math.isnan(c) else (1, -c, label)
+
+    return [(pid, pv, [cell[0] for cell in sorted(
+                normed, key=lambda cell: order(pv, cell))[:max(nprobe, 0)]])
+            for pid, pv in probes]
+
+
+def _collect_vectors(emb: DataFrame, ids: Sequence, id_col: str,
+                     vec_col: str) -> list:
+    """The one driver read of named rows' vectors — probes and member
+    centroids: [(id, double vector)], sorted by id."""
+    rows = (emb.filter(F.col(id_col).isin(list(ids)))
+            .select(F.col(id_col).alias("id"),
+                    _dvec(F.col(vec_col)).alias("v")).collect())
+    return sorted(((r["id"], None if r["v"] is None else list(r["v"]))
+                   for r in rows), key=lambda r: r[0])
+
+
 def _argmax_centroid(vcol: Column | str,
                      centroids: Sequence[tuple[int, Sequence[float]]]):
     """Nearest-centroid struct (cos, -id) via ``array_max`` over literal
@@ -160,24 +232,15 @@ def _argmax_centroid(vcol: Column | str,
     (r11 builder block above); a Column (or non-finite centroid
     components, which have no SQL literal form) keeps the per-element
     construction."""
-    import math
-
     cents = [(int(cid), [float(x) for x in cv]) for cid, cv in centroids]
 
     # r11 (guide §1.2 per-task work): the row norm used to be re-folded
     # PER CENTROID (k x 64 extra interpreted fold steps per row) — bind
     # it ONCE as a lambda variable; and each centroid's own norm is a
-    # CONSTANT — fold it in Python (ordered += over the same values =
-    # the identical IEEE double sequence the SQL fold would
-    # constant-fold to) so the optimizer stops re-deriving k 64-literal
-    # folds per plan. r12: the Column-API fallback applies the same
-    # binding, keeping the two paths structurally identical.
-    def _pynorm(cv):
-        acc = 0.0
-        for x in cv:
-            acc += x * x
-        return math.sqrt(acc)
-
+    # CONSTANT — fold it in Python (``_pynorm``) so the optimizer stops
+    # re-deriving k 64-literal folds per plan. r12: the Column-API
+    # fallback applies the same binding, keeping the two paths
+    # structurally identical.
     if isinstance(vcol, str) and all(_finite(cv) for _, cv in cents):
         qv = qid(vcol)
         entries = ",".join(
@@ -220,35 +283,49 @@ def ivf_assign(emb: DataFrame, centroid_ids: Sequence[int],
     steps per row dominate (measured 16s -> ~2s at 400k x 128 x 16).
     Same (cos, smallest-id) tie rule; numpy's summation order may
     differ in final ulps on exact cosine ties."""
-    base = emb.select(F.col(id_col), _dvec(F.col(vec_col)).alias("v"))
-    cent_rows = (base.filter(F.col(id_col).isin(list(centroid_ids)))
-                 .select(F.col(id_col).alias("cid"), F.col("v").alias("cv"))
-                 .collect())
-    cents = sorted((r["cid"], list(r["cv"])) for r in cent_rows)
-    if method == "arrow":
-        from .dedup import _spread
-        return _ivf_assign_arrow(_spread(base), cents, id_col,
-                                 emb.schema[id_col].dataType)
-    import pyspark.sql.types as _T
+    return _assign_members(
+        emb, _collect_vectors(emb, centroid_ids, id_col, vec_col), id_col,
+        vec_col, method)
 
-    if not isinstance(emb.schema[id_col].dataType,
-                      (_T.ByteType, _T.ShortType, _T.IntegerType,
-                       _T.LongType)):
+
+def _assign_members(emb: DataFrame, cents, id_col: str, vec_col: str,
+                    method: str) -> DataFrame:
+    """``ivf_assign`` over already collected member centroids
+    [(id, vector)], sorted by id."""
+    from .dedup import _spread
+
+    base = emb.select(F.col(id_col), _dvec(F.col(vec_col)).alias("v"))
+    id_type = emb.schema[id_col].dataType
+    if method == "arrow":
+        return _ivf_assign_arrow(_spread(base), cents, id_col, id_type)
+    if not isinstance(id_type, (T.ByteType, T.ShortType, T.IntegerType,
+                                T.LongType)):
         raise ValueError(
             f"method='expr' encodes the smallest-id tie rule as a "
             f"max(cos, -id) struct and needs integral ids; {id_col!r} is "
-            f"{emb.schema[id_col].dataType.simpleString()} — use "
-            f"method='arrow'")
-    cents = [(int(c), cv) for c, cv in cents]
-    best = _argmax_centroid("v", cents)
+            f"{id_type.simpleString()} — use method='arrow'")
     # _spread (r11, guide §2): the argmax is k x dim interpreted fold
     # steps PER ROW; a single-file local scan would run the whole
     # assignment in one task (no-op on many-split inputs)
-    from .dedup import _spread
-    return _spread(base).select(
+    return _assign(_spread(base), cents, id_col, "long")
+
+
+def _assign(base: DataFrame, cells, id_col: str,
+            label_type: str) -> DataFrame:
+    """The one IVF assigner: (id, v) -> (id, v, centroid_id,
+    centroid_cos), the nearest of the labelled ``cells``
+    [(label, vector)] as a pure projection (``_argmax_centroid``).
+    Member ids label ``ivf_assign``'s cells, 0..k-1 the trained ones."""
+    best = _argmax_centroid("v", cells)
+    return base.select(
         F.col(id_col), "v",
-        (-best["nid"]).cast("long").alias("centroid_id"),
+        (-best["nid"]).cast(label_type).alias("centroid_id"),
         best["s"].alias("centroid_cos"))
+
+
+def _trained_cells(centroids) -> list:
+    """A trained centroid matrix as labelled cells [(0..k-1, vector)]."""
+    return [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
 
 
 def _ivf_assign_arrow(base: DataFrame, cents, id_col: str,
@@ -301,34 +378,35 @@ def ivf_ann_topk(emb: DataFrame, probe_ids: Sequence[int],
     lists of its ``nprobe`` nearest centroids — candidate set shrinks by
     ~len(centroids)/nprobe while recall stays high for clustered data.
     Deterministic (centroids are fixed member ids), so exactly
-    oracle-able in SQL.
+    oracle-able in SQL. One collect reads the member centroids and the
+    probes; the search is ``_flat_search``."""
+    rows = _collect_vectors(emb, [*centroid_ids, *probe_ids], id_col,
+                            vec_col)
+    cids, pids = set(centroid_ids), set(probe_ids)
+    cents = [r for r in rows if r[0] in cids]
+    assigned = _assign_members(emb, cents, id_col, vec_col, "expr")
+    return _flat_search(assigned, [r for r in rows if r[0] in pids], cents,
+                        k, nprobe, id_col)
 
-    No persist: assignment is a pure projection (``_argmax_centroid``),
-    so the probe-side re-read is a pushed-down id filter over the scan,
-    far cheaper than materializing the full assigned table."""
-    assigned = ivf_assign(emb, centroid_ids, id_col, vec_col)
-    base = assigned.select(F.col(id_col), "v", "centroid_id")
-    cents = (assigned.filter(F.col(id_col).isin(list(centroid_ids)))
-             .select(F.col(id_col).alias("centroid_id"), F.col("v").alias("cv")))
-    probes = (base.filter(F.col(id_col).isin(list(probe_ids)))
-              .select(F.col(id_col).alias("probe_id"), F.col("v").alias("pv")))
-    pcos = (_dot(F.col("pv"), F.col("cv"))
-            / (_norm(F.col("pv")) * _norm(F.col("cv")))).alias("pcos")
-    wp = Window.partitionBy("probe_id").orderBy(F.desc("pcos"),
-                                                F.col("centroid_id"))
-    probe_lists = (probes.crossJoin(F.broadcast(cents))
-                   .select("probe_id", "pv", "centroid_id", pcos)
-                   .withColumn("__rk", F.row_number().over(wp))
-                   .filter(F.col("__rk") <= nprobe)
-                   .select("probe_id", "pv", "centroid_id"))
-    cand = base.join(F.broadcast(probe_lists), "centroid_id") \
-               .filter(F.col(id_col) != F.col("probe_id"))
-    cos = (_dot(F.col("v"), F.col("pv"))
-           / (_norm(F.col("v")) * _norm(F.col("pv")))).alias("cosine")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (cand.select("probe_id", F.col(id_col), cos)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+
+def _flat_search(assigned: DataFrame, probes, cells, k: int, nprobe: int,
+                 id_col: str) -> DataFrame:
+    """The one flat IVF search: the probes' cells (``_probe_cells``)
+    as a driver-built table, broadcast into one equi-join on
+    ``centroid_id`` with the assigned rows, then the top-k window."""
+    schema = T.StructType([
+        T.StructField("probe_id", assigned.schema[id_col].dataType),
+        T.StructField("pv", T.ArrayType(T.DoubleType())),
+        T.StructField("centroid_id",
+                      assigned.schema["centroid_id"].dataType)])
+    probe_lists = assigned.sparkSession.createDataFrame(
+        [(pid, pv, label) for pid, pv, labels
+         in _probe_cells(probes, cells, nprobe) for label in labels],
+        schema)
+    cand = (assigned.select(F.col(id_col), "v", "centroid_id")
+            .join(F.broadcast(probe_lists), "centroid_id")
+            .filter(F.col(id_col) != F.col("probe_id")))
+    return _cosine_topk_of(cand, id_col, k)
 
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.9,
@@ -384,14 +462,7 @@ def lsh_ann_topk(emb: DataFrame, probe_ids: Sequence[int], k: int = 10,
     joined = (base.join(F.broadcast(probes),
                         (F.col("bucket") == F.col("pbucket"))
                         & (F.col(id_col) != F.col("probe_id"))))
-    cos = (_dot(F.col("v"), F.col("pv"))
-           / (_norm(F.col("v")) * _norm(F.col("pv")))).alias("cosine")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        joined.select("probe_id", F.col(id_col), cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _cosine_topk_of(joined, id_col, k)
 
 
 def _train_subset(emb: DataFrame, train_fraction: float | None,
@@ -436,75 +507,55 @@ def ivf_train(emb: DataFrame, k: int = 16, iters: int = 3,
     (:func:`_train_subset`) — identical to calling ``ivf_train`` on
     that subset directly; pass it whenever the corpus dwarfs what one
     Lloyd pass should scan."""
-    spark = emb.sparkSession
     emb = _train_subset(emb, train_fraction, id_col, seed)
     base = emb.select(F.col(id_col).alias("vid"),
                       _dvec(F.col(vec_col)).alias("v")).persist()
-    seed_rows = (base
-                 .withColumn("h", F.md5(F.concat(F.lit(str(seed)),
-                                                 F.col("vid").cast("string"))))
-                 .orderBy("h", "vid").limit(k).select("v").collect())
-    centroids = [list(r["v"]) for r in seed_rows]
-    for _ in range(iters):
-        best = _argmax_centroid("v", list(enumerate(centroids)))
-        assigned = base.select(
-            "vid", "v", (-best["nid"]).cast("int").alias("centroid_id"))
-        comp = (assigned.select("centroid_id", F.posexplode("v"))
-                .groupBy("centroid_id", "pos").agg(F.avg("col").alias("m")))
-        rows = comp.collect()
-        new = {c: dict() for c in range(k)}
-        for r in rows:
-            new[r["centroid_id"]][r["pos"]] = r["m"]
-        centroids = [
-            [new[c][p] for p in sorted(new[c])] if new[c] else centroids[c]
-            for c in range(k)
-        ]
-        if quantize is not None:
-            import math
-            m = 10.0 ** quantize
-            centroids = [[math.floor(x * m + 0.5) / m for x in c]
-                         for c in centroids]
-    base.unpersist()
-    return centroids
+    try:
+        centroids = _lloyd_seeds(base, seed, k)
+        if len(centroids) < k:
+            raise ValueError(f"ivf_train needs at least k={k} training "
+                             f"rows; got {len(centroids)}")
+        for _ in range(iters):
+            assigned = _assign(base, _trained_cells(centroids), "vid", "int")
+            comp = (assigned.select("centroid_id", F.posexplode("v"))
+                    .groupBy("centroid_id", "pos")
+                    .agg(F.avg("col").alias("m")))
+            new = {c: dict() for c in range(k)}
+            for r in comp.collect():
+                new[r["centroid_id"]][r["pos"]] = r["m"]
+            centroids = [
+                [new[c][p] for p in sorted(new[c])] if new[c] else centroids[c]
+                for c in range(k)
+            ]
+            if quantize is not None:
+                centroids = [[_q(x, quantize) for x in c] for c in centroids]
+        return centroids
+    finally:
+        base.unpersist()
+
+
+def _lloyd_seeds(base: DataFrame, seed: int, n: int) -> list:
+    """Lloyd init shared by the trainers: the ``n`` training vectors
+    with the smallest md5(seed || id)."""
+    rows = (base
+            .withColumn("h", F.md5(F.concat(F.lit(str(seed)),
+                                            F.col("vid").cast("string"))))
+            .orderBy("h", "vid").limit(n).select("v").collect())
+    return [list(r["v"]) for r in rows]
 
 
 def ivf_ann_topk_trained(emb: DataFrame, centroids: Sequence[Sequence[float]],
                          probe_ids: Sequence[int], k: int = 10,
                          nprobe: int = 2, id_col: str = "vec_id",
                          vec_col: str = "embedding") -> DataFrame:
-    """IVF top-k against TRAINED centroids (``ivf_train`` output): same
-    bucket-restricted search as ``ivf_ann_topk`` but the coarse
-    quantizer is the trained k x dim matrix, inlined as literals in the
-    map-only assignment and broadcast to the probe-list ranking.
-    End-to-end train->assign->search is deterministic (train with
-    ``quantize``), so the full pipeline is SQL-oracle-able. No persist:
-    assignment is a projection, so re-reading the probe rows is a
-    pushed-down id filter, not a recompute of anything heavy."""
-    spark = emb.sparkSession
-    assigned = ivf_assign_trained(emb, centroids, id_col, vec_col) \
-        .select(F.col(id_col), "v", "centroid_id")
-    cents = spark.createDataFrame(
-        [(i, list(c)) for i, c in enumerate(centroids)],
-        "centroid_id int, cv array<double>")
-    probes = (assigned.filter(F.col(id_col).isin(list(probe_ids)))
-              .select(F.col(id_col).alias("probe_id"), F.col("v").alias("pv")))
-    pcos = (_dot(F.col("pv"), F.col("cv"))
-            / (_norm(F.col("pv")) * _norm(F.col("cv")))).alias("pcos")
-    wp = Window.partitionBy("probe_id").orderBy(F.desc("pcos"),
-                                                F.col("centroid_id"))
-    probe_lists = (probes.crossJoin(F.broadcast(cents))
-                   .select("probe_id", "pv", "centroid_id", pcos)
-                   .withColumn("__rk", F.row_number().over(wp))
-                   .filter(F.col("__rk") <= nprobe)
-                   .select("probe_id", "pv", "centroid_id"))
-    cand = assigned.join(F.broadcast(probe_lists), "centroid_id") \
-                   .filter(F.col(id_col) != F.col("probe_id"))
-    cos = (_dot(F.col("v"), F.col("pv"))
-           / (_norm(F.col("v")) * _norm(F.col("pv")))).alias("cosine")
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (cand.select("probe_id", F.col(id_col), cos)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    """IVF top-k against TRAINED centroids (``ivf_train`` output): the
+    ``ivf_ann_topk`` search (``_flat_search``) with the trained k x dim
+    matrix as the coarse quantizer, labelled 0..k-1. End-to-end
+    train->assign->search is deterministic (train with ``quantize``),
+    so the full pipeline is SQL-oracle-able."""
+    return _flat_search(ivf_assign_trained(emb, centroids, id_col, vec_col),
+                        _collect_vectors(emb, probe_ids, id_col, vec_col),
+                        _trained_cells(centroids), k, nprobe, id_col)
 
 
 def semantic_dedup_pairs(emb: DataFrame, centroid_ids: Sequence[int],
@@ -746,7 +797,6 @@ def gramian(emb: DataFrame, vec_col: str = "embedding",
 
 
 def _q(x: float, decimals: int) -> float:
-    import math
     m = 10.0 ** decimals
     return math.floor(x * m + 0.5) / m
 
@@ -768,8 +818,6 @@ def pca_components(emb: DataFrame, n_components: int = 2, iters: int = 8,
     1/sqrt(dim)·𝟙 — so a SQL engine replaying the same arithmetic
     reproduces the components bit-for-bit (sum-order FP noise is
     absorbed by the quantization, the ``ivf_train`` trick)."""
-    import math
-
     rows = gramian(emb, vec_col, dim, method=method).collect()
     G = [[0.0] * dim for _ in range(dim)]
     for r in rows:
@@ -808,18 +856,13 @@ def ivf_assign_trained(emb: DataFrame, centroids: Sequence[Sequence[float]],
                        vec_col: str = "embedding") -> DataFrame:
     """Assign vectors to trained centroids: (id, v, centroid_id,
     centroid_cos). Map-only projection over inlined centroid literals
-    (``_argmax_centroid``) — no join, no shuffle."""
+    (``_assign``) — no join, no shuffle."""
     base = emb.select(F.col(id_col), _dvec(F.col(vec_col)).alias("v"))
-    best = _argmax_centroid("v",
-                            list(enumerate(list(c) for c in centroids)))
-    return base.select(
-        F.col(id_col), "v",
-        (-best["nid"]).cast("int").alias("centroid_id"),
-        best["s"].alias("centroid_cos"))
+    return _assign(base, _trained_cells(centroids), id_col, "int")
 
 
 # ----------------------------------------------------------------------
-# product quantization (IVF-PQ's fine quantizer; here as PQ-flat ADC)
+# product quantization (IVF-PQ's fine quantizer)
 # ----------------------------------------------------------------------
 
 def _argmin_subcode(sv_col: Column, codebook: Sequence[Sequence[float]]):
@@ -873,22 +916,25 @@ def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 2,
     emb = _train_subset(emb, train_fraction, id_col, seed)
     base = emb.select(F.col(id_col).alias("vid"),
                       _dvec(F.col(vec_col)).alias("v")).persist()
-    seed_rows = (base
-                 .withColumn("h", F.md5(F.concat(F.lit(str(seed)),
-                                                 F.col("vid").cast("string"))))
-                 .orderBy("h", "vid").limit(ksub).select("v").collect())
-    if not seed_rows:
+    try:
+        return _pq_lloyd(base, m, ksub, iters, seed, quantize)
+    finally:
+        base.unpersist()
+
+
+def _pq_lloyd(base: DataFrame, m: int, ksub: int, iters: int, seed: int,
+              quantize: int | None) -> list[list[list[float]]]:
+    """``pq_train``'s Lloyd rounds over the persisted (vid, v) base."""
+    seeds = _lloyd_seeds(base, seed, ksub)
+    if not seeds:
         raise ValueError("empty embedding table")
     # dim/divisibility from the seed rows we already hold — a separate
     # ``first()`` dim probe was one whole extra Spark job per build
-    dim = len(seed_rows[0]["v"])
+    dim = len(seeds[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     dsub = dim // m
-    books = [[list(r["v"])[s * dsub:(s + 1) * dsub] for r in seed_rows]
-             for s in range(m)]
-
-    import math
+    books = [[v[s * dsub:(s + 1) * dsub] for v in seeds] for s in range(m)]
 
     def _subs_expr():
         """One parsed string per iteration (r11 builder block);
@@ -908,13 +954,11 @@ def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 2,
             for s in range(m)])
 
     for _ in range(iters):
-        subs = _subs_expr()
-        comp = (base.select(F.explode(subs).alias("e"))
+        comp = (base.select(F.explode(_subs_expr()).alias("e"))
                 .select("e.s", "e.code", F.posexplode("e.sv"))
                 .groupBy("s", "code", "pos").agg(F.avg("col").alias("mn")))
-        rows = comp.collect()
         acc: dict = {}
-        for r in rows:
+        for r in comp.collect():
             acc.setdefault((r["s"], r["code"]), {})[r["pos"]] = r["mn"]
         for s in range(m):
             for code in range(ksub):
@@ -922,10 +966,8 @@ def pq_train(emb: DataFrame, m: int = 4, ksub: int = 8, iters: int = 2,
                 if got:
                     books[s][code] = [got[p] for p in sorted(got)]
         if quantize is not None:
-            q = 10.0 ** quantize
-            books = [[[math.floor(x * q + 0.5) / q for x in c]
-                      for c in book] for book in books]
-    base.unpersist()
+            books = [[[_q(x, quantize) for x in c] for c in book]
+                     for book in books]
     return books
 
 
@@ -972,9 +1014,8 @@ def pq_encode(emb: DataFrame, codebooks: Sequence[Sequence[Sequence[float]]],
 
 def _sub_lut(pv: Sequence[float],
              codebooks: Sequence[Sequence[Sequence[float]]]):
-    """[m][ksub] squared-L2 table from a (residualized) probe vector to
-    every sub-centroid — plain left-to-right Python sums, shared by
-    pq_topk and ivfpq_topk so the fold order cannot drift apart."""
+    """[m][ksub] squared-L2 table from a residual probe vector to every
+    sub-centroid — plain left-to-right Python sums."""
     dsub = len(codebooks[0][0])
     lut = []
     for s, book in enumerate(codebooks):
@@ -987,70 +1028,6 @@ def _sub_lut(pv: Sequence[float],
             row.append(d2)
         lut.append(row)
     return lut
-
-
-def pq_topk(emb: DataFrame, codebooks: Sequence[Sequence[Sequence[float]]],
-            probe_ids: Sequence[int], k: int = 10,
-            id_col: str = "vec_id", vec_col: str = "embedding",
-            round_decimals: int = 6) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes (ADC, the PQ-flat
-    search): per probe, a lookup table of squared L2 distances from the
-    probe's subvectors to every sub-centroid (m x ksub floats — driver
-    state bounded by the codebook, never by rows), then every encoded
-    vector scores as the sum of m LUT lookups — a map-only projection
-    over the codes table; the only exchange is the per-probe top-k
-    window. Raw vectors are read once to encode; search never touches
-    them.
-
-    Scores are half-up rounded to ``round_decimals`` BEFORE ranking so
-    (adc, vec_id) ordering is reproducible across engines; ADC is an
-    estimate of true distance (quantization error), which is the PQ
-    trade — rank fidelity vs the exact scan is property-tested, not
-    assumed. Returns (probe_id, vec_id, adc, rank)."""
-    m = len(codebooks)
-    # the codes table is the stored artifact at scale; in-session it is
-    # cached so the per-probe ADC projections scan codes, never the
-    # raw vectors (CollapseProject would otherwise inline one encode
-    # per probe reference)
-    codes = persist(pq_encode(emb, codebooks, id_col, vec_col))
-    probe_rows = (emb.filter(F.col(id_col).isin(list(probe_ids)))
-                  .select(F.col(id_col).alias("pid"),
-                          _dvec(F.col(vec_col)).alias("pv")).collect())
-    luts = [(r["pid"], _sub_lut(list(r["pv"]), codebooks))
-            for r in sorted(probe_rows, key=lambda r: r["pid"])]
-
-    scale = float(10 ** round_decimals)
-    if all(_finite(lut[s]) for _, lut in luts for s in range(m)):
-        # one parse call for the whole per-probe score array; the sum
-        # renders as the same left-assoc (0 + e0 + e1 + ...) chain the
-        # Column form builds, so ADC values are bit-equal
-        def probe_sql(pid, lut):
-            terms = " + ".join(
-                f"element_at({_arr_sql(lut[s])}, "
-                f"(element_at(codes, {s + 1}) + 1))"
-                for s in range(m))
-            return (f"struct({pid} AS probe_id, "
-                    f"floor((0 + {terms}) * {_dlit(scale)} + 0.5D) "
-                    f"/ {_dlit(scale)} AS adc)")
-
-        scored = F.expr("array(" + ",".join(
-            probe_sql(pid, lut) for pid, lut in luts) + ")")
-    else:
-        scored = F.array(*[
-            F.struct(
-                F.lit(pid).alias("probe_id"),
-                (F.floor(sum(
-                    F.element_at(F.array(*[F.lit(v) for v in lut[s]]),
-                                 F.element_at(F.col("codes"), s + 1) + 1)
-                    for s in range(m)) * scale + F.lit(0.5)) / scale
-                 ).alias("adc"))
-            for pid, lut in luts])
-    flat = (codes.select(F.col(id_col), F.explode(scored).alias("p"))
-            .filter(F.col(id_col) != F.col("p.probe_id"))
-            .select("p.probe_id", F.col(id_col), F.col("p.adc")))
-    w = Window.partitionBy("probe_id").orderBy("adc", F.col(id_col))
-    return hold(flat.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k), codes)
 
 
 # ----------------------------------------------------------------------
@@ -1121,10 +1098,8 @@ def ivfpq_topk(emb: DataFrame, centroids, codebooks,
     # the stored artifact (search scans codes, never raw vectors)
     codes = persist(pq_encode(res, codebooks, id_col, "residual",
                               keep=["centroid_id"]))
-    probe_rows = (emb.filter(F.col(id_col).isin(list(probe_ids)))
-                  .select(F.col(id_col).alias("pid"),
-                          _dvec(F.col(vec_col)).alias("pv")).collect())
-    return hold(_ivfpq_search(codes, probe_rows, centroids, codebooks, k,
+    probes = _collect_vectors(emb, probe_ids, id_col, vec_col)
+    return hold(_ivfpq_search(codes, probes, centroids, codebooks, k,
                               nprobe, id_col, round_decimals), codes)
 
 
@@ -1156,15 +1131,12 @@ def ivfpq_topk_table(spark, path: str, emb: DataFrame, centroids,
     partitions instead of filtering a scan — the plan reads only the
     probed cells' directories and needs no cache of the encode
     subtree (raw vectors are touched only to look up the probes)."""
-    codes = spark.read.parquet(path)
-    probe_rows = (emb.filter(F.col(id_col).isin(list(probe_ids)))
-                  .select(F.col(id_col).alias("pid"),
-                          _dvec(F.col(vec_col)).alias("pv")).collect())
-    return _ivfpq_search(codes, probe_rows, centroids, codebooks, k,
-                         nprobe, id_col, round_decimals)
+    probes = _collect_vectors(emb, probe_ids, id_col, vec_col)
+    return _ivfpq_search(spark.read.parquet(path), probes, centroids,
+                         codebooks, k, nprobe, id_col, round_decimals)
 
 
-def _ivfpq_search(codes: DataFrame, probe_rows, centroids, codebooks,
+def _ivfpq_search(codes: DataFrame, probes, centroids, codebooks,
                   k: int, nprobe: int, id_col: str,
                   round_decimals: int) -> DataFrame:
     """Shared ADC search over a codes table (in-session cached or read
@@ -1172,28 +1144,18 @@ def _ivfpq_search(codes: DataFrame, probe_rows, centroids, codebooks,
     the bounded quantizer state, probed-cell pruning, one broadcast
     equi-join + one (probe, vec) aggregation + the top-k window."""
     spark = codes.sparkSession
-    # nprobe nearest cells per probe + the per-cell residual LUTs,
-    # all driver-side over the bounded quantizer state
+    # the flat searches' probe cells (``_probe_cells``) + the per-cell
+    # residual LUTs, all driver-side over the bounded quantizer state
+    cells = _trained_cells(centroids)
     lut_rows = []
     probed_cells = set()
-    for r in sorted(probe_rows, key=lambda r: r["pid"]):
-        pv = list(r["pv"])
-        sims = []
-        for cid, cv in enumerate(centroids):
-            dot = sum(a * b for a, b in zip(pv, cv))
-            na = sum(a * a for a in pv) ** 0.5
-            nb = sum(b * b for b in cv) ** 0.5
-            den = na * nb
-            # degenerate all-zero vector/centroid: rank last instead
-            # of crashing (Spark-side paths yield NaN and keep going)
-            sims.append((-(dot / den) if den > 0 else float("inf"), cid))
-        cells = [cid for _, cid in sorted(sims)[:nprobe]]
-        probed_cells.update(cells)
-        for cid in cells:
-            pr = [a - b for a, b in zip(pv, centroids[cid])]
+    for pid, pv, probed in _probe_cells(probes, cells, nprobe):
+        probed_cells.update(probed)
+        for cid in probed:
+            pr = [a - b for a, b in zip(pv, cells[cid][1])]
             for s, row_d in enumerate(_sub_lut(pr, codebooks)):
                 for code, d2 in enumerate(row_d):
-                    lut_rows.append((r["pid"], cid, s, code, d2))
+                    lut_rows.append((pid, cid, s, code, d2))
     lut = spark.createDataFrame(
         lut_rows, "probe_id long, centroid_id int, s int, code int, "
                   "pd2 double")
@@ -1219,6 +1181,4 @@ def _ivfpq_search(codes: DataFrame, probe_rows, centroids, codebooks,
               .groupBy("probe_id", id_col)
               .agg((F.floor(F.sum("pd2") * scale + F.lit(0.5)) / scale)
                    .alias("adc")))
-    w = Window.partitionBy("probe_id").orderBy("adc", F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _topk(scored, F.col("adc"), id_col, k)

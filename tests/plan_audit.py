@@ -62,8 +62,11 @@ CONSTRUCTION_NOTES = {
     "logreg_quality": ("k+1-float gradient aggregates per training "
                        "iteration at construction; scoring is the "
                        "audited plan"),
-    "pq_topk": ("PQ codebook training (Lloyd rounds) + driver LUT "
-                "build at construction"),
+    "ivf_ann": ("one collect of the member centroids and probes; "
+                "probe cells ranked on the driver"),
+    "ivf_ann_trained": ("Lloyd rounds (one hash aggregation each) + the "
+                        "probe collect at construction; probe cells "
+                        "ranked on the driver"),
     "ivfpq": ("coarse + residual PQ training and the partitioned "
               "codes write run at construction (see ivfpq_build/"
               "ivfpq_serve bench split)"),

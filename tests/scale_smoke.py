@@ -972,15 +972,6 @@ def r10ops_scale(spark, millions: float = 10.0):
     linearity("semantic_dedup (sqrt-k)", semdedup, d_small, d_big,
               slack=2.0)
 
-    def pq_cycle(n):
-        emb = synth_embeddings(spark, n)
-        books = sim.pq_train(emb, m=4, ksub=16, iters=2,
-                             train_fraction=0.2)
-        sim.pq_topk(emb, books, [0, 1, 2, 3], k=10) \
-            .write.mode("overwrite").format("noop").save()
-
-    linearity_fn("pq train+topk", pq_cycle, d_small, d_big, slack=2.0)
-
     tmp = tempfile.mkdtemp(prefix="flint_r10_ivfpq_")
 
     def ivfpq_build_cycle(n):

@@ -3,7 +3,9 @@
 bench query, split wall time into CONSTRUCTION (operator building —
 driver-side collects, training jobs), PLANNING (first explain of the
 returned frame) and EXECUTION (noop sink), count Spark jobs via the
-status store, and dump `.explain("formatted")` to plans/r11/.
+status store, and dump `.explain("formatted")` to
+$SPARK_GRAFT_PLANS_DIR when set. The round-11/12 dumps (`plans/r11/`,
+`plans/r12/`) are in git history: `git show 3cd1966:plans/r12/<file>`.
 
 Usage: python tools/profile_queries.py [query ...]   (default: top set)
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -22,7 +24,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PLANS_DIR = os.environ.get("SPARK_GRAFT_PLANS_DIR", "")
 
 DEFAULT = [
-    "ivfpq_table", "ivfpq_build", "ivfpq", "pq_topk", "semantic_dedup",
+    "ivfpq_table", "ivfpq_build", "ivfpq", "semantic_dedup",
     "asof_topk", "containment", "dsir", "gopher_rules", "minhash_lsh",
     "ewm_corr", "ivf_ann", "rolling_quantile", "token_shift", "bigram_lm",
     "rolling_ols", "asof_broadcast", "spearman", "simhash_pairs",
