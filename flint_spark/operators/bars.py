@@ -347,8 +347,8 @@ def volume_bars(df: DataFrame, threshold: float, price_col: str,
                       *key, F.col("__bar").alias("bar_seq"),
                       "open", "high", "low", "close", "n",
                       "volume", "vwap"))
-    # the keyless engine frame is a local here: hold its layout on the
-    # returned frame
+    # the keyless engine frame is a local here: hold its persisted
+    # state on the returned frame
     from ..pipeline._cache import hold
 
     return hold(out, base)

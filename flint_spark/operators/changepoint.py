@@ -116,7 +116,7 @@ def cusum(df: DataFrame, column: str, k: float = 0.5, h: float = 5.0,
     KEYLESS input auto-routes through the distributed prefix engine
     (``distributed`` as in ``left_join``): both prefix sums run as one
     two-phase partition-partials pass and the running min of each
-    prefix sum as a second pass over the SAME persisted layout (the
+    prefix sum as a second pass over the SAME hash layout (the
     engine's ``keep_layout`` reuse). Exchange budget, pinned by
     ``plan_counts`` in the tests: ONE data exchange (the engine's
     value-derived ``__pid`` hash layout, which every data-scale

@@ -17,10 +17,12 @@ O(n) complexity contract as the reference's streaming implementation.
 
 Scale note: one shuffle on the key; each key group must fit in one
 Arrow batch stream (pandas grouped-map). Keyless series do NOT fall
-into a single group: they run a distributed two-phase prefix scan
-(value-derived time buckets, per-bucket affine-scan partials, driver
-composes P carries, broadcast-join applies the carry-in per row) —
-the reference's distributed prefix-aggregation pattern
+into a single group: they run on the distributed keyless prefix engine
+(``operators/prefix.py``) with the scan as its per-bucket state step and
+the affine map as its merge kind (value-derived time buckets, per-bucket
+affine-scan partials, a carry window over the P partials, a broadcast
+join applies the carry-in per row) — the reference's distributed
+prefix-aggregation pattern
 (``rdd/function/summarize/Summarizations.scala:51-122``) expressed as
 Catalyst + one mapInPandas pass.
 """
@@ -257,79 +259,32 @@ def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
     return with_ns.groupBy().applyInPandas(compute, schema)
 
 
-def _keyless_distributed(df: DataFrame, column: str, out_name: str,
-                         coeff_fn, divide: bool,
-                         num_partitions: int | None = None) -> DataFrame:
-    """Distributed keyless prefix scan — no single-group exchange.
+def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
+                  divide: bool) -> DataFrame:
+    """Keyless series on the distributed prefix engine
+    (``prefix._engine``), never one single-group exchange.
 
-    The recurrence E_i = d_i E_{i-1} + c_i is affine, so a chunk of the
-    series maps its incoming state linearly: E_out = L_end + E_in * e^-T_end
-    where L is the chunk's scan from zero state and T its cumulative
-    -ln(decay). Phases (reference ``Summarizations.scala:51-122`` pattern):
+    A bucket of the affine recurrence E_i = d_i E_{i-1} + c_i maps its
+    incoming state as E_out = L_end + E_in·e^-T_end (L: the bucket's scan
+    from zero state, T: its cumulative -ln(decay)) — the engine's
+    ``affine`` kind, one item per series ('core' adds the aux series).
+    The state step is one ``mapInPandas`` pass that computes per-row
+    (L, T) batch-by-batch, restarting at every bucket. Its boundary
+    decay step and interpolation read each bucket's predecessor row
+    (prev_t, prev_x): every bucket's last row, from a P-row aggregate
+    over the unshuffled input, carried to the next bucket as ``last``.
+    Rows scan in the order (time, value nulls last, other orderable
+    columns), the single-group and keyed scans' order; every step is a
+    function of the data, so a recompute reproduces the scan row for
+    row."""
+    from .prefix import _carried, _engine
 
-      1. bucket rows by time value (``prefix.time_buckets``: approx-quantile
-         bounds + an in-JVM binary search), hash-partition on the bucket
-         and sort within partitions (ONE shuffle of the data, persisted
-         until the scan is materialized);
-      2. tiny aggregate collects per-bucket boundary rows (prev_t,
-         prev_x feed the boundary decay step / interpolation);
-      3. one ``mapInPandas`` pass computes per-row (L, T) streaming
-         batch-by-batch, restarting at every bucket — never holds a
-         partition in memory;
-      4. the P (L_end, T_end) partials compose on the driver into a
-         per-bucket carry-in E_in (P scalars);
-      5. a broadcast join + JVM expression applies
-         ``L + E_in * exp(-T)`` per row (and the aux series for 'core').
-
-    exp(-T) underflowing to 0.0 for rows far from the carry origin is the
-    mathematically correct decay, not an error.
-
-    Rows scan in the TOTAL order (time, value, remaining orderable
-    columns) — the engine-wide max-struct tie rule — and the bucket is a
-    function of the time value, so every extraction below (boundary
-    prev_x, bucket-end partials, the carry-ins keyed on ``__pid``) is a
-    deterministic function of the data. A recompute of the persisted
-    scan, after an eviction or under a re-planned layout, reproduces it
-    row for row. Equal timestamps never straddle buckets.
-    """
-    from .prefix import time_buckets
-
-    spark = df.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    in_cols = list(df.columns)
-    xcol = F.col(column).cast("double")
-    tns = time_ns_expr(df)
-    pid, n_buckets = time_buckets(df, tns, P)
-    extra = [c for c, t in df.dtypes if c != column and "map<" not in t]
-    # the sorted layout feeds both the boundary aggregate and the scan:
-    # persisted for this call only, released once the persisted scan
-    # below is materialized (the scan's plan recomputes it if evicted)
-    sdf = (df.withColumn("__tns", tns).withColumn("__pid", pid)
-           .repartition(4 * n_buckets, "__pid")
-           .sortWithinPartitions("__pid", "__tns", xcol, *extra)
-           .persist())
-    # per-bucket boundary rows (small: P rows collected). last_x must
-    # be the row processed LAST under the (time, value) sort -> max-struct.
-    binfo = (sdf.groupBy("__pid")
-             .agg(F.max("__tns").alias("last_t"),
-                  F.max_by(xcol, F.struct(F.col("__tns"), xcol))
-                   .alias("last_x"))
-             .collect())
-    prev_map: dict = {}
-    prev = None
-    for r in sorted(binfo, key=lambda r: r["__pid"]):
-        prev_map[r["__pid"]] = prev
-        prev = (r["last_t"], r["last_x"])
-    bc = spark.sparkContext.broadcast(prev_map)
-
-    schema = T.StructType(list(sdf.schema.fields) + [
-        T.StructField("__rid", T.LongType()),
-        T.StructField("__L", T.DoubleType()),
-        T.StructField("__La", T.DoubleType()),
-        T.StructField("__T", T.DoubleType())])
+    value = F.col(column).cast("double")
+    # one affine state per series: state name -> the scan's L column
+    series = {"p": "__L", "a": "__La"} if divide else {"p": "__L"}
 
     def scan_partition(batches):
-        # state: (prev_t, prev_x, L_carry, La_carry, T_offset, rid)
+        # state: (prev_t, prev_x, L_carry, La_carry, T_offset)
         pid = state = None
         for pdf in batches:
             if len(pdf) == 0:
@@ -338,14 +293,15 @@ def _keyless_distributed(df: DataFrame, column: str, out_name: str,
             t_all = pdf["__tns"].to_numpy(dtype=np.int64)
             x_all = pdf[column].to_numpy(dtype=np.float64)
             out = {n: np.empty(len(pdf)) for n in ("__L", "__La", "__T")}
-            out["__rid"] = np.empty(len(pdf), dtype=np.int64)
             cuts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1), len(pdf)]
             for s0, s1 in zip(cuts, cuts[1:]):
                 if pids[s0] != pid:  # a new bucket scans from its carry origin
                     pid = int(pids[s0])
-                    pv = bc.value.get(pid) or (None, None)
-                    state = (*pv, 0.0, 0.0, 0.0, 0)
-                prev_t, prev_x, l_carry, la_carry, t_off, rid0 = state
+                    pv = ((int(pdf["__prev_t"].iat[s0]),
+                           float(pdf["__prev_x"].iat[s0]))
+                          if pdf["__prev_ok"].iat[s0] else (None, None))
+                    state = (*pv, 0.0, 0.0, 0.0)
+                prev_t, prev_x, l_carry, la_carry, t_off = state
                 t, x = t_all[s0:s1], x_all[s0:s1]
                 steps, c, aux_c = coeff_fn(t, x, prev_t, prev_x)
                 cum_t = np.cumsum(steps)
@@ -354,37 +310,36 @@ def _keyless_distributed(df: DataFrame, column: str, out_name: str,
                 lav = out["__La"][s0:s1] = (_affine_scan(steps, aux_c)
                                             + la_carry * w)
                 tv = out["__T"][s0:s1] = t_off + cum_t
-                out["__rid"][s0:s1] = np.arange(rid0, rid0 + s1 - s0)
                 state = (int(t[-1]), float(x[-1]), float(lv[-1]),
-                         float(lav[-1]), float(tv[-1]), rid0 + s1 - s0)
-            yield pdf.assign(**out)
+                         float(lav[-1]), float(tv[-1]))
+            yield pdf.drop(columns=["__prev_t", "__prev_x", "__prev_ok"]) \
+                .assign(**out)
 
-    scanned = _cache.persist(sdf.mapInPandas(scan_partition, schema))
-    # bucket-end partials keyed on the explicit scan row index (__rid):
-    # duplicate (time, value) rows at the boundary cannot misresolve.
-    partials = (scanned.groupBy("__pid")
-                .agg(F.max_by("__L", "__rid").alias("l_end"),
-                     F.max_by("__La", "__rid").alias("la_end"),
-                     F.max("__T").alias("t_end"))
-                .collect())
-    sdf.unpersist()
-    e_rows, ep, ea = [], 0.0, 0.0
-    for r in sorted(partials, key=lambda r: r["__pid"]):
-        e_rows.append((int(r["__pid"]), float(ep), float(ea)))
-        w = math.exp(-r["t_end"]) if r["t_end"] < 700.0 else 0.0
-        ep = r["l_end"] + ep * w
-        ea = r["la_end"] + ea * w
-    e_df = spark.createDataFrame(e_rows or [(0, 0.0, 0.0)],
-                                 "__pid int, __ep double, __ea double")
-    joined = scanned.join(F.broadcast(e_df), "__pid", "left")
-    w = F.exp(-F.col("__T"))
-    primary = F.col("__L") + F.coalesce(F.col("__ep"), F.lit(0.0)) * w
-    if divide:
-        out = primary / (F.col("__La") + F.coalesce(F.col("__ea"), F.lit(0.0)) * w)
-    else:
-        out = primary
-    return _cache.hold(
-        joined.withColumn(out_name, out).select(in_cols + [out_name]), scanned)
+    def step(laid: DataFrame, buckets: DataFrame) -> DataFrame:
+        # each bucket's last row under the scan order (nulls last)
+        ends = buckets.groupBy("__pid").agg(F.max(F.struct(
+            F.col("__tns").alias("t"), value.isNull().alias("null"),
+            value.alias("x"))).alias("__cs_end"))
+        end = F.col("__carry_end")
+        # null-free columns: a null long would reach pandas as float64
+        prev = _carried(ends, {"end": "last"}).select(
+            "__pid", F.coalesce(end["t"], F.lit(0)).alias("__prev_t"),
+            end["x"].alias("__prev_x"),
+            end.isNotNull().alias("__prev_ok"))
+        schema = T.StructType(list(laid.schema.fields) + [
+            T.StructField(n, T.DoubleType()) for n in ("__L", "__La", "__T")])
+        scanned = (laid.join(F.broadcast(prev), "__pid", "left")
+                   .select(*laid.columns, "__prev_t", "__prev_x",
+                           "__prev_ok")
+                   .mapInPandas(scan_partition, schema))
+        return scanned.select(*laid.columns, *[
+            F.struct(F.col(l_col).alias("L"), F.col("__T").alias("T"))
+            .alias(f"__cs_{n}") for n, l_col in series.items()])
+
+    return _engine(
+        df, dict.fromkeys(series, "affine"), step,
+        lambda st: {out_name: st["p"] / st["a"] if divide else st["p"]},
+        tie_break=[column], nulls_last=True)
 
 
 def _apply(df: DataFrame, column: str, out_name: str, key: Sequence[str],
@@ -392,11 +347,11 @@ def _apply(df: DataFrame, column: str, out_name: str, key: Sequence[str],
     if list(key):
         return _apply_per_key(df, column, out_name, key,
                               _scan_values(coeff_fn, divide))
-    # small inputs run as one Arrow group, cheaper than the 5-job
-    # distributed scan; unknown stats always take the distributed path
+    # small inputs run as one Arrow group, cheaper than the distributed
+    # prefix scan; unknown stats always take the distributed path
     if _route.keyless_distributed(lambda: _route.estimated_bytes(df),
                                   distributed):
-        return _keyless_distributed(df, column, out_name, coeff_fn, divide)
+        return _keyless_scan(df, column, out_name, coeff_fn, divide)
     return _apply_per_key(df, column, out_name, (),
                           _scan_values(coeff_fn, divide))
 

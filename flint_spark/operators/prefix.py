@@ -1,4 +1,5 @@
-"""Distributed keyless cumulative (prefix) aggregation.
+"""Distributed keyless cumulative (prefix) aggregation: the one engine
+behind every keyless running operator.
 
 The reference's ``addSummaryColumns`` is explicitly distributed — per
 partition it computes a partial summarizer state, prefix-combines the
@@ -8,23 +9,25 @@ partials on the driver, and rescans each partition with its carry-in
 funnels the whole table through ONE task instead, which is the last
 systematic scale-killer a 100 TB deployment would hit (r6 verdict).
 
-This module is the Spark-expression analogue of that two-phase plan,
-generalized over MERGEABLE STATE rather than one hard-coded recurrence
-(the affine-EWMA twin lives in ``ema._keyless_distributed``):
+:func:`_engine` is the Spark-expression analogue of that two-phase
+plan, generalized over MERGEABLE STATE: a caller supplies a per-row
+state step and a merge kind per state column —
+:func:`keyless_cumulative` (bars, changepoint, aggregate, sampling)
+cumulative window expressions, keyless ``ema.ewma`` and
+``ema.exponential_smoothing`` their affine ``mapInPandas`` scan.
 
-1. bucket rows into time-quantile partitions: approx-quantile
-   boundaries (one sampling pass) + an in-JVM binary-search ``__pid``
-   expression, then ONE hash exchange on ``__pid`` + sort within
-   partitions, persisted (``pipeline._cache``) so later jobs read it
-   instead of re-executing it. ``__pid`` being VALUE-derived (not
-   ``spark_partition_id`` over a range exchange) is load-bearing:
-   HashPartitioning(__pid) is exactly the ClusteredDistribution every
-   later window/aggregate requires, so they all reuse this one
-   exchange — the r7 layout's range partitioning satisfied none of
-   them and Catalyst silently re-shuffled the full data per pass
-   (ADVICE r7);
-2. every state accumulator evaluates as a within-partition cumulative
-   window expression — one WindowExec, no cross-partition traffic;
+1. bucket rows into time-quantile partitions (:func:`quantile_buckets`),
+   then ONE hash exchange on ``__pid`` + sort within partitions +
+   ``__mid``, the row number over the total order. ``__pid`` being
+   VALUE-derived (not ``spark_partition_id`` over a range exchange) is
+   load-bearing: HashPartitioning(__pid) is exactly the
+   ClusteredDistribution every later window/aggregate requires, so they
+   all reuse this one exchange — the r7 layout's range partitioning
+   satisfied none of them and Catalyst silently re-shuffled the full
+   data per pass (ADVICE r7);
+2. the caller's step computes per-row state WITHIN each bucket (no
+   cross-partition traffic), persisted once (``pipeline._cache``) so
+   both phases below read it instead of re-executing the layout;
 3. a tiny per-partition aggregate extracts each partition's FINAL state
    row (P rows total), and the carry-in for partition p is the
    merge-combine of partitions < p — computed as a window over the
@@ -37,20 +40,23 @@ generalized over MERGEABLE STATE rather than one hard-coded recurrence
 Exchange budget (pinned by ``test_keyless_engine_exchange_budget``):
 ONE data exchange (the ``__pid`` hash layout) + 1 tiny P-row carry
 exchange + 1 broadcast — vs the single-task plan's one exchange INTO
-one partition. Every merge kind below is a commutative-monoid
-combine, so per-partition parallelism never changes results (up to
-the usual float fold association, which tests compare rounded).
+one partition. Every merge kind below is an associative combine, so
+per-partition parallelism never changes results (up to the usual float
+fold association, which tests compare rounded).
 
 Merge kinds: ``sum`` (count/sum — type-preserving, null = empty),
 ``min``/``max`` (null-skipping least/greatest), ``product``, ``last``
 (latest non-null wins; partition order = (time, tie_break) so the
 carry is the previous partitions' last), ``concat`` (ordered array
-concatenation, earlier partitions first).
+concatenation, earlier partitions first), ``affine`` (state
+``struct(L, T)``: a partition maps the value E entering it to
+``L + E·exp(−T)``, as E_i = d_i E_{i-1} + c_i does with L the scan from
+zero state and T the cumulative −ln d).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
+from typing import Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -58,52 +64,75 @@ from pyspark.sql import functions as F
 from ..pipeline import _cache
 from ..timeseries import time_ns_expr
 
-__all__ = ["keyless_cumulative", "time_buckets"]
+__all__ = ["keyless_cumulative", "quantile_buckets"]
 
 #: (name, builder(df, over) -> Column, merge_kind)
 CumItem = tuple[str, Callable[[DataFrame, Callable[[Column], Column]], Column], str]
 
-_KINDS = ("sum", "min", "max", "product", "last", "concat")
+#: carry folds of the kinds whose SQL aggregate is the merge itself
+_FOLDS = {"sum": F.sum, "min": F.min, "max": F.max, "product": F.product,
+          "last": lambda c: F.last(c, ignorenulls=True)}
+_KINDS = (*_FOLDS, "concat", "affine")
+
+#: an affine bucket whose decay exponent T reaches this decays its
+#: carry-in to exactly 0.0 (exp(-T) is far below any significant
+#: digit of L by then)
+_AFFINE_T_MAX = 700.0
 
 
-def time_buckets(df: DataFrame, tns: Column, p: int) -> tuple[Column, int]:
+def quantile_buckets(df: DataFrame, tns: Column, p: int) -> tuple[Column, int]:
     """``__pid`` as a VALUE-derived time bucket over a ``__tns`` column:
     approx-quantile boundaries of ``tns`` over ``df`` (one sampling
-    pass), then an in-JVM binary search. Equal timestamps share a
-    bucket, and a re-planned run puts every row in the same bucket.
-    Returns (pid column, bucket count)."""
-    from .asof import upper_bound_expr
-
+    pass), then the number of boundaries ``<=`` the row's time, found by
+    a balanced tree of ``CASE WHEN`` comparisons (log2 P deep, all in
+    whole-stage codegen; an array binary search through a higher-order
+    function cost ~5x more per row). Equal timestamps share a bucket,
+    a null time lands in bucket 0, and a re-planned run puts every row
+    in the same bucket. Returns (pid column, bucket count)."""
     err = 1.0 / max(p * 8, 64)
     # p <= 1: no boundaries — approxQuantile rejects an empty
     # probability list (an NPE under shuffle.partitions=1)
     bounds = [] if p <= 1 else sorted(set(
         df.select(tns.alias("__tns"))
         .approxQuantile("__tns", [i / p for i in range(1, p)], err)))
-    pid = (upper_bound_expr(F.lit(bounds), F.col("__tns"))
-           .cast("int") if bounds else F.lit(0))
-    return pid, len(bounds) + 1
+
+    def count_le(lo: int, hi: int) -> Column:
+        if lo >= hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return (F.when(F.col("__tns") >= F.lit(bounds[mid]),
+                       count_le(mid + 1, hi))
+                .otherwise(count_le(lo, mid)))
+
+    return count_le(0, len(bounds)), len(bounds) + 1
 
 
-def _carry_agg(kind: str, c: Column) -> Column:
-    """Combine per-partition FINAL states into the carry for the NEXT
-    partition — evaluated over the P-row partials table ordered by
-    partition id, frame = strictly-preceding partitions."""
-    if kind == "sum":
-        return F.sum(c)
-    if kind == "min":
-        return F.min(c)
-    if kind == "max":
-        return F.max(c)
-    if kind == "product":
-        return F.product(c)
-    if kind == "last":
-        return F.last(c, ignorenulls=True)
+def _carry(kind: str, c: Column, w: Window) -> Column:
+    """Fold the FINAL states ``c`` of the buckets in frame ``w`` (the
+    strictly preceding buckets, in bucket order) into the carry for the
+    next bucket."""
+    if kind in _FOLDS:
+        return _FOLDS[kind](c).over(w)
+    # the window applies to collect_list itself, which skips null
+    # partials (all-null buckets carry nothing) and keeps bucket order
+    states = F.collect_list(c).over(w)
     if kind == "concat":
-        # collect_list skips null partials (all-null partitions carry
-        # nothing); flatten preserves partition order
-        return F.flatten(F.collect_list(c))
-    raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
+        return F.flatten(states)
+    return F.aggregate(  # affine: E <- L_q + E * exp(-T_q), q ascending
+        states, F.lit(0.0),
+        lambda e, s: s["L"] + e * F.when(s["T"] < _AFFINE_T_MAX,
+                                         F.exp(-s["T"])).otherwise(0.0))
+
+
+def _carried(ends: DataFrame, kinds: Mapping[str, str]) -> DataFrame:
+    """Per bucket of the P-row table ``ends`` (``__pid`` plus one final
+    state ``__cs_<name>`` per ``kinds`` entry): the carry into it,
+    ``__carry_<name>``, folded over the strictly preceding buckets."""
+    w_prev = (Window.orderBy("__pid")
+              .rowsBetween(Window.unboundedPreceding, -1))
+    return ends.select(
+        "__pid", *[_carry(k, F.col(f"__cs_{n}"), w_prev).alias(f"__carry_{n}")
+                   for n, k in kinds.items()])
 
 
 def _merge(kind: str, cs: Column, carry: Column) -> Column:
@@ -125,7 +154,94 @@ def _merge(kind: str, cs: Column, carry: Column) -> Column:
         return (F.when(carry.isNull(), cs)
                 .when(cs.isNull(), carry)
                 .otherwise(F.concat(carry, cs)))
-    raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
+    # affine: exp(-T) underflowing to 0.0 far from the carry origin is
+    # the mathematically correct decay, not an error
+    return cs["L"] + carry * F.exp(-cs["T"])
+
+
+def _engine(df: DataFrame, kinds: Mapping[str, str],
+            step: Callable[[DataFrame, DataFrame], DataFrame],
+            render: Callable[[dict[str, Column]], dict[str, Column]],
+            tie_break: Sequence[str] = (), nulls_last: bool = False,
+            num_partitions: int | None = None,
+            keep_layout: bool = False) -> DataFrame:
+    """The two-phase prefix plan. ``step(layout, buckets)`` returns
+    ``layout`` (sorted by ``__pid``, ``__tns``, ``tie_break`` — nulls
+    last if ``nulls_last`` — and the other orderable columns) plus one
+    within-bucket state column ``__cs_<name>`` per ``kinds`` entry
+    (name -> merge kind); ``buckets`` is the unshuffled input with the
+    same ``__tns``/``__pid``, for P-row side aggregates that must not
+    read the layout twice. The other parameters are as in
+    :func:`keyless_cumulative`."""
+    for kind in kinds.values():
+        if kind not in _KINDS:
+            raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
+    data_cols = [c for c in df.columns if not c.startswith("__")]
+    layout_cols = ["__tns", "__pid", "__mid"]
+    if "__pid" in df.columns:
+        laid = buckets = df
+        with _cache._LOCK:
+            _cache.STATS["reused"] += 1
+    else:
+        p = num_partitions or int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        # a hash repartition on the expression-derived __pid is exactly
+        # the ClusteredDistribution(__pid) every window/aggregate below
+        # requires: ONE data exchange, verified by the plan_counts pins
+        # (a range exchange on __tns satisfied none of them, ADVICE r7).
+        tns = time_ns_expr(df)
+        pid, n_buckets = quantile_buckets(df, tns, p)
+        # 4x partitions per distinct pid: hashing ~P pid values into P
+        # partitions pigeonholes ~1/e of tasks empty and piles 2-4
+        # buckets on others; the wider exchange keeps max-load ~1 and
+        # every downstream window still reuses HashPartitioning(__pid).
+        #
+        # __mid is row_number() over a TOTAL order — (__tns, tie_break,
+        # then every orderable data column), NOT
+        # monotonically_increasing_id(). Two reasons (r8 review):
+        # 1. DETERMINISM BY CONSTRUCTION: rows equal on the full sort
+        #    key are identical rows, so any recompute reproduces the
+        #    same (row, __mid) multiset — the state and partials can
+        #    never diverge on ties even with the cache cold. The
+        #    engine-wide max-struct philosophy (sort by time THEN
+        #    values), applied to the layout itself.
+        # 2. CACHE SUBSTITUTION: the state and partials subtrees form
+        #    a self-join over the persisted state; Spark's self-join
+        #    deduplication clones one branch, and a nondeterministic
+        #    expression canonicalizes as never-equal after cloning, so
+        #    the cache manager refused to substitute the persisted
+        #    frame — BOTH branches silently recomputed the full
+        #    repartition+sort from the scan (observed: two layout
+        #    exchanges, zero InMemoryTableScans).
+        # Map-typed columns are unorderable and excluded; rows equal up
+        # to map values then tie arbitrarily, which only reorders
+        # 'last'/'concat' state among rows identical on every orderable
+        # column.
+        extra = [c for c, t in df.dtypes
+                 if c in data_cols and c not in tie_break
+                 and "map<" not in t]
+        tie = [F.col(c).asc_nulls_last() if nulls_last else F.col(c)
+               for c in tie_break]
+        order = [F.col("__tns"), *tie, *[F.col(c) for c in extra]]
+        buckets = df.withColumn("__tns", tns).withColumn("__pid", pid)
+        laid = (buckets.repartition(4 * n_buckets, "__pid")
+                .sortWithinPartitions("__pid", *order)
+                .withColumn("__mid", F.row_number().over(
+                    Window.partitionBy("__pid").orderBy(*order))))
+
+    stated = _cache.persist(step(laid, buckets))
+    # P-row partials: each bucket's state at its FINAL row
+    partials = (stated.groupBy("__pid")
+                .agg(*[F.max_by(F.col(f"__cs_{n}"), F.col("__mid"))
+                       .alias(f"__cs_{n}") for n in kinds]))
+    joined = stated.join(F.broadcast(_carried(partials, kinds)), "__pid",
+                         "left")
+    state = {n: _merge(k, F.col(f"__cs_{n}"), F.col(f"__carry_{n}"))
+             for n, k in kinds.items()}
+    outs = render(state)
+    keep = data_cols + (layout_cols if keep_layout else [])
+    result = joined.select(*keep, *[c.alias(n) for n, c in outs.items()])
+    return _cache.hold(result, stated)
 
 
 def keyless_cumulative(
@@ -157,90 +273,19 @@ def keyless_cumulative(
     pass (e.g. the running-min-of-prefix-sum stage of keyless CUSUM)
     can reuse the SAME shuffle: a frame that still carries ``__pid``
     skips repartitioning entirely — its second pass costs one more
-    tiny partials job, zero data exchanges. The persisted layout is
+    tiny partials job, zero data exchanges. The persisted state is
     retained under ``pipeline._cache``'s policy.
     """
-    for _, _, kind in items:
-        if kind not in _KINDS:
-            raise ValueError(f"unknown merge kind {kind!r} (one of {_KINDS})")
-    reuse = "__pid" in df.columns
-    data_cols = [c for c in df.columns if not c.startswith("__")]
-    layout_cols = ["__tns", "__pid", "__mid"]
-    if reuse:
-        sdf = df
-        with _cache._LOCK:
-            _cache.STATS["reused"] += 1
-    else:
-        p = num_partitions or int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # a hash repartition on the expression-derived __pid is exactly
-        # the ClusteredDistribution(__pid) every window/aggregate below
-        # requires: ONE data exchange, verified by the plan_counts pins
-        # (a range exchange on __tns satisfied none of them, ADVICE r7).
-        tns = time_ns_expr(df)
-        pid, n_buckets = time_buckets(df, tns, p)
-        # 4x partitions per distinct pid: hashing ~P pid values into P
-        # partitions pigeonholes ~1/e of tasks empty and piles 2-4
-        # buckets on others; the wider exchange keeps max-load ~1 and
-        # every downstream window still reuses HashPartitioning(__pid).
-        #
-        # __mid is row_number() over a TOTAL order — (__tns, tie_break,
-        # then every orderable data column), NOT
-        # monotonically_increasing_id(). Two reasons (r8 review):
-        # 1. DETERMINISM BY CONSTRUCTION: rows equal on the full sort
-        #    key are identical rows, so any recompute reproduces the
-        #    same (row, __mid) multiset — the window and partials
-        #    subtrees can never diverge on ties even with the cache
-        #    cold. The engine-wide max-struct philosophy (sort by time
-        #    THEN values), applied to the layout itself.
-        # 2. CACHE SUBSTITUTION: the window and partials subtrees form
-        #    a self-join over this layout; Spark's self-join
-        #    deduplication clones one branch, and a nondeterministic
-        #    expression canonicalizes as never-equal after cloning, so
-        #    the cache manager refused to substitute the persisted
-        #    layout — BOTH branches silently recomputed the full
-        #    repartition+sort from the scan (observed: two layout
-        #    exchanges, zero InMemoryTableScans).
-        # Map-typed columns are unorderable and excluded; rows equal up
-        # to map values then tie arbitrarily, which only reorders
-        # 'last'/'concat' state among rows identical on every orderable
-        # column.
-        extra = [c for c, t in df.dtypes
-                 if c in data_cols and c not in tie_break
-                 and "map<" not in t]
-        order_cols = ["__tns", *tie_break, *extra]
-        w_mid = (Window.partitionBy("__pid")
-                 .orderBy(*[F.col(c) for c in order_cols]))
-        sdf = _cache.persist(
-            df.withColumn("__tns", tns)
-            .withColumn("__pid", pid)
-            .repartition(4 * n_buckets, "__pid")
-            .sortWithinPartitions(*[F.col(c) for c in order_cols])
-            .withColumn("__mid", F.row_number().over(w_mid)))
-
     w_in = (Window.partitionBy("__pid")
             .orderBy("__tns", *[F.col(c) for c in tie_break], "__mid")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     over = lambda c: c.over(w_in)  # noqa: E731
-    # ONE withColumns projection -> one WindowExec for every state col
-    stated = sdf.withColumns(
-        {f"__cs_{n}": fn(df, over) for n, fn, _ in items})
 
-    # P-row partials: each partition's state at its FINAL row
-    partials = (stated.groupBy("__pid")
-                .agg(*[F.max_by(F.col(f"__cs_{n}"), F.col("__mid"))
-                       .alias(f"__cs_{n}") for n, _, _ in items]))
-    w_prev = (Window.orderBy("__pid")
-              .rowsBetween(Window.unboundedPreceding, -1))
-    carry = partials.select(
-        "__pid",
-        *[_carry_agg(k, F.col(f"__cs_{n}")).over(w_prev)
-          .alias(f"__carry_{n}") for n, _, k in items])
+    def window(laid: DataFrame, buckets: DataFrame) -> DataFrame:
+        # ONE withColumns projection -> one WindowExec for every state col
+        return laid.withColumns(
+            {f"__cs_{n}": fn(df, over) for n, fn, _ in items})
 
-    joined = stated.join(F.broadcast(carry), "__pid", "left")
-    state = {n: _merge(k, F.col(f"__cs_{n}"), F.col(f"__carry_{n}"))
-             for n, _, k in items}
-    outs = render(state)
-    keep = data_cols + (layout_cols if keep_layout else [])
-    result = joined.select(*keep, *[c.alias(n) for n, c in outs.items()])
-    return _cache.hold(result, sdf)
+    return _engine(df, {n: k for n, _, k in items}, window, render,
+                   tie_break=tie_break, num_partitions=num_partitions,
+                   keep_layout=keep_layout)

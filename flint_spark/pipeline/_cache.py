@@ -2,7 +2,8 @@
 
 Operators persist subtrees that their returned plan reads more than
 once: MinHash signatures, SimHash tables, shingle tables, the keyless
-prefix layout, the distributed EWMA scan, DSIR scores. The caller's
+prefix engine's per-row state (running summarizers and EWMA scans),
+DSIR scores. The caller's
 first action is invisible inside the operator, so it cannot unpersist
 them itself. Instead a strong-ref LRU keeps the ``LRU_SIZE`` most
 recently built subtrees cached and unpersists the oldest one past that,

@@ -164,7 +164,7 @@ def _keyless_cum_before(df: DataFrame, tokens_col: str,
     an integral column (doc ids are); token counts merge as exact LONG
     sums, so the route is bitwise-identical to the single-window plan.
     Returns the input columns plus ``__cum_before`` (long), holding
-    the engine layout (``_cache.hold``)."""
+    the engine's persisted state (``_cache.hold``)."""
     from ..operators.prefix import keyless_cumulative
 
     dtypes = dict(df.dtypes)

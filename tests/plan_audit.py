@@ -22,9 +22,14 @@ stages (the only Python in the engine); NLJ appears only as
 broadcast-nested-loop against tiny literal probe/centroid sides.
 
 Counting is per final executed plan NODE (not the printed string, which
-repeats cached subtrees once per consumer). Subtrees behind an
-operator-internal `persist()` (MinHash signatures, SimHash table,
-filtered shingles, IVF assignment) execute their shuffles once at first
+repeats cached subtrees once per consumer). Every operator-internal
+persist that outlives its call (MinHash signatures, SimHash table,
+filtered shingles, PQ codes, the keyless prefix engine's per-row state
+for running summarizers and the EWMA scans, DSIR scores) goes through
+one policy, `pipeline._cache`: the `LRU_SIZE` most recently built
+subtrees stay cached, the oldest past that is unpersisted even if a
+live frame reads it, and an eviction costs a recompute, never a
+different result. Such subtrees execute their shuffles once at first
 materialization and appear as InMemoryTableScan afterwards, so
 pair-join queries whose heavy aggregation is cached legitimately show
 0-3 shuffles here.

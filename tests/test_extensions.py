@@ -1230,6 +1230,88 @@ def test_keyless_ema_result_survives_cache_loss_and_replanning(spark):
     assert np.abs(values(first) - exp).max() < 1e-9
 
 
+def test_keyless_ema_null_ties_match_single_group(spark):
+    """Nulls at duplicate timestamps: the distributed keyless scan
+    orders a tie group's null value LAST, as the single-group and
+    keyed scans do (pandas NaN-last, ``asc_nulls_last``), so both
+    routes return the same value on every row. Ordering nulls first
+    gave a different per-row EWMA, and a null bucket-end value broke
+    the smoothing scan's boundary step."""
+    from flint_spark.operators import ema as E
+
+    rows = [(i // 2 * 1_000_000_000,
+             None if i % 7 == 3 else float(i * 13 % 17)) for i in range(400)]
+    df = spark.createDataFrame(rows, "time long, value double")
+    kw = dict(alpha=0.1, duration_per_period="1s", convention="core")
+    for fn, out_col in [(E.ewma, "value_ewma"),
+                        (E.exponential_smoothing, "value_ema")]:
+        def values(dist):
+            got = fn(df, "value", distributed=dist, **kw).toPandas()
+            return (got.sort_values(["time", "value"], na_position="last")
+                    [out_col].to_numpy(dtype=float))
+
+        got, exp = values(True), values(False)
+        assert (np.isnan(got) == np.isnan(exp)).all(), fn.__name__
+        ok = ~np.isnan(exp)
+        assert ok.any(), fn.__name__
+        assert np.abs(got[ok] - exp[ok]).max() < 1e-9, fn.__name__
+
+
+def test_keyless_rows_summary_distributed_matches_single(spark):
+    """The ``concat`` merge kind runs: keyless ``S.rows()`` on the
+    distributed prefix engine returns the single-window plan's arrays
+    (its carry window once wrapped ``flatten`` and failed to analyze)."""
+    rows = [(i // 3, float(i % 5)) for i in range(60)]
+    df = spark.createDataFrame(rows, "time long, v double")
+
+    def run(dist):
+        out = agg_ops.add_summary_columns(df, S.rows(), distributed=dist,
+                                          tie_break=["v"])
+        return sorted((r.time, r.v, tuple(tuple(x) for x in r.rows))
+                      for r in out.collect())
+
+    got = run(True)
+    assert got == run(False)
+    assert len(got[-1][2]) == 60
+
+
+def test_keyless_prefix_engine_is_the_only_one():
+    """One keyless prefix engine: the quantile bucketing
+    (``approxQuantile``), the ``__pid`` hash layout and the carry window
+    over the P-row partials are written only in ``operators/prefix.py``,
+    and the EMA family takes no driver round trip (no collect, no
+    driver-side carry fold, no ``createDataFrame``) — a second copy of
+    the two-phase plan would drift from the engine's tie order and
+    retention again."""
+    import ast
+    import pathlib
+
+    import flint_spark
+
+    root = pathlib.Path(flint_spark.__file__).parent
+    found = set()
+    driver = {"collect", "take", "toPandas", "toLocalIterator",
+              "createDataFrame"}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else \
+                getattr(fn, "id", None)
+            pid_arg = any(isinstance(a, ast.Constant) and a.value == "__pid"
+                          for a in node.args)
+            if name == "approxQuantile" or (
+                    name in ("repartition", "orderBy") and pid_arg):
+                found.add((rel, name))
+            if rel == "operators/ema.py" and name in driver:
+                found.add((rel, name))
+    assert found == {("operators/prefix.py", "approxQuantile"),
+                     ("operators/prefix.py", "repartition"),
+                     ("operators/prefix.py", "orderBy")}, found
+
+
 @pytest.mark.parametrize("family", [
     "ewma", "summarize_windows", "cusum", "drawdown", "left_join"])
 def test_keyless_auto_routes_by_plan_stats(spark, sf_dir, family):

@@ -79,3 +79,34 @@ def test_harness_canon_unifies_none_and_nan():
         pd.testing.assert_frame_equal(
             _canon(spark_like), _canon(duck_like),
             check_dtype=False, check_exact=True, rtol=0, atol=0)
+
+
+def test_readme_gate_count_matches_registry():
+    """Every DuckDB gate count README.md states equals the number of
+    entries the harness runs (``queries()`` + ``extra_queries()``), so
+    the prose cannot drift from the registry again."""
+    import pathlib
+    import re
+
+    n = len({**entry.queries(), **entry.extra_queries()})
+    text = (pathlib.Path(entry.__file__).parent / "README.md").read_text(
+        encoding="utf-8")
+    for pattern in (r"`tests/harness\.py` runs all (\d+)",
+                    r"\*\*(\d+)/(\d+) bitwise-exact\*\*",
+                    r"DuckDB gate \((\d+) queries"):
+        found = re.findall(pattern, text)
+        assert found, pattern
+        for m in found:
+            assert {int(x) for x in ((m,) if isinstance(m, str) else m)} \
+                == {n}, (pattern, m, n)
+
+
+def test_plans_doc_header_is_generated():
+    """``docs/PLANS.md`` opens with ``plan_audit.HEADER``: the header is
+    owned by the generator, so regenerating the audit keeps it."""
+    import pathlib
+
+    from plan_audit import HEADER
+
+    doc = pathlib.Path(entry.__file__).parent / "docs" / "PLANS.md"
+    assert doc.read_text(encoding="utf-8").startswith(HEADER)
