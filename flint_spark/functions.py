@@ -3,7 +3,10 @@
 The reference routes Python UDFs through a custom Arrow batch protocol
 (``ts.flint.functions.udf``, reference ``python/ts/flint/functions.py:31-196``,
 ``dataframe.py:729-1491``). PySpark ships Arrow natively, so the whole
-machinery collapses to ``applyInPandas`` / pandas UDFs:
+machinery collapses to one complete-group ``mapInPandas`` engine,
+:func:`_grouped_map`, which also runs the keyed pandas scans
+(``ema``, ``kalman``, ``holtwinters``, ``rolling_quantile``) and the
+last-k as-of join:
 
 - ``summarize_cycles_udf`` / ``summarize_intervals_udf`` — one pandas
   DataFrame per group in, one row out;
@@ -11,7 +14,7 @@ machinery collapses to ``applyInPandas`` / pandas UDFs:
   (see ``operators.cycles.add_columns_for_cycle``);
 - ``summarize_windows_udf`` — per-row window aggregation with a pandas
   fn over interval buckets: rows replicate into the <= 3 adjacent
-  buckets they can serve, one ``applyInPandas`` per bucket slices each
+  buckets they can serve, and each (key, bucket) group slices each
   target's window as a searchsorted VIEW of the shared bucket frame.
   Memory is O(rows-per-bucket), never O(rows x window); still use
   built-in summarizers (WindowExec, O(n) frames, zero Python) wherever
@@ -52,7 +55,7 @@ def _complete_group_batches(batches, gcols: Sequence[str]):
     next, and the tail flushes at the end. Groups stay contiguous, so
     each yielded frame's group runs are its ``_group_boundaries``.
 
-    This is the engine under every custom grouped UDF here: one Arrow
+    This is the re-chunking step of :func:`_grouped_map`: one Arrow
     batch carries MANY groups, where a per-group ``applyInPandas``
     pays its ~2.7ms JVM<->Arrow round-trip PER GROUP — the 10:1
     overhead the bucket-width study measured
@@ -104,12 +107,11 @@ def _complete_group_batches(batches, gcols: Sequence[str]):
 
 def _compute_partitions(df: DataFrame) -> int:
     """Partition count for the keyed Arrow COMPUTE stages (the
-    ``repartition(key).sortWithinPartitions`` feeding every
-    ``_complete_group_batches`` consumer). Passing it explicitly
-    (REPARTITION_BY_NUM) stops AQE's byte-based coalescing from
-    folding the stage below cluster parallelism: shuffle bytes are
-    the wrong cost signal when the stage's cost is per-row Python
-    compute, not shuffle I/O — at sf0.1 the last-k as-of union
+    ``repartition(key).sortWithinPartitions`` of :func:`_grouped_map`).
+    Passing it explicitly (REPARTITION_BY_NUM) stops AQE's byte-based
+    coalescing from folding the stage below cluster parallelism: shuffle
+    bytes are the wrong cost signal when the stage's cost is per-row
+    Python compute, not shuffle I/O — at sf0.1 the last-k as-of union
     (~14 MB) coalesced to 4 tasks on 32 cores, serializing ~3 s of
     Arrow-stage work. The default scales with the cluster but is
     CAPPED at 4x defaultParallelism (r12 ADVICE): shuffle.partitions
@@ -132,56 +134,82 @@ def _compute_partitions(df: DataFrame) -> int:
     return max(dp, min(shuf, 4 * dp))
 
 
+def _grouped_map(df: DataFrame, gcols: Sequence[str], order: Sequence[str],
+                 fn: Callable[[pd.DataFrame, list], pd.DataFrame | None],
+                 schema: T.StructType) -> DataFrame:
+    """The one complete-group plan behind every keyed pandas operator:
+    hash-repartition on ``gcols`` (``_compute_partitions`` tasks; ONE
+    partition when ``gcols`` is empty), sort within partitions by
+    (``gcols``, ``order``), every column ascending with nulls last,
+    then ``mapInPandas`` over ``_complete_group_batches``. ``fn(head,
+    segs)`` receives each complete-group chunk (index reset) and its
+    group run starts with ``len(head)`` appended, and returns the
+    chunk's output frame in ``schema`` order (None emits nothing)."""
+    import numpy as np
+
+    gcols = list(gcols)
+
+    def run(batches):
+        for head in _complete_group_batches(batches, gcols):
+            head = head.reset_index(drop=True)
+            segs = _group_boundaries(np, head, gcols).tolist() + [len(head)]
+            out = fn(head, segs)
+            if out is not None:
+                yield out
+
+    parts = _compute_partitions(df) if gcols else 1
+    arranged = (df.repartition(parts, *[F.col(c) for c in gcols])
+                .sortWithinPartitions(*[F.col(c).asc_nulls_last()
+                                        for c in [*gcols, *order]]))
+    return arranged.mapInPandas(run, schema)
+
+
 def summarize_cycles_udf(df: DataFrame, fn: Callable[[pd.DataFrame], Mapping],
                          out_schema: str | T.StructType,
                          key: Sequence[str] = ()) -> DataFrame:
     """Aggregate each cycle with a pandas function returning a dict of
     scalars. Output: (time, *key, **fn outputs).
 
-    Execution: ONE hash repartition on the group columns + a
-    within-partition sort + ``mapInPandas`` over complete-group
-    chunks (``_complete_group_batches``) — at per-second cycles over
-    years of data the group count runs to millions, and a per-group
-    ``applyInPandas`` round-trip would dominate the aggregation
-    itself."""
-    import numpy as np
-
+    Execution: the complete-group engine (:func:`_grouped_map`) —
+    at per-second cycles over years of data the group count runs to
+    millions, and a per-group ``applyInPandas`` round-trip would
+    dominate the aggregation itself. Group values are taken
+    column-wise, so int64 times and keys above 2**53 stay exact."""
     key = list(key)
     if isinstance(out_schema, str):
         out_schema = T.StructType.fromDDL(out_schema)
     group_cols = [TIME_COLUMN] + key
     full = T.StructType(
         [df.schema[c] for c in group_cols] + list(out_schema.fields))
-    names = [f.name for f in full.fields]
+    value_names = out_schema.fieldNames()
 
-    def run(batches):
-        for head in _complete_group_batches(batches, group_cols):
-            head = head.reset_index(drop=True)
-            segs = _group_boundaries(np, head, group_cols).tolist() \
-                + [len(head)]
-            rows = []
-            for s0, s1 in zip(segs, segs[1:]):
-                g = head.iloc[s0:s1]
-                res = {c: g.iloc[0][c] for c in group_cols}
-                res.update(fn(g))
-                rows.append(res)
-            yield pd.DataFrame(rows, columns=names)
+    def per_cycle(head: pd.DataFrame, segs: list) -> pd.DataFrame:
+        out = head[group_cols].iloc[segs[:-1]].reset_index(drop=True)
+        vals = pd.DataFrame([fn(head.iloc[s0:s1])
+                             for s0, s1 in zip(segs, segs[1:])],
+                            columns=value_names)
+        return pd.concat([out, vals], axis=1)
 
-    arranged = (df.repartition(_compute_partitions(df),
-                               *[F.col(c) for c in group_cols])
-                .sortWithinPartitions(*group_cols))
-    return arranged.mapInPandas(run, full)
+    return _grouped_map(df, group_cols, (), per_cycle, full)
+
+
+def _interval_cycles(df: DataFrame, clock, inclusion: str,
+                     rounding: str) -> DataFrame:
+    """Rows re-timed to their clock interval's time, so each interval
+    is one cycle of the ``summarize_cycles_*`` engine."""
+    from .operators.intervals import _INTERVAL, _interval_time_col, intervalize
+
+    bucketed = intervalize(df, clock, inclusion, rounding)
+    return bucketed.withColumn(TIME_COLUMN, _interval_time_col(bucketed)) \
+                   .drop(_INTERVAL)
 
 
 def summarize_intervals_udf(df: DataFrame, clock, fn, out_schema,
                             key: Sequence[str] = (), inclusion: str = "begin",
                             rounding: str = "end") -> DataFrame:
-    from .operators.intervals import _INTERVAL, _interval_time_col, intervalize
-
-    bucketed = intervalize(df, clock, inclusion, rounding)
-    bucketed = bucketed.withColumn(TIME_COLUMN, _interval_time_col(bucketed)) \
-                       .drop(_INTERVAL)
-    return summarize_cycles_udf(bucketed, fn, out_schema, key)
+    return summarize_cycles_udf(_interval_cycles(df, clock, inclusion,
+                                                 rounding),
+                                fn, out_schema, key)
 
 
 def summarize_windows_udf(df: DataFrame, window: TimeWindow,
@@ -269,13 +297,13 @@ def _bucketed_window_apply(df: DataFrame, window: TimeWindow,
     lo_i, hi_i = int(lo), int(hi)
     gcols = [*key, "__b"]
 
-    def _emit(np, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _emit(pdf: pd.DataFrame, segs: list) -> pd.DataFrame:
         """pdf holds COMPLETE groups, sorted by (gcols, __tns)."""
-        pdf = pdf.reset_index(drop=True)
+        import numpy as np
+
         ctx = pdf[data_cols]
         t = pdf["__tns"].to_numpy(np.int64)
         tgt = pdf["__tgt"].to_numpy(bool)
-        segs = _group_boundaries(np, pdf, gcols).tolist() + [len(t)]
         res = pdf.loc[tgt, data_cols].copy()
         if segment_compute is not None:
             # double-typed outputs only (the streaming-scan users are
@@ -303,16 +331,7 @@ def _bucketed_window_apply(df: DataFrame, window: TimeWindow,
             res[name] = vals
         return res[out_cols]
 
-    def run(batches):
-        import numpy as np
-
-        for head in _complete_group_batches(batches, gcols):
-            yield _emit(np, head)
-
-    arranged = (exploded.repartition(_compute_partitions(exploded),
-                                     *[F.col(c) for c in gcols])
-                .sortWithinPartitions(*gcols, "__tns"))
-    return arranged.mapInPandas(run, out_schema)
+    return _grouped_map(exploded, gcols, ["__tns"], _emit, out_schema)
 
 
 # ----------------------------------------------------------------------
@@ -411,10 +430,9 @@ def udf(return_type=None, arg_type: str = "pandas"):
     return wrap
 
 
-def _calls_schema(group_cols, df: DataFrame,
-                  outputs: Mapping) -> tuple[T.StructType, list]:
-    """(full output schema, [(names, call)]) for a dict of UDFCalls."""
-    fields = [df.schema[c] for c in group_cols]
+def _calls_schema(outputs: Mapping) -> tuple[T.StructType, list]:
+    """(output value schema, [(names, call)]) for a dict of UDFCalls."""
+    fields = []
     norm = []
     for names, call in outputs.items():
         names = (names,) if isinstance(names, str) else tuple(names)
@@ -431,48 +449,27 @@ def summarize_cycles_calls(df: DataFrame, outputs: Mapping,
                            key: Sequence[str] = ()) -> DataFrame:
     """summarizeCycles with reference-style udf dict:
     ``{'out': my_udf(df['v']), ('a', 'b'): multi_udf(df[['v', 'w']])}``.
-    Each cycle (time, *key) group evaluates every call once; groups
-    ride many-per-Arrow-batch (``_complete_group_batches``), same
-    engine as :func:`summarize_cycles_udf`."""
-    import numpy as np
+    Each cycle (time, *key) group evaluates every call once, in the
+    per-cycle loop of :func:`summarize_cycles_udf`."""
+    schema, calls = _calls_schema(outputs)
 
-    key = list(key)
-    group_cols = [TIME_COLUMN] + key
-    full, calls = _calls_schema(group_cols, df, outputs)
-    names_all = [f.name for f in full.fields]
+    def evaluate(g: pd.DataFrame) -> dict:
+        res = {}
+        for names, call in calls:
+            out = call(g)
+            res.update(zip(names, out if isinstance(out, tuple) else (out,)))
+        return res
 
-    def run(batches):
-        for head in _complete_group_batches(batches, group_cols):
-            head = head.reset_index(drop=True)
-            segs = _group_boundaries(np, head, group_cols).tolist() \
-                + [len(head)]
-            rows = []
-            for s0, s1 in zip(segs, segs[1:]):
-                g = head.iloc[s0:s1]
-                res = {c: g.iloc[0][c] for c in group_cols}
-                for names, call in calls:
-                    out = call(g)
-                    out = out if isinstance(out, tuple) else (out,)
-                    res.update(dict(zip(names, out)))
-                rows.append(res)
-            yield pd.DataFrame(rows, columns=names_all)
-
-    arranged = (df.repartition(_compute_partitions(df),
-                               *[F.col(c) for c in group_cols])
-                .sortWithinPartitions(*group_cols))
-    return arranged.mapInPandas(run, full)
+    return summarize_cycles_udf(df, evaluate, schema, key)
 
 
 def summarize_intervals_calls(df: DataFrame, clock, outputs: Mapping,
                               key: Sequence[str] = (),
                               inclusion: str = "begin",
                               rounding: str = "end") -> DataFrame:
-    from .operators.intervals import _INTERVAL, _interval_time_col, intervalize
-
-    bucketed = intervalize(df, clock, inclusion, rounding)
-    bucketed = bucketed.withColumn(TIME_COLUMN, _interval_time_col(bucketed)) \
-                       .drop(_INTERVAL)
-    return summarize_cycles_calls(bucketed, outputs, key)
+    return summarize_cycles_calls(_interval_cycles(df, clock, inclusion,
+                                                   rounding),
+                                  outputs, key)
 
 
 def summarize_windows_calls(df: DataFrame, window: TimeWindow,
@@ -487,20 +484,11 @@ def summarize_windows_calls(df: DataFrame, window: TimeWindow,
     how many outputs, each window a searchsorted view of the shared
     bucket frame (never the O(rows x window) per-call collect_list
     arrays of the naive plan)."""
-    fields: list[T.StructField] = []
-    norm: list[tuple[tuple, tuple, "UDFCall"]] = []
-    for names, call in outputs.items():
-        names = (names,) if isinstance(names, str) else tuple(names)
-        rts = call.return_type if isinstance(call.return_type, tuple) \
-            else (call.return_type,)
-        if len(names) != len(rts):
-            raise ValueError(f"output names {names} vs return types {rts}")
-        fields.extend(T.StructField(n, t) for n, t in zip(names, rts))
-        norm.append((names, rts, call))
+    schema, norm = _calls_schema(outputs)
 
     def compute(ctx: pd.DataFrame, starts, ends) -> Mapping:
         res: dict = {}
-        for names, rts, call in norm:
+        for names, call in norm:
             vals = [call(ctx.iloc[s:e]) for s, e in zip(starts, ends)]
             if len(names) == 1:
                 res[names[0]] = vals
@@ -509,4 +497,5 @@ def summarize_windows_calls(df: DataFrame, window: TimeWindow,
                     res[n] = [v[i] for v in vals]
         return res
 
-    return _bucketed_window_apply(df, window, key, bucket, fields, compute)
+    return _bucketed_window_apply(df, window, key, bucket,
+                                  schema.fields, compute)

@@ -659,7 +659,7 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     an interval join that multiplies rows.
 
     Plan: a tagged two-side union riding the complete-group Arrow
-    batch engine (``functions._complete_group_batches``) — ONE hash
+    batch engine (``functions._grouped_map``) — ONE hash
     repartition of the union + a within-partition key sort + a single
     ``mapInPandas`` carrying MANY key groups per Arrow batch. The
     first cut of this operator cogrouped per key, which pays the
@@ -673,7 +673,7 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     import numpy as np
     import pandas as pd
 
-    from ..functions import _complete_group_batches, _group_boundaries
+    from ..functions import _grouped_map
     from ..streaming.ts_stream import _lastk_plan, _sort_time_then_values
 
     key = list(key)
@@ -715,7 +715,7 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
         *[F.col(c).alias(pref[c]) for c in rdata])
     union = u_l.unionByName(u_r)
 
-    def run(batches):
+    def last_k(head: pd.DataFrame, segs: list) -> pd.DataFrame | None:
         # Vectorized ACROSS key groups (r11, guide §4.2): the first cut
         # sliced a pandas sub-frame per group (iloc/boolean mask/copy/
         # per-group sort), ~2 ms of per-group pandas overhead that at
@@ -727,98 +727,90 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
         # never-null and the sort is stable — and a per-group loop of
         # two numpy searchsorteds over array views. Values, tie rule
         # and row order are bitwise those of the per-group form.
-        for head in _complete_group_batches(batches, key):
-            head = head.reset_index(drop=True)
-            side = head["__side"].to_numpy()
-            lmask = side == 1
-            if not lmask.any():
-                continue
-            bounds = _group_boundaries(np, head, key)
-            ngroups = len(bounds)
-            marker = np.zeros(len(head), dtype=np.int64)
-            marker[bounds] = 1
-            gid = np.cumsum(marker) - 1
-            out = head.loc[lmask, in_cols].reset_index(drop=True)
-            t = head.loc[lmask, _TNS].to_numpy(np.int64)
-            n = len(t)
-            # subset to the prefixed right columns BEFORE renaming:
-            # the frame still carries the left payload columns
-            # (typed-zero fillers on right rows), so a right data
-            # column sharing a left payload name would otherwise
-            # rename into a duplicate pandas label
-            rsub = (head.loc[~lmask,
-                             ["__rtns", *[pref[c] for c in rdata]]]
-                    .rename(columns={v: c for c, v in pref.items()}))
-            if len(rsub) == 0:
-                for c in rdata:
-                    # dtype=object even when n == 0: an empty default
-                    # assignment makes a float64 column, which Arrow
-                    # refuses to cast to list<...>
-                    out[out_names[c]] = pd.Series(
-                        [[] for _ in range(n)], index=out.index,
-                        dtype=object)
-                out["n_matched"] = np.zeros(n, dtype=np.int32)
-                yield out
-                continue
-            rsub = rsub.assign(__g=gid[~lmask])
-            # _sort_time_then_values per group == one global stable
-            # sort led by the group id (same na_position paths)
-            try:
-                rsrt = rsub.sort_values(["__g", "__rtns"] + rdata,
-                                        kind="stable",
-                                        na_position="first")
-            except TypeError:
-                # per-group fallback (r12 ADVICE): one group with an
-                # unorderable payload (mixed-type object column) must
-                # not drop the (time, values) tie rule for the CLEAN
-                # groups sharing its batch — degrade exactly like the
-                # old per-group path: only the offending group falls
-                # back to arrival order. Groups concatenate in
-                # ascending __g, reproducing the global sort's order.
-                rsrt = pd.concat([
-                    _sort_time_then_values(grp, "__rtns", rdata)
-                    for _, grp in rsub.groupby("__g", sort=True)])
-            rt_all = rsrt["__rtns"].to_numpy(np.int64)
-            rg = rsrt["__g"].to_numpy()
-            grange = np.arange(ngroups)
-            rstart = np.searchsorted(rg, grange, side="left")
-            rend = np.searchsorted(rg, grange, side="right")
-            lgid = gid[lmask]
-            lstart = np.searchsorted(lgid, grange, side="left")
-            lend = np.searchsorted(lgid, grange, side="right")
-            lo = np.empty(n, dtype=np.int64)
-            hi = np.empty(n, dtype=np.int64)
-            for g in range(ngroups):
-                ls, le = lstart[g], lend[g]
-                if ls == le:
-                    continue
-                rt = rt_all[rstart[g]:rend[g]]
-                tg = t[ls:le]
-                lo[ls:le] = rstart[g] + np.searchsorted(
-                    rt, tg - tol, side="left")
-                hi[ls:le] = rstart[g] + np.searchsorted(
-                    rt, tg, side="right")
-            # (n, k) gather in GLOBAL right coordinates: row i takes
-            # rt-indices hi-1, hi-2, ..., masked below its group's lo
-            # — the k-tail of the candidate run, reversed (the same
-            # contract as _lastk_gather in the broadcast twin)
-            idx = hi[:, None] - 1 - np.arange(k)[None, :]
-            mask = idx >= lo[:, None]
-            idx = np.clip(idx, 0, len(rt_all) - 1)
+        side = head["__side"].to_numpy()
+        lmask = side == 1
+        if not lmask.any():
+            return None
+        ngroups = len(segs) - 1
+        marker = np.zeros(len(head), dtype=np.int64)
+        marker[segs[:-1]] = 1
+        gid = np.cumsum(marker) - 1
+        out = head.loc[lmask, in_cols].reset_index(drop=True)
+        t = head.loc[lmask, _TNS].to_numpy(np.int64)
+        n = len(t)
+        # subset to the prefixed right columns BEFORE renaming:
+        # the frame still carries the left payload columns
+        # (typed-zero fillers on right rows), so a right data
+        # column sharing a left payload name would otherwise
+        # rename into a duplicate pandas label
+        rsub = (head.loc[~lmask,
+                         ["__rtns", *[pref[c] for c in rdata]]]
+                .rename(columns={v: c for c, v in pref.items()}))
+        if len(rsub) == 0:
             for c in rdata:
-                rv = rsrt[c].to_numpy()
-                picked = rv[idx]
+                # dtype=object even when n == 0: an empty default
+                # assignment makes a float64 column, which Arrow
+                # refuses to cast to list<...>
                 out[out_names[c]] = pd.Series(
-                    [picked[i][mask[i]].tolist() for i in range(n)],
-                    index=out.index, dtype=object)
-            out["n_matched"] = mask.sum(axis=1).astype(np.int32)
-            yield out
+                    [[] for _ in range(n)], index=out.index,
+                    dtype=object)
+            out["n_matched"] = np.zeros(n, dtype=np.int32)
+            return out
+        rsub = rsub.assign(__g=gid[~lmask])
+        # _sort_time_then_values per group == one global stable
+        # sort led by the group id (same na_position paths)
+        try:
+            rsrt = rsub.sort_values(["__g", "__rtns"] + rdata,
+                                    kind="stable",
+                                    na_position="first")
+        except TypeError:
+            # per-group fallback: one group with an
+            # unorderable payload (mixed-type object column) must
+            # not drop the (time, values) tie rule for the CLEAN
+            # groups sharing its batch — degrade exactly like the
+            # old per-group path: only the offending group falls
+            # back to arrival order. Groups concatenate in
+            # ascending __g, reproducing the global sort's order.
+            rsrt = pd.concat([
+                _sort_time_then_values(grp, "__rtns", rdata)
+                for _, grp in rsub.groupby("__g", sort=True)])
+        rt_all = rsrt["__rtns"].to_numpy(np.int64)
+        rg = rsrt["__g"].to_numpy()
+        grange = np.arange(ngroups)
+        rstart = np.searchsorted(rg, grange, side="left")
+        rend = np.searchsorted(rg, grange, side="right")
+        lgid = gid[lmask]
+        lstart = np.searchsorted(lgid, grange, side="left")
+        lend = np.searchsorted(lgid, grange, side="right")
+        lo = np.empty(n, dtype=np.int64)
+        hi = np.empty(n, dtype=np.int64)
+        for g in range(ngroups):
+            ls, le = lstart[g], lend[g]
+            if ls == le:
+                continue
+            rt = rt_all[rstart[g]:rend[g]]
+            tg = t[ls:le]
+            lo[ls:le] = rstart[g] + np.searchsorted(
+                rt, tg - tol, side="left")
+            hi[ls:le] = rstart[g] + np.searchsorted(
+                rt, tg, side="right")
+        # (n, k) gather in GLOBAL right coordinates: row i takes
+        # rt-indices hi-1, hi-2, ..., masked below its group's lo
+        # — the k-tail of the candidate run, reversed (the same
+        # contract as _lastk_gather in the broadcast twin)
+        idx = hi[:, None] - 1 - np.arange(k)[None, :]
+        mask = idx >= lo[:, None]
+        idx = np.clip(idx, 0, len(rt_all) - 1)
+        for c in rdata:
+            rv = rsrt[c].to_numpy()
+            picked = rv[idx]
+            out[out_names[c]] = pd.Series(
+                [picked[i][mask[i]].tolist() for i in range(n)],
+                index=out.index, dtype=object)
+        out["n_matched"] = mask.sum(axis=1).astype(np.int32)
+        return out
 
-    from ..functions import _compute_partitions
-    arranged = (union.repartition(_compute_partitions(union),
-                                  *[F.col(c) for c in key])
-                .sortWithinPartitions(*key))
-    return arranged.mapInPandas(run, out_schema)
+    return _grouped_map(union, key, (), last_k, out_schema)
 
 
 def left_join_topk_broadcast(left: DataFrame, right: DataFrame, k: int,

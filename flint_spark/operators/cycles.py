@@ -52,8 +52,8 @@ def add_columns_for_cycle(
       ``F.percent_rank()`` or any expression of window aggregates);
       rank-like functions order by ``order_by`` when given, else by an
       arbitrary (input-order) row id;
-    - a pandas callable ``pdf -> pd.Series`` applied per cycle via
-      ``applyInPandas`` (cardinality-preserving).
+    - a pandas callable ``pdf -> pd.Series`` applied per cycle on the
+      complete-group engine (cardinality-preserving).
     """
     key = list(key)
     w = Window.partitionBy(TIME_COLUMN, *key)
@@ -82,34 +82,21 @@ def add_columns_for_cycle(
                             [T.StructField(n, out_type(f))
                              for n, f in pandas_items])
         names = [f.name for f in full.fields]
-        group_cols = [TIME_COLUMN] + key
 
-        # many cycles per Arrow batch (functions._complete_group_batches)
-        # instead of one applyInPandas round-trip per cycle — see the
+        # many cycles per Arrow batch (functions._grouped_map) instead
+        # of one applyInPandas round-trip per cycle — see the
         # grouped-UDF engine note in docs/BENCH_NOTES.md
-        def run(batches):
-            import numpy as np
+        def per_cycle(head: pd.DataFrame, segs: list) -> pd.DataFrame:
+            frames = []
+            for s0, s1 in zip(segs, segs[1:]):
+                g = head.iloc[s0:s1].copy()
+                for n, f in pandas_items:
+                    g[n] = f(g)
+                frames.append(g)
+            return pd.concat(frames, ignore_index=True)[names]
 
-            from ..functions import (_complete_group_batches,
-                                     _group_boundaries)
-
-            for head in _complete_group_batches(batches, group_cols):
-                head = head.reset_index(drop=True)
-                segs = _group_boundaries(np, head, group_cols).tolist() \
-                    + [len(head)]
-                frames = []
-                for s0, s1 in zip(segs, segs[1:]):
-                    g = head.iloc[s0:s1].copy()
-                    for n, f in pandas_items:
-                        g[n] = f(g)
-                    frames.append(g)
-                yield pd.concat(frames, ignore_index=True)[names]
-
-        from ..functions import _compute_partitions
-        arranged = (out.repartition(_compute_partitions(out),
-                                    *[F.col(c) for c in group_cols])
-                    .sortWithinPartitions(*group_cols))
-        out = arranged.mapInPandas(run, full)
+        from ..functions import _grouped_map
+        out = _grouped_map(out, [TIME_COLUMN] + key, (), per_cycle, full)
     return out
 
 

@@ -4,9 +4,10 @@ These are the reference's only genuinely order-dependent, non-commutative
 summarizers (reference ``Summarizers.scala:445-663``,
 ``rdd/.../ExponentialSmoothingSummarizer.scala``,
 ``subtractable/ExponentialWeightedMovingAverageSummarizer.scala``,
-math in ``doc/ema.md``). They cannot be a hash aggregate, so they run as
-Arrow-batched ``applyInPandas`` per key group with an O(n) *vectorized*
-affine scan (no Python-level row loop):
+math in ``doc/ema.md``). They cannot be a hash aggregate, so they run on
+the complete-group Arrow engine (``functions._grouped_map``), many key
+groups per batch, with an O(n) *vectorized* affine scan per group (no
+Python-level row loop):
 
     E_i = d_i * E_{i-1} + c_i
 
@@ -15,16 +16,16 @@ with ``T = cumsum(-ln d)``, renormalized in blocks of bounded exponent
 range so arbitrarily long series never overflow/underflow — the same
 O(n) complexity contract as the reference's streaming implementation.
 
-Scale note: one shuffle on the key; each key group must fit in one
-Arrow batch stream (pandas grouped-map). Keyless series do NOT fall
-into a single group: they run on the distributed keyless prefix engine
-(``operators/prefix.py``) with the scan as its per-bucket state step and
-the affine map as its merge kind (value-derived time buckets, per-bucket
-affine-scan partials, a carry window over the P partials, a broadcast
-join applies the carry-in per row) — the reference's distributed
-prefix-aggregation pattern
-(``rdd/function/summarize/Summarizations.scala:51-122``) expressed as
-Catalyst + one mapInPandas pass.
+Scale note: one shuffle on the key; each key group is one pandas frame
+in memory. Keyless series above the single-task budget
+(``_route.keyless_distributed``) do NOT fall into a single group: they
+run on the distributed keyless prefix engine (``operators/prefix.py``)
+with the scan as its per-bucket state step and the affine map as its
+merge kind (value-derived time buckets, per-bucket affine-scan partials,
+a carry window over the P partials, a broadcast join applies the
+carry-in per row) — the reference's distributed prefix-aggregation
+pattern (``rdd/function/summarize/Summarizations.scala:51-122``)
+expressed as Catalyst + one mapInPandas pass.
 """
 
 from __future__ import annotations
@@ -188,75 +189,42 @@ def _scan_values(coeff_fn, divide: bool):
 
 def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
                    fn, tie_break: Sequence[str] = ()) -> DataFrame:
-    """Keyed (or, for tests, single-group) Arrow grouped-map scan.
+    """Per-key (or, keyless, single-partition) scan on the
+    complete-group engine (``functions._grouped_map``): many key
+    groups per Arrow batch, each scanned over numpy slices in the
+    (time, value, ``tie_break``) order, nulls last, which Spark's
+    within-partition sort sets.
 
     ``out_name`` may be one name (``fn`` returns one array) or a list
     of names (``fn`` returns a matching tuple of arrays — the
     Holt-Winters / multi-output form). ``tie_break`` appends extra
     sort columns AFTER the family's (time, value) tie rule for callers
     whose oracle pins duplicate (time, value) rows to a specific id."""
+    from ..functions import _grouped_map
+
     key = list(key)
     names = [out_name] if isinstance(out_name, str) else list(out_name)
     multi = not isinstance(out_name, str)
-    tie = list(tie_break)
     with_ns = df.withColumn("__tns", time_ns_expr(df))
     schema = T.StructType(list(df.schema.fields) +
                           [T.StructField(n, T.DoubleType()) for n in names])
     in_cols = list(df.columns)
 
-    def outputs(t, x):
-        vals = fn(t, x)
-        return vals if multi else (vals,)
+    def scan(head: pd.DataFrame, segs: list) -> pd.DataFrame:
+        t_all = head["__tns"].to_numpy(np.int64)
+        x_all = head[column].to_numpy(np.float64)
+        outv = [np.empty(len(head), dtype=np.float64) for _ in names]
+        for s0, s1 in zip(segs, segs[1:]):
+            vals = fn(t_all[s0:s1], x_all[s0:s1])
+            for o, v in zip(outv, vals if multi else (vals,)):
+                o[s0:s1] = v
+        res = head[in_cols].copy()
+        for n, o in zip(names, outv):
+            res[n] = o
+        return res
 
-    def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        # (time, value) tie order: same max-struct rule as the keyless
-        # distributed scan, so both paths are layout-independent and agree
-        # bitwise on inputs with duplicate timestamps.
-        pdf = pdf.sort_values(["__tns", column, *tie], kind="stable")
-        t = pdf["__tns"].to_numpy(dtype=np.int64)
-        x = pdf[column].to_numpy(dtype=np.float64)
-        for n, v in zip(names, outputs(t, x)):
-            pdf[n] = v
-        return pdf[in_cols + names]
-
-    if key:
-        # many key groups per Arrow batch (functions.
-        # _complete_group_batches) — a per-group applyInPandas pays its
-        # ~2.7ms JVM<->Arrow round-trip PER KEY, which at 10^5-10^6
-        # instruments would dominate the vectorized scans themselves.
-        # The (time, value) tie sort runs IN SPARK (asc_nulls_last ==
-        # pandas sort_values NaN placement, so results are bitwise
-        # identical to the old per-group sort), leaving pure numpy per
-        # group: slice, scan, write into one preallocated column.
-        from ..functions import _complete_group_batches, _group_boundaries
-
-        def run(batches):
-            for head in _complete_group_batches(batches, key):
-                head = head.reset_index(drop=True)
-                t_all = head["__tns"].to_numpy(np.int64)
-                x_all = head[column].to_numpy(np.float64)
-                outv = [np.empty(len(head), dtype=np.float64)
-                        for _ in names]
-                segs = _group_boundaries(np, head, key).tolist() \
-                    + [len(head)]
-                for s0, s1 in zip(segs, segs[1:]):
-                    for o, v in zip(outv,
-                                    outputs(t_all[s0:s1], x_all[s0:s1])):
-                        o[s0:s1] = v
-                res = head[in_cols].copy()
-                for n, o in zip(names, outv):
-                    res[n] = o
-                yield res
-
-        from ..functions import _compute_partitions
-        arranged = (with_ns.repartition(_compute_partitions(with_ns),
-                                        *[F.col(k) for k in key])
-                    .sortWithinPartitions(
-                        *key, F.col("__tns").asc_nulls_last(),
-                        F.col(column).asc_nulls_last(),
-                        *[F.col(c).asc_nulls_last() for c in tie]))
-        return arranged.mapInPandas(run, schema)
-    return with_ns.groupBy().applyInPandas(compute, schema)
+    return _grouped_map(with_ns, key, ["__tns", column, *tie_break], scan,
+                        schema)
 
 
 def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
@@ -344,15 +312,13 @@ def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
 
 def _apply(df: DataFrame, column: str, out_name: str, key: Sequence[str],
            coeff_fn, divide: bool, distributed: bool | None = None) -> DataFrame:
-    if list(key):
-        return _apply_per_key(df, column, out_name, key,
-                              _scan_values(coeff_fn, divide))
-    # small inputs run as one Arrow group, cheaper than the distributed
-    # prefix scan; unknown stats always take the distributed path
-    if _route.keyless_distributed(lambda: _route.estimated_bytes(df),
-                                  distributed):
+    # small keyless inputs run as one Arrow group, cheaper than the
+    # distributed prefix scan; unknown stats always take the
+    # distributed path
+    if not list(key) and _route.keyless_distributed(
+            lambda: _route.estimated_bytes(df), distributed):
         return _keyless_scan(df, column, out_name, coeff_fn, divide)
-    return _apply_per_key(df, column, out_name, (),
+    return _apply_per_key(df, column, out_name, key,
                           _scan_values(coeff_fn, divide))
 
 

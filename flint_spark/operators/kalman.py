@@ -13,12 +13,13 @@ gaps (long gap -> more diffusion -> higher gain) and to the filter's
 own transient (early rows trust observations more).
 
 Engine notes: the gain/variance recursion is a scalar per-row loop
-(rational in P — no closed form), so the per-key scan runs on the
-shared complete-group Arrow engine (`ema._apply_per_key`): one keyed
-exchange, many keys per Arrow batch, no per-group round-trips. The
-recursion itself is NOT SQL-expressible as window algebra, but it IS
-exactly replayable as a DuckDB ``WITH RECURSIVE`` CTE stepping
-row-by-row — which is how the oracle gate checks it.
+(rational in P — no closed form), so the per-key scan runs on the shared
+complete-group Arrow engine (`functions._grouped_map`, through
+`ema._apply_per_key`): one keyed exchange, many keys per Arrow batch, no
+per-group round-trips. The recursion itself is NOT SQL-expressible as
+window algebra, but it IS exactly replayable as a DuckDB ``WITH
+RECURSIVE`` CTE stepping row-by-row — which is how the oracle gate
+checks it.
 
 Null policy (EWMA-family contract): a null/NaN observation scores null
 and leaves the state untouched; diffusion is measured from the last

@@ -1344,7 +1344,7 @@ def test_keyless_auto_routes_by_plan_stats(spark, sf_dir, family):
     assert marker not in _opt_plan(run(ev))
     if family == "ewma":
         plan = E.ewma(ev, "value")._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" in plan
+        assert "SinglePartition" in plan  # the one-group Arrow engine
 
     # hourly rows over ~6 weeks: enough time buckets for the bucketed
     # routes not to fall back
