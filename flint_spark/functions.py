@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .timeseries import TIME_COLUMN
+from .timeseries import TIME_COLUMN, row_order
 from .windows import TimeWindow
 
 
@@ -134,13 +134,14 @@ def _compute_partitions(df: DataFrame) -> int:
     return max(dp, min(shuf, 4 * dp))
 
 
-def _grouped_map(df: DataFrame, gcols: Sequence[str], order: Sequence[str],
+def _grouped_map(df: DataFrame, gcols: Sequence[str], time: str,
                  fn: Callable[[pd.DataFrame, list], pd.DataFrame | None],
-                 schema: T.StructType) -> DataFrame:
+                 schema: T.StructType, tie_break: Sequence[str] = (),
+                 values: Sequence[str] = ()) -> DataFrame:
     """The one complete-group plan behind every keyed pandas operator:
     hash-repartition on ``gcols`` (``_compute_partitions`` tasks; ONE
     partition when ``gcols`` is empty), sort within partitions by
-    (``gcols``, ``order``), every column ascending with nulls last,
+    ``gcols`` then ``timeseries.row_order(time, tie_break, values)``,
     then ``mapInPandas`` over ``_complete_group_batches``. ``fn(head,
     segs)`` receives each complete-group chunk (index reset) and its
     group run starts with ``len(head)`` appended, and returns the
@@ -158,9 +159,9 @@ def _grouped_map(df: DataFrame, gcols: Sequence[str], order: Sequence[str],
                 yield out
 
     parts = _compute_partitions(df) if gcols else 1
+    order = row_order(df, time, tie_break, values, skip=gcols)
     arranged = (df.repartition(parts, *[F.col(c) for c in gcols])
-                .sortWithinPartitions(*[F.col(c).asc_nulls_last()
-                                        for c in [*gcols, *order]]))
+                .sortWithinPartitions(*[F.col(c) for c in gcols], *order))
     return arranged.mapInPandas(run, schema)
 
 
@@ -190,7 +191,7 @@ def summarize_cycles_udf(df: DataFrame, fn: Callable[[pd.DataFrame], Mapping],
                             columns=value_names)
         return pd.concat([out, vals], axis=1)
 
-    return _grouped_map(df, group_cols, (), per_cycle, full)
+    return _grouped_map(df, group_cols, TIME_COLUMN, per_cycle, full)
 
 
 def _interval_cycles(df: DataFrame, clock, inclusion: str,
@@ -298,7 +299,7 @@ def _bucketed_window_apply(df: DataFrame, window: TimeWindow,
     gcols = [*key, "__b"]
 
     def _emit(pdf: pd.DataFrame, segs: list) -> pd.DataFrame:
-        """pdf holds COMPLETE groups, sorted by (gcols, __tns)."""
+        """pdf holds COMPLETE groups, sorted by gcols then row order."""
         import numpy as np
 
         ctx = pdf[data_cols]
@@ -331,7 +332,7 @@ def _bucketed_window_apply(df: DataFrame, window: TimeWindow,
             res[name] = vals
         return res[out_cols]
 
-    return _grouped_map(exploded, gcols, ["__tns"], _emit, out_schema)
+    return _grouped_map(exploded, gcols, "__tns", _emit, out_schema)
 
 
 # ----------------------------------------------------------------------

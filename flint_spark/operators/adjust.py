@@ -52,9 +52,10 @@ def back_adjust(prices: DataFrame, actions: DataFrame,
     per_instant = (actions
                    .groupBy(*key, TIME_COLUMN)
                    .agg(F.product(factor_col).alias("__f")))
+    # (key, time) is unique per instant, so the range frame has no ties
     w = (Window.partitionBy(*key)
          .orderBy(F.col(TIME_COLUMN).desc())
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+         .rangeBetween(Window.unboundedPreceding, Window.currentRow))
     sfx = per_instant.select(
         TIME_COLUMN, *key, F.product("__f").over(w).alias("__adj"))
     joined = asof.future_left_join(prices, sfx, tolerance=tolerance,

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..summarizers import Summarizer
-from ..timeseries import TIME_COLUMN, ns_to_time_expr, time_ns_expr
+from ..timeseries import TIME_COLUMN, ns_to_time_expr, row_order
 from . import _route
 
 
@@ -60,10 +60,11 @@ def add_summary_columns(df: DataFrame, summarizer: Summarizer,
                         key: Sequence[str] = (),
                         distributed: bool | None = None,
                         tie_break: Sequence[str] = ()) -> DataFrame:
-    """Cumulative aggregate ordered by time; stable tie-break by
-    ``tie_break`` columns then an input-order row id within equal
-    timestamps (reference processes rows in partition order at equal
-    times, ``Summarizations.scala:51-122``).
+    """Cumulative aggregate in the engine's row order (time,
+    ``tie_break``, the other columns; ``timeseries.row_order``) where
+    the reference reads equal times in partition order
+    (``Summarizations.scala:51-122``), so every layout and both
+    keyless routes give the same rows.
 
     KEYED input is one window exchange on the key — already
     distributed. KEYLESS input auto-routes through the two-phase
@@ -85,8 +86,7 @@ def add_summary_columns(df: DataFrame, summarizer: Summarizer,
             return _keyless_distributed_cumulative(df, summarizer, tie_break)
     w = (
         Window.partitionBy(*key)
-        .orderBy(time_ns_expr(df), *[F.col(c) for c in tie_break],
-                 F.monotonically_increasing_id())
+        .orderBy(*row_order(df, tie_break=tie_break, skip=key))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumns(dict(summarizer.over_exprs(df, w)))

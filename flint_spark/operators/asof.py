@@ -651,10 +651,10 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     per direction (``LeftJoin.scala``/``FutureLeftJoin.scala``).
 
     Candidate order extends the engine's as-of tie rule: rights sort
-    by (time, values) ascending (the shared
-    ``_sort_time_then_values``), and the array is that order's tail
-    reversed — so at equal timestamps the max-struct row ranks first,
-    matching what ``left_join`` would have picked as THE match.
+    by the engine's row order (time, values; ``timeseries.row_order``),
+    and the array is that order's tail reversed — so at equal
+    timestamps the max-struct row ranks first, matching what
+    ``left_join`` would have picked as THE match.
     Cardinality-preserving (unmatched rows keep empty arrays), unlike
     an interval join that multiplies rows.
 
@@ -674,7 +674,7 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     import pandas as pd
 
     from ..functions import _grouped_map
-    from ..streaming.ts_stream import _lastk_plan, _sort_time_then_values
+    from ..streaming.ts_stream import _lastk_plan
 
     key = list(key)
     if not key:
@@ -716,17 +716,11 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     union = u_l.unionByName(u_r)
 
     def last_k(head: pd.DataFrame, segs: list) -> pd.DataFrame | None:
-        # Vectorized ACROSS key groups (r11, guide §4.2): the first cut
-        # sliced a pandas sub-frame per group (iloc/boolean mask/copy/
-        # per-group sort), ~2 ms of per-group pandas overhead that at
-        # 1.5k keys cost ~3 s where the actual searchsorted+gather math
-        # is milliseconds. Now: ONE left/right split per head, ONE
-        # stable sort of all right rows keyed by (group, time, values)
-        # — per-group order identical to the old per-group
-        # _sort_time_then_values because the leading group key is
-        # never-null and the sort is stable — and a per-group loop of
-        # two numpy searchsorteds over array views. Values, tie rule
-        # and row order are bitwise those of the per-group form.
+        # Vectorized ACROSS key groups (r11): ONE left/right split per
+        # head — the engine's sort already put each group's right rows
+        # in row order — and a per-group loop of two numpy
+        # searchsorteds over array views (a pandas sub-frame per group
+        # cost ~2 ms each, ~3 s at 1.5k keys).
         side = head["__side"].to_numpy()
         lmask = side == 1
         if not lmask.any():
@@ -738,15 +732,8 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
         out = head.loc[lmask, in_cols].reset_index(drop=True)
         t = head.loc[lmask, _TNS].to_numpy(np.int64)
         n = len(t)
-        # subset to the prefixed right columns BEFORE renaming:
-        # the frame still carries the left payload columns
-        # (typed-zero fillers on right rows), so a right data
-        # column sharing a left payload name would otherwise
-        # rename into a duplicate pandas label
-        rsub = (head.loc[~lmask,
-                         ["__rtns", *[pref[c] for c in rdata]]]
-                .rename(columns={v: c for c, v in pref.items()}))
-        if len(rsub) == 0:
+        rsrt = head.loc[~lmask]
+        if len(rsrt) == 0:
             for c in rdata:
                 # dtype=object even when n == 0: an empty default
                 # assignment makes a float64 column, which Arrow
@@ -756,26 +743,8 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
                     dtype=object)
             out["n_matched"] = np.zeros(n, dtype=np.int32)
             return out
-        rsub = rsub.assign(__g=gid[~lmask])
-        # _sort_time_then_values per group == one global stable
-        # sort led by the group id (same na_position paths)
-        try:
-            rsrt = rsub.sort_values(["__g", "__rtns"] + rdata,
-                                    kind="stable",
-                                    na_position="first")
-        except TypeError:
-            # per-group fallback: one group with an
-            # unorderable payload (mixed-type object column) must
-            # not drop the (time, values) tie rule for the CLEAN
-            # groups sharing its batch — degrade exactly like the
-            # old per-group path: only the offending group falls
-            # back to arrival order. Groups concatenate in
-            # ascending __g, reproducing the global sort's order.
-            rsrt = pd.concat([
-                _sort_time_then_values(grp, "__rtns", rdata)
-                for _, grp in rsub.groupby("__g", sort=True)])
         rt_all = rsrt["__rtns"].to_numpy(np.int64)
-        rg = rsrt["__g"].to_numpy()
+        rg = gid[~lmask]
         grange = np.arange(ngroups)
         rstart = np.searchsorted(rg, grange, side="left")
         rend = np.searchsorted(rg, grange, side="right")
@@ -802,7 +771,7 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
         mask = idx >= lo[:, None]
         idx = np.clip(idx, 0, len(rt_all) - 1)
         for c in rdata:
-            rv = rsrt[c].to_numpy()
+            rv = rsrt[pref[c]].to_numpy()
             picked = rv[idx]
             out[out_names[c]] = pd.Series(
                 [picked[i][mask[i]].tolist() for i in range(n)],
@@ -810,7 +779,8 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
         out["n_matched"] = mask.sum(axis=1).astype(np.int32)
         return out
 
-    return _grouped_map(union, key, (), last_k, out_schema)
+    return _grouped_map(union, key, "__rtns", last_k, out_schema,
+                        values=list(pref.values()))
 
 
 def left_join_topk_broadcast(left: DataFrame, right: DataFrame, k: int,

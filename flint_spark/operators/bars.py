@@ -11,8 +11,9 @@ quantile or OLS.
 Scale design (100 TB posture):
 
 - ``ohlc_bars`` without TWAP is ONE partial+final hash aggregation —
-  open/close ride ``min_by``/``max_by`` over a deterministic
-  (time, tie_break..., price) order struct, so every bar column is a
+  open/close ride ``min_by``/``max_by`` over the engine's row order
+  as a struct (``timeseries.row_order``: time, tie_break..., price,
+  other columns), so every bar column is a
   mergeable monoid and the map side pre-aggregates before the single
   shuffle.
 - With TWAP the holding-interval ``lead`` window partitions by
@@ -33,7 +34,7 @@ Conventions (documented, oracle-pinned):
 - Rows with a null price are dropped before bar math (a tick without
   a price is not a trade); null volumes count 0 toward volume/VWAP.
 - TWAP holds each tick's price from its timestamp to the next tick
-  in the SAME bucket (ties broken by ``tie_break`` then price), the
+  in the SAME bucket (ties broken by the row order), the
   last tick holding to bucket end. Equal-timestamp ties give the
   earlier-ordered tick zero holding weight.
 - ``max_drawdown`` is ``max((peak - v) / peak)`` over the running
@@ -49,16 +50,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..timeseries import (TIME_COLUMN, floor_div, ns_to_time_expr,
-                          parse_duration_ns, time_ns_expr)
+                          parse_duration_ns, row_order, time_ns_expr)
 from . import _route
 
 _BUCKET = "__bar_bucket"
 _HOLD = "__bar_hold"
-
-
-def _order_struct(tns: Column, tie_break: Sequence[str],
-                  price: Column) -> Column:
-    return F.struct(tns, *[F.col(c) for c in tie_break], price)
 
 
 def bar_aggs(price: Column, ord_: Column,
@@ -98,15 +94,15 @@ def ohlc_bars(df: DataFrame, interval: str | int, price_col: str,
     tns = time_ns_expr(df)
     base = (df.filter(price.isNotNull())
               .withColumn(_BUCKET, floor_div(tns, width) * F.lit(width)))
-    aggs = bar_aggs(price, _order_struct(time_ns_expr(base), tie_break, price),
-                    volume_col)
+    ord_ = F.struct(*row_order(base, tie_break=tie_break,
+                               values=[price_col], skip=key))
+    aggs = bar_aggs(price, ord_, volume_col)
     if twap:
         # holding weight: next tick in the SAME bucket (or bucket end).
         # Equivalent to a global next-tick clipped to bucket end, but
         # partitions by (key, bucket) so the window is bounded and the
         # bar aggregation reuses its exchange.
-        w = Window.partitionBy(*key, _BUCKET).orderBy(
-            _order_struct(time_ns_expr(base), tie_break, price))
+        w = Window.partitionBy(*key, _BUCKET).orderBy(ord_)
         nxt = F.coalesce(F.lead(time_ns_expr(base)).over(w),
                          F.col(_BUCKET) + F.lit(width))
         base = base.withColumn(_HOLD, (nxt - time_ns_expr(base)).cast("double"))
@@ -141,10 +137,10 @@ def drawdown(df: DataFrame, value_col: str, key: Sequence[str] = (),
 
         return keyless_cumulative(
             df, [("peak", lambda d, o: o(F.max(F.col(value_col))), "max")],
-            render, tie_break=tie_break)
-    tns = time_ns_expr(df)
+            render, tie_break=[*tie_break, value_col])
     w = (Window.partitionBy(*key)
-               .orderBy(tns, *[F.col(c) for c in tie_break])
+               .orderBy(*row_order(df, tie_break=tie_break,
+                                   values=[value_col], skip=key))
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     peak = F.max(F.col(value_col)).over(w)
     dd = F.when(peak > 0, (peak - F.col(value_col)) / peak)
@@ -242,8 +238,8 @@ def realized_volatility(df: DataFrame, interval: str | int,
     # twin, which drops the NaN returns)
     base = df.filter(price.isNotNull() & (price > 0)
                      & ~F.isnan(price.cast("double")))
-    w = Window.partitionBy(*key).orderBy(
-        _order_struct(time_ns_expr(base), tie_break, price))
+    w = Window.partitionBy(*key).orderBy(F.struct(*row_order(
+        base, tie_break=tie_break, values=[price_col], skip=key)))
     r = F.log(price / F.lag(price).over(w))
     base = (base.withColumn("__r", r)
             .withColumn(_BUCKET,
@@ -299,15 +295,15 @@ def volume_bars(df: DataFrame, threshold: float, price_col: str,
     window's HashPartitioning — one data exchange total (the
     merge_intervals partitioning-reuse recipe). The exclusive prefix
     sum (``sum - current``) makes the FIRST row of every key open bar
-    0 regardless of its own volume, and both engines fold the same
-    (time, tie_break, price) order left-to-right, so bar boundaries
-    replay bitwise. Null prices are dropped (not trades); null
+    0 regardless of its own volume, and both engines fold the engine's
+    row order (time, tie_break, price, ...) left-to-right, so bar
+    boundaries replay bitwise. Null prices are dropped (not trades); null
     volumes count 0 but the tick still lands in a bar. ``time`` is
     the bar's first tick time. KEYLESS input auto-routes the running
     volume sum through the distributed prefix engine (``distributed``
-    as in ``left_join``) — same (time, tie_break, price) ORDER, but
-    the engine merges per-partition float partial sums, so the
-    association of float addition differs from the single window's
+    as in ``left_join``) — same row order, but the engine merges
+    per-partition float partial sums, so the association of float
+    addition differs from the single window's
     strict left fold: route identity is exact only when the volume
     sums are exactly representable (integer-valued volumes — the
     oracle gate's shape); a cumulative float volume within an ulp of
@@ -321,7 +317,7 @@ def volume_bars(df: DataFrame, threshold: float, price_col: str,
     price = F.col(price_col)
     base = df.filter(price.isNotNull())
     tns = time_ns_expr(base)
-    ord_ = _order_struct(tns, tie_break, price)
+    ord_ = F.struct(*row_order(base, tns, tie_break, [price_col], skip=key))
     vol = F.coalesce(F.col(volume_col).cast("double"), F.lit(0.0))
     if not key and _route.keyless_distributed(
             lambda: _route.estimated_bytes(base), distributed):

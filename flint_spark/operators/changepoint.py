@@ -28,7 +28,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..timeseries import time_ns_expr
+from ..timeseries import row_order
 from . import _route
 
 __all__ = ["cusum"]
@@ -65,7 +65,7 @@ def _cusum_keyless_distributed(df: DataFrame, column: str, k: float,
         [("cup", lambda d, o: o(F.sum(up_step)), "sum"),
          ("cdn", lambda d, o: o(F.sum(dn_step)), "sum")],
         lambda st: {"__cz": z, "__cup": st["cup"], "__cdn": st["cdn"]},
-        tie_break=tie_break, keep_layout=True)
+        tie_break=[*tie_break, column], keep_layout=True)
 
     cup, cdn = F.col("__cup"), F.col("__cdn")
 
@@ -84,7 +84,7 @@ def _cusum_keyless_distributed(df: DataFrame, column: str, k: float,
         p1,
         [("mup", lambda d, o: o(F.min(cup)), "min"),
          ("mdn", lambda d, o: o(F.min(cdn)), "min")],
-        render, tie_break=tie_break)
+        render, tie_break=[*tie_break, column])
 
 
 def cusum(df: DataFrame, column: str, k: float = 0.5, h: float = 5.0,
@@ -110,8 +110,8 @@ def cusum(df: DataFrame, column: str, k: float = 0.5, h: float = 5.0,
     see the future). Keys whose sigma is null/zero yield null scores.
 
     ``k`` is the slack and ``h`` the alarm threshold, both in sigma
-    units (textbook defaults 0.5 / 5). ``tie_break`` columns make the
-    scan order deterministic under equal timestamps.
+    units (textbook defaults 0.5 / 5). Rows scan in the engine's row
+    order (time, ``tie_break``, the value, the other columns).
 
     KEYLESS input auto-routes through the distributed prefix engine
     (``distributed`` as in ``left_join``): both prefix sums run as one
@@ -134,7 +134,8 @@ def cusum(df: DataFrame, column: str, k: float = 0.5, h: float = 5.0,
         return _cusum_keyless_distributed(df, column, k, h, mu, sigma,
                                           tie_break)
     keyc = [F.col(c) for c in key]
-    order = [time_ns_expr(df)] + [F.col(c) for c in tie_break]
+    # one order list for every window below, so Catalyst keeps one Sort
+    order = row_order(df, tie_break=tie_break, values=[column], skip=key)
     w_run = (Window.partitionBy(*keyc).orderBy(*order)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
@@ -177,13 +178,9 @@ def cusum(df: DataFrame, column: str, k: float = 0.5, h: float = 5.0,
         "__cdn": F.sum(dn_step).over(w_run),
     })
     # stage 2: running min of the prefix sums (same sort, no exchange)
-    w_run2 = (Window.partitionBy(*keyc)
-              .orderBy(*([time_ns_expr(df1)] +
-                         [F.col(c) for c in tie_break]))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     cup, cdn = F.col("__cup"), F.col("__cdn")
-    s_pos = cup - F.least(F.lit(0.0), F.min(cup).over(w_run2))
-    s_neg = cdn - F.least(F.lit(0.0), F.min(cdn).over(w_run2))
+    s_pos = cup - F.least(F.lit(0.0), F.min(cup).over(w_run))
+    s_neg = cdn - F.least(F.lit(0.0), F.min(cdn).over(w_run))
     z_out = F.col("__cz")
     guard = z_out.isNotNull()  # null value or degenerate sigma
     return (df1

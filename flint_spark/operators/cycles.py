@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..summarizers import Summarizer
-from ..timeseries import TIME_COLUMN
+from ..timeseries import TIME_COLUMN, row_order
 from ..session import ansi_guard
 
 
@@ -50,15 +50,14 @@ def add_columns_for_cycle(
     - a Column expression using rank-like window functions — evaluated
       over ``Window.partitionBy(time, *key)`` (pass e.g.
       ``F.percent_rank()`` or any expression of window aggregates);
-      rank-like functions order by ``order_by`` when given, else by an
-      arbitrary (input-order) row id;
+      rank-like functions order by ``order_by`` when given, else by
+      the engine's row order (rows equal on every column are peers);
     - a pandas callable ``pdf -> pd.Series`` applied per cycle on the
       complete-group engine (cardinality-preserving).
     """
     key = list(key)
     w = Window.partitionBy(TIME_COLUMN, *key)
-    ordered = (w.orderBy(*order_by) if order_by
-               else w.orderBy(F.monotonically_increasing_id()))
+    ordered = w.orderBy(*(order_by or row_order(df, TIME_COLUMN, skip=key)))
     out = df
     pandas_items: list[tuple[str, Callable]] = []
     for name, spec in columns.items():
@@ -96,7 +95,8 @@ def add_columns_for_cycle(
             return pd.concat(frames, ignore_index=True)[names]
 
         from ..functions import _grouped_map
-        out = _grouped_map(out, [TIME_COLUMN] + key, (), per_cycle, full)
+        out = _grouped_map(out, [TIME_COLUMN] + key, TIME_COLUMN,
+                           per_cycle, full)
     return out
 
 

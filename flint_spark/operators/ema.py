@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pipeline import _cache
-from ..timeseries import TIME_COLUMN, parse_duration_ns, time_ns_expr
+from ..timeseries import parse_duration_ns, row_order, time_ns_expr
 from . import _route
 
 release_scan_caches = _cache.release_caches
@@ -188,18 +188,18 @@ def _scan_values(coeff_fn, divide: bool):
 
 
 def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
-                   fn, tie_break: Sequence[str] = ()) -> DataFrame:
+                   fn, tie_break: Sequence[str] = (),
+                   values: Sequence[str] | None = None) -> DataFrame:
     """Per-key (or, keyless, single-partition) scan on the
     complete-group engine (``functions._grouped_map``): many key
     groups per Arrow batch, each scanned over numpy slices in the
-    (time, value, ``tie_break``) order, nulls last, which Spark's
-    within-partition sort sets.
+    engine's row order (time, ``tie_break``, ``values`` — default
+    the scanned column — other columns; ``timeseries.row_order``),
+    which Spark's within-partition sort sets.
 
     ``out_name`` may be one name (``fn`` returns one array) or a list
     of names (``fn`` returns a matching tuple of arrays — the
-    Holt-Winters / multi-output form). ``tie_break`` appends extra
-    sort columns AFTER the family's (time, value) tie rule for callers
-    whose oracle pins duplicate (time, value) rows to a specific id."""
+    Holt-Winters / multi-output form)."""
     from ..functions import _grouped_map
 
     key = list(key)
@@ -223,12 +223,12 @@ def _apply_per_key(df: DataFrame, column: str, out_name, key: Sequence[str],
             res[n] = o
         return res
 
-    return _grouped_map(with_ns, key, ["__tns", column, *tie_break], scan,
-                        schema)
+    return _grouped_map(with_ns, key, "__tns", scan, schema,
+                        tie_break=tie_break, values=values or [column])
 
 
 def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
-                  divide: bool) -> DataFrame:
+                  divide: bool, values: Sequence[str]) -> DataFrame:
     """Keyless series on the distributed prefix engine
     (``prefix._engine``), never one single-group exchange.
 
@@ -241,10 +241,10 @@ def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
     decay step and interpolation read each bucket's predecessor row
     (prev_t, prev_x): every bucket's last row, from a P-row aggregate
     over the unshuffled input, carried to the next bucket as ``last``.
-    Rows scan in the order (time, value nulls last, other orderable
-    columns), the single-group and keyed scans' order; every step is a
-    function of the data, so a recompute reproduces the scan row for
-    row."""
+    Rows scan in the engine's row order (time, ``values``, other
+    orderable columns; ``timeseries.row_order``), the single-group and
+    keyed scans' order; every step is a function of the data, so a recompute
+    reproduces the scan row for row."""
     from .prefix import _carried, _engine
 
     value = F.col(column).cast("double")
@@ -284,10 +284,9 @@ def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
                 .assign(**out)
 
     def step(laid: DataFrame, buckets: DataFrame) -> DataFrame:
-        # each bucket's last row under the scan order (nulls last)
+        # each bucket's last (time, value) under the scan order
         ends = buckets.groupBy("__pid").agg(F.max(F.struct(
-            F.col("__tns").alias("t"), value.isNull().alias("null"),
-            value.alias("x"))).alias("__cs_end"))
+            F.col("__tns").alias("t"), value.alias("x"))).alias("__cs_end"))
         end = F.col("__carry_end")
         # null-free columns: a null long would reach pandas as float64
         prev = _carried(ends, {"end": "last"}).select(
@@ -307,19 +306,22 @@ def _keyless_scan(df: DataFrame, column: str, out_name: str, coeff_fn,
     return _engine(
         df, dict.fromkeys(series, "affine"), step,
         lambda st: {out_name: st["p"] / st["a"] if divide else st["p"]},
-        tie_break=[column], nulls_last=True)
+        tie_break=values)
 
 
 def _apply(df: DataFrame, column: str, out_name: str, key: Sequence[str],
-           coeff_fn, divide: bool, distributed: bool | None = None) -> DataFrame:
+           coeff_fn, divide: bool, distributed: bool | None = None,
+           values: Sequence[str] | None = None) -> DataFrame:
     # small keyless inputs run as one Arrow group, cheaper than the
     # distributed prefix scan; unknown stats always take the
-    # distributed path
+    # distributed path. ``values`` (default: ``column``) are the value
+    # columns of the row order the scan runs in.
+    values = list(values or [column])
     if not list(key) and _route.keyless_distributed(
             lambda: _route.estimated_bytes(df), distributed):
-        return _keyless_scan(df, column, out_name, coeff_fn, divide)
+        return _keyless_scan(df, column, out_name, coeff_fn, divide, values)
     return _apply_per_key(df, column, out_name, key,
-                          _scan_values(coeff_fn, divide))
+                          _scan_values(coeff_fn, divide), values=values)
 
 
 def ewma(df: DataFrame, column: str, alpha: float = 0.05,
@@ -422,6 +424,16 @@ def ewma_native(df: DataFrame, column: str, alpha: float = 0.05,
     returning inf/NaN. The pandas ``ewma`` handles unbounded spans via
     block renormalization — use it when the span is unknown.
     """
+    cols = [column] if isinstance(column, str) else list(column)
+    return _ewma_native(df, cols, alpha, duration_per_period, convention,
+                        key, cols)
+
+
+def _ewma_native(df: DataFrame, cols: Sequence[str], alpha: float,
+                 duration_per_period: str, convention: str,
+                 key: Sequence[str], values: Sequence[str]) -> DataFrame:
+    """:func:`ewma_native` of ``cols`` in the row order over ``values``
+    (a composite's own value columns, the same for every moment)."""
     from pyspark.sql import Window as W
 
     _check_alpha(alpha)
@@ -431,11 +443,8 @@ def ewma_native(df: DataFrame, column: str, alpha: float = 0.05,
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
     tns = time_ns_expr(df)
     base = F.min(tns).over(W.partitionBy(*key))
-    cols = [column] if isinstance(column, str) else list(column)
-    # (time, value) tie order, as ``_apply_per_key``: rows at one
-    # timestamp fold in value order, not in arrival order
     frame = (W.partitionBy(*key)
-             .orderBy(tns, *[F.col(c).asc_nulls_last() for c in cols])
+             .orderBy(*row_order(df, tns, values=values, skip=key))
              .rowsBetween(W.unboundedPreceding, W.currentRow))
     rel = (tns - base).cast("double") * F.lit(lam)
     rel = _span_guard(rel, tns, key, lam, "ewma_native")
@@ -623,6 +632,23 @@ def ema_half_life(df: DataFrame, column: str, half_life: str,
                                  distributed=distributed)
 
 
+def _core_ewmas(df: DataFrame, cols: Sequence[str], alpha: float,
+                duration_per_period: str, key: Sequence[str], engine: str,
+                values: Sequence[str]) -> DataFrame:
+    """Core ``<c>_ewma`` of each of ``cols`` in one row order over the
+    composite's ``values``: one shared WindowExec (``'native'``) or
+    one Arrow scan per column (``'pandas'``)."""
+    if engine == "native":
+        return _ewma_native(df, cols, alpha, duration_per_period, "core",
+                            key, values)
+    dur = None if duration_per_period.lower() == "constant" else float(
+        parse_duration_ns(duration_per_period))
+    for c in cols:
+        df = _apply(df, c, f"{c}_ewma", key, _ewma_coeffs(alpha, dur),
+                    divide=True, values=values)
+    return df
+
+
 def _ewm_moment_cols(df: DataFrame, column: str, mean_col, msq_col):
     """(mean, var, vol) output columns from the two decayed moments —
     shared by the running/windowed/streaming volatility variants so
@@ -663,12 +689,8 @@ def ewm_volatility(df: DataFrame, column: str, alpha: float = 0.05,
     sq = f"__{column}_sq"
     x = F.col(column).cast("double")
     base = df.withColumn(sq, x * x)
-    if engine == "native":
-        o = ewma_native(base, [column, sq], alpha, duration_per_period,
-                        "core", key)
-    else:
-        o = ewma(base, column, alpha, duration_per_period, "core", key)
-        o = ewma(o, sq, alpha, duration_per_period, "core", key)
+    o = _core_ewmas(base, [column, sq], alpha, duration_per_period, key,
+                    engine, [column])
     out = _ewm_moment_cols(o, column, F.col(f"{column}_ewma"),
                            F.col(f"{sq}_ewma"))
     return out.drop(sq, f"{column}_ewma", f"{sq}_ewma")
@@ -748,13 +770,8 @@ def ewm_corr(df: DataFrame, x: str, y: str, alpha: float = 0.05,
            f"__{x}_{y}_xy": cx * cy}
     base = df.withColumns(aux)
     cols = [x, y, *aux]
-    if engine == "native":
-        o = ewma_native(base, cols, alpha, duration_per_period,
-                        "core", key)
-    else:
-        o = base
-        for c in cols:
-            o = ewma(o, c, alpha, duration_per_period, "core", key)
+    o = _core_ewmas(base, cols, alpha, duration_per_period, key, engine,
+                    [x, y])
     ex, ey = F.col(f"{x}_ewma"), F.col(f"{y}_ewma")
     vx = F.greatest(F.col(f"__{x}_sqx_ewma") - ex * ex, F.lit(0.0))
     vy = F.greatest(F.col(f"__{y}_sqy_ewma") - ey * ey, F.lit(0.0))
@@ -808,13 +825,11 @@ def brown_double_smoothing(df: DataFrame, column: str,
     _check_alpha(alpha)
     key = list(key)
     s1 = f"__{column}_s1"
-    run = (lambda d, c: ewma_native(d, c, alpha, duration_per_period,
-                                    "core", key)) \
-        if engine == "native" else \
-        (lambda d, c: ewma(d, c, alpha, duration_per_period, "core", key))
-    o = run(df, column)
+    o = _core_ewmas(df, [column], alpha, duration_per_period, key, engine,
+                    [column])
     o = o.withColumnRenamed(f"{column}_ewma", s1)
-    o = run(o, s1)
+    o = _core_ewmas(o, [s1], alpha, duration_per_period, key, engine,
+                    [column])
     c1, c2 = F.col(s1), F.col(f"{s1}_ewma")
     level = 2.0 * c1 - c2
     trend = F.lit(alpha / (1.0 - alpha)) * (c1 - c2)

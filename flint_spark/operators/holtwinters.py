@@ -89,9 +89,8 @@ def holt_winters(df: DataFrame, column: str, period: int,
     phase — the in-sample fit; forecast h steps with
     ``level + h*trend + seas[phase(t+h)]`` downstream). One keyed
     exchange on the shared complete-group engine
-    (`functions._grouped_map`, through `ema._apply_per_key`); (time,
-    value) tie order matches the EMA engines, with ``tie_break``
-    columns appended for inputs that can tie on both."""
+    (`functions._grouped_map`, through `ema._apply_per_key`), in the
+    engine's row order (time, ``tie_break``, value, other columns)."""
     _validate(alpha, beta, gamma, period)
     unit_ns = parse_duration_ns(unit)
     scan = _hw_scan_factory(float(alpha), float(beta), float(gamma),

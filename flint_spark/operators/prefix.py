@@ -62,7 +62,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..pipeline import _cache
-from ..timeseries import time_ns_expr
+from ..timeseries import row_order, time_ns_expr
 
 __all__ = ["keyless_cumulative", "quantile_buckets"]
 
@@ -162,16 +162,16 @@ def _merge(kind: str, cs: Column, carry: Column) -> Column:
 def _engine(df: DataFrame, kinds: Mapping[str, str],
             step: Callable[[DataFrame, DataFrame], DataFrame],
             render: Callable[[dict[str, Column]], dict[str, Column]],
-            tie_break: Sequence[str] = (), nulls_last: bool = False,
+            tie_break: Sequence[str] = (),
             num_partitions: int | None = None,
             keep_layout: bool = False) -> DataFrame:
     """The two-phase prefix plan. ``step(layout, buckets)`` returns
-    ``layout`` (sorted by ``__pid``, ``__tns``, ``tie_break`` — nulls
-    last if ``nulls_last`` — and the other orderable columns) plus one
-    within-bucket state column ``__cs_<name>`` per ``kinds`` entry
-    (name -> merge kind); ``buckets`` is the unshuffled input with the
-    same ``__tns``/``__pid``, for P-row side aggregates that must not
-    read the layout twice. The other parameters are as in
+    ``layout`` (sorted by ``__pid`` then the engine's row order over
+    ``__tns`` and ``tie_break``) plus one within-bucket state column
+    ``__cs_<name>`` per ``kinds`` entry (name -> merge kind);
+    ``buckets`` is the unshuffled input with the same
+    ``__tns``/``__pid``, for P-row side aggregates that must not read
+    the layout twice. The other parameters are as in
     :func:`keyless_cumulative`."""
     for kind in kinds.values():
         if kind not in _KINDS:
@@ -196,33 +196,13 @@ def _engine(df: DataFrame, kinds: Mapping[str, str],
         # buckets on others; the wider exchange keeps max-load ~1 and
         # every downstream window still reuses HashPartitioning(__pid).
         #
-        # __mid is row_number() over a TOTAL order — (__tns, tie_break,
-        # then every orderable data column), NOT
-        # monotonically_increasing_id(). Two reasons (r8 review):
-        # 1. DETERMINISM BY CONSTRUCTION: rows equal on the full sort
-        #    key are identical rows, so any recompute reproduces the
-        #    same (row, __mid) multiset — the state and partials can
-        #    never diverge on ties even with the cache cold. The
-        #    engine-wide max-struct philosophy (sort by time THEN
-        #    values), applied to the layout itself.
-        # 2. CACHE SUBSTITUTION: the state and partials subtrees form
-        #    a self-join over the persisted state; Spark's self-join
-        #    deduplication clones one branch, and a nondeterministic
-        #    expression canonicalizes as never-equal after cloning, so
-        #    the cache manager refused to substitute the persisted
-        #    frame — BOTH branches silently recomputed the full
-        #    repartition+sort from the scan (observed: two layout
-        #    exchanges, zero InMemoryTableScans).
-        # Map-typed columns are unorderable and excluded; rows equal up
-        # to map values then tie arbitrarily, which only reorders
-        # 'last'/'concat' state among rows identical on every orderable
-        # column.
-        extra = [c for c, t in df.dtypes
-                 if c in data_cols and c not in tie_break
-                 and "map<" not in t]
-        tie = [F.col(c).asc_nulls_last() if nulls_last else F.col(c)
-               for c in tie_break]
-        order = [F.col("__tns"), *tie, *[F.col(c) for c in extra]]
+        # __mid is row_number() over the engine's total row order, not a
+        # monotonically increasing id: a recompute then reproduces the
+        # same (row, __mid) multiset, and the persisted state stays
+        # substitutable — a nondeterministic expression canonicalizes
+        # as never-equal once self-join deduplication clones a branch,
+        # and both branches then silently recomputed the layout (r8).
+        order = row_order(df, F.col("__tns"), tie_break)
         buckets = df.withColumn("__tns", tns).withColumn("__pid", pid)
         laid = (buckets.repartition(4 * n_buckets, "__pid")
                 .sortWithinPartitions("__pid", *order)
@@ -259,14 +239,13 @@ def keyless_cumulative(
     convention). ``render(state)`` maps the merged cumulative state
     columns to the output columns ``{out_name: Column}``.
 
-    Row order is the TOTAL order (time, *tie_break, remaining
-    orderable columns) — rows tying on it are identical rows, so the
-    scan order (and therefore every output) is a pure function of the
-    DATA, independent of physical layout or cache state; the keyed
-    window path's value-struct tie-break, applied to the engine
-    itself. Equal timestamps never straddle partitions (``__pid`` is
-    a pure function of the time value), so a tie group is always
-    merged by one within-partition window.
+    Rows scan in the engine's row order (``timeseries.row_order``;
+    callers append their value columns to ``tie_break``), the
+    single-window route's order, so every output is a function of the
+    data alone, whatever the layout or cache state. Equal timestamps
+    never straddle partitions (``__pid`` is a pure function of the
+    time value), so a tie group is always merged by one
+    within-partition window.
 
     ``keep_layout=True`` returns the engine's layout columns
     (``__tns``/``__pid``/``__mid``) alongside the outputs so a second

@@ -452,11 +452,11 @@ def lead_lag_corr(df: DataFrame, x_col: str, y_col: str,
     """
     from pyspark.sql import Window
 
-    from ..timeseries import time_ns_expr
+    from ..timeseries import row_order
 
     keyc = [F.col(c) for c in key]
-    order = [time_ns_expr(df)] + [F.col(c) for c in tie_break]
-    w = Window.partitionBy(*keyc).orderBy(*order)
+    w = Window.partitionBy(*keyc).orderBy(*row_order(
+        df, tie_break=tie_break, values=[x_col, y_col], skip=key))
     y = F.col(y_col)
     shifted = {
         f"__y_{i}": (F.lead(y, lag).over(w) if lag >= 0

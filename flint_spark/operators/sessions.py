@@ -12,7 +12,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..timeseries import TIME_COLUMN, parse_duration_ns, time_ns_expr
+from ..timeseries import (TIME_COLUMN, parse_duration_ns, row_order,
+                          time_ns_expr)
 
 
 def sessionize(df: DataFrame, gap: str | int = "30m",
@@ -21,12 +22,11 @@ def sessionize(df: DataFrame, gap: str | int = "30m",
     from the previous event exceeds ``gap``."""
     gap_ns = parse_duration_ns(gap)
     key = list(key)
-    w = Window.partitionBy(*key).orderBy(time_ns_expr(df))
+    w = Window.partitionBy(*key).orderBy(*row_order(df, skip=key))
     tns = time_ns_expr(df)
     prev = F.lag(tns).over(w)
     new_sess = F.when(prev.isNull() | ((tns - prev) > F.lit(gap_ns)), 1).otherwise(0)
-    cum = Window.partitionBy(*key).orderBy(tns) \
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.withColumn("session_id", (F.sum(new_sess).over(cum) - 1).cast("long"))
 
 

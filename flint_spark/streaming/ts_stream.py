@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from ..operators import _route
 from ..pipeline import _cache
 from ..summarizers import Summarizer
-from ..timeseries import TIME_COLUMN
+from ..timeseries import TIME_COLUMN, _order_names, nan_flags, sort_rows
 
 
 def summarize_intervals_stream(stream: DataFrame, frequency: str,
@@ -94,11 +94,10 @@ def ewma_stream(stream: DataFrame, column: str, key: Sequence[str],
     running numerator) across triggers, so the stream converges to the
     batch ``operators.ema.ewma`` result when events arrive in order.
 
-    Within a trigger, rows are processed in (event time, value) order,
-    the batch tie rule; rows that
-    arrive across triggers out of order decay from the stored state
-    (the standard streaming tradeoff — use a watermark upstream to
-    bound it).
+    Within a trigger, rows are processed in the batch row order; rows
+    that arrive across triggers out of order decay from the stored
+    state (the standard streaming tradeoff — use a watermark upstream
+    to bound it).
     """
     import math
 
@@ -129,7 +128,7 @@ def ewma_stream(stream: DataFrame, column: str, key: Sequence[str],
          T.StructField(f"{column}_ewma", T.DoubleType())],
         [T.StructField("last_tns", T.LongType()),
          T.StructField("e", T.DoubleType())],
-        (None, 0.0), step, order=("__tns", column))
+        (None, 0.0), step, values=[column])
 
 
 def dedup_stream(stream: DataFrame, subset: Sequence[str],
@@ -169,46 +168,36 @@ def _decayed_carry_scan(np, affine_scan, lam, last_tns, t, arrays,
     return outs
 
 
-def _trigger_pdf(pd, pdf_iter, order):
+def _trigger_pdf(pd, pdf_iter, names):
     """Materialize a group's ENTIRE trigger into one pandas frame,
-    sorted once by ``order``.
+    sorted once in the engine's row order over ``names``
+    (``timeseries.sort_rows``), so per-row outputs on duplicate
+    timestamps match a batch replay whatever the arrival order.
 
-    ``applyInPandasWithState`` hands each group's micro-batch rows as
-    an ITERATOR of Arrow chunks (split at
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``, default 10k) in
-    arbitrary post-shuffle order. Every fold in this module assumes
-    event-time order WITHIN the trigger — processing chunk-by-chunk
-    silently breaks batch parity the moment a group exceeds one chunk
-    (chunk 1 is scored/trimmed before chunk 2's possibly-earlier rows
-    exist). Memory is O(group rows per trigger) — the bound the batch
-    parity contract already implies, and no more than the Arrow
-    transfer itself.
-
-    A lone ``order`` column is a stable sort (null times last, ties in
-    arrival order). A time column followed by tie columns is the batch
-    tie rule, :func:`_sort_time_then_values` (nulls first, Spark's
-    struct order): per-row outputs on duplicate timestamps then match a
-    batch replay whatever the arrival order."""
+    The rows arrive as Arrow chunks in arbitrary order; folding chunk
+    by chunk would break batch parity once a group spans two chunks.
+    Memory is O(group rows per trigger)."""
     frames = [p for p in pdf_iter if len(p)]
     if not frames:
         return None
     pdf = frames[0] if len(frames) == 1 else \
         pd.concat(frames, ignore_index=True)
-    if len(order) > 1:
-        return _sort_time_then_values(pdf, order[0], order[1:])
-    return pdf.sort_values(order[0], kind="stable")
+    return sort_rows(pdf, names)
 
 
 def _keyed_fold(frame: DataFrame, key, fields, state_fields, init, step,
-                order=("__tns",), key_fields=None) -> DataFrame:
+                time="__tns", tie_break=(), values=(),
+                key_fields=None) -> DataFrame:
     """The one ``applyInPandasWithState`` protocol behind every stateful
     operator in this module: ``frame`` grouped by ``key``, ``append``
     output mode, no timeout.
 
-    Per group and trigger it assembles the whole trigger sorted by
-    ``order`` (:func:`_trigger_pdf`) and calls ``step(pdf, st)`` with
-    the stored state tuple, or ``init`` for a key without state.
-    ``step`` returns ``(columns, state)``:
+    Per group and trigger it assembles the whole trigger in the
+    engine's row order over ``time``, ``tie_break``, ``values`` and the
+    other columns (:func:`_trigger_pdf`; the batch twin's
+    ``timeseries.row_order``) and calls ``step(pdf, st)`` with the
+    stored state tuple, or ``init`` for a key without state. ``step``
+    returns ``(columns, state)``:
 
     - ``columns`` (a mapping or frame of the non-key output columns) is
       emitted with the key columns filled in, in output-schema order;
@@ -227,6 +216,8 @@ def _keyed_fold(frame: DataFrame, key, fields, state_fields, init, step,
     out_schema = T.StructType(
         (key_fields or [frame.schema[c] for c in key]) + fields)
     names = out_schema.fieldNames()
+    order = _order_names(frame, time, tie_break, values, skip=key)
+    frame = frame.withColumns(nan_flags(frame, order))
 
     def fold(key_vals, pdf_iter, state):
         pdf = _trigger_pdf(pd, pdf_iter, order)
@@ -323,9 +314,9 @@ def _broadcast_static_tables(stream: DataFrame, right: DataFrame, key,
                              rdata, right_time_column: str):
     """Collect the guarded static right side and broadcast it as
     ``{key tuple: (time-ns array, {col: values})}`` for the Arrow
-    stream-static lookups. Each table is sorted by (time, values), the
-    batch tie rule: among duplicate (key, time) rights the last row is
-    the max-struct winner."""
+    stream-static lookups. Each table is sorted by (time, values) in
+    the engine's row order, the batch tie rule: among duplicate (key,
+    time) rights the last row is the max-struct winner."""
     import numpy as np
     import pandas as pd
 
@@ -334,8 +325,9 @@ def _broadcast_static_tables(stream: DataFrame, right: DataFrame, key,
     rpdf = _collect_static_right(
         right, [*key,
                 time_ns_expr(right, right_time_column).alias("__rtns"),
-                *rdata])
-    rpdf = _sort_time_then_values(rpdf, "__rtns", rdata)
+                *rdata, *[c.alias(n) for n, c in
+                          nan_flags(right, rdata).items()]])
+    rpdf = sort_rows(rpdf, ["__rtns", *rdata])
     groups = rpdf.groupby(key, sort=False, dropna=False) if key \
         else [((), rpdf)]
     tables = {}
@@ -587,21 +579,6 @@ def topk_join_static(stream: DataFrame, right: DataFrame, k: int,
     return with_ns.mapInPandas(lookup, out_schema)
 
 
-def _sort_time_then_values(pdf, tcol, data_cols):
-    """Time-sort with the batch engine's tie rule: duplicate timestamps
-    order by the data-column tuple (Spark struct comparison, nulls
-    first), so the LAST row of any timestamp group is the batch
-    max-struct winner and position-based lookups resolve duplicate
-    (key, time) rights identically to ``operators.asof`` regardless of
-    arrival order. Unorderable payloads (arrays/structs) fall back to
-    arrival order — the same rows batch cannot order either."""
-    try:
-        return pdf.sort_values([tcol] + list(data_cols), kind="stable",
-                               na_position="first")
-    except TypeError:
-        return pdf.sort_values(tcol, kind="stable")
-
-
 def _forward_tie_resolve(np, rt, pos, ok):
     """Given forward searchsorted candidates ``pos`` into time array
     ``rt``, move each valid position to the LAST entry of its timestamp
@@ -616,26 +593,20 @@ def _forward_tie_resolve(np, rt, pos, ok):
 
 
 def _merge_right_buffer(np, buf_t, buf_v, r_new, rcols, rtypes):
-    """Append new right rows to the (time, values)-sorted buffer WITHOUT
-    a pandas DataFrame round-trip: rebuilding the buffer as a DataFrame
-    re-coerces nullable integer columns to float64 (10 -> 10.0, None ->
-    NaN), and storing those floats into an ArrayType(LongType) state
-    field silently nulls them — exactly what _typed_list guards
-    against. Plain-list stable sort keeps values typed; the key orders
-    nulls first like the pandas sort it replaces (the batch max-struct
-    tie rule), and unorderable payloads fall back to arrival order."""
+    """Append new right rows to the buffer in the engine's row order
+    over (time, values), the batch max-struct tie rule. Only the
+    permutation comes from a (object-typed) pandas frame: a typed one
+    re-coerces nullable integers to float64, which an
+    ArrayType(LongType) state field silently nulls (``_typed_list``)."""
+    import pandas as pd
+
     cat_t = np.concatenate([buf_t, r_new["__tns"].to_numpy(np.int64)])
     cat_v = {c: list(buf_v[c]) + _typed_list(r_new[c], rtypes[c])
              for c in rcols}
-    idx = list(range(len(cat_t)))
-    try:
-        idx.sort(key=lambda i: (cat_t[i],) + tuple(
-            (cat_v[c][i] is not None, cat_v[c][i]) for c in rcols))
-    except TypeError:
-        idx.sort(key=lambda i: cat_t[i])  # stable: arrival order on ties
-    return (cat_t[np.asarray(idx, dtype=np.int64)]
-            if len(idx) else cat_t,
-            {c: [cat_v[c][i] for i in idx] for c in rcols})
+    keys = pd.DataFrame({"__t": cat_t, **{
+        c: pd.Series(cat_v[c], dtype=object) for c in rcols}})
+    idx = sort_rows(keys, ["__t", *rcols]).index.to_numpy()
+    return cat_t[idx], {c: [cat_v[c][i] for i in idx] for c in rcols}
 
 
 def _typed_list(values, spark_type):
@@ -1009,7 +980,7 @@ def exponential_smoothing_stream(stream: DataFrame, column: str,
          T.StructField("prev_x", T.DoubleType()),
          T.StructField("e", T.DoubleType()),
          T.StructField("a", T.DoubleType())],
-        (None, None, 0.0, 0.0), step, order=("__tns", column))
+        (None, None, 0.0, 0.0), step, values=[column])
 
 
 def summarize_windows_stream(stream: DataFrame, window, reducer,
@@ -1318,13 +1289,14 @@ def ohlc_bars_stream(stream: DataFrame, frequency: str, price_col: str,
     drift. Every bar column is a mergeable declarative aggregate
     (min_by/max_by over the deterministic order struct), state is one
     partial row per open (key, window)."""
-    from ..operators.bars import _order_struct, bar_aggs
-    from ..timeseries import time_ns_expr
+    from ..operators.bars import bar_aggs
+    from ..timeseries import row_order, time_ns_expr
 
     key = list(key)
     price = F.col(price_col)
     base = stream.filter(price.isNotNull())
-    ord_ = _order_struct(time_ns_expr(base, time_column), tie_break, price)
+    ord_ = F.struct(*row_order(base, time_ns_expr(base, time_column),
+                               tie_break, [price_col], skip=key))
     win = F.window(F.col(time_column), frequency)
     out = (base.withWatermark(time_column, watermark)
            .groupBy(win.alias("interval"), *key)
@@ -1486,7 +1458,8 @@ def drawdown_stream(stream: DataFrame, column: str,
          T.StructField(column, T.DoubleType()),
          T.StructField("peak", T.DoubleType()),
          T.StructField("drawdown", T.DoubleType())],
-        [T.StructField("peak", T.DoubleType())], (None,), step)
+        [T.StructField("peak", T.DoubleType())], (None,), step,
+        values=[column])
 
 
 def ewm_volatility_stream(stream: DataFrame, column: str,
@@ -1537,7 +1510,7 @@ def ewm_volatility_stream(stream: DataFrame, column: str,
          T.StructField("e", T.DoubleType()),
          T.StructField("q", T.DoubleType()),
          T.StructField("a", T.DoubleType())],
-        (None, 0.0, 0.0, 0.0), step, order=("__tns", column))
+        (None, 0.0, 0.0, 0.0), step, values=[column])
 
 
 def brown_double_smoothing_stream(stream: DataFrame, column: str,
@@ -1596,7 +1569,7 @@ def brown_double_smoothing_stream(stream: DataFrame, column: str,
          T.StructField("e1", T.DoubleType()),
          T.StructField("a", T.DoubleType()),
          T.StructField("e2", T.DoubleType())],
-        (None, 0.0, 0.0, 0.0), step, order=("__tns", column))
+        (None, 0.0, 0.0, 0.0), step, values=[column])
 
 
 def log_returns_stream(stream: DataFrame, price_col: str,
@@ -1608,10 +1581,9 @@ def log_returns_stream(stream: DataFrame, price_col: str,
     per key (last event-time ns, last positive price). Non-positive /
     null / NaN prices drop BEFORE the chain exactly like the batch
     filter (they neither emit nor break the chain); each key's first
-    positive tick emits no return. Duplicate timestamps chain in
-    (time, tie_break..., price) order, nulls first — the batch
-    ``_order_struct`` rule — so the squared returns match the batch
-    operator; pass the same ``tie_break`` columns to both. Emits
+    positive tick emits no return. Duplicate timestamps chain in the
+    batch row order (time, tie_break..., price, ...), so the squared
+    returns match; pass the same ``tie_break`` columns to both. Emits
     (key..., __tns, price, ``<col>_logret``)."""
     import numpy as np
     from pyspark.sql import types as T
@@ -1639,7 +1611,7 @@ def log_returns_stream(stream: DataFrame, price_col: str,
          T.StructField(f"{price_col}_logret", T.DoubleType())],
         [T.StructField("last_tns", T.LongType()),
          T.StructField("last_p", T.DoubleType())],
-        (None, None), step, order=("__tns", *tie_break, price_col))
+        (None, None), step, tie_break=tie_break, values=[price_col])
 
 
 def realized_volatility_stream(stream: DataFrame, interval: str | int,
@@ -1753,7 +1725,7 @@ def ewm_corr_stream(stream: DataFrame, x: str, y: str,
         [T.StructField("last_tns", T.LongType())]
         + [T.StructField(n, T.DoubleType())
            for n in ("sx", "sy", "sxx", "syy", "sxy", "sw")],
-        (None,) + (0.0,) * 6, step, order=("__tns", x, y))
+        (None,) + (0.0,) * 6, step, values=[x, y])
 
 
 def cusum_stream(stream: DataFrame, column: str, key: Sequence[str],
@@ -1812,7 +1784,7 @@ def cusum_stream(stream: DataFrame, column: str, key: Sequence[str],
          T.StructField("c_dn", T.DoubleType()),
          T.StructField("m_up", T.DoubleType()),
          T.StructField("m_dn", T.DoubleType())],
-        (0.0, 0.0, np.inf, np.inf), step, order=("__tns", column))
+        (0.0, 0.0, np.inf, np.inf), step, values=[column])
 
 
 def kalman_stream(stream: DataFrame, column: str, key: Sequence[str],
@@ -1861,7 +1833,7 @@ def kalman_stream(stream: DataFrame, column: str, key: Sequence[str],
         [T.StructField("last_t", T.LongType()),
          T.StructField("level", T.DoubleType()),
          T.StructField("var", T.DoubleType())],
-        None, step, order=("__tns", column))
+        None, step, values=[column])
 
 
 def holt_winters_stream(stream: DataFrame, column: str,
@@ -1902,7 +1874,7 @@ def holt_winters_stream(stream: DataFrame, column: str,
          T.StructField("level", T.DoubleType()),
          T.StructField("trend", T.DoubleType()),
          T.StructField("seas", T.ArrayType(T.DoubleType()))],
-        None, step, order=("__tns", column))
+        None, step, values=[column])
 
 
 def kmv_stream(stream: DataFrame, col: str, key: Sequence[str],
@@ -1964,8 +1936,8 @@ def volume_bars_stream(stream: DataFrame, threshold: float,
     tick lands in a higher ``bar_seq``); the still-open bar is never
     emitted, so an in-order replay equals the batch operator minus
     each key's final (incomplete) bar. The per-trigger scan computes
-    the same exclusive volume prefix left-to-right over the same
-    (time, tie_break, price) order as batch, so bar boundaries and
+    the same exclusive volume prefix left-to-right over the batch row
+    order (time, tie_break, price, ...), so bar boundaries and
     every bar column replay bitwise. Volumes must be non-negative
     (bar ids are then nondecreasing in time; same contract as any
     volume clock); null volumes count 0, null prices are dropped.
@@ -2051,7 +2023,7 @@ def volume_bars_stream(stream: DataFrame, threshold: float,
          T.StructField("n", T.LongType()),
          T.StructField("vol", T.DoubleType()),
          T.StructField("pv", T.DoubleType())],
-        None, step, order=("__tns", *tie_break, price_col))
+        None, step, tie_break=tie_break, values=[price_col])
     vwap = F.when(F.col("volume") != 0, F.col("pv") / F.col("volume"))
     return out.withColumn("vwap", vwap).drop("pv")
 
@@ -2121,7 +2093,7 @@ def pack_sequences_stream(stream: DataFrame, seq_len: int,
          T.StructField("doc_off", T.LongType()),
          T.StructField("seq_off", T.LongType()),
          T.StructField("seg_tokens", T.LongType())],
-        [T.StructField("cum", T.LongType())], (0,), step, order=(on,))
+        [T.StructField("cum", T.LongType())], (0,), step, time=on)
 
 
 def pack_bins_stream(stream: DataFrame, budget: int, tokens_col: str,
@@ -2170,4 +2142,4 @@ def pack_bins_stream(stream: DataFrame, budget: int, tokens_col: str,
         [T.StructField("bin", T.LongType()),
          T.StructField("fill", T.LongType()),
          T.StructField("used", T.LongType())],
-        (0, 0, 0), step, order=(on,))
+        (0, 0, 0), step, time=on)

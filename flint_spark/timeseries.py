@@ -139,6 +139,83 @@ def as_time_expr(df: DataFrame, column: str, dtype: str = "timestamp") -> Column
     return ns_to_time_expr(time_ns_expr(df, column), dtype)
 
 
+def _orderable(dt: T.DataType) -> bool:
+    """Spark can sort by a value of this type (no map or variant inside)."""
+    if isinstance(dt, (T.MapType, T.VariantType, T.CalendarIntervalType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
+def _order_names(df: DataFrame, time: str, tie_break: Sequence[str] = (),
+                 values: Sequence[str] = (),
+                 skip: Sequence[str] = ()) -> list[str]:
+    """:func:`row_order` as column names, ``time`` first."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    names = [time, *tie_break, *[c for c in values if _orderable(types[c])]]
+    names += [c for c, t in types.items()
+              if not c.startswith("__") and c not in skip and _orderable(t)]
+    return list(dict.fromkeys(names))
+
+
+def row_order(df: DataFrame, time: Column | str | None = None,
+              tie_break: Sequence[str] = (), values: Sequence[str] = (),
+              skip: Sequence[str] = ()) -> list[Column]:
+    """The engine's one total row order as ascending sort columns: the
+    time (``time_ns_expr(df)``, a named column or a time expression),
+    ``tie_break``, ``values``, then every other orderable column not
+    named ``__*`` or in ``skip`` (a named time in ``skip`` too). The
+    reference breaks ties by partition order, which a shuffle cannot
+    reproduce; rows equal on this order are equal rows. Nulls sort
+    first and NaN after +inf, the only placement struct comparison
+    (max-struct as-of, bar structs) expresses. :func:`sort_rows` is
+    the pandas twin."""
+    name = time if isinstance(time, str) else TIME_COLUMN
+    head = (F.col(time) if isinstance(time, str)
+            else time_ns_expr(df) if time is None else time)
+    names = _order_names(df, name, tie_break, values, skip)
+    lead = [] if isinstance(time, str) and time in skip else [head]
+    return lead + [F.col(c) for c in names[1:]]
+
+
+def nan_flags(df: DataFrame, names: Sequence[str]) -> dict[str, Column]:
+    """``__isnan_<c>`` columns for the float columns among ``names``:
+    Arrow hands pandas a null double as NaN, so :func:`sort_rows` needs
+    them to tell a true NaN from a null."""
+    types = dict(df.dtypes)
+    return {f"__isnan_{c}": F.isnan(c) for c in names
+            if types.get(c) in ("double", "float")}
+
+
+def sort_rows(pdf, names: Sequence[str]):
+    """Pandas twin of :func:`row_order`: ``pdf`` stably sorted by
+    ``names`` (:func:`_order_names`), null first and NaN last. A float
+    NaN counts as null unless its ``__isnan_<c>`` flag is set; a column
+    pandas cannot compare (arrays) is left out of the sort."""
+    import numpy as np
+
+    keys = []
+    for c in names:
+        col = pdf[c]
+        if isinstance(col.dtype, np.dtype) and col.dtype.kind in "biufM" \
+                and not col.isna().any():
+            keys.append(col.to_numpy())  # no null or NaN: sort as is
+            continue
+        try:
+            key = col.rank(method="dense").to_numpy(np.float64)
+        except (TypeError, ValueError):
+            continue
+        flag = f"__isnan_{c}"
+        key[np.isnan(key)] = 0.0  # nulls (dense ranks start at 1)
+        if flag in pdf:
+            key[pdf[flag].to_numpy(dtype=bool)] = np.inf
+        keys.append(key)
+    return pdf.iloc[np.lexsort(keys[::-1])] if keys else pdf
+
+
 def canonize(
     df: DataFrame,
     time_column: str = TIME_COLUMN,

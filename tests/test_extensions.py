@@ -1232,11 +1232,11 @@ def test_keyless_ema_result_survives_cache_loss_and_replanning(spark):
 
 def test_keyless_ema_null_ties_match_single_group(spark):
     """Nulls at duplicate timestamps: the distributed keyless scan
-    orders a tie group's null value LAST, as the single-group and
-    keyed scans do (pandas NaN-last, ``asc_nulls_last``), so both
-    routes return the same value on every row. Ordering nulls first
-    gave a different per-row EWMA, and a null bucket-end value broke
-    the smoothing scan's boundary step."""
+    orders a tie group like the single-group and keyed scans (the
+    engine's row order, ``timeseries.row_order``: null values first),
+    so both routes return the same value on every row, and a null
+    bucket-end value does not break the smoothing scan's boundary
+    step."""
     from flint_spark.operators import ema as E
 
     rows = [(i // 2 * 1_000_000_000,

@@ -1,15 +1,11 @@
-"""r12 ADVICE pin: `left_join_topk`'s unorderable-payload fallback
-degrades PER GROUP (mirroring the old per-group
-`_sort_time_then_values`), instead of dropping the (time, values) tie
-rule for every group in the Arrow batch on one TypeError.
-
-Note on reachability: pandas' multi-key sort factorizes object
-columns, so ANY array/struct payload is unhashable and takes the
-fallback — Spark's column typing means a batch can't mix orderable and
-unorderable rows within one column. The per-group form is still the
-contract-faithful shape (and covers non-Spark callers of the kernel);
-these tests pin (a) the scalar tie rule survives untouched, (b) the
-fallback path executes per group without crashing or losing matches."""
+"""`left_join_topk` candidate order on payloads of every kind: the
+engine's one sort (`functions._grouped_map` over
+`timeseries.row_order`) puts each key's right rows in (time, values)
+order before the pandas stage, so duplicate right timestamps resolve
+by the max-struct rule whatever the insertion order, and payloads
+pandas cannot compare (arrays) sort in Spark like any other column.
+These tests pin (a) the scalar tie rule, (b) that array payloads keep
+every group's full match set and per-group time windows."""
 
 _SPARK = {}
 
@@ -47,9 +43,9 @@ def test_topk_scalar_payload_keeps_tie_rule():
 
 
 def test_topk_unorderable_payload_per_group_fallback():
-    """Array payloads are unhashable in pandas' multi-key sort, so the
-    TypeError fallback fires; the per-group degradation must keep every
-    group's full match set and per-group time windows intact."""
+    """Array payloads, which pandas cannot sort, sort in Spark with the
+    rest of the row order; every group keeps its full match set and its
+    own time window."""
     from flint_spark.operators.asof import left_join_topk
 
     spark = _spark()
