@@ -93,57 +93,12 @@ def _prepare(left: DataFrame, right: DataFrame, key: Sequence[str],
 
 
 def _finish(unioned: DataFrame, key, left_data, right_data, left_out, right_out,
-            valid: Column) -> DataFrame:
+            valid: Column, left_marker: int = 1) -> DataFrame:
     matched = F.col(_RROW)
     out_cols = [F.col(TIME_COLUMN)] + [F.col(k) for k in key]
     out_cols += [F.col(c).alias(left_out[c]) for c in left_data]
     out_cols += [F.when(valid, matched[c]).alias(right_out[c]) for c in right_data]
-    return unioned.filter(F.col(_SRC) == 1).select(*out_cols)
-
-
-#: right-side size estimate below which ``left_join``/``future_left_join``
-#: MAY auto-route through the broadcast engine — the dim-table as-of
-#: shape, where the union plan would shuffle the BIG side just to probe
-#: a KB-scale table. 10 MB = Spark's own autoBroadcastJoinThreshold
-#: default: the broadcast as-of replicates the right to every task, so
-#: it inherits the same "genuinely dim-sized" budget, not a generous one
-#: (r7 verdict: the old 64 MB budget routed a right side BIGGER than the
-#: left through the broadcast plan and regressed the bench 4×).
-_ASOF_BROADCAST_MAX_BYTES = 10 << 20
-
-#: ...AND the left must dominate the right by this factor: broadcasting
-#: saves the left's exchange, so it only pays when that exchange is the
-#: job — a left comparable to (or smaller than) the right is cheaper to
-#: shuffle through the pure-JVM union-window plan than to probe
-#: row-by-row against a same-sized broadcast table
-_ASOF_BROADCAST_LEFT_RATIO = 8
-
-def _broadcast_route_ok(left: DataFrame, right: DataFrame,
-                        key: Sequence[str], distributed: bool | None,
-                        left_alias: str | None,
-                        right_alias: str | None) -> bool:
-    """Auto-broadcast eligibility: default routing only (explicit
-    ``distributed`` pins the union/bucketed family), no aliases (the
-    broadcast engine appends right columns verbatim), disjoint payload
-    names (a conflict must keep raising through the union path's
-    loud error), a right side whose Catalyst estimate fits the 10 MB
-    dim budget, AND a left that dominates the right by the crossover
-    ratio (both sides compared — r7 verdict: routing on the right's
-    size alone broadcast a right BIGGER than the left, 4.3× slower
-    than the union plan). Unknown RIGHT stats report ~8 EB and never
-    route; unknown LEFT stats pass the ratio test — "can't tell how
-    big the left is" against a known-dim right is exactly the shape
-    the broadcast plan is insurance for."""
-    if distributed is not None or left_alias is not None \
-            or right_alias is not None:
-        return False
-    shared = set(left.columns) & set(right.columns)
-    if shared - ({TIME_COLUMN} | set(key)):
-        return False
-    r_est = _route.estimated_bytes(right)
-    if r_est > _ASOF_BROADCAST_MAX_BYTES:
-        return False
-    return _route.estimated_bytes(left) >= _ASOF_BROADCAST_LEFT_RATIO * r_est
+    return unioned.filter(F.col(_SRC) == left_marker).select(*out_cols)
 
 
 def left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0,
@@ -165,16 +120,10 @@ def left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0,
     the rows — the skew shape where per-key ordering degenerates to
     the keyless case. The probe is opt-in because it costs a scan
     (memoized per input plan, so repeated joins on one frame pay once).
-    A SMALL right side (Catalyst estimate within the broadcast budget)
-    auto-routes through :func:`left_join_broadcast` first — zero
-    exchanges of the big side, the plan a dim-table as-of wants. All
-    routes are output-identical (property-pinned), differing only in
-    plan shape."""
+    Both routes are output-identical (property-pinned), differing only
+    in plan shape; for a small static right side without a shuffle of
+    the left, call :func:`left_join_broadcast`."""
     key = list(key)
-    if _broadcast_route_ok(left, right, key, distributed,
-                           left_alias, right_alias):
-        return left_join_broadcast(left, right, tolerance, key,
-                                   direction="backward")
     # distributed=False pins the single-window plan unconditionally —
     # it must also suppress the hot-key probe job, not just the route
     if key and hot_key_guard is not None and distributed is not False \
@@ -213,15 +162,9 @@ def future_left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0
                      strict_lookahead: bool = False,
                      distributed: bool | None = None) -> DataFrame:
     """As-of forward join: closest future right row in [t, t + tolerance]
-    (or (t, t + tolerance] when strict). A small right side auto-routes
-    through the zero-exchange broadcast engine like :func:`left_join`
-    (``distributed=False``/``True`` pins the union-window plan)."""
-    key = list(key)
-    if _broadcast_route_ok(left, right, key, distributed,
-                           left_alias, right_alias):
-        return left_join_broadcast(left, right, tolerance, key,
-                                   direction="forward",
-                                   strict_lookahead=strict_lookahead)
+    (or (t, t + tolerance] when strict): the union-window plan with a
+    time-descending frame. ``distributed`` is accepted for signature
+    parity with :func:`left_join` and does not change the plan."""
     tol = parse_duration_ns(tolerance)
     key, left_data, right_data, left_out, right_out, l, r = _prepare(
         left, right, key, left_alias, right_alias)
@@ -251,194 +194,37 @@ def future_left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     u = u.withColumn(_RROW, F.last(_RROW, ignorenulls=True).over(w))
     valid = F.col(_RROW)["__rtime"] <= F.col(_TNS) + F.lit(tol)
-    left_marker = 0 if strict_lookahead else 1
-    matched = F.col(_RROW)
-    out_cols = [F.col(TIME_COLUMN)] + [F.col(k) for k in key]
-    out_cols += [F.col(c).alias(left_out[c]) for c in left_data]
-    out_cols += [F.when(valid, matched[c]).alias(right_out[c]) for c in right_data]
-    return u.filter(F.col(_SRC) == left_marker).select(*out_cols)
-
-
-def _sorted_right_arrays(right: DataFrame, key: Sequence[str],
-                         rdata: Sequence[str], arr_name: str,
-                         time_column: str = TIME_COLUMN) -> DataFrame:
-    """Per-key time-sorted array of right-row structs with duplicate
-    timestamps pre-resolved to the MAX struct (the engine-wide tie
-    rule, so both join directions read an unambiguous array). Struct
-    field order (__rt, *rdata) makes ``sort_array``'s natural struct
-    ordering the same total order the union plan sorts by."""
-    rstruct = F.struct(time_ns_expr(right, time_column).alias("__rt"),
-                       *[F.col(c) for c in rdata])
-    agg = F.sort_array(F.collect_list(rstruct)).alias(arr_name)
-    rtab = right.groupBy(*key).agg(agg) if key else right.agg(agg)
-    arr = F.col(arr_name)
-    # keep only the LAST element of each equal-__rt run (= max struct,
-    # array is sorted); F.when is lazy so the lookahead never indexes
-    # past the end under ANSI
-    dedup = F.filter(arr, lambda x, i: F.when(
-        i == F.size(arr) - 1, F.lit(True)).otherwise(
-        F.element_at(arr, i + 2)["__rt"] != x["__rt"]))
-    return rtab.withColumn(arr_name, dedup)
-
-
-def upper_bound_expr(arr: Column, x: Column, value=None,
-                     length: int | None = None) -> Column:
-    """Number of sorted-``arr`` elements with ``value(elem) <= x`` —
-    an in-JVM binary search: ``F.aggregate`` over a log2(n)-length
-    sequence, each step one lazy ``element_at`` probe. The loop form
-    (not chained projections) keeps the expression tree linear in the
-    iteration count; everything stays in whole-stage codegen.
-    Null/empty arrays fold to 0/null and never index. ``value``
-    extracts the sort key from an element (default: the element
-    itself — plain sorted arrays).
-
-    ``length``: when the array is an in-plan LITERAL of known size
-    (the intervalize clock path), pass its length so the size and the
-    iteration count fold to Python-side constants — column expressions
-    are trees, and the two ``F.size(arr)`` references would otherwise
-    embed two MORE copies of the literal in the plan (r10: a 100k-tick
-    clock's 800 KB literal appeared 4x instead of the 2 probes that
-    genuinely need it)."""
-    import math
-
-    if value is None:
-        value = lambda e: e  # noqa: E731
-    if length is not None:
-        n = F.lit(int(length))
-        iters = F.lit(max(1, int(math.ceil(math.log2(length + 1))) + 1))
-    else:
-        n = F.size(arr)
-        iters = F.greatest(
-            F.lit(1),
-            (F.ceil(F.log2(n.cast("double") + F.lit(1.0)))
-             + F.lit(1)).cast("int"))
-    init = F.struct(F.lit(0).cast("long").alias("lo"),
-                    n.cast("long").alias("hi"))
-
-    def step(acc, _):
-        lo, hi = acc["lo"], acc["hi"]
-        mid = F.floor((lo + hi) / F.lit(2))
-        return (F.when(
-            lo < hi,
-            F.when(value(F.element_at(arr, (mid + 1).cast("int"))) <= x,
-                   F.struct((mid + 1).alias("lo"), hi.alias("hi")))
-            .otherwise(F.struct(lo.alias("lo"), mid.alias("hi"))))
-            .otherwise(acc))
-
-    return F.aggregate(F.sequence(F.lit(1), iters), init, step)["lo"]
-
-
-def _upper_bound(arr: Column, x: Column) -> Column:
-    """:func:`upper_bound_expr` over the as-of engine's sorted
-    right-row struct arrays (sort key ``__rt``)."""
-    return upper_bound_expr(arr, x, value=lambda e: e["__rt"])
+    return _finish(u, key, left_data, right_data, left_out, right_out,
+                   valid, left_marker=0 if strict_lookahead else 1)
 
 
 def left_join_broadcast(left: DataFrame, right: DataFrame,
                         tolerance: str | int = 0, key: Sequence[str] = (),
                         direction: str = "backward",
                         strict_lookahead: bool = False,
-                        engine: str = "jvm",
                         time_column: str = TIME_COLUMN,
                         right_time_column: str | None = None) -> DataFrame:
     """As-of join against a SMALL right side with ZERO shuffle of the
-    left: the right table (a dim/reference table — rates, calendars,
-    metadata) is folded into per-key time-sorted struct arrays (one
-    tiny exchange of the DIM side only), broadcast-hash-joined to the
-    left on the key, and each left row resolves its match with an
-    in-JVM binary search (:func:`_upper_bound`) — no Python stage, no
-    exchange of the big side. The union-window plan (:func:`left_join`)
-    costs one exchange of the BIG side; at 100 TB probing a KB-scale
-    right table, that exchange is the whole job — this is the as-of
-    analogue of a broadcast hash join.
+    left (a dim/reference table — rates, calendars, metadata): the
+    as-of analogue of a broadcast hash join. The union-window plan
+    (:func:`left_join`) costs one exchange of the BIG side; here the
+    right side is collected once, broadcast, and probed map-side by
+    one Arrow stage (``streaming.ts_stream._broadcast_asof``, the
+    engine of ``asof_join_static`` too, so the same call works on a
+    streaming left).
 
-    Semantics (tolerance bounds inclusive, equal-timestamp matching,
-    max-struct duplicate rule, forward/strict variants) match the
-    window plan exactly; the route-identity tests pin the union-window,
-    JVM-broadcast and Arrow engines against each other.
-    ``engine="arrow"`` keeps the r6 collect-and-broadcast
-    ``np.searchsorted`` path (shared with the
-    streaming static-dim join ``streaming.ts_stream.asof_join_static``)
-    — the JVM engine beat it ~3× on the bench (whole left crossed
-    JVM→Arrow→Python→JVM per batch), but the Arrow path remains the
-    reference implementation and a fallback streaming face.
+    The right side is a SNAPSHOT taken when the plan is built (as in
+    :func:`left_join_topk_broadcast`): later changes to its source are
+    not seen by this result. Semantics (tolerance bounds inclusive,
+    equal-timestamp matching, max-struct duplicate rule, forward and
+    strict variants, null keys matching null keys) equal the window
+    plan's; the route-identity property test pins them."""
+    from ..streaming.ts_stream import _broadcast_asof
 
-    The plan is STREAM-COMPATIBLE (r8 verdict item 5): no sort or
-    window over the left — a stream-static broadcast left-outer join
-    plus stateless projections — so ``streaming.ts_stream.
-    asof_join_static`` routes through this engine by default and the
-    whole micro-batch never leaves the JVM."""
-    rtc = right_time_column if right_time_column is not None \
-        else time_column
-    if engine == "arrow":
-        from ..streaming.ts_stream import asof_join_static
-
-        return asof_join_static(left, right, tolerance, key,
-                                time_column=time_column,
-                                right_time_column=rtc,
-                                direction=direction,
-                                strict_lookahead=strict_lookahead,
-                                engine="arrow")
-    if engine != "jvm":
-        raise ValueError("engine must be 'jvm' or 'arrow'")
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
-    if strict_lookahead and direction != "forward":
-        raise ValueError("strict_lookahead requires direction='forward'")
-    key = list(key)
-    tol = parse_duration_ns(tolerance) if tolerance else 0
-    rdata = [c for c in right.columns
-             if c != rtc and c not in key]
-    conflicts = set(rdata) & set(left.columns)
-    if conflicts:
-        raise ValueError(f"conflicting output columns {sorted(conflicts)}")
-    reserved = {"__arr", "__one", _TNS} | {f"__rk_{i}"
-                                           for i in range(len(key))}
-    bad = reserved & set(left.columns)
-    if bad:
-        raise ValueError(f"reserved column names {sorted(bad)}")
-
-    rtab = _sorted_right_arrays(right, key, rdata, "__arr",
-                                time_column=rtc)
-    if key:
-        rtab = rtab.select(
-            *[F.col(k).alias(f"__rk_{i}") for i, k in enumerate(key)],
-            "__arr")
-        # null-safe equality: the window plan groups null keys together
-        cond = None
-        for i, k in enumerate(key):
-            c = F.col(k).eqNullSafe(F.col(f"__rk_{i}"))
-            cond = c if cond is None else (cond & c)
-        joined = (left.withColumn(_TNS, time_ns_expr(left, time_column))
-                  .join(F.broadcast(rtab), cond, "left"))
-    else:
-        # constant-key equi-join against the 1-row array table: a
-        # BroadcastHashJoin, not the nested-loop a bare crossJoin plans
-        joined = (left.withColumn(_TNS, time_ns_expr(left, time_column))
-                  .withColumn("__one", F.lit(1))
-                  .join(F.broadcast(rtab.withColumn("__one", F.lit(1))),
-                        "__one", "left"))
-
-    arr, t = F.col("__arr"), F.col(_TNS)
-    if direction == "backward":
-        idx = _upper_bound(arr, t)
-        valid = F.when(
-            idx >= 1,
-            F.element_at(arr, idx.cast("int"))["__rt"] >= t - F.lit(tol)
-        ).otherwise(F.lit(False))
-    else:
-        # int-ns trick: searchsorted-left(t) == upper_bound(t - 1);
-        # strict lookahead excludes equal timestamps -> upper_bound(t)
-        probe = t if strict_lookahead else t - F.lit(1)
-        idx = _upper_bound(arr, probe) + F.lit(1)
-        valid = F.when(
-            idx <= F.size(arr),
-            F.element_at(arr, idx.cast("int"))["__rt"] <= t + F.lit(tol)
-        ).otherwise(F.lit(False))
-    matched = F.element_at(arr, idx.cast("int"))
-    return joined.select(
-        *left.columns,
-        *[F.when(valid, matched[c]).alias(c) for c in rdata])
+    return _broadcast_asof(
+        left, right, tolerance, key, time_column,
+        right_time_column if right_time_column is not None
+        else time_column, direction, strict_lookahead)
 
 
 def nearest_join(left: DataFrame, right: DataFrame,
@@ -578,15 +364,12 @@ def merge(left: DataFrame, right: DataFrame,
     emits the left iterator's rows first at equal keys).
 
     Ordering is logical — downstream operators re-establish physical
-    order lazily. The left-first tie rule is observable two ways:
-
-    - ``origin_column``: when given, an explicit 0 (left) / 1 (right)
-      marker is attached, the canonical secondary sort key for any
-      order-dependent consumer;
-    - implicitly, ``unionByName`` appends the right side's partitions
-      after the left's, so ``monotonically_increasing_id`` tie-breaks
-      (``add_summary_columns``) order left rows first as long as no
-      shuffle intervenes between the union and the consumer.
+    order lazily, by the engine's row order (``timeseries.row_order``:
+    time, tie columns, values), which knows nothing of which side a row
+    came from. ``origin_column`` is the one way to observe the
+    left-first tie rule: when given, an explicit 0 (left) / 1 (right)
+    marker is attached; pass it as a consumer's ``tie_break`` to order
+    left rows first at equal timestamps.
     """
     if set(left.columns) != set(right.columns):
         raise ValueError("merge requires identical schemas")
@@ -765,8 +548,8 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
                 rt, tg, side="right")
         # (n, k) gather in GLOBAL right coordinates: row i takes
         # rt-indices hi-1, hi-2, ..., masked below its group's lo
-        # — the k-tail of the candidate run, reversed (the same
-        # contract as _lastk_gather in the broadcast twin)
+        # — the k-tail of the candidate run, reversed (the contract
+        # of the broadcast twin, ``ts_stream._broadcast_asof``)
         idx = hi[:, None] - 1 - np.arange(k)[None, :]
         mask = idx >= lo[:, None]
         idx = np.clip(idx, 0, len(rt_all) - 1)
@@ -787,11 +570,11 @@ def left_join_topk_broadcast(left: DataFrame, right: DataFrame, k: int,
                              tolerance: str | int = 0,
                              key: Sequence[str] = ()) -> DataFrame:
     """:func:`left_join_topk` against a SMALL right side with ZERO
-    shuffle of the left: per-key sorted arrays broadcast + the (n, k)
-    searchsorted gather map-side — the last-k analogue of
-    :func:`left_join_broadcast`. Shared implementation with the
-    streaming static-dim enrichment
-    (``streaming.ts_stream.topk_join_static``); parity with
+    shuffle of the left: the broadcast right table and a vectorized
+    k-tail gather map-side — the last-k analogue of
+    :func:`left_join_broadcast`, whose engine and plan-time snapshot
+    of the right side it shares (``streaming.ts_stream.
+    topk_join_static`` is the same call); parity with
     :func:`left_join_topk` is test-pinned."""
     from ..streaming.ts_stream import topk_join_static
 

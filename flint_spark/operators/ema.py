@@ -501,7 +501,6 @@ def ewma_windowed(df: DataFrame, column: str, window, alpha: float = 0.05,
     base = F.min(tns).over(wk)
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
-    from pyspark.sql import Column  # noqa: F401
     rel = (tns - base).cast("double") * F.lit(lam)
     rel = _span_guard(rel, tns, key, lam, "ewma_windowed")
     df, rel, _rn = _rel_column(df, rel)

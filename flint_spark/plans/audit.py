@@ -22,46 +22,21 @@ def walk_plan(node):
     """Yield every node name in the final physical plan, following AQE
     wrappers and query stages but NOT re-entering cached subtrees (an
     InMemoryTableScan's cached plan executes once, not per consumer —
-    string-counting the printed plan double-counts it). Delegates to
-    :func:`walk_plan_flagged` — ONE traversal to maintain."""
-    for name, _ in walk_plan_flagged(node):
-        yield name
-
-
-def walk_plan_flagged(node, under_broadcast=False):
-    """Like :func:`walk_plan` but yields ``(name, under_broadcast)`` —
-    whether the node sits inside a BroadcastExchange subtree. An
-    Exchange under a broadcast shuffles only the DIM side being built
-    for broadcast (e.g. the sorted-arrays aggregate of the JVM as-of
-    engine); an Exchange outside one moves the probe-side data — the
-    distinction the zero-big-side-exchange pins assert."""
+    string-counting the printed plan double-counts it)."""
     name = node.nodeName()
-    yield name, under_broadcast
+    yield name
     if name.startswith("InMemoryTableScan"):
         return
     if name.startswith("AdaptiveSparkPlan"):
-        yield from walk_plan_flagged(node.executedPlan(), under_broadcast)
+        yield from walk_plan(node.executedPlan())
         return
     if "QueryStage" in name:
-        yield from walk_plan_flagged(node.plan(), under_broadcast)
+        yield from walk_plan(node.plan())
         return
     if name.startswith("ReusedExchange"):
         return
-    child_flag = under_broadcast or name.startswith("BroadcastExchange")
     for i in range(node.children().length()):
-        yield from walk_plan_flagged(node.children().apply(i), child_flag)
-
-
-def count_probe_exchanges(df: DataFrame, execute: bool = True) -> int:
-    """Data-shuffle Exchange count OUTSIDE broadcast subtrees — the
-    exchanges that move the big (probe) side. A broadcast as-of plan
-    legitimately shuffles its dim side once while building the
-    broadcast arrays; what must stay at zero is this count."""
-    if execute:
-        df._jdf.queryExecution().toRdd().count()
-    return sum(1 for n, under in
-               walk_plan_flagged(df._jdf.queryExecution().executedPlan())
-               if n == "Exchange" and not under)
+        yield from walk_plan(node.children().apply(i))
 
 
 def plan_counts(df: DataFrame, execute: bool = True) -> dict[str, int]:

@@ -17,7 +17,7 @@ HEADER = """# Physical-plan audit (sf0.01, local[32], AQE on)
 
 Generated by `python tests/plan_audit.py` over every
 `__spark_entry__.queries()` + `extra_queries()` entry. *shuffles*
-excludes broadcast exchanges; *python* counts Arrow-batched pandas
+excludes broadcast exchanges; *python* counts Arrow-batched Python
 stages (the only Python in the engine); NLJ appears only as
 broadcast-nested-loop against tiny literal probe/centroid sides.
 
@@ -77,6 +77,8 @@ CONSTRUCTION_NOTES = {
               "ivfpq_serve bench split)"),
     "ivfpq_table": ("same construction cost as ivfpq; audited plan is "
                     "the partition-pruned serve scan"),
+    "asof_broadcast": ("the right side's snapshot (a one-task key-id "
+                       "rank and sort, collected) runs at construction"),
     "bpe_tokens": ("<=10 batched driver merge rounds (one pair-count "
                    "exchange each) train the vocabulary at "
                    "construction"),

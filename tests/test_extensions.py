@@ -528,8 +528,9 @@ def test_validate_parallel(spark):
 
 def test_merge_left_first_tie_rule(spark):
     """merge() ties order left-first (reference Merge.scala MergeIterator):
-    observable via origin_column and via the implicit
-    monotonically_increasing_id tie-break in cumulative operators."""
+    observable via origin_column. Without it a cumulative operator
+    orders tied rows by the row order (values), which on this input
+    also puts the left row first."""
     from flint_spark.operators import asof
 
     left = spark.createDataFrame([(1000, 1.0), (2000, 2.0)], "time long, v double")
@@ -538,7 +539,7 @@ def test_merge_left_first_tie_rule(spark):
     rows = m.sort("time", "origin").collect()
     assert [(r.time, r.origin) for r in rows] == [
         (1000, 0), (1000, 1), (1500, 1), (2000, 0)]
-    # implicit rule: cumulative sum at the tied timestamp sees left first
+    # row order at the tied timestamp: v 1.0 (left) before 10.0 (right)
     cum = agg_ops.add_summary_columns(asof.merge(left, right), S.sum_("v"))
     at_tie = {r.v: r.v_sum for r in cum.filter(F.col("time") == 1000).collect()}
     assert at_tie[1.0] == 1.0     # left row accumulated first
@@ -560,12 +561,8 @@ def test_summarize_windows_overlap_lag_sum(spark):
     assert got[250] == (12.0, 2.0)   # core {150,250}; lag [50,149] -> {50}
 
 
-@pytest.mark.parametrize("engine", ["jvm", "arrow"])
-def test_streaming_asof_static_matches_batch(spark, sf_dir, tmp_path,
-                                             engine):
-    """asof_join_static through a real stream == batch left_join, on
-    BOTH engines: the JVM matcher (default since r9 — the micro-batch
-    never crosses into Python) and the Arrow searchsorted fallback."""
+def test_streaming_asof_static_matches_batch(spark, sf_dir, tmp_path):
+    """asof_join_static through a real stream == batch left_join."""
     import shutil
     from flint_spark.operators import asof
     from flint_spark.timeseries import ns_to_time_expr
@@ -589,12 +586,12 @@ def test_streaming_asof_static_matches_batch(spark, sf_dir, tmp_path,
                  .withColumn("time", F.col("ts").cast("timestamp"))
                  .drop("ts").select("time", "user_id", "event_id"))
     out = ts_stream.asof_join_static(stream_ev, right, tolerance="12h",
-                                     key=["user_id"], engine=engine)
+                                     key=["user_id"])
     q = (out.writeStream.outputMode("append").format("memory")
-         .queryName(f"asof_static_out_{engine}").start())
+         .queryName("asof_static_out").start())
     q.processAllAvailable()
     q.stop()
-    got = (spark.sql(f"SELECT * FROM asof_static_out_{engine}").toPandas()
+    got = (spark.sql("SELECT * FROM asof_static_out").toPandas()
            .sort_values("event_id", ignore_index=True))
     pd.testing.assert_frame_equal(
         got[["event_id", "ref_id"]], exp[["event_id", "ref_id"]],
@@ -2938,6 +2935,69 @@ def test_left_join_broadcast_matches_window_plan(spark):
         asof.left_join_broadcast(left, right, direction="sideways")
 
 
+_B60 = 2 ** 60
+_NAN = float("nan")
+#: (left rows, left key column, right rows, right key and payload
+#: columns, payload name, last-2 arrays within tolerance 100 by left x)
+_EXACT_CASES = {
+    # a nullable bigint payload holding 2^60 + 1 and a null
+    "payload_int64": (
+        [(10, 1, 1.0), (20, 1, 2.0), (30, 1, 3.0)], "k int",
+        [(5, 1, _B60 + 1), (15, 1, None), (25, 1, _B60 + 2)],
+        "k int, p bigint", "p",
+        {1.0: [_B60 + 1], 2.0: [None, _B60 + 1], 3.0: [_B60 + 2, None]}),
+    # left keys 2^60, 2^60 + 1 and null in one partition; rights for
+    # 2^60 and null only
+    "key_int64": (
+        [(10, _B60, 1.0), (10, _B60 + 1, 2.0), (10, None, 3.0)], "k bigint",
+        [(5, _B60, 1.5), (10, _B60, 5.5), (15, _B60, 3.5),
+         (6, None, 2.5), (16, None, 4.5)],
+        "k bigint, rv double", "rv",
+        {1.0: [5.5, 1.5], 2.0: [], 3.0: [2.5]}),
+    # a double key holding NaN and null on both sides
+    "key_nan": (
+        [(10, _NAN, 1.0), (10, None, 2.0)], "k double",
+        [(5, _NAN, 1.5), (15, _NAN, 3.5), (6, None, 2.5), (16, None, 4.5)],
+        "k double, rv double", "rv",
+        {1.0: [1.5], 2.0: [2.5]}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EXACT_CASES))
+def test_broadcast_asof_exact(spark, case):
+    """Every broadcast as-of entry point is exact where Arrow-to-pandas
+    is not: a nullable bigint payload above 2^53, bigint keys that
+    differ only past 2^53, and a NaN key beside a null key all equal
+    the union-window plan (backward, forward, strict) and hand-written
+    last-k arrays."""
+    from flint_spark.operators import asof
+
+    lrows, lkey, rrows, rschema, pay, lastk = _EXACT_CASES[case]
+    left = spark.createDataFrame(lrows, f"time long, {lkey}, x double") \
+        .coalesce(1)
+    right = spark.createDataFrame(rrows, f"time long, {rschema}")
+
+    def rows(df):
+        return sorted((r.x, r[pay]) for r in df.collect())
+
+    for direction, strict in (("backward", False), ("forward", False),
+                              ("forward", True)):
+        if direction == "backward":
+            exp = asof.left_join(left, right, 100, ["k"], distributed=False)
+        else:
+            exp = asof.future_left_join(left, right, 100, ["k"],
+                                        strict_lookahead=strict,
+                                        distributed=False)
+        for fn in (asof.left_join_broadcast, ts_stream.asof_join_static):
+            got = fn(left, right, 100, ["k"], direction=direction,
+                     strict_lookahead=strict)
+            assert rows(got) == rows(exp), (fn.__name__, direction, strict)
+    for got in (asof.left_join_topk_broadcast(left, right, 2, 100, ["k"]),
+                ts_stream.topk_join_static(left, right, 2, 100, ["k"])):
+        assert {r.x: (list(r[f"{pay}_lastk"]), r.n_matched)
+                for r in got.collect()} == \
+            {x: (v, len(v)) for x, v in lastk.items()}
+
 def test_review2_fixes(spark):
     import pytest
 
@@ -3315,8 +3375,7 @@ def test_left_join_topk_broadcast_parity(spark):
     assert plan_counts(b_out)["shuffles"] == 0
 
     # NULL keys must match null-keyed rights in BOTH paths (the
-    # broadcast path's pandas groupby drops NaN groups by default —
-    # regression for the null-safe key normalization)
+    # broadcast path's key ids come from a null-safe join)
     lnull = spark.createDataFrame(
         [(5000, None, 1.0), (5000, "k0", 2.0)],
         "time long, k string, lv double")
@@ -5161,63 +5220,6 @@ def test_keyless_window_distributed_plan(spark):
     assert "windowspecdefinition(__b" not in _opt_plan(wide)
 
 
-def test_asof_small_right_auto_broadcast_zero_exchanges(spark, tmp_path):
-    """r6 verdict item 2 + r7 verdict item 1: a DIM-table as-of must
-    not shuffle the big side — and only a dim-table as-of may take the
-    broadcast route. The auto route (distributed=None) on a genuinely
-    dim right (file-backed, left estimate >= 8x right) plans ZERO
-    probe-side exchanges (the one Exchange it does plan folds the DIM
-    side into broadcast arrays); a right side comparable to the left —
-    the r7 bench regression shape — must NOT route; distributed=False
-    pins the union-window plan (>=1 probe exchange)."""
-    from entry_queries.common import count_exchanges
-    from flint_spark.operators import asof
-    from flint_spark.operators.asof import _broadcast_route_ok
-    from flint_spark.plans.audit import count_probe_exchanges, plan_counts
-    from flint_spark.timeseries import as_time_expr
-
-    # parquet-backed frames carry REAL Catalyst stats (a local
-    # relation reports ~8 EB 'unknown' and must never auto-broadcast)
-    sf = "/root/testdata/sf0.01"
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    left = (ev.withColumn("time", as_time_expr(ev, "ts", "timestamp"))
-            .select("time", "user_id", "value"))
-    # genuinely dim right: ~60 rows written to parquet so Catalyst sees
-    # a KB-scale file estimate (size-only stats don't shrink through a
-    # groupBy, so a derived aggregate of the left would NOT qualify)
-    dim_path = str(tmp_path / "dim.parquet")
-    (left.groupBy("user_id").agg(F.max("time").alias("time"),
-                                 F.avg("value").alias("rv"))
-     .select("time", "user_id", "rv").coalesce(1)
-     .write.mode("overwrite").parquet(dim_path))
-    right = spark.read.parquet(dim_path)
-    assert _broadcast_route_ok(left, right, ["user_id"], None, None, None)
-    auto = asof.left_join(left, right, tolerance="2000d", key=["user_id"])
-    assert count_probe_exchanges(auto) == 0
-    pc = plan_counts(auto)
-    assert pc["python"] == 0 and pc["bnlj"] == 0  # pure-JVM engine
-    assert pc["broadcasts"] == 1
-    # a right side comparable to the left (the r7 regression: orders at
-    # sf0.1 was BIGGER than events) must stay on the union-window plan
-    peer = (left.groupBy("user_id", "time")
-            .agg(F.max("value").alias("rv")))
-    assert not _broadcast_route_ok(left, peer, ["user_id"], None,
-                                   None, None)
-    local = spark.createDataFrame([(1, 1, 1.0)],
-                                  "time long, user_id int, rv double")
-    assert not _broadcast_route_ok(left, local, ["user_id"], None,
-                                   None, None)
-    pinned = asof.left_join(left, right, tolerance="2000d",
-                            key=["user_id"], distributed=False)
-    assert count_exchanges(pinned) >= 1
-    a = auto.toPandas().sort_values(["time", "user_id", "value"],
-                                    ignore_index=True)
-    b = pinned.toPandas().sort_values(["time", "user_id", "value"],
-                                      ignore_index=True)
-    pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)],
-                                  check_dtype=False)
-
-
 def test_asof_keyless_bucketed_degenerate_fallback(spark):
     """r6 advice: a tolerance near the data span puts every row in
     bucket 0 — the engine must fall back to the single-window plan
@@ -6272,11 +6274,11 @@ def test_compute_partitions_explicit_exchange(spark):
 
 
 def test_stream_static_jvm_pricing_persist_is_released(spark):
-    """asof_join_static(engine="jvm") persists a stats-less static right
-    side to price it. That persist goes through the shared retention
-    policy (``pipeline/_cache.py``) and is pinned to the result, so
-    more calls than LRU_SIZE leave at most LRU_SIZE persisted RDDs
-    instead of one per call."""
+    """asof_join_static persists a stats-less static right side to
+    price it. That persist goes through the shared retention policy
+    (``pipeline/_cache.py``) and is released once the snapshot is
+    collected, so more calls than LRU_SIZE leave at most LRU_SIZE
+    persisted RDDs instead of one per call."""
     import gc
 
     from flint_spark.pipeline._cache import LRU_SIZE, release_caches

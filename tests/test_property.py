@@ -1185,28 +1185,22 @@ def test_keyless_drawdown_routes_identical(panel):
 @given(left=panels(), right=panels(), tol=st.integers(0, 200),
        mode=st.sampled_from(["backward", "forward", "strict"]))
 def test_asof_broadcast_route_identical(left, right, tol, mode):
-    """r7 auto-broadcast pin, widened to THREE-WAY in r9: the JVM
-    broadcast engine AND the Arrow collect-and-searchsorted engine
-    (the streaming face's fallback — no longer its default, so this
-    property is now its primary batch gate) must both equal the
-    pinned union-window plan across backward/forward/strict —
-    DUPLICATE (key, time) rights included (panels generate ties; all
-    engines must resolve them to the max-struct row). The engines are
-    invoked directly: local relations report unknown Catalyst stats,
-    so the distributed=None trigger itself is pinned separately on
-    parquet frames (test_extensions)."""
+    """The broadcast as-of engine equals the pinned union-window plan
+    across backward/forward/strict — DUPLICATE (key, time) rights
+    included (panels generate ties; both must resolve them to the
+    max-struct row)."""
     spark = _spark()
     ldf = spark.createDataFrame(left, "time long, id int, v double")
     # keep duplicate (id, time) rights on purpose — rv duplicates too
     rdf = spark.createDataFrame(
         right.rename(columns={"v": "rv"}), "time long, id int, rv double")
 
-    def call(engine):
-        if engine in ("jvm", "arrow"):
+    def call(route):
+        if route == "broadcast":
             return asof.left_join_broadcast(
                 ldf, rdf, tolerance=tol, key=["id"],
                 direction="backward" if mode == "backward" else "forward",
-                strict_lookahead=(mode == "strict"), engine=engine)
+                strict_lookahead=(mode == "strict"))
         if mode == "backward":
             return asof.left_join(ldf, rdf, tolerance=tol, key=["id"],
                                   distributed=False)
@@ -1216,14 +1210,13 @@ def test_asof_broadcast_route_identical(left, right, tol, mode):
 
     cols = None
     outs = []
-    for engine in ("window", "jvm", "arrow"):
-        out = call(engine).toPandas()
+    for route in ("window", "broadcast"):
+        out = call(route).toPandas()
         out = out[sorted(out.columns)].sort_values(
             ["time", "id", "v"], ignore_index=True)
         cols = cols or out.columns.tolist()
         outs.append(out[cols])
     pd.testing.assert_frame_equal(outs[0], outs[1], check_dtype=False)
-    pd.testing.assert_frame_equal(outs[0], outs[2], check_dtype=False)
 
 
 # ---------------------------------------------------------------------

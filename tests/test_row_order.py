@@ -145,6 +145,52 @@ def test_row_order_defined_once():
     assert bad == []
 
 
+
+def _called(fn) -> set:
+    """Names of everything ``fn`` calls, nested functions included."""
+    return {n.func.attr if isinstance(n.func, ast.Attribute)
+            else getattr(n.func, "id", None)
+            for n in ast.walk(fn) if isinstance(n, ast.Call)}
+
+
+def test_one_broadcast_asof_engine():
+    """One broadcast as-of engine: a single function plans the Arrow
+    lookup (``ts_stream._broadcast_asof``); neither public face takes
+    an ``engine``; ``left_join``/``future_left_join`` never route to
+    it; the deleted in-JVM engine and its auto-route stay deleted."""
+    faces = {"left_join_broadcast", "asof_join_static"}
+    broadcast = faces | {"_broadcast_asof", "topk_join_static",
+                         "left_join_topk_broadcast"}
+    gone = {"_sorted_right_arrays", "_upper_bound", "_broadcast_route_ok",
+            "_null_safe_key", "_broadcast_static_tables",
+            "count_probe_exchanges"}
+    lookups, bad = [], []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+            tree = ast.parse(open(path).read())
+            bad += [(rel, n.id) for n in ast.walk(tree)
+                    if isinstance(n, ast.Name)
+                    and n.id.startswith("_ASOF_BROADCAST")]
+            for fn in _functions(tree):
+                calls = _called(fn)
+                if "arrow_udf" in calls:
+                    lookups.append((rel, fn.name))
+                if fn.name in gone:
+                    bad.append((rel, fn.name))
+                if fn.name in faces and "engine" in [
+                        a.arg for a in fn.args.args + fn.args.kwonlyargs]:
+                    bad.append((rel, fn.name, "engine"))
+                if rel == "operators/asof.py" and fn.name in (
+                        "left_join", "future_left_join") \
+                        and calls & broadcast:
+                    bad.append((rel, fn.name, sorted(calls & broadcast)))
+    assert lookups == [("streaming/ts_stream.py", "_broadcast_asof")]
+    assert bad == []
+
 def test_sort_rows_places_null_first_and_nan_last():
     """The pandas twin sorts like Spark: null first, NaN after +inf
     (told apart by the ``__isnan_`` flag Spark's Arrow conversion
