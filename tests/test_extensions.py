@@ -561,8 +561,12 @@ def test_summarize_windows_overlap_lag_sum(spark):
     assert got[250] == (12.0, 2.0)   # core {150,250}; lag [50,149] -> {50}
 
 
-def test_streaming_asof_static_matches_batch(spark, sf_dir, tmp_path):
-    """asof_join_static through a real stream == batch left_join."""
+@pytest.mark.parametrize("engine", ["arrow"])
+def test_streaming_asof_static_matches_batch(spark, sf_dir, tmp_path,
+                                             engine):
+    """asof_join_static through a real stream == batch left_join. The
+    id names the engine the stream runs on: the broadcast Arrow engine,
+    the only one left."""
     import shutil
     from flint_spark.operators import asof
     from flint_spark.timeseries import ns_to_time_expr
@@ -588,10 +592,10 @@ def test_streaming_asof_static_matches_batch(spark, sf_dir, tmp_path):
     out = ts_stream.asof_join_static(stream_ev, right, tolerance="12h",
                                      key=["user_id"])
     q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("asof_static_out").start())
+         .queryName(f"asof_static_out_{engine}").start())
     q.processAllAvailable()
     q.stop()
-    got = (spark.sql("SELECT * FROM asof_static_out").toPandas()
+    got = (spark.sql(f"SELECT * FROM asof_static_out_{engine}").toPandas()
            .sort_values("event_id", ignore_index=True))
     pd.testing.assert_frame_equal(
         got[["event_id", "ref_id"]], exp[["event_id", "ref_id"]],
