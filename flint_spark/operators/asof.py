@@ -159,12 +159,10 @@ def left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0,
 def future_left_join(left: DataFrame, right: DataFrame, tolerance: str | int = 0,
                      key: Sequence[str] = (), left_alias: str | None = None,
                      right_alias: str | None = None,
-                     strict_lookahead: bool = False,
-                     distributed: bool | None = None) -> DataFrame:
+                     strict_lookahead: bool = False) -> DataFrame:
     """As-of forward join: closest future right row in [t, t + tolerance]
     (or (t, t + tolerance] when strict): the union-window plan with a
-    time-descending frame. ``distributed`` is accepted for signature
-    parity with :func:`left_join` and does not change the plan."""
+    time-descending frame."""
     tol = parse_duration_ns(tolerance)
     key, left_data, right_data, left_out, right_out, l, r = _prepare(
         left, right, key, left_alias, right_alias)

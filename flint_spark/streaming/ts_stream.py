@@ -370,9 +370,11 @@ def _broadcast_asof(stream: DataFrame, right: DataFrame,
         if conflicts:
             raise ValueError(
                 f"conflicting output columns {sorted(conflicts)}")
+        # an unmatched row reads null, whatever the right column allows
         out_schema = T.StructType(
             list(stream.schema.fields)
-            + [f for f in right.schema.fields if f.name in rdata])
+            + [T.StructField(f.name, f.dataType, True)
+               for f in right.schema.fields if f.name in rdata])
     else:
         rdata, _, out_schema = _lastk_plan(
             stream.columns, stream.schema.fields, right, key,
@@ -421,17 +423,17 @@ def _broadcast_asof(stream: DataFrame, right: DataFrame,
         for c, r in zip(key[1:], rk[1:]):
             cond = cond & F.col(c).eqNullSafe(F.col(r))
         with_ns = with_ns.join(F.broadcast(ktab), cond, "left")
+    # a padding row keeps clipped gathers in range on an empty right
     b = stream.sparkSession.sparkContext.broadcast(
-        (comp, bounds, times, rt, payload))
+        (np.append(comp, np.iinfo(np.int64).max), bounds, times,
+         np.append(rt, 0), payload))
     added = out_schema.fields[len(stream.columns):]
 
     def lookup(t, g):
         import pyarrow as pa
 
-        comp, bounds, times, rt, payload = b.value
-        # a padding row keeps clipped gathers in range on an empty right
-        rtp = np.append(rt, 0)
-        compp = np.append(comp, np.iinfo(np.int64).max)
+        compp, bounds, times, rtp, payload = b.value
+        comp, nr = compp[:-1], len(rtp) - 1
         n = len(t)
         miss = t.is_null().to_numpy(zero_copy_only=False)
         t = t.fill_null(0).to_numpy()
@@ -458,14 +460,14 @@ def _broadcast_asof(stream: DataFrame, right: DataFrame,
             if direction == "backward":
                 pos = hi - 1
                 ok = pos >= start
-                ok &= t - rtp[np.clip(pos, 0, len(rt))] <= tol
+                ok &= t - rtp[np.clip(pos, 0, nr)] <= tol
             else:
                 # first right row at time >= t (> t when strict), then
                 # the last row of its equal-time run
                 pos = np.searchsorted(comp, base + np.searchsorted(
                     times, t, side="right" if strict_lookahead else "left"))
                 ok = pos < end
-                safe = np.clip(pos, 0, len(rt))
+                safe = np.clip(pos, 0, nr)
                 ok &= rtp[safe] <= t + tol
                 pos = np.searchsorted(comp, compp[safe], side="right") - 1
             idx = pa.array(np.clip(pos, 0, None), mask=~ok)

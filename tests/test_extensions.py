@@ -842,8 +842,7 @@ def test_asof_bucketed_scans_match_plain(spark):
         # distributed=False pins the union-window route on every input
         return (left_join(lf, rf, tolerance="50s", key=["k"],
                           distributed=False),
-                future_left_join(lf, rf, tolerance="50s", key=["k"],
-                                 distributed=False))
+                future_left_join(lf, rf, tolerance="50s", key=["k"]))
 
     exp_b, exp_f = map(rows, joins(left, right))
 
@@ -2964,6 +2963,12 @@ _EXACT_CASES = {
         [(5, _NAN, 1.5), (15, _NAN, 3.5), (6, None, 2.5), (16, None, 4.5)],
         "k double, rv double", "rv",
         {1.0: [1.5], 2.0: [2.5]}),
+    # a NOT NULL payload: an unmatched row still reads null
+    "payload_not_null": (
+        [(10, 1, 1.0), (20, 2, 2.0)], "k int",
+        [(5, 1, _B60 + 1), (15, 1, 3)],
+        "k int, p bigint not null", "p",
+        {1.0: [_B60 + 1], 2.0: []}),
 }
 
 
@@ -2971,7 +2976,8 @@ _EXACT_CASES = {
 def test_broadcast_asof_exact(spark, case):
     """Every broadcast as-of entry point is exact where Arrow-to-pandas
     is not: a nullable bigint payload above 2^53, bigint keys that
-    differ only past 2^53, and a NaN key beside a null key all equal
+    differ only past 2^53, a NaN key beside a null key and a NOT NULL
+    payload with unmatched rows all equal
     the union-window plan (backward, forward, strict) and hand-written
     last-k arrays."""
     from flint_spark.operators import asof
@@ -2990,8 +2996,7 @@ def test_broadcast_asof_exact(spark, case):
             exp = asof.left_join(left, right, 100, ["k"], distributed=False)
         else:
             exp = asof.future_left_join(left, right, 100, ["k"],
-                                        strict_lookahead=strict,
-                                        distributed=False)
+                                        strict_lookahead=strict)
         for fn in (asof.left_join_broadcast, ts_stream.asof_join_static):
             got = fn(left, right, 100, ["k"], direction=direction,
                      strict_lookahead=strict)

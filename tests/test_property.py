@@ -1206,7 +1206,7 @@ def test_asof_broadcast_route_identical(left, right, tol, mode):
                                   distributed=False)
         return asof.future_left_join(
             ldf, rdf, tolerance=tol, key=["id"],
-            strict_lookahead=(mode == "strict"), distributed=False)
+            strict_lookahead=(mode == "strict"))
 
     cols = None
     outs = []
