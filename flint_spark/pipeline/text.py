@@ -143,30 +143,14 @@ def token_count(text_col: str = "text") -> Column:
     return F.size(_words(text_col))
 
 
-def bpe_ish_token_count(text_col: str = "text") -> Column:
-    """Sub-word-ish token count: word-boundary pieces plus length/4
-    continuation pieces per word (a cheap BPE proxy; deterministic)."""
-    return _bpe_count(_words(text_col))
-
-
 def stopword_ratio(text_col: str = "text", lang: str = "en") -> Column:
     return _stopword_ratio(_words(text_col), lang)
-
-
-def avg_word_length(text_col: str = "text") -> Column:
-    return _avg_word_length(F.length(F.col(text_col)), _words(text_col))
 
 
 def quality_score(text_col: str = "text") -> Column:
     """Heuristic [0,1] document quality: length saturation + lexical
     diversity + reasonable word length (deterministic expression)."""
     return _quality(F.length(F.col(text_col)), _words(text_col))
-
-
-def language_scores(text_col: str = "text") -> list[Column]:
-    """Per-language stopword hit ratios, one column per language."""
-    return [stopword_ratio(text_col, lang).alias(f"score_{lang}")
-            for lang in LANG_STOPWORDS]
 
 
 def language_id(text_col: str = "text") -> Column:

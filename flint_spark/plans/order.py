@@ -32,19 +32,6 @@ ORDER_DESTROYING_NODES = {
 }
 
 
-def _node_names(df: DataFrame) -> list[str]:
-    plan = df._jdf.queryExecution().analyzed()
-    out = []
-    it = plan.collectLeaves()  # noqa: F841 - force analysis
-    stack = [plan]
-    while stack:
-        node = stack.pop()
-        out.append(node.nodeName())
-        for i in range(node.children().length()):
-            stack.append(node.children().apply(i))
-    return out
-
-
 def is_order_preserving(df: DataFrame, base: DataFrame | None = None) -> bool:
     """True iff every plan node preserves row order.
 

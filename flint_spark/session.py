@@ -108,6 +108,15 @@ def get_spark(app_name: str = "flint_spark", master: str | None = None) -> Spark
         # TimeType: long ns vs timestamp µs).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # keep every generated class of a call sequence compiled: one
+        # pass of the tick operators generates ~95 distinct classes,
+        # and the default 100-entry cache (split over 4 LRU segments)
+        # evicted and Janino-recompiled about 20 of them on every pass
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # no Python call-site capture per DataFrame API call: it costs
+        # py4j round trips on every call, and for plans built inside
+        # the operators the captured site points into this package
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # workers fork from flint_spark._daemon: pyspark's daemon minus
         # the per-task re-read of unchanged zip/jar archives. The daemon
         # module must import whatever the driver's working directory.

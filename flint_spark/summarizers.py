@@ -27,6 +27,7 @@ names, ``where`` masks inputs.
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Callable, Sequence
 
@@ -129,8 +130,9 @@ class Summarizer:
 def _combine_cum(summarizers: Sequence[Summarizer]):
     """Concatenate members' cum specs under per-member tags (masks and
     prefixes stay baked into each member's accumulators; tags keep two
-    members over the same column from colliding — Catalyst dedups
-    identical window expressions, so a shared count costs nothing)."""
+    members over the same column from colliding). An unmasked member's
+    builders pass through as the same objects, so an accumulator two
+    members share is one builder and a window evaluates it once."""
     if not all(s.has_cum for s in summarizers):
         return None, None
     cum_items = []
@@ -138,9 +140,10 @@ def _combine_cum(summarizers: Sequence[Summarizer]):
     for i, s in enumerate(summarizers):
         tag, msk = f"c{i}_", s._mask
         for name, fn, kind in s._cum_items:
-            cum_items.append((tag + name,
-                              (lambda df, m, o, fn=fn, msk=msk:
-                               fn(df, lambda c: m(msk(c)), o)), kind))
+            if msk is not _IDENT:
+                fn = (lambda df, m, o, fn=fn, msk=msk:
+                      fn(df, lambda c: m(msk(c)), o))
+            cum_items.append((tag + name, fn, kind))
         members.append((tag, s))
 
     def cum_render(df, st):
@@ -217,10 +220,15 @@ def _moment_state(column: str, order: int) -> list[tuple[str, Builder]]:
 # semantics exactly: double x/0 -> null, var_samp(n=1) -> null,
 # corr/skewness of a constant -> null (probed, tests pin them).
 
+# One builder object per accumulator: a windowed summarizer evaluates
+# each distinct (builder, mask) once (``windows_ops.WindowAggs``), so
+# compose(mean(x), stddev(x)) shares the count and sum of x.
+@functools.cache
 def _c_n(col: str) -> Builder:
     return lambda df, m, o: o(F.count(m(F.col(col))))
 
 
+@functools.cache
 def _c_s(col: str, p: int = 1) -> Builder:
     def b(df: DataFrame, m: Mask, o: Over) -> Column:
         x = m(F.col(col)).cast("double")

@@ -103,14 +103,18 @@ def time_ns_expr(df: DataFrame, column: str = TIME_COLUMN) -> Column:
 
 
 def floor_div(col: Column, divisor: int) -> Column:
-    """Exact floor division for non-negative epoch-ns Longs.
+    """Exact floor division of an integral column (epoch-ns Longs),
+    as a long.
 
     ``(col / n).cast('long')`` is lossy: ns magnitudes (~1.7e18) exceed
     double's 53-bit mantissa. Subtracting the remainder first makes the
-    numerator exactly divisible, and decimal division keeps it exact.
+    numerator exactly divisible, so integral ``div`` (which truncates
+    toward zero) is exact and floors negative values too. A zero
+    divisor yields null under ANSI-off.
     """
+    col = col.cast("long")
     rem = F.pmod(col, F.lit(divisor))
-    return ((col - rem).cast("decimal(38,0)") / F.lit(divisor)).cast("long")
+    return F.call_function("div", col - rem, F.lit(divisor))
 
 
 def ns_to_time_expr(ns: Column, dtype: str) -> Column:

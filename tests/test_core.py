@@ -23,11 +23,23 @@ def test_parse_duration():
 
 
 def test_floor_div_exact(spark):
-    # values beyond double precision must divide exactly
-    vals = [(1_704_073_540_167_754_967,), (2**62 + 12345,), (999,), (0,)]
+    # values beyond double precision must divide exactly, and negative
+    # values floor (toward -inf), not truncate
+    vals = [(1_704_073_540_167_754_967,), (2**62 + 12345,), (999,), (0,),
+            (-1,), (-1000,), (-1001,), (-(2**62) - 12345,),
+            (-(2**63) + 999,)]
     df = spark.createDataFrame(vals, "v long")
     out = df.select(floor_div(F.col("v"), 1000).alias("q")).collect()
     assert [r.q for r in out] == [v[0] // 1000 for v in vals]
+    # an int column divides as a long, its extremes included
+    ints = [7, -7, 2**31 - 1, -(2**31)]
+    got = spark.createDataFrame([(v,) for v in ints], "v int").select(
+        floor_div(F.col("v"), 3).alias("q"))
+    assert got.schema["q"].dataType.typeName() == "long"
+    assert [r.q for r in got.collect()] == [v // 3 for v in ints]
+    # divisor 0: null under ANSI-off (the session default here)
+    zero = df.select(floor_div(F.col("v"), 0).alias("q")).collect()
+    assert [r.q for r in zero] == [None] * len(vals)
 
 
 def _price(spark):
