@@ -2405,22 +2405,19 @@ SQL_WINDOW_CORR = """
 def q_passthrough(spark, sf):
     """DataFrame-method passthrough on the wrapper (the r4 judge's #1
     API-parity gap, now closed): a where/withColumn/select chain issued
-    DIRECTLY on the TimeSeriesDataFrame resolves via __getattr__,
-    auto-wraps every DataFrame result, and keeps is_sorted through the
-    order-preservation analysis (reference auto-wrap,
-    python/ts/flint/dataframe.py:166-227). The chain's TSDF-ness and
-    flag are asserted in-query so the oracle row is evidence the
+    DIRECTLY on the TimeSeriesDataFrame resolves via __getattr__ and
+    auto-wraps every DataFrame result that keeps ``time`` (reference
+    auto-wrap, python/ts/flint/dataframe.py:166-227). The chain's
+    TSDF-ness is asserted in-query so the oracle row is evidence the
     passthrough path itself ran."""
     from flint_spark import TimeSeriesDataFrame
 
-    ts = TimeSeriesDataFrame(_events(spark, sf), is_sorted=True)
+    ts = TimeSeriesDataFrame(_events(spark, sf))
     out = (ts.where(F.col("event_type").isin("view", "purchase"))
            .withColumn("value_sq", R(F.col("value") * F.col("value"), 2))
            .withColumnRenamed("user_id", "uid")
            .select(TIME_COLUMN, "event_id", "uid", "value_sq"))
     assert isinstance(out, TimeSeriesDataFrame), "passthrough unwrapped"
-    assert out.is_sorted, "order-preserving chain downgraded the flag"
-    assert not ts.sample(0.5, seed=7).is_sorted, "Sample kept the flag"
     return out.df
 
 

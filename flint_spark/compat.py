@@ -23,9 +23,10 @@ runs verbatim.
 ``fromDFWithRanges``, reference ``TimeSeriesRDD.scala:147-179,463-509``):
 those constructors exist to INJECT hand-built partition-range metadata
 (``PartitionInfo``) so the reference engine can skip its sort. This
-engine has no partition metadata to inject — ordering is established
-once by ``from_df``'s canonize (sort-if-needed) and physical locality
-is Spark's own partitioning — so the port is:
+engine has no partition metadata to inject — each operator sorts
+what it needs, Catalyst skips a sort the plan's own ordering already
+gives, and physical locality is Spark's own partitioning — so the port
+is:
 
 >>> df = spark.createDataFrame(rows_or_rdd, schema)   # fromRDD/fromSeq
 >>> tsdf = TimeSeriesDataFrame.from_df(
@@ -160,8 +161,7 @@ def _summarize_camel_aware(orig_summarize):
                                    dict(self.df.dtypes)[TIME_COLUMN])
             # wrap like every other summarize branch — ported code
             # chains TSDF methods off the result
-            return self._wrap(out.select(zero.alias(TIME_COLUMN), "*"),
-                              is_sorted=False)
+            return self._wrap(out.select(zero.alias(TIME_COLUMN), "*"))
         return orig_summarize(self, summarizer, k)
 
     return summarize

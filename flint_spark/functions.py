@@ -59,7 +59,7 @@ def _complete_group_batches(batches, gcols: Sequence[str]):
     batch carries MANY groups, where a per-group ``applyInPandas``
     pays its ~2.7ms JVM<->Arrow round-trip PER GROUP — the 10:1
     overhead the bucket-width study measured
-    (docs/BENCH_NOTES.md)."""
+    (``git show 3936ed2:docs/BENCH_NOTES.md``)."""
     import numpy as np
 
     def _same_group(last_row, first_row):
@@ -234,7 +234,8 @@ def summarize_windows_udf(df: DataFrame, window: TimeWindow,
     within-partition sort + ``mapInPandas``: many groups ride in each
     Arrow batch (a per-group ``applyInPandas`` pays ~2.7ms of
     JVM<->Arrow round-trip PER GROUP, which dominated small-bucket
-    runs 10:1 — docs/BENCH_NOTES.md bucket-width study), group runs
+    runs 10:1 — the bucket-width study in ``git show
+    3936ed2:docs/BENCH_NOTES.md``), group runs
     are rediscovered as change-points of the sorted batch, a group
     split across batch boundaries is carried over, and each target's
     window is sliced out of the shared frame with ``searchsorted``
@@ -462,15 +463,6 @@ def summarize_cycles_calls(df: DataFrame, outputs: Mapping,
         return res
 
     return summarize_cycles_udf(df, evaluate, schema, key)
-
-
-def summarize_intervals_calls(df: DataFrame, clock, outputs: Mapping,
-                              key: Sequence[str] = (),
-                              inclusion: str = "begin",
-                              rounding: str = "end") -> DataFrame:
-    return summarize_cycles_calls(_interval_cycles(df, clock, inclusion,
-                                                   rounding),
-                                  outputs, key)
 
 
 def summarize_windows_calls(df: DataFrame, window: TimeWindow,

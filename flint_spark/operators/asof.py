@@ -446,7 +446,8 @@ def left_join_topk(left: DataFrame, right: DataFrame, k: int,
     first cut of this operator cogrouped per key, which pays the
     JVM<->Arrow round-trip PER KEY twice (two frames); at 1.5k keys /
     250k rows a NO-OP cogroup alone measured 14s where this engine's
-    whole join runs in ~1s (docs/BENCH_NOTES.md). Per-row window
+    whole join runs in ~1s (``git show 3936ed2:docs/BENCH_NOTES.md``).
+    Per-row window
     bounds come from two vectorized searchsorteds, the k-tail gather
     is a (n, k) index matrix — no per-row Python loop over
     candidates. For a small static right side use

@@ -84,7 +84,7 @@ def add_columns_for_cycle(
 
         # many cycles per Arrow batch (functions._grouped_map) instead
         # of one applyInPandas round-trip per cycle — see the
-        # grouped-UDF engine note in docs/BENCH_NOTES.md
+        # grouped-UDF engine note in `git show 3936ed2:docs/BENCH_NOTES.md`
         def per_cycle(head: pd.DataFrame, segs: list) -> pd.DataFrame:
             frames = []
             for s0, s1 in zip(segs, segs[1:]):

@@ -407,6 +407,22 @@ def _rel_column(df: DataFrame, expr: Column, name: str = "__ewm_rel"):
     return df.withColumn(name, expr), F.col(name), name
 
 
+def _time_order(df: DataFrame, key: Sequence[str], values: Sequence[str]):
+    """Materialize the time in ns as ``__tns`` and order each key's
+    rows by the row order over it (``timeseries.row_order``). Time
+    leads that order, so ``F.min(tns)`` over the spec is the key's
+    first time on every row, and a window ordered on the same ``__tns``
+    attribute reuses the spec's sort (an order EXPRESSION is re-aliased
+    per Window node, so it would not). Returns (df, tns, spec,
+    scratch_name)."""
+    from pyspark.sql import Window as W
+
+    df, tns, name = _rel_column(df, time_ns_expr(df), "__tns")
+    spec = W.partitionBy(*key).orderBy(
+        *row_order(df, tns, values=values, skip=key))
+    return df, tns, spec, name
+
+
 def ewma_native(df: DataFrame, column: str, alpha: float = 0.05,
                 duration_per_period: str = "1d", convention: str = "legacy",
                 key: Sequence[str] = ()) -> DataFrame:
@@ -444,13 +460,8 @@ def _ewma_native(df: DataFrame, cols: Sequence[str], alpha: float,
         raise ValueError("convention must be 'core' or 'legacy'")
     key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    # time ns as a column: the running-min window and the sums' window
-    # then order on one attribute, and the second reuses the first's
-    # sort (an order EXPRESSION is re-aliased per Window node)
-    df, tns, _tn = _rel_column(df, time_ns_expr(df), "__tns")
-    frame = (W.partitionBy(*key)
-             .orderBy(*row_order(df, tns, values=values, skip=key))
-             .rowsBetween(W.unboundedPreceding, W.currentRow))
+    df, tns, spec, _tn = _time_order(df, key, values)
+    frame = spec.rowsBetween(W.unboundedPreceding, W.currentRow)
     rel = (tns - F.min(tns).over(frame)).cast("double") * F.lit(lam)
     df, rel, _rn = _span_guard(df, rel, "ewma_native")
     outs = {}
@@ -500,12 +511,10 @@ def ewma_windowed(df: DataFrame, column: str, window, alpha: float = 0.05,
         raise ValueError("convention must be 'core' or 'legacy'")
     key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    tns = time_ns_expr(df)
-    wk = W.partitionBy(*key)
-    base = F.min(tns).over(wk)
+    df, tns, spec, _tn = _time_order(df, key, [column])
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
-    rel = (tns - base).cast("double") * F.lit(lam)
+    rel = (tns - F.min(tns).over(spec)).cast("double") * F.lit(lam)
     df, rel, _rn = _span_guard(df, rel, "ewma_windowed")
     x = F.col(column)
     num = F.sum(x * F.exp(rel)).over(frame) * F.exp(-rel)
@@ -514,7 +523,7 @@ def ewma_windowed(df: DataFrame, column: str, window, alpha: float = 0.05,
     else:
         den = F.sum(F.exp(rel)).over(frame) * F.exp(-rel)
         out = num / den
-    return df.withColumn(f"{column}_ewma", out).drop(_rn)
+    return df.withColumn(f"{column}_ewma", out).drop(_rn, _tn)
 
 
 def exponential_smoothing_windowed(df: DataFrame, column: str, window,
@@ -563,16 +572,14 @@ def exponential_smoothing_windowed(df: DataFrame, column: str, window,
     period_ns = float(parse_duration_ns(duration_per_period))
     lam = -math.log1p(-alpha)                  # -ln(1-alpha) per period
     lam_ns = lam / period_ns                   # per ns
-    tns = time_ns_expr(df)
-    wk = W.partitionBy(*key)
-    wlag = W.partitionBy(*key).orderBy(tns)
+    df, tns, spec, _tn = _time_order(df, key, [column])
     frame = W.partitionBy(*key).orderBy(tns).rangeBetween(*window.range_bounds())
 
-    base = F.min(tns).over(wk)
+    base = F.min(tns).over(spec)
     Tcum = (tns - base).cast("double") * F.lit(lam_ns)   # cumulative -ln decay
     x = F.col(column).cast("double")
-    prev_t = F.lag(tns).over(wlag)
-    prev_x = F.lag(x).over(wlag)
+    prev_t = F.lag(tns).over(spec)
+    prev_x = F.lag(x).over(spec)
 
     eps = F.lit(1e-12)
 
@@ -617,7 +624,7 @@ def exponential_smoothing_windowed(df: DataFrame, column: str, window,
         out = primary / aux
     else:
         out = primary
-    return df.withColumn(f"{column}_ema", out)
+    return df.withColumn(f"{column}_ema", out).drop(_tn)
 
 
 def ema_half_life(df: DataFrame, column: str, half_life: str,
@@ -718,11 +725,10 @@ def ewm_volatility_windowed(df: DataFrame, column: str, window,
     _check_alpha(alpha)
     key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    tns = time_ns_expr(df)
-    base = F.min(tns).over(W.partitionBy(*key))
+    df, tns, spec, _tn = _time_order(df, key, [column])
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
-    rel = (tns - base).cast("double") * F.lit(lam)
+    rel = (tns - F.min(tns).over(spec)).cast("double") * F.lit(lam)
     df, rel, _rn = _span_guard(df, rel, "ewm_volatility_windowed")
     x = F.col(column).cast("double")
     # ALL frame sums in ONE projection: window expressions embedded in
@@ -736,7 +742,7 @@ def ewm_volatility_windowed(df: DataFrame, column: str, window,
     o = df.withColumns(sums)
     mean = F.col("__vw_sx") / F.col("__vw_den")
     msq = F.col("__vw_sxx") / F.col("__vw_den")
-    return _ewm_moment_cols(o, column, mean, msq).drop(*sums, _rn)
+    return _ewm_moment_cols(o, column, mean, msq).drop(*sums, _rn, _tn)
 
 
 def ewm_corr(df: DataFrame, x: str, y: str, alpha: float = 0.05,
@@ -862,11 +868,10 @@ def ewm_corr_windowed(df: DataFrame, x: str, y: str, window,
     _check_alpha(alpha)
     key = list(key)
     lam = -math.log1p(-alpha) / parse_duration_ns(duration_per_period)
-    tns = time_ns_expr(df)
-    base = F.min(tns).over(W.partitionBy(*key))
+    df, tns, spec, _tn = _time_order(df, key, [x, y])
     frame = (W.partitionBy(*key).orderBy(tns)
              .rangeBetween(*window.range_bounds()))
-    rel = (tns - base).cast("double") * F.lit(lam)
+    rel = (tns - F.min(tns).over(spec)).cast("double") * F.lit(lam)
     df, rel, _rn = _span_guard(df, rel, "ewm_corr_windowed")
     cx, cy = F.col(x).cast("double"), F.col(y).cast("double")
     w = F.exp(rel)
@@ -895,4 +900,4 @@ def ewm_corr_windowed(df: DataFrame, x: str, y: str, window,
             .withColumn(f"{pfx}_ewm_corr",
                         F.when(vx_ok & vy_ok, corr))
             .withColumn(f"{pfx}_ewm_beta", F.when(vy_ok, cov / vy))
-            .drop(*sums, _rn))
+            .drop(*sums, _rn, _tn))

@@ -5,10 +5,10 @@ distinguished ``time`` column (first column, ``TimestampType`` or
 ``LongType`` nanoseconds). Unlike the reference engine
 (twosigma/flint ``TimeSeriesRDD``, reference
 ``timeseries/TimeSeriesRDD.scala:562-571``), we do NOT materialize
-partition-range metadata or a custom ordered RDD: sortedness is a
-logical property tracked by a flag, and each operator establishes the
-physical ordering it needs via ``Window`` specs, ``groupBy`` or
-``repartitionByRange`` — Catalyst/AQE pick the physical strategy.
+partition-range metadata or a custom ordered RDD: each operator states
+the ordering it needs via ``Window`` specs, ``groupBy`` or
+``repartitionByRange``, and Catalyst plans a ``Sort`` only where the
+plan's own ``outputOrdering`` does not already give it.
 
 Design notes for 100 TB scale:
 - every operator compiles to declarative DataFrame ops so predicate
@@ -223,7 +223,6 @@ def sort_rows(pdf, names: Sequence[str]):
 def canonize(
     df: DataFrame,
     time_column: str = TIME_COLUMN,
-    is_sorted: bool = False,
     time_unit: str | None = None,
 ) -> DataFrame:
     """Rename/reorder the time column first; optionally convert units.
@@ -247,14 +246,15 @@ def canonize(
 class TimeSeriesDataFrame:
     """Time-ordered table: wraps a DataFrame whose ``time`` column is the
     logical sort key. All operators return new wrappers; nothing mutates.
+    The wrapper keeps no ordering state: whether a plan needs a ``Sort``
+    is Catalyst's call, from the plan's own ``outputOrdering``.
     """
 
-    def __init__(self, df: DataFrame, is_sorted: bool = True):
+    def __init__(self, df: DataFrame):
         if TIME_COLUMN not in df.columns:
             raise ValueError("TimeSeriesDataFrame requires a 'time' column; use from_df()")
         require_ansi_off("TimeSeriesDataFrame", df.sparkSession)
         self._df = df
-        self.is_sorted = is_sorted
 
     # -- constructors -------------------------------------------------
     @classmethod
@@ -262,10 +262,9 @@ class TimeSeriesDataFrame:
         cls,
         df: DataFrame,
         time_column: str = TIME_COLUMN,
-        is_sorted: bool = False,
         time_unit: str | None = None,
     ) -> "TimeSeriesDataFrame":
-        return cls(canonize(df, time_column, is_sorted, time_unit), is_sorted=is_sorted)
+        return cls(canonize(df, time_column, time_unit))
 
     @classmethod
     def from_parquet(
@@ -405,8 +404,8 @@ class TimeSeriesDataFrame:
                     f"partition ranges overlap: p{a['_pid']} [..{a['_hi']}] vs "
                     f"p{b['_pid']} [{b['_lo']}..]")
 
-    def _wrap(self, df: DataFrame, is_sorted: bool | None = None) -> "TimeSeriesDataFrame":
-        return TimeSeriesDataFrame(df, self.is_sorted if is_sorted is None else is_sorted)
+    def _wrap(self, df: DataFrame) -> "TimeSeriesDataFrame":
+        return TimeSeriesDataFrame(df)
 
     # -- projections / filters / row ops (reference §2.2) -------------
     def keep_columns(self, *cols: str) -> "TimeSeriesDataFrame":
@@ -451,10 +450,11 @@ class TimeSeriesDataFrame:
         return self._wrap(self._df.withColumns(dict(exprs)))
 
     def set_time(self, expr: Column) -> "TimeSeriesDataFrame":
-        """Recompute the time column; marks unsorted (the reference assumes
-        monotonicity, ``TimeSeriesRDD.scala:1263-1284``)."""
+        """Recompute the time column (the reference assumes the new time
+        is monotonic, ``TimeSeriesRDD.scala:1263-1284``; no order is
+        assumed here)."""
         df = self._df.withColumn(TIME_COLUMN, expr)
-        return self._wrap(canonize(df), is_sorted=False)
+        return self._wrap(canonize(df))
 
     def shift(self, duration: str | int, backward: bool = False) -> "TimeSeriesDataFrame":
         """Shift all timestamps by a duration (monotonic => order kept).
@@ -508,11 +508,11 @@ class TimeSeriesDataFrame:
 
     def merge(self, other: "TimeSeriesDataFrame") -> "TimeSeriesDataFrame":
         from .operators.asof import merge
-        return self._wrap(merge(self._df, other._df), is_sorted=False)
+        return self._wrap(merge(self._df, other._df))
 
     def group_by_cycle(self, key: Sequence[str] = ()) -> "TimeSeriesDataFrame":
         from .operators.cycles import group_by_cycle
-        return self._wrap(group_by_cycle(self._df, key), is_sorted=False)
+        return self._wrap(group_by_cycle(self._df, key))
 
     def summarize_cycles(self, summarizer, key: Sequence[str] = ()) -> "TimeSeriesDataFrame":
         """Summarizer object, or a reference-style udf dict
@@ -522,10 +522,9 @@ class TimeSeriesDataFrame:
         if isinstance(summarizer, Mapping):
             from .functions import summarize_cycles_calls
             return self._wrap(
-                summarize_cycles_calls(self._df, summarizer, key),
-                is_sorted=False)
+                summarize_cycles_calls(self._df, summarizer, key))
         from .operators.cycles import summarize_cycles
-        return self._wrap(summarize_cycles(self._df, summarizer, key), is_sorted=False)
+        return self._wrap(summarize_cycles(self._df, summarizer, key))
 
     def add_columns_for_cycle(self, columns, key: Sequence[str] = ()) -> "TimeSeriesDataFrame":
         from .operators.cycles import add_columns_for_cycle
@@ -534,15 +533,14 @@ class TimeSeriesDataFrame:
     def group_by_interval(self, clock, key: Sequence[str] = (), inclusion: str = "begin",
                           rounding: str = "end") -> "TimeSeriesDataFrame":
         from .operators.intervals import group_by_interval
-        return self._wrap(group_by_interval(self._df, clock, key, inclusion, rounding),
-                          is_sorted=False)
+        return self._wrap(group_by_interval(self._df, clock, key, inclusion, rounding))
 
     def summarize_intervals(self, clock, summarizer, key: Sequence[str] = (),
                             inclusion: str = "begin", rounding: str = "end"
                             ) -> "TimeSeriesDataFrame":
         from .operators.intervals import summarize_intervals
         return self._wrap(summarize_intervals(self._df, clock, summarizer, key,
-                                              inclusion, rounding), is_sorted=False)
+                                              inclusion, rounding))
 
     def summarize_intervals_multi(self, granularities, summarizer,
                                   key: Sequence[str] = ()) -> DataFrame:
@@ -554,7 +552,7 @@ class TimeSeriesDataFrame:
 
     def summarize(self, summarizer, key: Sequence[str] = ()) -> "TimeSeriesDataFrame":
         from .operators.aggregate import summarize
-        return self._wrap(summarize(self._df, summarizer, key), is_sorted=False)
+        return self._wrap(summarize(self._df, summarizer, key))
 
     def summarize_state(self, summarizer, key: Sequence[str] = ()) -> DataFrame:
         """Raw aggregation state per key (reference ``summarizeState``,
@@ -584,12 +582,8 @@ class TimeSeriesDataFrame:
         ``python/ts/flint/dataframe.py:1099-1240``)."""
         if isinstance(summarizer, Mapping):
             from .functions import summarize_windows_calls
-            # the bucketed mapInPandas plan returns rows hash-grouped
-            # by (key, bucket), not time-ordered — downgrade the flag
-            # like the summarize_cycles dict path
             return self._wrap(
-                summarize_windows_calls(self._df, window, summarizer, key),
-                is_sorted=False)
+                summarize_windows_calls(self._df, window, summarizer, key))
         from .operators.windows_ops import summarize_windows
         return self._wrap(summarize_windows(self._df, window, summarizer, key,
                                             **kwargs))
@@ -699,8 +693,7 @@ class TimeSeriesDataFrame:
         the k most recent right rows per left row as arrays."""
         from .operators.asof import left_join_topk
         r = right._df if isinstance(right, TimeSeriesDataFrame) else right
-        return self._wrap(left_join_topk(self._df, r, k, tolerance, key),
-                          is_sorted=False)
+        return self._wrap(left_join_topk(self._df, r, k, tolerance, key))
 
     def left_join_topk_broadcast(self, right: "TimeSeriesDataFrame",
                                  k: int, tolerance: str | int = 0,
@@ -718,7 +711,7 @@ class TimeSeriesDataFrame:
                  tolerance: str | int = "36500d") -> "TimeSeriesDataFrame":
         from .operators.resample import resample
         return self._wrap(resample(self._df, clock, value_col, key, method,
-                                   tolerance), is_sorted=False)
+                                   tolerance))
 
     def detect_anomalies(self, column: str, window: str | int = "1d",
                          k: float = 3.0, key: Sequence[str] = (),
@@ -739,14 +732,13 @@ class TimeSeriesDataFrame:
     def rolling_ols(self, y: str, x: str, window,
                     **kwargs) -> "TimeSeriesDataFrame":
         from .operators.regression import rolling_ols
-        return self._wrap(rolling_ols(self._df, y, x, window, **kwargs),
-                          is_sorted=False)
+        return self._wrap(rolling_ols(self._df, y, x, window, **kwargs))
 
     def rolling_ols_multi(self, y: str, xs: Sequence[str], window,
                           **kwargs) -> "TimeSeriesDataFrame":
         from .operators.regression import rolling_ols_multi
         return self._wrap(rolling_ols_multi(self._df, y, xs, window,
-                                            **kwargs), is_sorted=False)
+                                            **kwargs))
 
     def sessionize(self, gap: str | int = "30m",
                    key: Sequence[str] = ()) -> "TimeSeriesDataFrame":
@@ -760,7 +752,7 @@ class TimeSeriesDataFrame:
         (:func:`operators.bars.ohlc_bars`); one exchange."""
         from .operators.bars import ohlc_bars
         return self._wrap(ohlc_bars(self._df, interval, price_col, key,
-                                    **kwargs), is_sorted=False)
+                                    **kwargs))
 
     def realized_volatility(self, interval: str | int, price_col: str,
                             key: Sequence[str] = (), **kwargs
@@ -769,8 +761,7 @@ class TimeSeriesDataFrame:
         (:func:`operators.bars.realized_volatility`); one exchange."""
         from .operators.bars import realized_volatility
         return self._wrap(realized_volatility(self._df, interval,
-                                              price_col, key, **kwargs),
-                          is_sorted=False)
+                                              price_col, key, **kwargs))
 
     def bar_range_volatility(self) -> "TimeSeriesDataFrame":
         from .operators.bars import bar_range_volatility
@@ -787,32 +778,21 @@ class TimeSeriesDataFrame:
         return max_drawdown(self._df, value_col, key, **kwargs)
 
     def transform(self, fn: Callable[[DataFrame], DataFrame]) -> "TimeSeriesDataFrame":
-        """Apply an arbitrary DataFrame transform, keeping the sortedness
-        flag honest via plan analysis (the reference's Python wrapper
-        downgrades TSDF->DF per its order-preservation rule table,
-        ``python/ts/flint/dataframe.py:184-215`` /
-        ``OrderPreservingOperation.scala``)."""
-        from .plans.order import is_order_preserving
-
+        """Apply an arbitrary DataFrame transform and wrap the result,
+        which must keep the ``time`` column."""
         out = fn(self._df)
         if TIME_COLUMN not in out.columns:
             raise ValueError("transform dropped the time column")
-        # classify only the nodes fn added on top of this df's plan
-        preserved = self.is_sorted and is_order_preserving(out, base=self._df)
-        return TimeSeriesDataFrame(out, is_sorted=preserved)
+        return TimeSeriesDataFrame(out)
 
     def __getattr__(self, name: str):
         """DataFrame-method passthrough: any attribute not defined on
         the wrapper resolves against the underlying DataFrame, and a
-        DataFrame-returning method comes back as a
-        ``TimeSeriesDataFrame`` whose ``is_sorted`` flag is maintained
-        by the same plan analysis as :meth:`transform` — so
-        ``ts.select(...)``, ``ts.where(...)``, ``ts.withColumn(...)``
-        keep the flag, while ``ts.sort(...)``/``ts.sample(...)`` (order-
-        redefining nodes) downgrade it, exactly like the reference's
-        auto-wrap (``python/ts/flint/dataframe.py:166-227``, rule table
-        ``OrderPreservingOperation.scala:34-96``). A result that drops
-        the ``time`` column, or a non-DataFrame result (``groupBy``,
+        DataFrame result that keeps the ``time`` column comes back as a
+        ``TimeSeriesDataFrame`` (the reference's auto-wrap,
+        ``python/ts/flint/dataframe.py:166-227``), so ``ts.select(...)``,
+        ``ts.where(...)`` and ``ts.withColumn(...)`` chain. A result
+        that drops ``time``, or a non-DataFrame result (``groupBy``,
         ``count``, column access), is returned unwrapped."""
         if name.startswith("__"):
             # never forward dunders (pickle/copy/ipython probes)
@@ -827,17 +807,11 @@ class TimeSeriesDataFrame:
 
         import functools
 
-        from .plans.order import is_order_preserving
-
         @functools.wraps(attr)
         def call(*args, **kwargs):
             out = attr(*args, **kwargs)
-            if isinstance(out, DataFrame):
-                if TIME_COLUMN in out.columns:
-                    preserved = self.is_sorted and \
-                        is_order_preserving(out, base=df)
-                    return TimeSeriesDataFrame(out, is_sorted=preserved)
-                return out
+            if isinstance(out, DataFrame) and TIME_COLUMN in out.columns:
+                return TimeSeriesDataFrame(out)
             return out
 
         return call

@@ -99,6 +99,27 @@ def test_tick_operator_sorts_once(quotes, trades, name):
     assert _sorts(_calls(quotes, trades)[name]) == 1
 
 
+#: the windowed EMA family: each key's time base is a min over the row
+#: order's own spec, and the range frame reuses its sort
+_WINDOWED_EMA = {
+    "ewma_windowed": lambda q, w: ema.ewma_windowed(
+        q, "bid", w, key=["sym"]),
+    "ewm_volatility_windowed": lambda q, w: ema.ewm_volatility_windowed(
+        q, "bid", w, key=["sym"]),
+    "ewm_corr_windowed": lambda q, w: ema.ewm_corr_windowed(
+        q, "bid", "ask", w, key=["sym"]),
+    "exponential_smoothing_windowed":
+        lambda q, w: ema.exponential_smoothing_windowed(
+            q, "bid", w, key=["sym"]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_WINDOWED_EMA))
+def test_windowed_ema_sorts_once(quotes, name):
+    df = _WINDOWED_EMA[name](quotes, W.past_absolute_time("60s"))
+    assert _sorts(df) == 1
+
+
 def test_floor_div_plans_stay_integral(spark, quotes, trades):
     from flint_spark import clocks
 

@@ -19,6 +19,7 @@ import ast
 import math
 import os
 import random
+import re
 
 import pandas as pd
 from hypothesis import HealthCheck, example, given, settings
@@ -191,6 +192,74 @@ def test_one_broadcast_asof_engine():
     assert lookups == [("streaming/ts_stream.py", "_broadcast_asof")]
     assert bad == []
 
+
+def test_one_ordering_fact():
+    """Catalyst's own ordering is the only ordering fact: no wrapper
+    flag (``is_sorted``) or plan walk (``is_order_preserving``,
+    ``plans/order.py``) tracks it, and neither passthrough of the
+    wrapper (``__getattr__``, ``transform``) asks for a query
+    execution."""
+    bad = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                bad += [(os.path.relpath(path, PKG), m) for m in re.findall(
+                    r"\b(?:is_sorted|is_order_preserving)\b",
+                    open(path).read())]
+    assert bad == []
+    assert not os.path.exists(os.path.join(PKG, "plans", "order.py"))
+    tree = ast.parse(open(os.path.join(PKG, "timeseries.py")).read())
+    cls = next(n for n in tree.body if isinstance(n, ast.ClassDef)
+               and n.name == "TimeSeriesDataFrame")
+    methods = {fn.name: fn for fn in cls.body
+               if isinstance(fn, ast.FunctionDef)}
+    for name in ("__getattr__", "transform"):
+        assert "queryExecution" not in ast.dump(methods[name]), name
+
+
+def test_wrapper_round_trips(spark, monkeypatch):
+    """A call through the wrapper costs the same DataFrame call's py4j
+    round trips plus a constant: at most 3 more for a ``select``, 9 more
+    for a ``where``/``withColumn``/``select`` chain. Commands are
+    counted like ``tools/call_costs.py`` (proxy deletes excluded)."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from flint_spark import TimeSeriesDataFrame
+
+    left = spark.createDataFrame([(i * SEC, i % 3, float(i))
+                                  for i in range(20)],
+                                 "time long, k long, x double")
+    right = spark.createDataFrame([(k, float(k)) for k in range(3)],
+                                  "k long, w double")
+    df = left.join(right, "k")
+    ts = TimeSeriesDataFrame(df)
+    calls = {
+        "select": (3, lambda d: d.select("time", "x")),
+        "chain": (9, lambda d: d.where(F.col("x") > 2)
+                  .withColumn("y", F.col("x") * 2).select("time", "y")),
+    }
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, [0]
+
+    def counted(command, *args, **kwargs):
+        sent[0] += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+
+    def trips(call, frame):
+        call(frame)  # warm
+        n0 = sent[0]
+        call(frame)
+        return sent[0] - n0
+
+    for name, (extra, call) in calls.items():
+        plain, wrapped = trips(call, df), trips(call, ts)
+        assert isinstance(call(ts), TimeSeriesDataFrame), name
+        assert wrapped <= plain + extra, (name, plain, wrapped)
+
+
 def test_sort_rows_places_null_first_and_nan_last():
     """The pandas twin sorts like Spark: null first, NaN after +inf
     (told apart by the ``__isnan_`` flag Spark's Arrow conversion
@@ -260,6 +329,8 @@ def _tables(rows, digits=None):
     return {t: sorted(r, key=repr) for t, r in out.items()}
 
 
+_WINDOW_KW = dict(window=past_absolute_time("3s"), alpha=0.1,
+                  duration_per_period="1s", key=["id"])
 #: every ordered batch operator, keyed so a layout change moves rows
 #: (pandas callbacks are lambdas: Spark's workers pickle them by value)
 _BATCH_OPS = {
@@ -296,6 +367,14 @@ _BATCH_OPS = {
     "left_join_topk": lambda d: asof.left_join_topk(
         d.select("time", "id", "tb"),
         d.select("time", "id", "v", "vol"), 2, "2s", key=["id"]),
+    "ewma_windowed": lambda d: ema.ewma_windowed(d, "v", **_WINDOW_KW),
+    "ewm_volatility_windowed": lambda d: ema.ewm_volatility_windowed(
+        d, "v", **_WINDOW_KW),
+    "ewm_corr_windowed": lambda d: ema.ewm_corr_windowed(
+        d, "v", "vol", **_WINDOW_KW),
+    "exponential_smoothing_windowed":
+        lambda d: ema.exponential_smoothing_windowed(
+            d, "v", interpolation="linear", **_WINDOW_KW),
 }
 
 # 40 keys at times [0, 1, 1, 1, 2]: a row-id tie-break in keyed
@@ -305,6 +384,11 @@ _PROBE_SUM = [(t * SEC, k, float((k * 7 + i * 13) % 11), None, 1.0)
 # 50 keys with a tie at t=1: keyed drawdown ordered by time alone
 _PROBE_DRAWDOWN = [(t * SEC, k, float((k * 5 + i * 3) % 7) + 1, None, 1.0)
                    for k in range(50) for i, t in enumerate([0, 1, 1, 2])]
+# 3 keys, 3 rows per time arriving out of value order: the windowed
+# EMA family's range sums, lags and firsts met tied rows in arrival order
+_PROBE_WINDOWED = [(i // 3 * SEC, k, float((i * 37 + k * 11) % 13) - 4.5,
+                    None, float((i * 17 + k * 5) % 11) * 0.3)
+                   for k in range(3) for i in range(20)]
 
 
 @settings(max_examples=4, deadline=None,
@@ -312,6 +396,7 @@ _PROBE_DRAWDOWN = [(t * SEC, k, float((k * 5 + i * 3) % 7) + 1, None, 1.0)
 @given(rows=tied_rows(), k=st.integers(2, 4))
 @example(rows=_PROBE_SUM, k=3)
 @example(rows=_PROBE_DRAWDOWN, k=3)
+@example(rows=_PROBE_WINDOWED, k=3)
 def test_batch_operators_ignore_layout(spark, rows, k):
     """Every ordered batch operator returns the same rows on one
     partition in input order and on ``repartition(k)`` of the reversed

@@ -187,7 +187,7 @@ def test_tsdf_summarize_dispatches_udf_dict(spark):
     df = spark.createDataFrame(
         [(1000, 1, 1.0), (1000, 1, 3.0), (1100, 1, 4.0), (1300, 1, 8.0)],
         "time long, id int, v double")
-    ts = TimeSeriesDataFrame(df, is_sorted=True)
+    ts = TimeSeriesDataFrame(df)
 
     @FL.udf(T.DoubleType())
     def total(v):
@@ -200,7 +200,6 @@ def test_tsdf_summarize_dispatches_udf_dict(spark):
     cyc = ts.summarize_cycles({"s": total(df["v"])}, key=["id"])
     assert {r.time: r.s for r in cyc.df.collect()} == \
         {1000: 4.0, 1100: 4.0, 1300: 8.0}
-    assert not cyc.is_sorted
 
 
 def test_add_columns_for_cycle_udf_call(spark, cycles_df):
