@@ -660,10 +660,11 @@ def _core_ewmas(df: DataFrame, cols: Sequence[str], alpha: float,
 
 def _ewm_moment_cols(df: DataFrame, column: str, mean_col, msq_col):
     """(mean, var, vol) output columns from the two decayed moments —
-    shared by the running/windowed/streaming volatility variants so
-    the estimator is defined in exactly one place: time-decayed
+    shared by the running and windowed volatility variants: time-decayed
     population variance ``E_w[x^2] - E_w[x]^2``, clamped at zero
-    (FP cancellation can leave a tiny negative when vol << mean)."""
+    (FP cancellation can leave a tiny negative when vol << mean). The
+    streaming fold (``ts_stream.ewm_volatility_stream``) computes the
+    same estimator in numpy over its carried moments."""
     var = F.greatest(msq_col - mean_col * mean_col, F.lit(0.0))
     return (df.withColumn(f"{column}_ewm_mean", mean_col)
             .withColumn(f"{column}_ewm_var", var)

@@ -14,7 +14,8 @@ Two physical strategies, chosen by clock type:
 - ``UniformClock`` → pure integer arithmetic (floor/ceil over ns), fully
   codegen'd, no broadcast, no UDF — the 100 TB fast path;
 - arbitrary tick DataFrame → collect+broadcast the tick array (the
-  reference does the same, warning above ~16.8 MB) and vectorized
+  reference does the same, warning above ~16.8 MB), cut the data to the
+  clock's range with a plain time predicate, then vectorized
   ``np.searchsorted`` in an Arrow-batched pandas UDF.
 """
 
@@ -79,7 +80,9 @@ def _clock_ticks_ns(clock_df: DataFrame,
     paid when the clock exceeds ``_TRIM_TICK_THRESHOLD`` ticks, so small
     clocks never trigger a data pass."""
     t = time_ns_expr(clock_df, TIME_COLUMN).alias("t")
-    ticks_df = clock_df.select(t)
+    # a null tick is no tick: collected as int64 it would read as the
+    # int64 minimum and open an interval in 1677
+    ticks_df = clock_df.select(t).filter(F.col("t").isNotNull())
     # cheap size probe: small clocks pay one limited count, not a full
     # count + a second materialization (ADVICE r2)
     is_large = (data_df is not None and
@@ -111,118 +114,28 @@ def _clock_ticks_ns(clock_df: DataFrame,
     return arr
 
 
-# inline the tick array as ONE in-plan literal (zero Python stages) up
-# to this many ticks: the serialized task binary is Torrent-broadcast
-# once per stage, so an <=800 KB literal costs one broadcast, same as
-# the UDF path's explicit broadcast — but the lookup stays in the JVM.
-# Larger (trimmed) clocks keep the Arrow UDF path, whose broadcast
-# variable avoids megabyte plan trees.
-_INLINE_TICK_THRESHOLD = 100_000
-
-
-def upper_bound_expr(arr: Column, x: Column, length: int) -> Column:
-    """Number of elements ``<= x`` in ``arr``, a sorted in-plan array
-    LITERAL of ``length`` elements — an in-JVM binary search:
-    ``F.aggregate`` over a ceil(log2(length + 1)) + 1 step sequence,
-    each step one lazy ``element_at`` probe. The loop form (not chained
-    projections) keeps the expression tree linear in the iteration
-    count; everything stays in whole-stage codegen. The length is a
-    Python constant: column expressions are trees, so an
-    ``F.size(arr)`` would embed another copy of the literal per
-    reference (r10: a 100k-tick clock's 800 KB literal appeared 4x
-    instead of the 2 probes that genuinely need it)."""
-    import math
-
-    iters = max(1, int(math.ceil(math.log2(length + 1))) + 1)
-    init = F.struct(F.lit(0).cast("long").alias("lo"),
-                    F.lit(int(length)).cast("long").alias("hi"))
-
-    def step(acc, _):
-        lo, hi = acc["lo"], acc["hi"]
-        mid = F.floor((lo + hi) / F.lit(2))
-        return (F.when(
-            lo < hi,
-            F.when(F.element_at(arr, (mid + 1).cast("int")) <= x,
-                   F.struct((mid + 1).alias("lo"), hi.alias("hi")))
-            .otherwise(F.struct(lo.alias("lo"), mid.alias("hi"))))
-            .otherwise(acc))
-
-    return F.aggregate(F.sequence(F.lit(1), F.lit(iters)), init, step)["lo"]
-
-
-def _jvm_intervalize(df: DataFrame, ticks: np.ndarray, inclusion: str,
-                     rounding: str) -> DataFrame:
-    """Zero-Python arbitrary-clock bucketing: the (trimmed) tick array
-    as a single in-plan ``array<long>`` literal probed per row with an
-    in-JVM binary search (:func:`upper_bound_expr`).
-
-    Validity is a plain range predicate on the raw time column applied
-    BEFORE the lookup — column expressions are trees, not DAGs, so
-    folding validity into a ``when()`` (or filtering the result for
-    null) would copy the whole binary search once per use site (3-4
-    evaluations per row; the UDF path guards against the same blowup
-    with ``asNondeterministic``). The pre-filter keeps the search at
-    exactly ONE evaluation per surviving row and, unlike a
-    post-hoc null filter, pushes down to the parquet scan as a
-    time-range prune. ``upper_bound_expr`` counts elements <= x, so
-    searchsorted-right is direct and searchsorted-left is
-    ``upper_bound(t - 1)`` (ticks and times are exact int64 ns);
-    bitwise route-identity with the UDF path is pinned in pytest."""
-    m = len(ticks) - 1
-    if m < 1:  # <2 ticks define no interval — same as the UDF path
-        return (df.filter(F.lit(False))
-                .withColumn(_INTERVAL, F.lit(None).cast("long")))
-    first, last = int(ticks[0]), int(ticks[-1])
-    t = time_ns_expr(df)
-    if inclusion == "begin":
-        # i = ub(t)-1 in [0, m-1]  <=>  t_0 <= t < t_m
-        pre = (t >= F.lit(first)) & (t < F.lit(last))
-    else:
-        # ie = ub(t-1) in [1, m]  <=>  t_0 < t <= t_m
-        pre = (t > F.lit(first)) & (t <= F.lit(last))
-    filtered = df.filter(pre)
-    arr = F.lit([int(v) for v in ticks])
-    tf = time_ns_expr(filtered)
-    # 1-based element_at index of the interval's BEGIN tick is exactly
-    # ub(t) (inclusion=begin) / ub(t-1) (inclusion=end); the END tick
-    # is one past it — the binary search appears ONCE either way
-    idx = upper_bound_expr(arr, tf if inclusion == "begin" else tf - F.lit(1),
-                           length=len(ticks))
-    out_idx = idx if rounding == "begin" else idx + F.lit(1)
-    return filtered.withColumn(
-        _INTERVAL, F.element_at(arr, out_idx.cast("int")).cast("long"))
-
-
 def _searchsorted_interval_expr(df: DataFrame, ticks: np.ndarray, inclusion: str,
                                 rounding: str) -> Column:
-    """Arbitrary-clock UDF fallback for clocks too large to inline:
-    O(log c) vectorized ``np.searchsorted`` inside an Arrow-batched
-    pandas UDF over an explicitly broadcast tick array. Data never
-    moves to the driver."""
-    sc = df.sparkSession.sparkContext
-    bticks = sc.broadcast(ticks)
-    m = len(ticks) - 1
-    incl, rnd = inclusion, rounding
+    """Arbitrary-clock lookup: O(log c) vectorized ``np.searchsorted``
+    inside an Arrow-batched pandas UDF over an explicitly broadcast
+    tick array. Data never moves to the driver. ``df`` must already be
+    cut to the clock's range (:func:`intervalize`), so every row has an
+    interval."""
+    bticks = df.sparkSession.sparkContext.broadcast(ticks)
+    # interval index shift: begin tick (0) or end tick (1)
+    shift = int(rounding == "end")
 
-    # marked non-deterministic (it isn't) so Catalyst neither duplicates
-    # it into the null-filter nor pushes it around: without this the
-    # searchsorted UDF runs twice per row (observed in the plan audit)
+    # marked non-deterministic (it isn't) so Catalyst never copies it
+    # into a pushed-down filter on the output: one evaluation per row
     @F.pandas_udf(T.LongType())
     def bucket(t: pd.Series) -> pd.Series:
         arr = bticks.value
         tv = t.to_numpy(dtype=np.int64)
-        if incl == "begin":
+        if inclusion == "begin":  # [t_i, t_{i+1}): i = ub(t) - 1
             i = np.searchsorted(arr, tv, side="right") - 1
-            valid = (i >= 0) & (i <= m - 1)
-            out_i = i if rnd == "begin" else i + 1
-        else:
-            i_end = np.searchsorted(arr, tv, side="left")
-            valid = (i_end >= 1) & (i_end <= m)
-            out_i = (i_end - 1) if rnd == "begin" else i_end
-        res = arr[np.clip(out_i, 0, m)]
-        out = pd.Series(res, dtype="int64").astype("Int64")
-        out[~valid] = pd.NA  # keep int64 exactness; NaN would go through float
-        return out
+        else:  # (t_i, t_{i+1}]: i = lb(t) - 1
+            i = np.searchsorted(arr, tv, side="left") - 1
+        return pd.Series(arr[i + shift], dtype="int64")
 
     return bucket.asNondeterministic()(time_ns_expr(df))
 
@@ -233,12 +146,24 @@ def intervalize(df: DataFrame, clock, inclusion: str = "begin",
         raise ValueError("inclusion/rounding must be 'begin' or 'end'")
     if isinstance(clock, UniformClock):
         expr = _uniform_interval_expr(df, clock, inclusion, rounding)
+        return (df.withColumn(_INTERVAL, expr)
+                .filter(F.col(_INTERVAL).isNotNull()))
+    ticks = _clock_ticks_ns(clock, data_df=df)
+    if len(ticks) < 2:  # fewer than two ticks define no interval
+        return (df.filter(F.lit(False))
+                .withColumn(_INTERVAL, F.lit(None).cast("long")))
+    # the clock's range as a plain predicate on the time column, applied
+    # before the lookup: out-of-range rows never reach Python, and on a
+    # long-ns column the parquet scan prunes on it
+    t = time_ns_expr(df)
+    first, last = F.lit(int(ticks[0])), F.lit(int(ticks[-1]))
+    if inclusion == "begin":
+        in_range = (t >= first) & (t < last)
     else:
-        ticks = _clock_ticks_ns(clock, data_df=df)
-        if len(ticks) <= _INLINE_TICK_THRESHOLD:
-            return _jvm_intervalize(df, ticks, inclusion, rounding)
-        expr = _searchsorted_interval_expr(df, ticks, inclusion, rounding)
-    return df.withColumn(_INTERVAL, expr).filter(F.col(_INTERVAL).isNotNull())
+        in_range = (t > first) & (t <= last)
+    cut = df.filter(in_range)
+    return cut.withColumn(
+        _INTERVAL, _searchsorted_interval_expr(cut, ticks, inclusion, rounding))
 
 
 def _interval_time_col(df: DataFrame) -> Column:

@@ -349,64 +349,7 @@ GOPHER_METRICS = (
 )
 
 
-def _sorted_run_dup_chars(arr: Column) -> Column:
-    """Characters contained in the DUPLICATE copies of ``arr``'s
-    elements — sum over distinct elements of (count-1) * length — via
-    one O(n log n) sorted-run scan (no explode, no shuffle): sort,
-    then every element equal to its predecessor contributes its
-    length. The initial '' sentinel is safe: a real leading empty
-    string would add length 0."""
-    return F.aggregate(
-        F.array_sort(arr),
-        F.struct(F.lit("").alias("prev"),
-                 F.lit(0).cast("long").alias("dup")),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            (acc["dup"] + F.when(x == acc["prev"], F.length(x))
-             .otherwise(F.lit(0))).alias("dup")),
-        lambda acc: acc["dup"])
-
-
-def _sorted_run_top_gram_chars(arr: Column) -> Column:
-    """max over distinct elements of count * length (the character
-    span the most frequent element covers) via the same sorted-run
-    scan as :func:`_sorted_run_dup_chars`."""
-    return F.aggregate(
-        F.array_sort(arr),
-        F.struct(F.lit("").alias("prev"),
-                 F.lit(0).cast("long").alias("run"),
-                 F.lit(0).cast("long").alias("best")),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc["prev"], acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long")).alias("run"),
-            F.greatest(
-                acc["best"],
-                (F.when(x == acc["prev"], acc["run"] + 1)
-                 .otherwise(F.lit(1).cast("long")))
-                * F.length(x)).alias("best")),
-        lambda acc: acc["best"])
-
-
-def _word_ngrams(w: Column, k: int) -> Column:
-    """Space-joined word k-gram array (empty below k words)."""
-    n = F.size(w)
-    return F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), n - F.lit(k - 1)),
-                    lambda i: F.concat_ws(" ", F.slice(w, i, k)))
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _count_occurrences(text: Column, needle: str) -> Column:
-    """Non-overlapping occurrence count via length difference — the
-    same leftmost-replace semantics in Spark and DuckDB."""
-    return ((F.length(text)
-             - F.length(F.replace(text, F.lit(needle), F.lit(""))))
-            / F.lit(len(needle))).cast("long")
-
-
-#: published Table-A1 thresholds, shared by both gopher_rules engines
+#: published Table-A1 thresholds
 #: (metric name -> predicate on the metric value)
 _GOPHER_RULES_PY = [
     ("n_words", lambda v: 50 <= v <= 100_000),
@@ -431,14 +374,12 @@ _GOPHER_RULES_PY = [
 
 
 def _gopher_metrics_py(text: str | None) -> dict:
-    """All 20 Table-A1 metrics for ONE document — the Python twin of
-    the expression battery, value-for-value: every count is an exact
-    integer (Counter replaces the sorted-run scans: sum((c-1)*len) and
-    max(c*len) over distinct elements are the same integers), every
-    ratio is ONE IEEE double division of exact ints, and Python
-    ``len``/``str.split``/``str.count`` match Spark's
-    code-point ``length``, literal-pattern ``split`` and
-    leftmost-nonoverlap ``replace`` counting on the same text."""
+    """All 20 Table-A1 metrics for ONE document: every count is an
+    exact integer, every ratio is ONE IEEE double division of exact
+    ints, and Python ``len``/``str.split``/``str.count`` are code-point
+    length, literal split and leftmost-nonoverlap counting — the same
+    operations DuckDB's replay of the battery uses, so the two agree
+    bitwise."""
     import re
     from collections import Counter
 
@@ -489,16 +430,14 @@ def _gopher_metrics_py(text: str | None) -> dict:
     return m
 
 
-def gopher_rules(docs: DataFrame, text_col: str = "text",
-                 engine: str = "arrow") -> DataFrame:
+def gopher_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """The published Gopher corpus-quality heuristics (Rae et al.
-    2021, Appendix A) as ONE map-only projection: per-document rule
-    metrics plus the conjunction flag ``gopher_pass``. Zero corpus
-    exchanges — every metric is a higher-order expression over the
-    document's own word/line/n-gram arrays (duplicate-content
-    fractions use O(n log n) sorted-run scans instead of explode), so
-    the operator is embarrassingly parallel at any corpus size and
-    composes with the scoring/dedup/chunking pipeline for free.
+    2021, Appendix A) as ONE map-only stage: per-document rule metrics
+    plus the conjunction flag ``gopher_pass``, computed by one Python
+    kernel (:func:`_gopher_metrics_py`, ``Counter``/``str`` operations)
+    in an Arrow-batched ``mapInPandas``. Zero corpus exchanges, so the
+    operator is embarrassingly parallel at any corpus size and composes
+    with the scoring/dedup/chunking pipeline for free.
 
     Metrics and published thresholds (``gopher_pass`` ANDs them):
 
@@ -530,9 +469,9 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
     be oracle-checked bitwise). The POINT is a deterministic,
     oracle-checkable rendering of the published rules, not a
     reproduction of DeepMind's internal tokenizer. NULL text is
-    treated as the empty document (under legacy sizeOfNull a bare
-    split-of-NULL would poison every count with -1 — the repo-wide
-    token-count gotcha)."""
+    treated as the empty document."""
+    from pyspark.sql import types as T
+
     from .dedup import _spread
 
     out_names = set(GOPHER_METRICS) | {"gopher_pass", "n_rules_failed"}
@@ -544,133 +483,26 @@ def gopher_rules(docs: DataFrame, text_col: str = "text",
             f"its metric output names (would silently overwrite "
             f"{sorted(bad)}); rename them — same contract as the "
             f"packing/sharding family")
-    if engine not in ("arrow", "expr"):
-        raise ValueError("engine must be 'arrow' or 'expr'")
-    if engine == "arrow":
-        # r11 (guide §4.2): the 20-metric expression battery is
-        # higher-order functions end to end, which Spark evaluates
-        # INTERPRETED (CodegenFallback) — measured ~3 ms/doc on
-        # ~300-char fixtures, linear in the metric count. The Python
-        # twin computes the same exact-integer counts with
-        # Counter/str ops (~10x less CPU per doc) and stays
-        # map-only/stateless; outputs are bitwise the expression
-        # form's (parity-pinned in pytest, oracle-gated with no
-        # quantization).
-        from pyspark.sql import types as T
+    mtypes = {"n_words": T.IntegerType(),
+              "stop_hits": T.IntegerType()}
+    schema = T.StructType(
+        list(docs.schema.fields)
+        + [T.StructField(mn, mtypes.get(mn, T.DoubleType()))
+           for mn in GOPHER_METRICS]
+        + [T.StructField("gopher_pass", T.BooleanType()),
+           T.StructField("n_rules_failed", T.IntegerType())])
+    out_cols = [f.name for f in schema.fields]
+    extra = (*GOPHER_METRICS, "gopher_pass", "n_rules_failed")
 
-        mtypes = {"n_words": T.IntegerType(),
-                  "stop_hits": T.IntegerType()}
-        schema = T.StructType(
-            list(docs.schema.fields)
-            + [T.StructField(mn, mtypes.get(mn, T.DoubleType()))
-               for mn in GOPHER_METRICS]
-            + [T.StructField("gopher_pass", T.BooleanType()),
-               T.StructField("n_rules_failed", T.IntegerType())])
-        out_cols = [f.name for f in schema.fields]
-        extra = (*GOPHER_METRICS, "gopher_pass", "n_rules_failed")
+    def run(batches):
+        for pdf in batches:
+            rows = [_gopher_metrics_py(t) for t in pdf[text_col]]
+            res = pdf.copy()
+            for mn in extra:
+                res[mn] = [r[mn] for r in rows]
+            yield res[out_cols]
 
-        def run(batches):
-            for pdf in batches:
-                rows = [_gopher_metrics_py(t) for t in pdf[text_col]]
-                res = pdf.copy()
-                for mn in extra:
-                    res[mn] = [r[mn] for r in rows]
-                yield res[out_cols]
-
-        return _spread(docs).mapInPandas(run, schema)
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    tl = F.greatest(F.length(txt), F.lit(1)).cast("double")
-    base = _spread(docs).withColumns({
-        "__w": F.filter(F.split(txt, " "), lambda x: x != ""),
-        "__lines": F.split(txt, "\n"),
-        "__paras": F.split(txt, "\n\n"),
-    })
-    w, lines, paras = F.col("__w"), F.col("__lines"), F.col("__paras")
-    n = F.size(w)
-    nd = n.cast("double")
-    n_lines = F.size(lines).cast("double")
-    mean_wl = F.when(n > 0, F.aggregate(
-        w, F.lit(0).cast("long"),
-        lambda acc, x: acc + F.length(x)).cast("double") / nd) \
-        .otherwise(F.lit(0.0))
-    symbols = (_count_occurrences(txt, "#")
-               + _count_occurrences(txt, "…")
-               + _count_occurrences(txt, "..."))
-    symbol_ratio = F.when(n > 0, symbols.cast("double") / nd) \
-        .otherwise(F.lit(0.0))
-    alpha_ratio = F.when(n > 0, F.size(F.filter(
-        w, lambda x: x.rlike("[A-Za-z]"))).cast("double") / nd) \
-        .otherwise(F.lit(0.0))
-    stop_hits = F.size(F.filter(
-        F.array(*[F.lit(s) for s in GOPHER_STOPWORDS]),
-        lambda s: F.array_contains(w, s)))
-    bullet_ratio = (F.size(F.filter(
-        lines, lambda l: l.startswith("•") | l.startswith("- ")
-        | l.startswith("* "))).cast("double") / n_lines)
-    ellipsis_ratio = (F.size(F.filter(
-        lines, lambda l: l.endswith("…") | l.endswith("...")))
-        .cast("double") / n_lines)
-    dup_frac = lambda arr: (  # noqa: E731
-        (F.size(arr) - F.size(F.array_distinct(arr))).cast("double")
-        / F.size(arr).cast("double"))
-    metrics = {
-        "n_words": n,
-        "mean_word_len": mean_wl,
-        "symbol_word_ratio": symbol_ratio,
-        "alpha_word_ratio": alpha_ratio,
-        "stop_hits": stop_hits,
-        "bullet_line_ratio": bullet_ratio,
-        "ellipsis_line_ratio": ellipsis_ratio,
-        "dup_line_frac": dup_frac(lines),
-        "dup_para_frac": dup_frac(paras),
-        "dup_line_char_frac":
-            _sorted_run_dup_chars(lines).cast("double") / tl,
-        "dup_para_char_frac":
-            _sorted_run_dup_chars(paras).cast("double") / tl,
-        "top2gram_char_frac":
-            _sorted_run_top_gram_chars(_word_ngrams(w, 2))
-            .cast("double") / tl,
-        "top3gram_char_frac":
-            _sorted_run_top_gram_chars(_word_ngrams(w, 3))
-            .cast("double") / tl,
-        "top4gram_char_frac":
-            _sorted_run_top_gram_chars(_word_ngrams(w, 4))
-            .cast("double") / tl,
-    }
-    for k in range(5, 11):
-        metrics[f"dup{k}gram_char_frac"] = \
-            _sorted_run_dup_chars(_word_ngrams(w, k)).cast("double") / tl
-    out = base.withColumns(metrics)
-    rules = [
-        (F.col("n_words") >= 50) & (F.col("n_words") <= 100_000),
-        (F.col("mean_word_len") >= 3.0) & (F.col("mean_word_len") <= 10.0),
-        F.col("symbol_word_ratio") <= 0.1,
-        F.col("bullet_line_ratio") <= 0.9,
-        F.col("ellipsis_line_ratio") <= 0.3,
-        F.col("alpha_word_ratio") >= 0.8,
-        F.col("stop_hits") >= 2,
-        F.col("dup_line_frac") < 0.30,
-        F.col("dup_para_frac") < 0.30,
-        F.col("dup_line_char_frac") < 0.20,
-        F.col("dup_para_char_frac") < 0.20,
-        F.col("top2gram_char_frac") < 0.20,
-        F.col("top3gram_char_frac") < 0.18,
-        F.col("top4gram_char_frac") < 0.16,
-    ] + [
-        F.col(f"dup{k}gram_char_frac") < thr
-        for k, thr in zip(range(5, 11),
-                          (0.15, 0.14, 0.13, 0.12, 0.11, 0.10))
-    ]
-    n_failed = sum((~r).cast("int") for r in rules)
-    passed = rules[0]
-    for r in rules[1:]:
-        passed = passed & r
-    # every metric is a single division of exact integer counts/
-    # lengths, so the thresholds (and therefore the flag and the
-    # failed-rule count) are engine-deterministic without quantization
-    return (out.withColumn("gopher_pass", passed)
-            .withColumn("n_rules_failed", n_failed)
-            .drop("__w", "__lines", "__paras"))
+    return _spread(docs).mapInPandas(run, schema)
 
 
 def remove_repeated_lines(docs: DataFrame, text_col: str = "text",

@@ -111,14 +111,16 @@ def test_interval_matrix(spark):
     assert buckets("end", "end") == {1050: 1100, 1100: 1100, 1200: 1200}
 
 
-def test_intervalize_arbitrary_clock_jvm_udf_route_identity(spark, monkeypatch):
-    """r10 verdict item 2: the arbitrary-clock bucket lookup compiles to
-    the in-JVM binary search (zero Python stages) for clocks under the
-    inline threshold. Pin (a) JVM route == UDF route == an independent
-    numpy searchsorted rendering on every inclusion×rounding combo over
-    data hitting every edge (below first tick, exactly on first/middle/
-    last ticks, between ticks, above last), and (b) the default route
-    really has no Python eval node in the plan."""
+def test_intervalize_arbitrary_clock_searchsorted(spark, tmp_path):
+    """The arbitrary-clock bucket lookup (one Arrow searchsorted stage
+    behind a time-range pre-filter) against an independent numpy
+    searchsorted rendering on every inclusion×rounding combo over data
+    hitting every edge (below first tick, exactly on first/middle/last
+    ticks, between ticks, above last); the plan has exactly one Python
+    stage, and on a long-ns parquet input the clock's range reaches
+    the scan as pushed filters."""
+    from flint_spark.plans.audit import plan_counts
+
     rng = np.random.default_rng(7)
     ticks = np.unique(rng.integers(0, 10_000, size=40)).astype(np.int64)
     ticks = np.unique(np.concatenate([ticks, [0, 10_000]]))
@@ -149,24 +151,42 @@ def test_intervalize_arbitrary_clock_jvm_udf_route_identity(spark, monkeypatch):
 
     for inclusion in ("begin", "end"):
         for rounding in ("begin", "end"):
-            got_jvm = {r["time"]: r["__interval_ns"] for r in
-                       intervals.intervalize(df, clock_df, inclusion,
-                                             rounding).collect()}
-            monkeypatch.setattr(intervals, "_INLINE_TICK_THRESHOLD", -1)
-            got_udf = {r["time"]: r["__interval_ns"] for r in
-                       intervals.intervalize(df, clock_df, inclusion,
-                                             rounding).collect()}
-            monkeypatch.undo()
-            exp = expected(inclusion, rounding)
-            assert got_jvm == exp, (inclusion, rounding)
-            assert got_udf == exp, (inclusion, rounding)
+            got = {r["time"]: r["__interval_ns"] for r in
+                   intervals.intervalize(df, clock_df, inclusion,
+                                         rounding).collect()}
+            assert got == expected(inclusion, rounding), (inclusion, rounding)
 
-    plan = intervals.intervalize(df, clock_df, "begin", "end") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan  # all-JVM default route
-    # degenerate clocks (<2 ticks) bucket nothing on either route
+    out = intervals.intervalize(df, clock_df, "begin", "end")
+    assert plan_counts(out)["python"] == 1
+    path = str(tmp_path / "times.parquet")
+    df.write.parquet(path)
+    for inclusion, bounds in (
+            ("begin", ("GreaterThanOrEqual(time,0)", "LessThan(time,10000)")),
+            ("end", ("GreaterThan(time,0)", "LessThanOrEqual(time,10000)"))):
+        plan = intervals.intervalize(spark.read.parquet(path), clock_df,
+                                     inclusion, "end") \
+            ._jdf.queryExecution().executedPlan().toString()
+        pushed = plan[plan.index("PushedFilters:"):].split("]")[0]
+        assert all(b in pushed for b in bounds), (inclusion, pushed)
+    # degenerate clocks (<2 ticks) bucket nothing
     one_tick = spark.createDataFrame([(5,)], "time long")
     assert intervals.intervalize(df, one_tick, "begin", "end").count() == 0
+    no_tick = spark.createDataFrame([], "time long")
+    assert intervals.intervalize(df, no_tick, "begin", "end").count() == 0
+
+
+def test_intervalize_ignores_null_ticks(spark):
+    """A null clock time is no tick. Collected as int64 it read as the
+    int64 minimum and bucketed the row at 5 into an interval opening
+    in 1677; with the null dropped the clock is [10, 20, 30]."""
+    df = spark.createDataFrame([(t,) for t in (5, 15, 25, 105)], "time long")
+    want = [(10, 1), (20, 1)]
+    for clock in ([10, None, 20, 30], [10, 20, 30]):
+        clock_df = spark.createDataFrame([(t,) for t in clock], "time long")
+        out = intervals.summarize_intervals(df, clock_df, S.count(),
+                                            inclusion="begin",
+                                            rounding="begin")
+        assert sorted((r.time, r["count"]) for r in out.collect()) == want
 
 
 def test_summarize_cycles_and_windows(spark):

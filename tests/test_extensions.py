@@ -6168,13 +6168,15 @@ def test_bucketed_window_review_edges(spark):
 
 
 def test_gopher_rules_engine_parity(spark):
-    """The Arrow kernel (r11 default) and the expression battery
-    produce BITWISE-identical metrics, flags and failed-rule counts —
-    including the null-text, empty-text, astral-plane (code-point
-    length) and repeated-n-gram edges."""
-    import pandas as pd
+    """The Spark operator and DuckDB's replay of the battery
+    (``SQL_GOPHER_RULES``, the gate's oracle) produce BITWISE-identical
+    metrics, flags and failed-rule counts on the edge rows — null
+    text, empty text, bullets/ellipses, astral-plane (code-point
+    length) and repeated-n-gram documents."""
+    import duckdb
 
-    from flint_spark.pipeline.text import gopher_rules
+    from entry_queries.extras_q import SQL_GOPHER_RULES
+    from flint_spark.pipeline.text import GOPHER_METRICS, gopher_rules
 
     rows = [
         (1, "the be to of and that have with " * 20),
@@ -6187,11 +6189,18 @@ def test_gopher_rules_engine_parity(spark):
         (8, "one two three four five six seven eight nine ten " * 6),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = (gopher_rules(docs, engine="arrow")
-         .orderBy("doc_id").toPandas())
-    e = (gopher_rules(docs, engine="expr")
-         .orderBy("doc_id").toPandas())
-    pd.testing.assert_frame_equal(a, e, check_exact=True)
+    got = (gopher_rules(docs)
+           .select("doc_id", *GOPHER_METRICS,
+                   F.col("gopher_pass").cast("int").alias("gopher_pass"),
+                   "n_rules_failed")
+           .orderBy("doc_id").toPandas())
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = (con.sql(SQL_GOPHER_RULES).df()
+            .sort_values("doc_id", ignore_index=True))
+    assert len(got) == len(rows)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                  check_exact=True)
 
 
 def test_compute_partitions_explicit_exchange(spark):

@@ -1318,26 +1318,23 @@ def test_decode_png_truncation_total(data):
        times=st.lists(st.integers(-50, 450), min_size=1, max_size=30),
        inclusion=st.sampled_from(["begin", "end"]),
        rounding=st.sampled_from(["begin", "end"]))
-def test_jvm_intervalize_vs_searchsorted(ticks, times, inclusion,
-                                         rounding):
-    """The in-JVM binary-search intervalize route (r10: the zero-Python
-    arbitrary-clock path) vs a numpy searchsorted reference, across all
-    four inclusion/rounding conventions, degenerate clocks (1 tick =
-    no intervals) and all-rows-out-of-range inputs."""
+def test_intervalize_vs_searchsorted(ticks, times, inclusion, rounding):
+    """The public arbitrary-clock ``intervalize`` vs a numpy
+    searchsorted reference, across all four inclusion/rounding
+    conventions, degenerate clocks (1 tick = no intervals) and
+    all-rows-out-of-range inputs."""
     import numpy as np
 
-    from flint_spark.operators.intervals import _INTERVAL, _jvm_intervalize
-    from pyspark.sql import functions as F
+    from flint_spark.operators.intervals import _INTERVAL, intervalize
 
     spark = _spark()
-    ticks = sorted(ticks)
     df = spark.createDataFrame([(t, i) for i, t in enumerate(times)],
                                "time long, rid long")
-    out = _jvm_intervalize(df, ticks, inclusion, rounding) \
-        .filter(F.col(_INTERVAL).isNotNull()).toPandas() \
+    clock_df = spark.createDataFrame([(t,) for t in ticks], "time long")
+    out = intervalize(df, clock_df, inclusion, rounding).toPandas() \
         .set_index("rid")[_INTERVAL].to_dict()
 
-    arr = np.asarray(ticks, dtype=np.int64)
+    arr = np.asarray(sorted(ticks), dtype=np.int64)
     m = len(arr) - 1
     expected = {}
     for i, t in enumerate(times):

@@ -218,6 +218,27 @@ def test_one_ordering_fact():
         assert "queryExecution" not in ast.dump(methods[name]), name
 
 
+def test_no_interpreted_twins():
+    """No higher-order-function twin of an Arrow kernel: the in-JVM
+    clock search and the expression Gopher battery stay deleted, and
+    ``gopher_rules`` takes no ``engine``."""
+    gone = ("upper_bound_expr", "_jvm_intervalize", "_INLINE_TICK_THRESHOLD",
+            "_sorted_run_dup_chars", "_sorted_run_top_gram_chars",
+            "_word_ngrams", "_count_occurrences")
+    bad = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(root, name)
+                bad += [(os.path.relpath(path, PKG), m) for m in re.findall(
+                    r"\b(?:%s)\b" % "|".join(gone), open(path).read())]
+    assert bad == []
+    tree = ast.parse(open(os.path.join(PKG, "pipeline", "text.py")).read())
+    fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef)
+              and n.name == "gopher_rules")
+    assert "engine" not in [a.arg for a in fn.args.args + fn.args.kwonlyargs]
+
+
 def test_wrapper_round_trips(spark, monkeypatch):
     """A call through the wrapper costs the same DataFrame call's py4j
     round trips plus a constant: at most 3 more for a ``select``, 9 more
